@@ -410,12 +410,14 @@ def q_streaming_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical parse→enrich→route stages under readStream with
     Trigger.AvailableNow; watermarked tumbling-window accounting lands
     in a parquet sink read back lazily."""
+    import atexit
     import shutil
     import tempfile
 
     from opentelemetry_collector_spark.streaming import stream as ss
 
     base = tempfile.mkdtemp(prefix="otelcol_stream_q_")
+    atexit.register(shutil.rmtree, base, ignore_errors=True)
     try:
         src = f"{base}/src"
         out = f"{base}/out"
@@ -442,9 +444,9 @@ def q_streaming_accounting(spark: SparkSession, sf_dir: str) -> DataFrame:
         # window set.
         return spark.read.schema(acct.schema).parquet(out)
     finally:
-        # drop the per-invocation source copy + stream checkpoint; the
-        # parquet OUTPUT must outlive this call (the returned DataFrame
-        # reads it lazily) — a few MB of /tmp per run, reaped at exit
+        # drop the per-invocation source copy + stream checkpoint now;
+        # the parquet OUTPUT must outlive this call (the returned
+        # DataFrame reads it lazily) and is removed by the atexit hook
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(f"{base}/ckpt", ignore_errors=True)
 

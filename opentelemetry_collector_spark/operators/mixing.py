@@ -69,6 +69,12 @@ def stratified_sample(
     )
 
 
+def _sql_str(s: str) -> str:
+    """A SQL string literal: single quotes doubled (a stratum named
+    ``o'brien`` must not end the literal)."""
+    return "'" + s.replace("'", "''") + "'"
+
+
 def stratified_sample_sql(
     table_expr: str,
     rates: dict[str, float],
@@ -81,7 +87,7 @@ def stratified_sample_sql(
     threshold strings — generated from the SAME rate_threshold table
     so the engines cannot drift)."""
     branches = "\n                 ".join(
-        f"WHEN {strat_col} = '{s}' THEN '{rate_threshold(r)}'"
+        f"WHEN {strat_col} = {_sql_str(s)} THEN '{rate_threshold(r)}'"
         for s, r in sorted(rates.items())
     )
     return f"""
@@ -134,7 +140,7 @@ def mixture_weights_sql(
 ) -> str:
     """DuckDB twin of :func:`mixture_weights`."""
     branches = "\n                   ".join(
-        f"WHEN {strat_col} = '{s}' THEN {float(t)!r}"
+        f"WHEN {strat_col} = {_sql_str(s)} THEN {float(t)!r}"
         for s, t in sorted(targets.items())
     )
     return f"""
@@ -205,11 +211,11 @@ def resample_to_mix_sql(
     """DuckDB twin of :func:`resample_to_mix` (same integer base +
     hex-threshold fractional copy, lateral generate_series)."""
     base_branches = "\n                 ".join(
-        f"WHEN {strat_col} = '{s}' THEN {int(float(w))}"
+        f"WHEN {strat_col} = {_sql_str(s)} THEN {int(float(w))}"
         for s, w in sorted(weights.items())
     )
     thr_branches = "\n                 ".join(
-        f"WHEN {strat_col} = '{s}' THEN "
+        f"WHEN {strat_col} = {_sql_str(s)} THEN "
         f"'{rate_threshold(float(w) - int(float(w)))}'"
         for s, w in sorted(weights.items())
     )

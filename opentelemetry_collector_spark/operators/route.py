@@ -7,14 +7,17 @@ Reference semantics to preserve:
   exactly once (internal/fanoutconsumer/logs.go:21-77);
 * content-based routing: a router picks a subset of downstream
   pipelines per record (connector/logs_router.go:18-69);
-* clone-per-mutating-branch is subsumed by DataFrame immutability —
-  we just cache the routed parent once and run one write action per
-  sink (SURVEY §1.3).
+* clone-per-mutating-branch is subsumed by DataFrame immutability
+  (SURVEY §1.3).
 
-Scale shape: ``route`` is a pure column expression, so Catalyst pushes
-each sink's ``route = X`` filter into the cached scan; with the parent
-persisted there is exactly ONE pass over the data for all sinks. For
-multi-route (a row matching several sinks) use :func:`explode_routes`.
+Scale shape: ``route`` is a pure column expression, so the flagship
+(plans/pipeline.run_pipeline) writes every sink in ONE action,
+partitioned by a copy of the route column, and moves each partition dir
+into its table — one pass over the cached parent, a Spark job count
+independent of the number of sinks. :func:`fan_out` is the general
+form for arbitrary sink callables: one action per sink over a cached
+parent. For multi-route (a row matching several sinks) use
+:func:`explode_routes`.
 """
 
 from __future__ import annotations

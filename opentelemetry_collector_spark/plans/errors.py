@@ -62,6 +62,15 @@ def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[
     ]
 
 
+def reject_reason(constraints: list[tuple[str, Column]] | None = None) -> Column:
+    """The name of the first constraint a row fails, NULL for a valid
+    row. A NULL check result counts as a failure."""
+    reason = F.lit(None).cast("string")
+    for name, ok in reversed(constraints or default_sink_constraints()):
+        reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
+    return reason
+
+
 def write_with_partial_success(
     catalog,
     table: str,
@@ -85,11 +94,7 @@ def write_with_partial_success(
     """
     from pyspark.sql import Observation
 
-    constraints = constraints or default_sink_constraints()
-    reason = F.lit(None).cast("string")
-    for name, ok in reversed(constraints):
-        reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
-    flagged = df.withColumn("_reject_reason", reason)
+    flagged = df.withColumn("_reject_reason", reject_reason(constraints))
     obs = Observation(f"partial_{table}")
     observed = flagged.observe(
         obs,

@@ -38,7 +38,6 @@ _DEFAULTS = {
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",
     # Local-mode niceties; harmless under a real cluster manager.
     "spark.ui.enabled": "false",
-    "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"),
     # Throughput GC: this is a batch engine — no latency SLO on any JVM.
     # Measured on the flagship pipeline at 19M turns: ParallelGC beats
     # the G1 default by ~28% wall at local[32] (5.9s vs 8.2s) and ~6% at
@@ -48,6 +47,14 @@ _DEFAULTS = {
     "spark.driver.extraJavaOptions": "-XX:+UseParallelGC",
     "spark.executor.extraJavaOptions": "-XX:+UseParallelGC",
 }
+
+
+def default_driver_memory() -> str:
+    """30% of host RAM, clamped to 1–6 GiB: in local mode the driver
+    heap is the whole engine's heap, and the rest of the host must stay
+    free for the Python workers and the page cache."""
+    mem_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // (1 << 20)
+    return f"{max(1024, min(6144, mem_mb * 3 // 10))}m"
 
 
 def get_spark(
@@ -71,6 +78,10 @@ def get_spark(
     builder = SparkSession.builder.appName(app_name).master(master)
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
+    builder = builder.config(
+        "spark.driver.memory",
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+    )
     # the engine.aqeSkewJoin feature gate (beta, default on) governs
     # runtime skew-join splitting; disable via --feature-gates before
     # the session is built (main.py applies flags first)

@@ -47,6 +47,19 @@ def _number_dp(stream_col: str, ts_expr, value_json) -> "F.Column":
     )
 
 
+def _json_double(c: "F.Column") -> "F.Column":
+    """A double as a protobuf-JSON value: a plain number, or one of the
+    strings "NaN", "Infinity", "-Infinity" for the values JSON numbers
+    cannot carry (a bare NaN token would make the whole envelope invalid
+    JSON). from_json reads the strings back into a double field."""
+    return (
+        F.when(F.isnan(c), F.lit('"NaN"'))
+        .when(c == float("inf"), F.lit('"Infinity"'))
+        .when(c == float("-inf"), F.lit('"-Infinity"'))
+        .otherwise(c.cast("string"))
+    )
+
+
 def encode_metrics_json(
     gauge: DataFrame,
     sums: DataFrame,
@@ -65,7 +78,7 @@ def encode_metrics_json(
     g_dp = _number_dp(
         "tool",
         F.col("last_ts_unix_nano"),
-        F.concat(F.lit(',"asDouble":'), F.col("last_value").cast("string")),
+        F.concat(F.lit(',"asDouble":'), _json_double(F.col("last_value"))),
     )
     s_dp = _number_dp(
         "tool",

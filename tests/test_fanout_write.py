@@ -1,0 +1,145 @@
+"""The flagship's single fan-out write: a fixed Spark job count whatever
+the number of routes and chunks, resume after a crash between sinks,
+empty tables for routes with no rows and partial success on chunked
+sinks (the fan-out consumer's one pass over a batch,
+internal/fanoutconsumer/logs.go:21-77)."""
+
+from __future__ import annotations
+
+import os
+
+import duckdb
+import pytest
+from pyspark.sql import functions as F
+
+from opentelemetry_collector_spark.plans.pipeline import run_pipeline
+from opentelemetry_collector_spark.sinks.tables import TableCatalog
+from opentelemetry_collector_spark.sources import derive_transcripts
+from opentelemetry_collector_spark.sqltext import SINK_NAMES
+
+# Spark jobs of one run_pipeline at test scale, 11 measured both with
+# and without sink_chunks: the lineage collect, the quarantine write,
+# one sink write, one aggregate write and the shuffle stages under them.
+# One write per sink (and per chunk) would take 24 (34 with 3 chunks).
+MAX_JOBS = 11
+
+TABLES = sorted(
+    SINK_NAMES + [f"agg_{s}" for s in SINK_NAMES]
+    + ["quarantine", "checkpoint", "lineage", "file_stats"]
+)
+
+
+def _jobs_of(spark, group: str, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _union(catalog):
+    out = None
+    for s in SINK_NAMES:
+        t = catalog.read(s).select("conv_id", "turn_idx")
+        out = t if out is None else out.unionByName(t)
+    return out
+
+
+@pytest.mark.parametrize("chunks", [1, 3])
+def test_job_count_is_fixed(spark, sf_dir, tmp_path, chunks):
+    wh = str(tmp_path / "wh")
+    jobs = _jobs_of(
+        spark, f"fanout-{chunks}",
+        lambda: run_pipeline(spark, sf_dir, wh, sink_chunks=chunks),
+    )
+    assert jobs <= MAX_JOBS, jobs
+    # the staging dir is gone: the warehouse holds exactly the tables
+    assert sorted(os.listdir(wh)) == TABLES
+
+
+def test_crash_between_sinks_resumes_only_unacked(spark, sf_dir, tmp_path):
+    wh = str(tmp_path / "wh")
+    catalog = TableCatalog(spark, wh)
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, sf_dir, wh, run_id="runM",
+                     fail_after_stage="write_sink_python")
+    assert not [d for d in os.listdir(wh) if d not in TABLES]
+    acked = ["sink_search", "sink_browser", "sink_python"]
+    files_before = {s: sorted(os.listdir(catalog.path(s))) for s in acked}
+
+    res = run_pipeline(spark, sf_dir, wh, run_id="runM")
+    assert {f"write_{s}" for s in acked} <= set(res.stages_skipped)
+    assert not {"write_sink_editor", "write_sink_default"} & set(res.stages_skipped)
+    # the acked sinks' files were not rewritten
+    assert {s: sorted(os.listdir(catalog.path(s))) for s in acked} == files_before
+    assert sorted(os.listdir(wh)) == TABLES
+
+    # no row lost or duplicated, and every aggregate reconciles
+    n_input = derive_transcripts(spark, sf_dir).count()
+    union = _union(catalog)
+    assert union.count() == n_input
+    assert union.distinct().count() == n_input
+    assert sum(res.sink_counts.values()) == n_input
+    for s, n in res.sink_counts.items():
+        assert catalog.read(f"agg_{s}").agg(F.sum("turn_count")).first()[0] == n, s
+
+
+def test_routes_with_no_rows_still_get_empty_tables(spark, sf_dir, tmp_path):
+    wh = str(tmp_path / "wh")
+
+    def only_search(s):
+        return derive_transcripts(s, sf_dir).withColumn("tool", F.lit("search"))
+
+    res = run_pipeline(spark, sf_dir, wh, source=only_search)
+    catalog = TableCatalog(spark, wh)
+    n_input = only_search(spark).count()
+    assert res.sink_counts == {s: (n_input if s == "sink_search" else 0) for s in SINK_NAMES}
+
+    sink_schema = catalog.read("sink_search").schema
+    agg_schema = catalog.read("agg_sink_search").schema
+    assert "route" in sink_schema.names and "route" not in agg_schema.names
+    acks = {m["stage"]: m for m in res.metrics}
+    con = duckdb.connect()
+    for s in SINK_NAMES[1:]:
+        for table, schema in ((s, sink_schema), (f"agg_{s}", agg_schema)):
+            t = catalog.read(table)
+            assert t.schema == schema, table
+            assert t.count() == 0, table
+            # flat parquet files, readable the way outside readers glob them
+            (n,) = con.sql(
+                f"SELECT count(*) FROM read_parquet('{catalog.path(table)}/*.parquet')"
+            ).fetchone()
+            assert n == 0, table
+        assert acks[f"write_{s}"]["rows_out"] == 0
+        assert acks[f"write_{s}"]["partitions"] == []
+        assert acks[f"agg_{s}"]["rows_out"] == 0
+    con.close()
+
+
+def test_chunked_write_diverts_invalid_rows(spark, sf_dir, tmp_path):
+    """Chunked sinks share the one write, so partial success covers them
+    too: a row with a NULL conv_id (no chunk to hash into) lands in
+    rejected_<sink> and is counted in the sink's ack."""
+    from datetime import datetime
+
+    poison = (None, 0, "user", "[seq=1] call tool=search status=200 latency_ms=5 msg=x",
+              "search", datetime(2025, 1, 1))
+
+    def src(s):
+        return derive_transcripts(s, sf_dir).unionByName(s.createDataFrame(
+            [poison], "conv_id string, turn_idx int, role string, text string, "
+                      "tool string, ts timestamp"))
+
+    wh = str(tmp_path / "wh")
+    res = run_pipeline(spark, sf_dir, wh, source=src, sink_chunks=3)
+    catalog = TableCatalog(spark, wh)
+    rej = catalog.read("rejected_sink_search")
+    assert [r["reject_reason"] for r in rej.collect()] == ["null_conv_id"]
+    assert "part" not in rej.columns
+    ack = next(m for m in res.metrics if m["stage"] == "write_sink_search")
+    assert ack["rejected"] == 1 and ack["rows_in"] == ack["rows_out"] + 1
+    chunk_rows = sum(m["rows_out"] for m in res.metrics
+                     if m["stage"].startswith("write_sink_search.chunk"))
+    assert chunk_rows == ack["rows_out"] == catalog.read("sink_search").count()

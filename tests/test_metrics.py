@@ -130,3 +130,31 @@ def test_metrics_json_envelope_wire_shape(spark):
     assert rows[("sum", "python")]["as_int"] == 7
     assert rows[("sum", "python")]["monotonic"] is True
     assert rows[("sum", "python")]["temporality"] == 2
+
+
+def test_metrics_json_envelope_survives_non_finite_gauge(spark):
+    """A NaN or infinite gauge value must not void the envelope: it is
+    sent as the protobuf-JSON string form and decodes back, next to the
+    finite points."""
+    import json
+    import math
+
+    from opentelemetry_collector_spark.sources import otlp_metrics_json as omj
+
+    gauge = spark.createDataFrame(
+        [("browser", float("nan"), 1000), ("python", float("inf"), 1100),
+         ("search", 12.5, 1200), ("editor", -3.0, 1300)],
+        "tool string, last_value double, last_ts_unix_nano bigint",
+    )
+    sums = spark.createDataFrame(
+        [("search", 42, 2000)], "tool string, total bigint, ts_unix_nano bigint"
+    )
+    wire = omj.encode_metrics_json(gauge, sums).collect()[0]["wire"]
+    dps = json.loads(wire)["resourceMetrics"][0]["scopeMetrics"][0]["metrics"][0][
+        "gauge"]["dataPoints"]
+    assert [dp["asDouble"] for dp in dps] == ["NaN", -3.0, "Infinity", 12.5]
+
+    back = omj.decode_metrics_json(spark.createDataFrame([(wire,)], "wire string"))
+    got = {r["tool"]: r["as_double"] for r in back.collect() if r["mtype"] == "gauge"}
+    assert math.isnan(got.pop("browser"))
+    assert got == {"python": math.inf, "search": 12.5, "editor": -3.0}

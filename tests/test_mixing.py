@@ -86,3 +86,35 @@ def test_resample_to_mix_copy_counts(spark):
         df, {"en": 1.0}, strat_col="lang", key_col="doc_id"
     )
     assert none.filter(F.col("lang") == "zh").count() == 0
+
+
+def test_quoted_stratum_names_match_duckdb(spark, tmp_path):
+    """A stratum named o'brien must not end the SQL literal: all three
+    DuckDB twins agree with Spark on it."""
+    import duckdb
+
+    from tests.parity import compare
+
+    rows = [(i, ["o'brien", "en", "it's"][i % 3], 100 + i) for i in range(300)]
+    df = spark.createDataFrame(rows, "doc_id bigint, lang string, n_chars bigint")
+    path = str(tmp_path / "docs")
+    df.write.parquet(path)
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW docs AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    rates = {"o'brien": 0.5, "en": 1.0, "it's": 0.25}
+    compare(
+        mixing.stratified_sample(df, rates),
+        con, mixing.stratified_sample_sql("docs", rates), "stratified_sample",
+    )
+    targets = {"o'brien": 0.6, "it's": 0.4}
+    compare(
+        mixing.mixture_weights(df, targets),
+        con, mixing.mixture_weights_sql("docs", targets), "mixture_weights",
+    )
+    weights = {"o'brien": 1.5, "en": 0.5}
+    compare(
+        mixing.resample_to_mix(df, weights),
+        con, mixing.resample_to_mix_sql("docs", weights), "resample_to_mix",
+    )
+    assert mixing.stratified_sample(df, rates).filter(F.col("lang") == "o'brien").count() > 0
+    con.close()
