@@ -130,6 +130,12 @@ def run_pipeline(
     ack committed, in ``SINK_NAMES`` order (the fan-out consumer's single
     pass over one batch, internal/fanoutconsumer/logs.go:21-77).
 
+    The cached parent is sized by its data, not by
+    ``spark.sql.shuffle.partitions``: the session lets AQE coalesce the
+    shuffle under a persisted plan, so every job after the cache runs
+    one task per coalesced partition and each sink table gets one file
+    per such partition (4 at sf0.1 on 4 cores, was 32).
+
     ``fail_after_stage`` injects a crash for the kill/resume property
     test (receiver/receivertest/contract_checker.go:75-120 scenario:
     random failure → resume → no loss, no duplication). A resume writes

@@ -33,9 +33,11 @@ scalars are not written). Oneof members are the exception: a set
 oneof field is always serialized even at its zero value (Go emits
 Int(0) as ``0x18 0x00`` and Str("") as ``0x0a 0x00`` inside AnyValue)
 — otherwise external pdata readers would decode a present-but-zero
-value as an EMPTY AnyValue. The same bytes Go's marshaler emits for
-these messages.
-Byte-faithfulness is pinned by golden-vector tests (hand-derived from
+value as an EMPTY AnyValue. Faithfulness is decode-equality, not byte
+equality: Go's marshaler writes fields in DESCENDING order, this
+encoder in ascending order, and protobuf decoding does not depend on
+field order, so a pdata reader decodes these bytes to the same message.
+The byte layout is pinned by golden-vector tests (hand-derived from
 the wire spec) in tests/test_otlp_proto.py; semantic faithfulness by
 the ``proto_roundtrip`` driver query, which decodes what it encodes and
 value-oracles the flattened records against DuckDB's independent
@@ -115,9 +117,10 @@ def _fixed64_field(field: int, n: int) -> bytes:
 
 def _any_string(s: str | None) -> bytes:
     """AnyValue{string_value=1}. A oneof member is ALWAYS serialized
-    when set — Go's marshaler writes Str("") as ``0x0a 0x00`` (field
-    key + zero length), never as an empty AnyValue; the proto3
-    zero-value-omission rule applies only to plain (non-oneof) fields.
+    when set, as Go's marshaler does: Str("") is written as
+    ``0x0a 0x00`` (field key + zero length), never as an empty
+    AnyValue; the proto3 zero-value-omission rule applies only to
+    plain (non-oneof) fields.
     An external pdata reader distinguishes Str("") from an unset
     value by the field's presence."""
     raw = (s or "").encode("utf-8")
@@ -144,9 +147,10 @@ def encode_log_record(
     turn_idx: int,
     event_name: str,
 ) -> bytes:
-    """One LogRecord message, fields in ascending field order (the
-    canonical serialization): time=1, sev_num=2, sev_text=3, body=5,
-    attributes=6 (single turn.idx int attribute), event_name=12."""
+    """One LogRecord message, fields in ascending field order (Go
+    writes them descending; the decoded message is the same): time=1,
+    sev_num=2, sev_text=3, body=5, attributes=6 (single turn.idx int
+    attribute), event_name=12."""
     return (
         _fixed64_field(1, time_unix_nano)
         + _varint_field(2, severity_number)
@@ -406,7 +410,7 @@ def encode_span(
     end_unix_nano: int,
     status_code: int,
 ) -> bytes:
-    """One Span message in canonical field order: trace_id=1,
+    """One Span message in ascending field order: trace_id=1,
     span_id=2, parent_span_id=4, name=5, kind=6, start=7 (fixed64),
     end=8 (fixed64), status=15 {code=3}. IDs come in as the hex the
     column derivation produces; the wire carries raw bytes. A status
@@ -643,9 +647,10 @@ def encode_exp_histogram_metric(
     temporality: int = AGG_TEMPORALITY_CUMULATIVE,
 ) -> bytes:
     """One Metric{exponential_histogram} message. Each point dict:
-    attrs (list[(key, str value)]), count, zero_count, scale,
-    pos_offset, pos_counts, neg_offset, neg_counts. Canonical Go byte
-    order: positive/negative bucket messages are ALWAYS present (the
+    attrs (list[(key, str value)]), start_time and time (unix nano),
+    count, zero_count, scale, pos_offset, pos_counts, neg_offset,
+    neg_counts. Decode-equal to what Go's marshaler writes (field order
+    aside): positive/negative bucket messages are ALWAYS present (the
     reference marshals them unconditionally), everything else follows
     proto3 zero-omission."""
     dps = b""
@@ -654,6 +659,8 @@ def encode_exp_histogram_metric(
             _msg_field(1, _keyvalue(k, _any_string(v)))
             for k, v in pt.get("attrs", [])
         )
+        dp += _fixed64_field(2, pt.get("start_time", 0))
+        dp += _fixed64_field(3, pt.get("time", 0))
         dp += _fixed64_field(4, pt.get("count", 0))
         dp += _sint_field(6, pt.get("scale", 0))
         dp += _fixed64_field(7, pt.get("zero_count", 0))
@@ -679,8 +686,9 @@ def encode_number_metric(
     """One Metric{gauge|sum} message. Each point dict: attrs, time
     (unix nano), and exactly one of as_int / as_double. The oneof value
     is always written when set (sfixed64/fixed64 8-byte), matching the
-    reference's NumberDataPoint marshaler; attributes are field 7 and
-    lead the byte order (the generated marshaler writes them first)."""
+    reference's NumberDataPoint marshaler; attributes are field 7,
+    written first here where Go's marshaler writes them last (decoding
+    does not depend on field order)."""
     dps = b""
     for pt in points:
         dp = b"".join(
@@ -881,13 +889,18 @@ def _decode_metric(buf: bytes, res_attrs: dict, scope_name: str) -> list[dict]:
             for f2, _, v2 in _fields(v):
                 if f2 == 1:  # data point
                     pt = {
-                        "attrs": {}, "count": 0, "zero_count": 0, "scale": 0,
+                        "attrs": {}, "start_time": 0, "time": 0,
+                        "count": 0, "zero_count": 0, "scale": 0,
                         "pos_offset": 0, "pos_counts": [],
                         "neg_offset": 0, "neg_counts": [],
                     }
                     for f3, wt3, v3 in _fields(v2):
                         if f3 == 1:
                             pt["attrs"].update(_decode_attrs([v3]))
+                        elif f3 == 2:
+                            pt["start_time"] = v3
+                        elif f3 == 3:
+                            pt["time"] = v3
                         elif f3 == 4:
                             pt["count"] = v3
                         elif f3 == 6:

@@ -26,3 +26,9 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def contract_sf_dir():
+    """sf0.01, the scale the contract entries are checked at, next to SF_DIR."""
+    return os.path.join(os.path.dirname(SF_DIR), "sf0.01")

@@ -143,3 +143,22 @@ def test_chunked_write_diverts_invalid_rows(spark, sf_dir, tmp_path):
     chunk_rows = sum(m["rows_out"] for m in res.metrics
                      if m["stage"].startswith("write_sink_search.chunk"))
     assert chunk_rows == ack["rows_out"] == catalog.read("sink_search").count()
+
+
+def test_sink_files_follow_the_data_not_shuffle_partitions(spark, sf_dir, tmp_path):
+    """The cached routed parent is sized by its data: at the session's
+    32-partition contract default the shuffle under the cache still
+    coalesces, so a sink table holds at most one file per core rather
+    than one per shuffle partition."""
+    conf = spark.conf
+    before = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "32")
+    try:
+        wh = str(tmp_path / "wh")
+        run_pipeline(spark, sf_dir, wh)
+    finally:
+        conf.set("spark.sql.shuffle.partitions", before)
+    cap = spark.sparkContext.defaultParallelism
+    for s in SINK_NAMES:
+        files = [f for f in os.listdir(os.path.join(wh, s)) if f.endswith(".parquet")]
+        assert 0 < len(files) <= cap, (s, len(files))

@@ -1,6 +1,8 @@
 """OTLP protobuf wire codec: golden byte vectors (hand-derived from the
-proto3 wire spec — byte-faithfulness, pdata/plog/pb.go parity) plus the
-Spark encode→decode round trip."""
+proto3 wire spec — they pin this encoder's ascending-order layout; a
+pdata/plog/pb.go reader decodes it to the same message, though Go's
+marshaler writes fields descending) plus the Spark encode→decode round
+trip."""
 
 from __future__ import annotations
 
@@ -38,9 +40,9 @@ def test_log_record_golden_bytes():
         + "1a" + "04" + "494e464f"  # 3: "INFO"
         + "2a" + "04" + "0a02" + "6869"  # 5: AnyValue{1:"hi"}
         # 6: KeyValue{1:"turn.idx", 2: AnyValue{3: int 0}} — a set
-        # oneof member is always written, even at its zero value
-        # (Go emits Int(0) as 0x18 0x00); omission is only for plain
-        # fields
+        # oneof member is always written, even at its zero value, as
+        # Go does, so a reader decodes Int(0), not an empty AnyValue;
+        # omission is only for plain fields
         + "32" + "0e" + "0a08" + "7475726e2e696478" + "1202" + "1800"
         # 12: event_name "" omitted entirely
     )
@@ -241,6 +243,26 @@ def test_metrics_exp_histogram_golden_bytes():
         + "10" + "02"                    # 2: temporality CUMULATIVE
     )
     assert metric == expect, (metric.hex(), expect.hex())
+
+
+def test_metrics_exp_histogram_point_times_roundtrip():
+    """Exp-histogram points carry start_time_unix_nano (field 2) and
+    time_unix_nano (field 3) as fixed64, and decode gives both back."""
+    from opentelemetry_collector_spark.sources import otlp_proto as m
+
+    pt = {"attrs": [("tool", "s")], "start_time": 1_700_000_000_000_000_000,
+          "time": 1_700_000_060_000_000_000, "count": 2, "zero_count": 1,
+          "scale": 0, "pos_offset": -1, "pos_counts": [1],
+          "neg_offset": 0, "neg_counts": []}
+    metric = m.encode_exp_histogram_metric("lat", "ms", [pt])
+    assert (b"\x19" + pt["time"].to_bytes(8, "little")) in metric
+    assert (b"\x11" + pt["start_time"].to_bytes(8, "little")) in metric
+    (got,) = m.decode_metrics(m.encode_resource_metrics([], "scope", [metric]))
+    assert got["type"] == "exponential_histogram"
+    assert got["start_time"] == pt["start_time"] and got["time"] == pt["time"]
+    for k in ("count", "zero_count", "scale", "pos_offset", "pos_counts"):
+        assert got[k] == pt[k], k
+    assert got["attrs"] == {"tool": "s"}
 
 
 def test_metrics_number_point_roundtrip():
