@@ -19,7 +19,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # The role axis is a closed enum (the resource-axis mapping, SURVEY §1.1;
-# sources/lookups.ROLE_LOOKUP_ROWS defines exactly these four). A distinct
+# sqltext.ROLE_LOOKUP_ROWS defines exactly these four). A distinct
 # count over a closed small domain doesn't need Spark's two-phase
 # distinct-aggregate rewrite (partial agg keyed by (group, role) + second
 # shuffle): bit_or of a per-role bit then bit_count is a plain single-pass

@@ -389,7 +389,8 @@ def _fan_out_write(
         src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
         dst = catalog.path(table)
         if not os.path.isdir(src):
-            catalog.overwrite(table, catalog.spark.createDataFrame([], schema))
+            spark = catalog.spark
+            catalog.overwrite(table, spark.createDataFrame(spark.sparkContext.emptyRDD(), schema))
             return
         shutil.rmtree(dst, ignore_errors=True)
         os.makedirs(os.path.dirname(dst), exist_ok=True)

@@ -3,42 +3,23 @@
 The reference's resource/attributes enrichment attaches environment
 attributes onto each record (docs/rfcs/processing.md:84-90,204-209). Our
 lookups are tiny dimension tables, always broadcast — never shuffled.
-Row content is shared with the DuckDB oracle via sqltext.
+
+Each lookup has one definition, the VALUES SQL in sqltext, which the
+DuckDB oracle inlines too. Spark plans it as a driver-local
+``LocalRelation`` (every column non-null, ``is_privileged`` boolean), so
+broadcasting it is one short JVM collect with no Python worker.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import (
-    BooleanType,
-    StringType,
-    StructField,
-    StructType,
-)
 
-from opentelemetry_collector_spark.sqltext import ROLE_LOOKUP_ROWS, TOOL_LOOKUP_ROWS
-
-_TOOL_SCHEMA = StructType(
-    [
-        StructField("tool", StringType(), False),
-        StructField("tool_category", StringType(), False),
-        StructField("tool_owner", StringType(), False),
-        StructField("is_privileged", BooleanType(), False),
-    ]
-)
-
-_ROLE_SCHEMA = StructType(
-    [
-        StructField("role", StringType(), False),
-        StructField("role_kind", StringType(), False),
-        StructField("billing_class", StringType(), False),
-    ]
-)
+from opentelemetry_collector_spark.sqltext import ROLE_LOOKUP_SQL, TOOL_LOOKUP_SQL
 
 
 def tool_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(TOOL_LOOKUP_ROWS, _TOOL_SCHEMA)
+    return spark.sql(TOOL_LOOKUP_SQL)
 
 
 def role_lookup_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(ROLE_LOOKUP_ROWS, _ROLE_SCHEMA)
+    return spark.sql(ROLE_LOOKUP_SQL)

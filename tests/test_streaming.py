@@ -248,3 +248,28 @@ def test_streaming_refuses_flat_batch_sink_dirs(spark, sf_dir, tmp_path):
     writer = ss.route_sink_writer(wh)
     with pytest.raises(ValueError, match="flat"):
         writer(batch, 0)
+
+
+def test_streaming_static_join_side_is_local(spark, sf_dir, tmp_path):
+    """The enrich lookups joined into every micro-batch are driver-local
+    relations, so no epoch pays a Python broadcast job for them."""
+    src = str(tmp_path / "src")
+    derive_transcripts(spark, sf_dir).limit(200).write.parquet(src)
+    routed = ss.transform(ss.stream_transcripts(spark, src), spark)
+    leaves = routed._jdf.queryExecution().analyzed().collectLeaves()
+    static = [
+        leaves.apply(i).nodeName() for i in range(leaves.size())
+        if not leaves.apply(i).isStreaming()
+    ]
+    assert static == ["LocalRelation", "LocalRelation"]
+
+    q = (
+        routed.writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    plan = q._jsq.explainInternal(False)
+    assert "ExistingRDD" not in plan, plan
+    assert plan.split("== Initial Plan ==")[0].count("LocalTableScan") == 2, plan
