@@ -779,11 +779,10 @@ def q_ann_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     from opentelemetry_collector_spark.operators.dedup import _persist
     qz = _persist(similarity.quantize_int8(emb))
     exact = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 10), score_path="native"
+        emb, emb.filter(F.col("vec_id") < 10)
     ).select("query_id", F.col("nbr_id").alias("e_nbr"))
     quant = similarity.brute_force_topk(
         qz, qz.filter(F.col("vec_id") < 10), vec_col="q_vec",
-        score_path="native",
     ).select("query_id", F.col("nbr_id").alias("q_nbr"))
     hits = exact.join(
         quant,
@@ -2291,26 +2290,8 @@ def oracle_sql() -> dict[str, str]:
         """,
         "dedup_simhash": f"""
             WITH docs AS ({sqltext.DOCS_AUG_SQL}),
-            hx AS (
-              SELECT id, len(w) AS nw,
-                     flatten(list_transform(w, x ->
-                       list_transform(generate_series(1, 16), ci ->
-                         CASE WHEN ascii(substring(md5(x), ci, 1)) <= 57
-                              THEN ascii(substring(md5(x), ci, 1)) - 48
-                              ELSE ascii(substring(md5(x), ci, 1)) - 87 END))) AS vs
-              FROM (SELECT id, {sqltext.WORDS_EXPR} AS w FROM docs)
-            ),
-            sig AS (
-              SELECT id, array_to_string(list_transform(generate_series(0, 63), j ->
-                CASE WHEN 2 * list_sum(list_transform(
-                       list_select(vs, list_transform(
-                         generate_series(0, nw - 1),
-                         wi -> wi*16 + CAST(floor(j/4) AS INT) + 1)),
-                       v -> CAST(floor(v / pow(2.0, j % 4)) AS INT) % 2))
-                     - nw > 0
-                     THEN '1' ELSE '0' END), '') AS sh
-              FROM hx
-            ),
+            words AS (SELECT id, {sqltext.WORDS_EXPR} AS w FROM docs),
+            sig AS ({sqltext.SIMHASH_SIG_SQL}),
             banded AS (
               SELECT id, sh, CAST(b AS INT) AS band,
                      substring(sh, b*16 + 1, 16) AS key

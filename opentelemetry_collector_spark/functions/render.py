@@ -52,16 +52,3 @@ def render_map_json(c: Column) -> Column:
     order follows map order (our attrs maps use fixed insertion order).
     """
     return F.to_json(c)
-
-
-def as_string(c: Column, value_type: str) -> Column:
-    """Dispatch table mirroring Value.AsString's type switch."""
-    if value_type == "double":
-        return render_double(c)
-    if value_type == "bool":
-        return render_bool(c)
-    if value_type == "bytes":
-        return render_bytes(c)
-    if value_type in ("map", "slice"):
-        return render_map_json(c)
-    return c.cast("string")

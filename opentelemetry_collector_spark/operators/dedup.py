@@ -11,8 +11,8 @@ Scale design (the whole point of each variant):
 * MinHash+LSH    — the scale path: H hash functions → B bands of R
   rows; candidates = same band key. Cost is linear in corpus size +
   bucket joins; banding thresholds tuned via (1/B)^(1/R).
-* SimHash        — constant-size signature computed with array folds
-  (no explode, no shuffle until the band join).
+* SimHash        — constant-size signature from a vectorized md5
+  kernel (no explode, no shuffle until the band join).
 * embedding      — cosine near-dup within a coarse cell (here: label;
   at scale: k-means centroid assignment broadcast) — never all-pairs.
 
@@ -99,7 +99,6 @@ def _cap_buckets(
 from opentelemetry_collector_spark.operators.textstats import (
     grams_col,
     norm_text,
-    words_col,
 )
 from opentelemetry_collector_spark.sqltext import MINHASH_COEFFS, MINHASH_P
 
@@ -139,80 +138,29 @@ def shingles_col(c: Column, k: int = 3) -> Column:
     return F.array_distinct(grams_col(c, k))
 
 
-# Signature computation path for the pair functions: "arrow" (default)
-# computes signatures in a vectorized pandas UDF — numpy + hashlib over
-# Arrow batches, ~10× the interpreted-HOF throughput; "native" is the
-# pure-Catalyst higher-order-function fold. BOTH produce bit-identical
-# signatures (asserted in tests/test_arrow_signatures.py and by the
-# DuckDB oracles, whose SQL mirrors the native path) — the flag is a
-# performance choice, never a semantics choice.
-SIGNATURE_PATHS = ("arrow", "native")
-
-
 _SPACE_RUN = __import__("re").compile(" +")
 
 
 def _norm_words(text: str) -> list[str]:
-    """Python twin of words_col(norm_text(c)): trim spaces, lower,
-    split on runs of SPACES (not all whitespace — Spark's "[ ]+"), so an
-    empty text yields one empty word exactly like Spark's split. Must
-    stay in lockstep with textstats. (NULL text: the native path yields
-    NULL signatures; here None is treated as "" — callers feed non-null
-    doc text.)"""
-    return _SPACE_RUN.split((text or "").strip(" ").lower())
-
-
-def _py_shingles(words: list[str], k: int = 3) -> set[str]:
-    """Python twin of shingles_col: distinct k-word shingles; short docs
-    yield one shingle of the remaining words (concat_ws skips absent)."""
-    n = len(words)
-    return {" ".join(words[i:i + k]) for i in range(max(n - k, 0) + 1)}
-
-
-def minhash_signature_arrow(n_hashes: int = MINHASH_N):
-    """Arrow-vectorized twin of minhash_signature: one md5 per distinct
-    shingle (hashlib), n-hash family by integer math (numpy int64 — the
-    products stay < 2^62). Batch-level shingle-hash cache exploits
-    cross-doc shingle repetition."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    coeffs = MINHASH_COEFFS[:n_hashes]
-    a_vec = np.array([a for a, _ in coeffs], dtype=np.int64)
-    b_vec = np.array([b for _, b in coeffs], dtype=np.int64)
-    p = np.int64(MINHASH_P)
-
-    @pandas_udf("array<bigint>")
-    def sig(texts: pd.Series) -> pd.Series:
-        import hashlib
-
-        cache: dict[str, int] = {}
-
-        def one(text: str) -> list[int]:
-            acc = np.full(len(coeffs), MINHASH_P, dtype=np.int64)
-            for s in _py_shingles(_norm_words(text)):
-                h = cache.get(s)
-                if h is None:
-                    h = int(hashlib.md5(s.encode("utf-8")).hexdigest()[:8], 16)
-                    cache[s] = h
-                np.minimum(acc, (a_vec * h + b_vec) % p, out=acc)
-            return acc.tolist()
-
-        return texts.map(one)
-
-    return sig
+    """Python form of words_col(norm_text(c)) and sqltext.WORDS_EXPR:
+    trim spaces, lower, split on runs of SPACES (not all whitespace —
+    Spark's "[ ]+"), so an empty text yields one empty word exactly like
+    Spark's split and DuckDB's string_split_regex."""
+    return _SPACE_RUN.split(text.strip(" ").lower())
 
 
 def simhash_signature_arrow(bits: int = SIMHASH_BITS):
-    """Arrow-vectorized twin of simhash_col: bit[4i+k] of a word is bit
-    k of the hex value of md5(word)[i]; per-doc bit counts summed over
-    ALL word occurrences (duplicates count, matching the HOF fold),
-    thresholded at majority. Returns the same bit-string encoding."""
+    """SimHash bit-string in a vectorized pandas UDF (numpy + hashlib
+    over Arrow batches). Bit[4i+k] of a word is bit k of the hex value
+    of md5(word)[i]; per-doc bit counts are summed over ALL word
+    occurrences (duplicates count) and thresholded at majority. The
+    DuckDB oracle (sqltext.SIMHASH_SIG_SQL) computes the same bits in
+    SQL. NULL text gives a NULL signature, so it joins no band."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     n_chars = bits // 4
-    # hex char -> 4 bits, LSB-first per nibble (matches nibble_bits)
+    # hex char -> 4 bits, LSB-first per nibble
     lut = np.zeros((128, 4), dtype=np.int32)
     for ch in "0123456789abcdef":
         v = int(ch, 16)
@@ -232,7 +180,9 @@ def simhash_signature_arrow(bits: int = SIMHASH_BITS):
                 cache[w] = b
             return b
 
-        def one(text: str) -> str:
+        def one(text: str | None) -> str | None:
+            if text is None:
+                return None
             words = _norm_words(text)
             counts = np.zeros(bits, dtype=np.int64)
             for w in words:
@@ -296,21 +246,16 @@ def minhash_lsh_pairs(
     bands: int = LSH_BANDS,
     rows: int = LSH_ROWS,
     max_bucket: int = 10_000,
-    signature: str = "arrow",
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash: docs agreeing on all
     ``rows`` minhashes of any band share a bucket. Returns distinct
     (id_a < id_b) pairs with the number of matching bands. Band buckets
     larger than ``max_bucket`` are dropped (logged) before the self-join
-    — see the module docstring's degenerate-key argument. ``signature``
-    picks the arrow (vectorized, default) or native (HOF) path — bit-
-    identical results either way (SIGNATURE_PATHS note)."""
-    sig_col = (
-        minhash_signature_arrow(bands * rows)(F.col(text_col))
-        if signature == "arrow"
-        else minhash_signature(F.col(text_col), bands * rows)
+    — see the module docstring's degenerate-key argument."""
+    sig = df.select(
+        F.col(id_col).alias("id"),
+        minhash_signature(F.col(text_col), bands * rows).alias("mh"),
     )
-    sig = df.select(F.col(id_col).alias("id"), sig_col.alias("mh"))
     banded = sig.select(
         "id",
         F.explode(
@@ -406,49 +351,6 @@ def ngram_jaccard_pairs(
     )
 
 
-def simhash_col(c: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash as a bit-string: bit j = majority vote over words of bit
-    (j % 4) of the hex-digit value of md5(word)[j // 4]. Array-fold only
-    — constant-size signature with zero shuffle (explode-free).
-
-    Single pass: ONE md5 per word split into hex chars, 4 bits unpacked
-    per char (nibble), per-word bit vectors summed with zip_with, then
-    thresholded — instead of one aggregate pass (and one md5 per word)
-    per bit. Bit definition mirrored verbatim in the DuckDB oracle."""
-    n_chars = bits // 4
-
-    def bit_vec(x: Column) -> Column:
-        # split evaluates md5 once; each hex char yields 4 bits
-        def nibble_bits(ch: Column) -> Column:
-            a = F.ascii(ch)
-            v = F.when(a <= 57, a - 48).otherwise(a - 87)  # hex value 0..15
-            return F.array(
-                *[(F.floor(v / F.lit(float(1 << k))).cast("int") % 2) for k in range(4)]
-            )
-
-        return F.flatten(
-            F.transform(F.slice(F.split(F.md5(x), ""), 1, n_chars), nibble_bits)
-        )
-
-    def body(w: Column) -> Column:
-        counts = F.aggregate(
-            w,
-            F.array_repeat(F.lit(0), bits),
-            lambda acc, x: F.zip_with(acc, bit_vec(x), lambda a, d: a + d),
-        )
-        return F.concat_ws(
-            "",
-            F.transform(
-                counts,
-                lambda cnt: F.when(2 * cnt - F.size(w) > 0, F.lit("1")).otherwise(
-                    F.lit("0")
-                ),
-            ),
-        )
-
-    return _bind_once(words_col(c), body)
-
-
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -456,22 +358,17 @@ def simhash_pairs(
     max_hamming: int = 3,
     band_count: int = 4,
     max_bucket: int = 10_000,
-    signature: str = "arrow",
 ) -> DataFrame:
     """Near-dup pairs by SimHash: candidates share one of ``band_count``
     signature bands (pigeonhole: hamming ≤ bands-1 guarantees a shared
     band), verified by exact Hamming distance. Band buckets larger than
-    ``max_bucket`` are dropped (logged) before the self-join.
-    ``signature``: arrow (vectorized, default) or native — bit-identical
-    (SIGNATURE_PATHS note)."""
+    ``max_bucket`` are dropped (logged) before the self-join."""
     bits = SIMHASH_BITS
     bw = bits // band_count
-    sig_col = (
-        simhash_signature_arrow(bits)(F.col(text_col))
-        if signature == "arrow"
-        else simhash_col(F.col(text_col))
+    sig = df.select(
+        F.col(id_col).alias("id"),
+        simhash_signature_arrow(bits)(F.col(text_col)).alias("sh"),
     )
-    sig = df.select(F.col(id_col).alias("id"), sig_col.alias("sh"))
     # fold the bit-string into two 32-bit ints once, so the per-candidate
     # Hamming distance is bit_count(xor) — codegen integer ops instead of
     # 64 interpreted substring compares per candidate pair
@@ -524,18 +421,15 @@ def embedding_neardup_pairs(
     cell_col: str = "label",
     threshold: float = 0.99,
     max_cell: int = 10_000,
-    score_path: str = "arrow",
 ) -> DataFrame:
     """Embedding-cosine near-dup within a coarse cell (label here, or
     the deterministic k-means assignment of similarity.kmeans_cells at
     scale) — the join is cell-local, never all-pairs. Cells larger than
     ``max_cell`` are dropped (logged): a hot cell is quadratic within
     itself, and at web scale one collapsed cell (all-zero embeddings,
-    a template cluster) would dominate the job. ``score_path``: the
-    candidate-pair cosine runs vectorized (arrow, default) or as the
-    Catalyst fold (native) — bit-identical either way."""
+    a template cluster) would dominate the job. A NULL vector scores a
+    NULL cosine, so it pairs with nothing."""
     from opentelemetry_collector_spark.operators.similarity import (
-        cosine_expr,
         cosine_rounded_arrow,
     )
 
@@ -547,11 +441,7 @@ def embedding_neardup_pairs(
     v = _persist(v)
     v = _cap_buckets(v, ["cell"], max_cell, "embedding_neardup_pairs")
     a, b = v.alias("a"), v.alias("b")
-    cos = (
-        cosine_rounded_arrow(4)(F.col("a.v"), F.col("b.v"))
-        if score_path == "arrow"
-        else F.round(cosine_expr(F.col("a.v"), F.col("b.v")), 4)
-    )
+    cos = cosine_rounded_arrow(4)(F.col("a.v"), F.col("b.v"))
     return (
         a.join(b, (F.col("a.cell") == F.col("b.cell")) & (F.col("a.id") < F.col("b.id")))
         .select(

@@ -14,9 +14,7 @@ replace_match / replace_all_matches over the ``attrs`` map column.
 
 from __future__ import annotations
 
-from collections.abc import Mapping
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -61,14 +59,3 @@ from opentelemetry_collector_spark.operators.attributes import (  # noqa: E402
     replace_match as attrs_replace_match,
     set_attr as attrs_set,
 )
-
-
-def attrs_from_resource(df: DataFrame, resource: Mapping[str, str], attrs_col: str = "attrs") -> DataFrame:
-    """Copy fixed resource attrs onto every record (resourceprocessor
-    "attach information from resource into telemetry")."""
-    if not resource:
-        return df
-    lit_map = F.create_map(
-        *[x for kv in resource.items() for x in (F.lit(kv[0]), F.lit(kv[1]))]
-    )
-    return df.withColumn(attrs_col, F.map_concat(F.col(attrs_col), lit_map))

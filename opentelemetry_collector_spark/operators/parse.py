@@ -97,76 +97,3 @@ def quarantine_split(parsed: DataFrame) -> tuple[DataFrame, DataFrame]:
     row-level analog of NewPermanent error handling (SURVEY §2.5 F7)."""
     return parsed.filter(F.col("parse_ok")), parsed.filter(~F.col("parse_ok"))
 
-
-def parse_stage_arrow(df: DataFrame, batch_size_hint: int = 0) -> DataFrame:
-    """Arrow-vectorized grok engine: the same parse via ``mapInPandas``
-    (whole Arrow batches into one Python worker call — never per-row
-    Python, honoring the input_hint).
-
-    The native regex projection (:func:`parse_stage`) is the default hot
-    path — it stays on the JVM. This variant exists for rule sets that
-    need Python ``re`` features Java regex lacks (named groups with
-    duplicate names, conditional patterns, grok library reuse) and to
-    keep the Arrow plumbing tested. Output is column-identical to
-    parse_stage(with_attrs=False); tests assert equality.
-    """
-    import re
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        BooleanType, DoubleType, IntegerType, LongType, StringType,
-        StructField, StructType,
-    )
-
-    res = {
-        "seq": re.compile(r"\[seq=([0-9]+)\]"),
-        "kind": re.compile(r"^\[seq=[0-9]+\] ([a-z]+) "),
-        "status": re.compile(r" status=([0-9]+) "),
-        "latency": re.compile(r" latency_ms=([0-9]+) "),
-        "bytes": re.compile(r" bytes=([0-9]+) "),
-        "msg": re.compile(r" msg=(.*)$"),
-        "tool": re.compile(r" tool=([a-z]+) "),
-    }
-    in_schema = df.select(
-        "conv_id", "turn_idx", "role", "text", "tool", "ts"
-    ).schema
-    out_schema = StructType(
-        list(in_schema)
-        + [
-            StructField("seq", LongType()),
-            StructField("event_kind", StringType(), False),
-            StructField("status_code", IntegerType()),
-            StructField("latency_ms", DoubleType()),
-            StructField("bytes", LongType()),
-            StructField("msg", StringType()),
-            StructField("tool_parsed", StringType()),
-            StructField("severity_num", IntegerType(), False),
-            StructField("parse_ok", BooleanType(), False),
-        ]
-    )
-
-    def kernel(batches):
-        for pdf in batches:
-            text = pdf["text"]
-
-            def ext(key):
-                return text.str.extract(res[key], expand=False)
-
-            out = pdf.copy()
-            out["seq"] = pd.to_numeric(ext("seq"), errors="coerce").astype("Int64")
-            out["event_kind"] = ext("kind").fillna("")
-            out["status_code"] = pd.to_numeric(ext("status"), errors="coerce").astype("Int32")
-            out["latency_ms"] = pd.to_numeric(ext("latency"), errors="coerce")
-            out["bytes"] = pd.to_numeric(ext("bytes"), errors="coerce").astype("Int64")
-            out["msg"] = ext("msg")
-            out["tool_parsed"] = ext("tool")
-            status = out["status_code"]
-            out["severity_num"] = (
-                pd.Series(0, index=out.index)
-                .mask(status >= 200, 9).mask(status >= 400, 13).mask(status >= 500, 17)
-                .astype("int32")
-            )
-            out["parse_ok"] = out["seq"].notna() & status.notna()
-            yield out
-
-    return df.select(*[f.name for f in in_schema]).mapInPandas(kernel, out_schema)

@@ -13,9 +13,13 @@
   other standard cell function; see dedup.simhash for the banding
   machinery it would reuse.
 
-Dot products are Spark array folds (``aggregate``/``zip_with``) in
-double precision — JVM-vectorized, no Python, and the sequential fold
-order matches DuckDB's ``list_dot_product`` for oracle parity.
+Cosine scores and the k-means argmin run in vectorized pandas UDFs
+(:func:`cosine_rounded_arrow`, :func:`assign_cells_arrow`): numpy over
+Arrow batches, per-row work heavy enough to pay for the Python
+crossing. The LSH bucket dot and the multi-probe distances stay Spark
+array folds (``aggregate``/``zip_with``). Both forms sum in double
+precision in sequential dimension order, the order of DuckDB's
+``list_dot_product``/``list_sum``, for oracle parity.
 """
 
 from __future__ import annotations
@@ -34,14 +38,6 @@ def dot_expr(a: Column, b: Column) -> Column:
     )
 
 
-def norm_expr(a: Column) -> Column:
-    return F.sqrt(dot_expr(a, a))
-
-
-def cosine_expr(a: Column, b: Column) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def _as_double(vec: Column) -> Column:
     return F.transform(vec, lambda x: x.cast("double"))
 
@@ -50,8 +46,8 @@ def _round_half_away(arr, digits: int):
     """Round half away from zero — the semantics of DuckDB ``round`` and
     Spark ``F.round`` (HALF_UP). ``np.round`` is banker's rounding
     (half-to-even): np.round(0.03125, 4) = 0.0312 while both engines
-    give 0.0313, so using it in the Arrow twins silently diverges from
-    the native path AND the oracle at dyadic halves. floor(|x|·10^d+0.5)
+    give 0.0313, so using it in the Arrow kernels silently diverges from
+    the oracle at dyadic halves. floor(|x|·10^d+0.5)
     matches DuckDB exactly (both operate on the actual double); F.round
     agrees except at values whose shortest decimal repr reads as an
     exact half while the double is not (measure-zero for computed
@@ -63,39 +59,33 @@ def _round_half_away(arr, digits: int):
 
 
 def cosine_rounded_arrow(digits: int = 4):
-    """Arrow-vectorized twin of round(cosine_expr(a, b), digits):
-    dot/norm accumulators advance dim-by-dim in numpy float64 —
-    replicating the zip_with+aggregate fold's IEEE operation order —
-    then cos = dot/(sqrt(na)*sqrt(nb)) rounded half-away-from-zero
-    (matching F.round / DuckDB, see _round_half_away). Bit-identical to
-    the interpreted fold (equality asserted in tests, incl. a dyadic
-    half), ~10× faster on the candidate-pair hot path."""
+    """round(cosine(a, b), digits) in a vectorized pandas UDF: dot/norm
+    accumulators advance dim-by-dim in numpy float64, the sequential
+    order of DuckDB's list_dot_product in the oracle, then
+    cos = dot/(sqrt(na)*sqrt(nb)) rounded half-away-from-zero (matching
+    DuckDB round, see _round_half_away). A NULL vector on either side
+    gives a NULL cosine: such rows skip the kernel and come back as NaN,
+    which the Arrow conversion writes as NULL."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        va = np.array(a.tolist(), dtype=np.float64)
-        vb = np.array(b.tolist(), dtype=np.float64)
-        n = va.shape[0]
-        dot = np.zeros(n); na = np.zeros(n); nb = np.zeros(n)
-        for i in range(va.shape[1]):  # sequential over dims = fold order
-            dot += va[:, i] * vb[:, i]
-            na += va[:, i] * va[:, i]
-            nb += vb[:, i] * vb[:, i]
-        return pd.Series(
-            _round_half_away(dot / (np.sqrt(na) * np.sqrt(nb)), digits)
-        )
+        out = np.full(len(a), np.nan)
+        ok = (a.notna() & b.notna()).to_numpy()
+        if ok.any():
+            va = np.array(a[ok].tolist(), dtype=np.float64)
+            vb = np.array(b[ok].tolist(), dtype=np.float64)
+            n = va.shape[0]
+            dot = np.zeros(n); na = np.zeros(n); nb = np.zeros(n)
+            for i in range(va.shape[1]):  # sequential over dims: oracle order
+                dot += va[:, i] * vb[:, i]
+                na += va[:, i] * va[:, i]
+                nb += vb[:, i] * vb[:, i]
+            out[ok] = _round_half_away(dot / (np.sqrt(na) * np.sqrt(nb)), digits)
+        return pd.Series(out)
 
     return cos
-
-
-def _cos_rounded(a: Column, b: Column, score_path: str) -> Column:
-    if score_path == "arrow":
-        return cosine_rounded_arrow(4)(a, b)
-    return F.round(cosine_expr(a, b), 4)
 
 
 def _topk_per_query(scored: DataFrame, k: int, fanout: int = 64) -> DataFrame:
@@ -143,15 +133,13 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_path: str = "arrow",
     fanout: int = 64,
 ) -> DataFrame:
     """Exact top-k by cosine; ties broken by neighbor id for full
     determinism. Queries are broadcast (small side by construction);
     the per-query rank is the bounded two-level form
     (:func:`_topk_per_query`), so no task ever sorts the whole corpus.
-    ``score_path``: vectorized (arrow) or Catalyst-fold cosine
-    — bit-identical (see cosine_rounded_arrow)."""
+    A NULL vector scores a NULL cosine and ranks last."""
     c = corpus.select(
         F.col(id_col).alias("nbr_id"), _as_double(F.col(vec_col)).alias("cv")
     )
@@ -161,7 +149,7 @@ def brute_force_topk(
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("nbr_id")).select(
         "query_id",
         "nbr_id",
-        _cos_rounded(F.col("qv"), F.col("cv"), score_path).alias("cos"),
+        cosine_rounded_arrow(4)(F.col("qv"), F.col("cv")).alias("cos"),
     )
     return _topk_per_query(scored, k, fanout)
 
@@ -177,30 +165,12 @@ def _sq_dist_expr(vec: Column, centroid: list[float]) -> Column:
     )
 
 
-def assign_cells_expr(vec: Column, centroids: list[list[float]]) -> Column:
-    """Argmin centroid id as a pure column expression (the broadcast
-    k-means assignment: centroids ride the plan as literals — the same
-    shape as broadcasting a tiny dim table, no shuffle, no UDF).
-    Distances rounded to 1e-6 with index tie-break so the choice is
-    reproducible across engines and summation ulp drift."""
-    scored = F.array(
-        *[
-            F.named_struct(
-                F.lit("d"), F.round(_sq_dist_expr(vec, c), 6),
-                F.lit("j"), F.lit(j),
-            )
-            for j, c in enumerate(centroids)
-        ]
-    )
-    return F.array_min(scored)["j"]
-
-
 def probe_cells_expr(vec: Column, centroids: list[list[float]], probes: int) -> Column:
     """The ``probes`` nearest centroid ids in distance order — the IVF
     multi-probe knob (each extra probe trades compute for recall).
-    Same rounded distance + index tie-break as the argmin assignment
-    (array_sort over struct<d,j> orders by d then j), so probe 1 is
-    exactly :func:`assign_cells_expr`'s cell."""
+    Distances are rounded to 1e-6 with an index tie-break (array_sort
+    over struct<d,j> orders by d then j), the same choice rule as
+    :func:`assign_cells_arrow` and the oracle's kmeans_cells_cte."""
     scored = F.array(
         *[
             F.named_struct(
@@ -216,13 +186,13 @@ def probe_cells_expr(vec: Column, centroids: list[list[float]], probes: int) -> 
 
 
 def assign_cells_arrow(centroids: list[list[float]]):
-    """Arrow-vectorized twin of :func:`assign_cells_expr` — BIT-EXACT:
-    distances accumulate dim-by-dim in a Python loop of numpy float64
-    ops (vectorized across rows, sequential across dimensions), which
-    reproduces the HOF fold's IEEE rounding order operation for
-    operation; ties broken by first-minimal index like the struct-min.
-    ~10× the interpreted fold's throughput; equality asserted in
-    tests/test_arrow_signatures.py."""
+    """Argmin centroid id in a vectorized pandas UDF (the broadcast
+    k-means assignment: centroids ride the closure, no shuffle).
+    Squared distances accumulate dim-by-dim in numpy float64 ops
+    (vectorized across rows, sequential across dimensions), the
+    list_sum order of the oracle's kmeans_cells_cte; distances are
+    rounded to 1e-6 and ties go to the first minimal index, so the
+    choice is reproducible across engines and summation ulp drift."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -234,7 +204,7 @@ def assign_cells_arrow(centroids: list[list[float]]):
             return pd.Series([], dtype="int32")
         v = np.array(vecs.tolist(), dtype=np.float64)  # (n, dim)
         d = np.zeros((v.shape[0], cents.shape[0]), dtype=np.float64)
-        for i in range(cents.shape[1]):  # sequential over dims = fold order
+        for i in range(cents.shape[1]):  # sequential over dims: oracle order
             diff = v[:, i][:, None] - cents[None, :, i]
             d += diff * diff
         d = _round_half_away(d, 6)
@@ -268,7 +238,6 @@ def kmeans_cells(
     iters: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assign_path: str = "arrow",
     train_cap: int | None = 65536,
 ) -> tuple[DataFrame, list[list[float]]]:
     """Deterministic Lloyd's k-means coarse quantizer for IVF / embedding
@@ -297,19 +266,11 @@ def kmeans_cells(
     sample lands via a bounded per-partition top-k merge
     (TakeOrderedAndProject), never a global sort. The full corpus is
     touched exactly once, by the final scan-speed assignment; centroids
-    live on the driver (k×dim doubles) and enter the plan as literals /
-    a broadcast numpy array. ``train_cap=None`` disables sampling
-    (exact mode at any size). ``assign_path``: "arrow" (vectorized
-    pandas UDF, default) or "native" (pure-Catalyst fold) —
-    bit-identical assignments (the arrow kernel replicates the fold's
-    IEEE operation order).
+    live on the driver (k×dim doubles) and enter the plan as a
+    broadcast numpy array (:func:`assign_cells_arrow`).
+    ``train_cap=None`` disables sampling (exact mode at any size).
     """
     vec = _as_double(F.col(vec_col))
-
-    def assign(cents: list[list[float]], v: Column) -> Column:
-        if assign_path == "arrow":
-            return assign_cells_arrow(cents)(v)
-        return assign_cells_expr(v, cents)
 
     train = _train_sample(df, id_col, vec, train_cap).persist()
     try:
@@ -320,7 +281,7 @@ def kmeans_cells(
         cents = seeds
         for _ in range(iters):
             assigned = train.select(
-                assign(cents, F.col("v")).alias("cell"),
+                assign_cells_arrow(cents)(F.col("v")).alias("cell"),
                 F.posexplode(F.col("v")).alias("pos", "x"),
             )
             sums = (
@@ -341,7 +302,7 @@ def kmeans_cells(
             ]
     finally:
         train.unpersist()
-    out = df.withColumn("cell", assign(cents, vec))
+    out = df.withColumn("cell", assign_cells_arrow(cents)(vec))
     return out, cents
 
 
@@ -352,7 +313,6 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "label",
-    score_path: str = "arrow",
     fanout: int = 64,
     max_cell: int | None = None,
 ) -> DataFrame:
@@ -387,7 +347,7 @@ def ivf_topk(
     ).select(
         "query_id",
         "nbr_id",
-        _cos_rounded(F.col("qv"), F.col("cv"), score_path).alias("cos"),
+        cosine_rounded_arrow(4)(F.col("qv"), F.col("cv")).alias("cos"),
     )
     return _topk_per_query(scored, k, fanout)
 
@@ -401,7 +361,6 @@ def ivf_topk_probed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     cell_col: str = "cell",
-    score_path: str = "arrow",
     fanout: int = 64,
 ) -> DataFrame:
     """Multi-probe IVF: each query searches its ``probes`` nearest
@@ -429,7 +388,7 @@ def ivf_topk_probed(
     ).select(
         "query_id",
         "nbr_id",
-        _cos_rounded(F.col("qv"), F.col("cv"), score_path).alias("cos"),
+        cosine_rounded_arrow(4)(F.col("qv"), F.col("cv")).alias("cos"),
     )
     return _topk_per_query(scored, k, fanout)
 
@@ -519,7 +478,6 @@ def lsh_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    score_path: str = "arrow",
     fanout: int = 64,
     max_cell: int | None = None,
 ) -> DataFrame:
@@ -568,7 +526,7 @@ def lsh_topk(
         corpus.withColumn("_lshb", bucket),
         queries.withColumn("_lshb", bucket),
         k=k, id_col=id_col, vec_col=vec_col, cell_col="_lshb",
-        score_path=score_path, fanout=fanout, max_cell=max_cell,
+        fanout=fanout, max_cell=max_cell,
     )
 
 

@@ -188,7 +188,7 @@ def _ctype(component_id: str) -> str:
 
 
 @dataclass
-class PipelineSpec:
+class ServicePipeline:
     name: str
     receivers: list[str]
     processors: list[str]
@@ -201,7 +201,7 @@ class ServiceConfig:
     processors: dict[str, dict]
     exporters: dict[str, dict]
     connectors: dict[str, dict]
-    pipelines: dict[str, PipelineSpec]
+    pipelines: dict[str, ServicePipeline]
 
     @staticmethod
     def from_yaml(
@@ -257,7 +257,7 @@ class ServiceConfig:
         pipelines = {}
         for name, spec in ((raw.get("service") or {}).get("pipelines") or {}).items():
             spec = spec or {}
-            pipelines[name] = PipelineSpec(
+            pipelines[name] = ServicePipeline(
                 name=name,
                 receivers=list(spec.get("receivers") or []),
                 processors=list(spec.get("processors") or []),
@@ -554,7 +554,7 @@ def run(
             rcv_cache[rid] = out
         return rcv_cache[rid]
 
-    def _connector_output(cid: str, consumer: PipelineSpec) -> DataFrame:
+    def _connector_output(cid: str, consumer: ServicePipeline) -> DataFrame:
         t = _ctype(cid)
         ins = conn_inputs[cid]
         if not ins:

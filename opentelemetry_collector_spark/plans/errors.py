@@ -41,10 +41,6 @@ class ThrottleError(RetryableError):
         self.retry_after_s = float(retry_after_s)
 
 
-def is_permanent(err: BaseException) -> bool:
-    return isinstance(err, PermanentError)
-
-
 # Default sink-write row contract (the exporter's input validation; a
 # violating row is the per-push "rejected_log_records" of OTLP partial
 # success, exporter/otlpexporter/otlp.go:143-149). max item size plays

@@ -5,7 +5,7 @@ shard (batch_processor.go:299-366, multi_batcher.go:22-70) and has no
 skew story. Our Spark mapping adds the two things that matter at
 100 TB:
 
-* **conv_id hash partitioning with salting** — a hot conversation
+* **salted per-conversation aggregation** — a hot conversation
   (10^6 turns) would pin one task; salting splits it into
   ``n_salts`` subgroups that aggregate independently, then merge.
   Two-phase aggregation: the classic partial/final split the
@@ -19,18 +19,8 @@ skew story. Our Spark mapping adds the two things that matter at
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_key(key: Column, n_salts: int = 16) -> Column:
-    """Deterministic salt from a second hash of the key + a per-row
-    component — splits a hot key across n_salts reducers."""
-    return F.concat(
-        key.cast("string"),
-        F.lit("#"),
-        (F.abs(F.hash(key, F.col("turn_idx"))) % n_salts).cast("string"),
-    )
 
 
 def salted_group_count(
@@ -47,24 +37,10 @@ def salted_group_count(
     return partial.groupBy(key).agg(F.sum("c").alias("turn_count"))
 
 
-def repartition_by_conversation(df: DataFrame, n: int | None = None) -> DataFrame:
-    """hash(conv_id) co-partitioning for downstream per-conversation
-    windows (the multi_batcher partitioner, metadata_partitioner.go:14-33).
-    With AQE on, prefer letting the shuffle that the window induces do
-    this — call explicitly only to REUSE one partitioning across stages.
-    """
-    cols = [F.col("conv_id")]
-    return df.repartition(n, *cols) if n else df.repartition(*cols)
-
-
 # --- plan hygiene -----------------------------------------------------------
 
 def physical_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def optimized_plan(df: DataFrame) -> str:
-    return df._jdf.queryExecution().optimizedPlan().toString()
 
 
 def formatted_plan(df: DataFrame) -> str:

@@ -4,15 +4,12 @@ The reference builds a gonum DAG from config (receivers → capabilities →
 processors → fanout → exporters), validates it (≥1 receiver and ≥1
 exporter per pipeline, no cycles), and instantiates nodes in reverse
 topological order (service/internal/graph/graph.go:75-372,
-service/pipelines/config.go:25-64). Here a pipeline is an ordered list
-of pure ``DataFrame → DataFrame`` stages (the ConsumeLogs ABI,
-consumer/logs.go:15-20, becomes a function — Capabilities/MutatesData
-is moot under immutability, SURVEY §1.3) terminated by sink writes;
-Catalyst owns the physical DAG.
-
-Validation rules carried over: every pipeline needs a source and ≥1
-sink; stage names unique; sink dedup (two routes to one table union
-rather than double-write — graph.go:213-248).
+service/pipelines/config.go:25-64). Here each stage is a pure
+``DataFrame → DataFrame`` function (the ConsumeLogs ABI,
+consumer/logs.go:15-20 — Capabilities/MutatesData is moot under
+immutability, SURVEY §1.3) terminated by sink writes; Catalyst owns the
+physical DAG. The graph rules themselves are checked once, by
+plans/config.ServiceConfig.validate.
 
 :func:`run_pipeline` is the flagship end-to-end job: scan → parse →
 enrich → route (unparseable rows to the quarantine route) into one
@@ -29,14 +26,13 @@ import os
 import shutil
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import aggregate as agg_ops
 from opentelemetry_collector_spark.operators import enrich as enrich_ops
-from opentelemetry_collector_spark.operators import filters as filter_ops
 from opentelemetry_collector_spark.operators import parse as parse_ops
 from opentelemetry_collector_spark.operators import route as route_ops
 from opentelemetry_collector_spark.plans import errors as err_ops
@@ -50,41 +46,8 @@ from opentelemetry_collector_spark.sources import (
 )
 from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
-Stage = Callable[[DataFrame], DataFrame]
-
 # route of the rows that fail to parse; written to the quarantine table
 QUARANTINE = "quarantine"
-
-
-@dataclass
-class Pipeline:
-    """Declarative pipeline spec: source → stages → sinks."""
-
-    name: str
-    source: Callable[[SparkSession], DataFrame]
-    stages: list[tuple[str, Stage]] = field(default_factory=list)
-    sinks: list[str] = field(default_factory=list)
-
-    def validate(self) -> None:
-        # service/pipelines/config.go:25-64: ≥1 receiver, ≥1 exporter.
-        if self.source is None:
-            raise ValueError(f"pipeline {self.name}: missing source")
-        if not self.sinks:
-            raise ValueError(f"pipeline {self.name}: missing sinks")
-        names = [n for n, _ in self.stages]
-        if len(names) != len(set(names)):
-            raise ValueError(f"pipeline {self.name}: duplicate stage names {names}")
-        if len(self.sinks) != len(set(self.sinks)):
-            # sink dedup: one physical table per sink id (graph.go:213-248)
-            raise ValueError(f"pipeline {self.name}: duplicate sinks {self.sinks}")
-
-    def plan(self, spark: SparkSession) -> DataFrame:
-        """Compose the lazy plan (no action)."""
-        self.validate()
-        df = self.source(spark)
-        for _, fn in self.stages:
-            df = fn(df)
-        return df
 
 
 @dataclass
@@ -94,18 +57,6 @@ class RunResult:
     quarantined: int
     stages_skipped: list[str]
     metrics: list[dict]
-
-
-def default_stages(spark: SparkSession) -> list[tuple[str, Stage]]:
-    tool_lk = tool_lookup_df(spark)
-    role_lk = role_lookup_df(spark)
-    return [
-        ("parse", lambda df: parse_ops.parse_stage(df)),
-        ("enrich", lambda df: enrich_ops.enrich_stage(df, tool_lk, role_lk)),
-        # filter: quarantine unparseable rows; keep everything parseable
-        # (strict-set example configs live in tests).
-        ("route", lambda df: route_ops.route_stage(df)),
-    ]
 
 
 def run_pipeline(

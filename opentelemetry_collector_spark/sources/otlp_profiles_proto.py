@@ -38,7 +38,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from opentelemetry_collector_spark.sources.otlp_proto import (
-    _WT_FIXED64,
     _WT_LEN,
     _WT_VARINT,
     _any_string,

@@ -274,6 +274,30 @@ def minhash_sig_sql_list(n_hashes: int = 12) -> str:
     ) + "]"
 
 
+# SimHash signature, the DuckDB side of dedup.simhash_signature_arrow:
+# reads ``words(id, w)`` and yields ``(id, sh)``, a 64-char bit string.
+# Bit j is the majority vote over the doc's words of bit j % 4 of the
+# hex value of md5(word)[j // 4].
+SIMHASH_SIG_SQL = """
+              SELECT id, array_to_string(list_transform(generate_series(0, 63), j ->
+                CASE WHEN 2 * list_sum(list_transform(
+                       list_select(vs, list_transform(
+                         generate_series(0, nw - 1),
+                         wi -> wi*16 + CAST(floor(j/4) AS INT) + 1)),
+                       v -> CAST(floor(v / pow(2.0, j % 4)) AS INT) % 2))
+                     - nw > 0
+                     THEN '1' ELSE '0' END), '') AS sh
+              FROM (
+                SELECT id, len(w) AS nw,
+                       flatten(list_transform(w, x ->
+                         list_transform(generate_series(1, 16), ci ->
+                           CASE WHEN ascii(substring(md5(x), ci, 1)) <= 57
+                                THEN ascii(substring(md5(x), ci, 1)) - 48
+                                ELSE ascii(substring(md5(x), ci, 1)) - 87 END))) AS vs
+                FROM words
+              )
+"""
+
 def kmeans_cells_cte(
     k: int = 8, dim: int = 64, emb_sql: str | None = None,
     train_cap: int | None = None,

@@ -1,12 +1,15 @@
-"""Arrow-vectorized signature paths must be bit-identical to the native
-(Catalyst HOF) paths — the flag in dedup.SIGNATURE_PATHS is a
-performance choice only. Checked on the real documents corpus plus
-adversarial edge texts (empty, multi-space, short, unicode)."""
+"""The dedup and similarity signature kernels against their DuckDB
+oracles on adversarial edge texts (empty, multi-space, short, unicode),
+the half-away rounding the vectorized kernels share with both engines,
+and NULL inputs: a NULL text or vector must score NULL, never pair."""
 
 from __future__ import annotations
 
+import duckdb
+import pytest
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_spark import sqltext
 from opentelemetry_collector_spark.operators import dedup
 
 EDGE_TEXTS = [
@@ -20,68 +23,112 @@ EDGE_TEXTS = [
     "UPPER Case MiXeD",
     "unicode héllo wörld ünïcode",
     "repeat repeat repeat repeat repeat",
+    "\u00df",  # ß
+    "\u01c5",  # ǅ
+]
+
+# Lower-casing differs between Java (Spark), Python and DuckDB for these
+# code points, so the signatures of single-character texts differ from
+# DuckDB's. Open on ROADMAP; the xfails are strict so a fix shows up.
+CASE_FOLD_DIVERGENCE = "lower() differs between Java/Python and DuckDB for this code point"
+DIVERGENT = [
+    ("minhash", "\u1c89"),
+    ("minhash", "\u0130"),  # İ
+    ("minhash", "\u03a3\u0391\u03a3"),  # ΣΑΣ, final sigma
+    ("simhash", "\u0130"),
+    ("simhash", "\u03a3\u0391\u03a3"),
 ]
 
 
-def _corpus(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        F.col("doc_id").cast("string").alias("doc_id"), "text"
+def _spark_sigs(spark, texts: list[str]) -> dict[str, dict]:
+    df = spark.createDataFrame(list(enumerate(texts)), "id int, text string")
+    rows = df.select(
+        "id",
+        dedup.minhash_signature(F.col("text")).alias("minhash"),
+        dedup.simhash_signature_arrow()(F.col("text")).alias("simhash"),
+    ).collect()
+    return {texts[r["id"]]: {"minhash": list(r["minhash"]), "simhash": r["simhash"]}
+            for r in rows}
+
+
+def _duck_sigs(texts: list[str]) -> dict[str, dict]:
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (id INTEGER, text VARCHAR)")
+    con.executemany("INSERT INTO docs VALUES (?, ?)", list(enumerate(texts)))
+    rows = con.execute(f"""
+        WITH words AS (SELECT id, {sqltext.WORDS_EXPR} AS w FROM docs),
+        sh AS (SELECT id, {sqltext.SHINGLES_EXPR} AS sh FROM words),
+        hs AS (
+          SELECT id, list_transform(sh, s -> {sqltext.SHINGLE_HASH_EXPR}) AS hs
+          FROM sh
+        ),
+        mh AS (SELECT id, {sqltext.minhash_sig_sql_list(dedup.MINHASH_N)} AS mh FROM hs),
+        sig AS ({sqltext.SIMHASH_SIG_SQL})
+        SELECT mh.id, mh.mh, sig.sh FROM mh JOIN sig ON mh.id = sig.id
+    """).fetchall()
+    return {texts[i]: {"minhash": list(mh), "simhash": sh} for i, mh, sh in rows}
+
+
+def test_signatures_equal_duckdb_on_edge_texts(spark):
+    ours = _spark_sigs(spark, EDGE_TEXTS)
+    theirs = _duck_sigs(EDGE_TEXTS)
+    assert len(ours) == len(EDGE_TEXTS)
+    for t in EDGE_TEXTS:
+        assert ours[t] == theirs[t], repr(t)
+
+
+@pytest.mark.parametrize(
+    "algo,text",
+    [pytest.param(a, t, marks=pytest.mark.xfail(strict=True, reason=CASE_FOLD_DIVERGENCE),
+                  id=f"{a}-U+{ord(t[0]):04X}")
+     for a, t in DIVERGENT],
+)
+def test_signature_case_fold_divergence(spark, algo, text):
+    assert _spark_sigs(spark, [text])[text][algo] == _duck_sigs([text])[text][algo]
+
+
+def test_simhash_pairs_skip_null_text(spark):
+    """A NULL text has no signature, so it pairs with nothing — not with
+    another NULL, not with an empty doc. Two empty docs still pair."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, "some other words here")],
+        "doc_id int, text string",
     )
-    edges = spark.createDataFrame(
-        [(f"edge{i}", t) for i, t in enumerate(EDGE_TEXTS)], "doc_id string, text string"
-    )
-    return docs.unionByName(edges)
-
-
-def test_minhash_arrow_equals_native(spark, sf_dir):
-    df = _corpus(spark, sf_dir)
-    both = df.select(
-        "doc_id",
-        dedup.minhash_signature(F.col("text")).alias("native"),
-        dedup.minhash_signature_arrow()(F.col("text")).alias("arrow"),
-    )
-    assert both.filter(F.col("native") != F.col("arrow")).count() == 0
-    assert both.count() > len(EDGE_TEXTS)
-
-
-def test_simhash_arrow_equals_native(spark, sf_dir):
-    df = _corpus(spark, sf_dir)
-    both = df.select(
-        "doc_id",
-        dedup.simhash_col(F.col("text")).alias("native"),
-        dedup.simhash_signature_arrow()(F.col("text")).alias("arrow"),
-    )
-    assert both.filter(F.col("native") != F.col("arrow")).count() == 0
-
-
-def test_pair_functions_same_result_under_both_paths(spark, sf_dir):
-    df = _corpus(spark, sf_dir)
-    for fn in (dedup.minhash_lsh_pairs, dedup.simhash_pairs):
-        a = set(map(tuple, fn(df, signature="arrow").collect()))
-        n = set(map(tuple, fn(df, signature="native").collect()))
-        assert a == n, fn.__name__
+    pairs = {tuple(r) for r in dedup.simhash_pairs(df).collect()}
     dedup.release_cached()
+    assert pairs == {(3, 4, 0)}
 
 
-def test_kmeans_assignment_arrow_equals_native(spark, sf_dir):
-    """Arrow argmin kernel must assign every vector to the same cell as
-    the Catalyst fold (IEEE operation order replicated dim-by-dim)."""
+def _null_vectors(spark):
+    return spark.createDataFrame(
+        [(1, 0, [1.0, 0.0]), (2, 0, None), (3, 0, [1.0, 0.0]), (4, 0, [0.9, 0.1])],
+        "vec_id int, label int, embedding array<double>",
+    )
+
+
+def test_embedding_pairs_null_vector_scores_null(spark):
+    pairs = {
+        tuple(r)
+        for r in dedup.embedding_neardup_pairs(_null_vectors(spark), threshold=0.5).collect()
+    }
+    dedup.release_cached()
+    assert pairs == {(1, 3, 1.0), (1, 4, 0.9939), (3, 4, 0.9939)}
+
+
+def test_brute_force_topk_null_vector_ranks_last(spark):
     from opentelemetry_collector_spark.operators import similarity
 
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out_a, cents_a = similarity.kmeans_cells(emb, k=8, iters=1, assign_path="arrow")
-    out_n, cents_n = similarity.kmeans_cells(emb, k=8, iters=1, assign_path="native")
-    assert cents_a == cents_n  # identical centroid evolution
-    a = {r["vec_id"]: r["cell"] for r in out_a.collect()}
-    n = {r["vec_id"]: r["cell"] for r in out_n.collect()}
-    assert a == n
+    emb = _null_vectors(spark)
+    top = similarity.brute_force_topk(emb, emb.filter(F.col("vec_id") == 1)).collect()
+    assert sorted((r["rank"], r["nbr_id"], r["cos"]) for r in top) == [
+        (1, 3, 1.0), (2, 4, 0.9939), (3, 2, None),
+    ]
 
 
 def test_round_half_away_matches_spark_and_duckdb(spark):
     """The Arrow kernels' rounding must match F.round (HALF_UP) and
     DuckDB round at exact dyadic halves — np.round (half-to-even) does
     not: np.round(0.03125, 4) = 0.0312 vs 0.0313 in both engines."""
-    import duckdb
     import numpy as np
 
     from opentelemetry_collector_spark.operators.similarity import _round_half_away
@@ -101,21 +148,3 @@ def test_round_half_away_matches_spark_and_duckdb(spark):
     assert ours == spark_r == duck_r
     # the banker's-rounding result would differ at the dyadic halves:
     assert ours[0] == 0.0313 and ours[1] == -0.0313
-
-
-def test_embedding_pairs_same_under_both_score_paths(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    dbl = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    base = emb.select(F.col("vec_id").alias("id"), "label", dbl.alias("v"))
-    copies = emb.filter(F.col("vec_id") % 7 == 0).select(
-        (F.col("vec_id") + 500000).alias("id"), "label", dbl.alias("v")
-    )
-    df = base.unionByName(copies)
-    a = set(map(tuple, dedup.embedding_neardup_pairs(
-        df, id_col="id", vec_col="v", score_path="arrow").collect()))
-    n = set(map(tuple, dedup.embedding_neardup_pairs(
-        df, id_col="id", vec_col="v", score_path="native").collect()))
-    assert a == n and len(a) > 0
-    dedup.release_cached()

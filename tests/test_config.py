@@ -57,6 +57,15 @@ def test_duplicate_exporter_rejected():
         ServiceConfig.from_dict(raw)
 
 
+def test_duplicate_processor_rejected():
+    raw = _base(
+        {"logs": {"receivers": ["transcripts"], "processors": ["parse", "parse"],
+                  "exporters": ["table/a"]}}
+    )
+    with pytest.raises(ConfigError, match="references processor more than once"):
+        ServiceConfig.from_dict(raw)
+
+
 def test_orphan_connector_rejected():
     raw = _base({"logs": {"receivers": ["transcripts"], "exporters": ["table/a"]}})
     raw["connectors"] = {"forward/x": {}}

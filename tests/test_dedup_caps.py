@@ -68,11 +68,11 @@ def test_ivf_degenerate_cell_exact_and_cappable(spark):
     ]
     df = spark.createDataFrame(rows, "vec_id int, label string, embedding array<float>")
     q = df.filter(F.col("vec_id") < 4)
-    ivf = similarity.ivf_topk(df, q, k=3, score_path="native", fanout=8)
-    bf = similarity.brute_force_topk(df, q, k=3, score_path="native", fanout=8)
+    ivf = similarity.ivf_topk(df, q, k=3, fanout=8)
+    bf = similarity.brute_force_topk(df, q, k=3, fanout=8)
     assert sorted(map(tuple, ivf.collect())) == sorted(map(tuple, bf.collect()))
 
-    capped = similarity.ivf_topk(df, q, k=3, score_path="native", max_cell=10)
+    capped = similarity.ivf_topk(df, q, k=3, max_cell=10)
     assert capped.count() == 0  # hot cell shed, logged by _cap_buckets
     dedup.release_cached()
 

@@ -102,29 +102,6 @@ def test_retry_throttle_delay():
     assert sleeps == [42.0, 7.5]
 
 
-def test_fanout_no_action_sink(spark, parsed):
-    """fan_out must not block when a sink runs no Spark action (nop /
-    dry-run sink): the non-blocking observation check falls back to an
-    explicit count."""
-    from opentelemetry_collector_spark.operators import route as route_ops
-
-    routed = route_ops.route_stage(parsed)
-    seen: dict[str, int] = {}
-
-    def sink(name, df):
-        if name == "sink_search":
-            return  # nop sink: no action at all
-        seen[name] = df.count()
-
-    counts = route_ops.fan_out(routed, sink, sinks=["sink_search", "sink_default"])
-    truth = {
-        r["route"]: r["n"]
-        for r in routed.groupBy("route").agg(F.count(F.lit(1)).alias("n")).collect()
-    }
-    assert counts["sink_search"] == truth["sink_search"]
-    assert counts["sink_default"] == truth["sink_default"] == seen["sink_default"]
-
-
 def test_cardinality_guard(spark, parsed):
     n = agg_ops.cardinality_guard(parsed, ["tool"], limit=100)
     assert n == 5
@@ -328,8 +305,8 @@ def test_lsh_topk_wrong_explicit_dim_fails_loudly(spark):
     df = spark.createDataFrame(rows, "vec_id bigint, embedding array<double>")
     q = df.filter("vec_id < 2")
 
-    ok = lsh_topk(df, q, n_planes=4, dim=4, k=3, score_path="native")
+    ok = lsh_topk(df, q, n_planes=4, dim=4, k=3)
     assert ok.count() > 0
 
     with pytest.raises(Exception, match="explicit dim=8"):
-        lsh_topk(df, q, n_planes=4, dim=8, k=3, score_path="native").count()
+        lsh_topk(df, q, n_planes=4, dim=8, k=3).count()

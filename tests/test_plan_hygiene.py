@@ -68,8 +68,8 @@ def test_ann_rank_is_two_level_bounded(spark, sf_dir):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 3)
     for df in (
-        similarity.brute_force_topk(emb, q, score_path="native"),
-        similarity.ivf_topk(emb, q, score_path="native"),
+        similarity.brute_force_topk(emb, q),
+        similarity.ivf_topk(emb, q),
     ):
         plan = _plan(df)
         # two window levels, the first partitioned by the salt bucket
@@ -134,10 +134,10 @@ def test_ivf_index_save_load_prunes_partitions(spark, sf_dir, tmp_path):
     assert "PartitionFilters" in probe_plan and "cell" in probe_plan
 
     q = out.filter(F.col("vec_id") < 5)
-    direct = similarity.ivf_topk(out, q, cell_col="cell", score_path="native")
+    direct = similarity.ivf_topk(out, q, cell_col="cell")
     via_idx = similarity.ivf_topk(
         loaded, q.drop("cell").join(loaded.select("vec_id", "cell"), "vec_id"),
-        cell_col="cell", score_path="native",
+        cell_col="cell",
     )
     assert sorted(map(tuple, direct.collect())) == sorted(
         map(tuple, via_idx.collect())

@@ -36,28 +36,6 @@ texts = st.lists(
 
 @given(ts=texts)
 @PROPS
-def test_signature_twins_agree_on_arbitrary_text(spark, ts):
-    """Arrow and Catalyst signature paths are bit-identical for ANY
-    text, not just the corpus (the signature-flag safety contract)."""
-    from opentelemetry_collector_spark.operators import dedup
-
-    df = spark.createDataFrame(
-        [(str(i), t) for i, t in enumerate(ts)], "doc_id string, text string"
-    )
-    both = df.select(
-        dedup.minhash_signature(F.col("text")).alias("mn"),
-        dedup.minhash_signature_arrow()(F.col("text")).alias("ma"),
-        dedup.simhash_col(F.col("text")).alias("sn"),
-        dedup.simhash_signature_arrow()(F.col("text")).alias("sa"),
-    )
-    bad = both.filter(
-        (F.col("mn") != F.col("ma")) | (F.col("sn") != F.col("sa"))
-    ).count()
-    assert bad == 0
-
-
-@given(ts=texts)
-@PROPS
 def test_exact_dedup_conserves_rows(spark, ts):
     """Sum of duplicate-group sizes == input rows; keep_id is a member
     of the group (no loss, no invention — the contract checker's
