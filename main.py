@@ -4,13 +4,14 @@
         --sf-dir /data/testdata/sf0.1 --warehouse /data/wh [--run-id R] [--stream]
     spark-submit ... main.py --config configs/flagship.yaml --warehouse /data/wh
 
-Runs the flagship parse → enrich → route → aggregate pipeline with
-checkpointed, idempotent sink commits; re-running with the same
---run-id resumes, skipping acked stages. With --config, runs a YAML
-service config (receivers/processors/exporters/connectors +
-service.pipelines — the otelcol config surface, plans/config.py)
-instead of the hardcoded flagship plan. Prints one JSON line with
-per-sink counts and stage metrics (the obsreport summary).
+Runs the flagship parse → enrich → route → aggregate pipeline,
+configs/flagship.yaml with its receiver at --sf-dir, with checkpointed,
+idempotent sink commits; re-running with the same --run-id resumes,
+skipping acked stages. With --config, runs that YAML service config
+(receivers/processors/exporters/connectors + service.pipelines — the
+otelcol config surface, plans/config.py) through the same executor, so
+--config configs/flagship.yaml writes the same warehouse as the default
+run. Prints one JSON line with per-sink counts (the obsreport summary).
 """
 
 from __future__ import annotations
@@ -31,7 +32,8 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--source-path", default=None,
                     help="streaming: directory of transcript parquet files")
     ap.add_argument("--config", default=None,
-                    help="YAML service config (pipelines/connectors graph)")
+                    help="YAML service config (pipelines/connectors graph) "
+                         "to run instead of configs/flagship.yaml at --sf-dir")
     ap.add_argument("--curate", action="store_true",
                     help="run the corpus-curation job over the documents "
                          "table: near-dup keep-one + quality/language gate")

@@ -44,11 +44,3 @@ def render_bool(c: Column) -> Column:
 def render_bytes(c: Column) -> Column:
     """Bytes render as base64 (value.go:435-437)."""
     return F.base64(c)
-
-
-def render_map_json(c: Column) -> Column:
-    """Map/Slice values render as their JSON encoding (value.go:405-412).
-    Spark's to_json over a map<string,string> matches the shape; key
-    order follows map order (our attrs maps use fixed insertion order).
-    """
-    return F.to_json(c)

@@ -5,11 +5,9 @@ The reference attaches resource-style attributes to records
 **broadcast hash join** against tiny dimension tables — no shuffle, the
 dimension ships once per executor, and the probe stays inside
 whole-stage codegen. At 1000 executors over 100 TB this is the only
-join strategy that doesn't move the fact table.
-
-Also provides the OTTL-style attribute mutation ops from the core RFC
-(docs/rfcs/processing.md:147-216): set / delete / keep_keys /
-replace_match / replace_all_matches over the ``attrs`` map column.
+join strategy that doesn't move the fact table. The OTTL-style
+attribute ops (docs/rfcs/processing.md:147-216) live in
+operators/attributes.py.
 """
 
 from __future__ import annotations
@@ -47,15 +45,3 @@ def enrich_stage(df: DataFrame, tool_lookup: DataFrame, role_lookup: DataFrame) 
     )
     return out
 
-
-# --- OTTL-style attribute ops (docs/rfcs/processing.md:147-216) -------------
-# Canonical implementations live in operators/attributes.py; kept here as
-# aliases because enrichment configs compose them with the join.
-
-from opentelemetry_collector_spark.operators.attributes import (  # noqa: E402
-    delete_attr as attrs_delete,
-    keep_keys as attrs_keep_keys,
-    replace_all_matches as attrs_replace_all_matches,
-    replace_match as attrs_replace_match,
-    set_attr as attrs_set,
-)

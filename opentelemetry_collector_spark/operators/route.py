@@ -10,12 +10,14 @@ Reference semantics to preserve:
 * clone-per-mutating-branch is subsumed by DataFrame immutability
   (SURVEY §1.3).
 
-Scale shape: ``route`` is a pure column expression, so the flagship
-(plans/pipeline.run_pipeline) writes every sink in ONE action,
-partitioned by a copy of the route column, and moves each partition dir
-into its table — one pass over the cached parent, a Spark job count
-independent of the number of sinks. For multi-route (a row matching
-several sinks) use :func:`explode_routes`.
+Scale shape: ``route`` is a pure column expression, so a router
+connector (plans/config._fan_out, which runs the flagship
+configs/flagship.yaml) writes every sink in ONE action, partitioned by
+a copy of the route column, and moves each partition dir into its
+table — one pass over the cached parent, a Spark job count independent
+of the number of sinks. The config ``route`` processor adds the
+quarantine route for unparsed rows on top of :func:`route_expr`. For
+multi-route (a row matching several sinks) use :func:`explode_routes`.
 """
 
 from __future__ import annotations

@@ -200,15 +200,16 @@ def assign_cells_arrow(centroids: list[list[float]]):
 
     @pandas_udf("int")
     def assign(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int32")
-        v = np.array(vecs.tolist(), dtype=np.float64)  # (n, dim)
-        d = np.zeros((v.shape[0], cents.shape[0]), dtype=np.float64)
-        for i in range(cents.shape[1]):  # sequential over dims: oracle order
-            diff = v[:, i][:, None] - cents[None, :, i]
-            d += diff * diff
-        d = _round_half_away(d, 6)
-        return pd.Series(np.argmin(d, axis=1).astype("int32"))
+        out = pd.Series(pd.NA, index=vecs.index, dtype="Int32")  # NULL vector: NULL cell
+        known = vecs.notna()
+        if known.any():
+            v = np.array(vecs[known].tolist(), dtype=np.float64)  # (n, dim)
+            d = np.zeros((v.shape[0], cents.shape[0]), dtype=np.float64)
+            for i in range(cents.shape[1]):  # sequential over dims: oracle order
+                diff = v[:, i][:, None] - cents[None, :, i]
+                d += diff * diff
+            out[known] = np.argmin(_round_half_away(d, 6), axis=1)
+        return out
 
     return assign
 
@@ -220,8 +221,11 @@ def _train_sample(
     (md5(id), id) — a deterministic, engine-independent hash order, so
     the DuckDB oracle selects the identical sample. Plans as a bounded
     per-partition top-k merge (TakeOrderedAndProject), never a global
-    sort; the cap, not the corpus, bounds every training iteration."""
-    train = df.select(F.col(id_col).alias("_id"), vec.alias("v"))
+    sort; the cap, not the corpus, bounds every training iteration.
+    NULL vectors are left out: they have no place to train."""
+    train = df.select(F.col(id_col).alias("_id"), vec.alias("v")).filter(
+        F.col("v").isNotNull()
+    )
     if train_cap:
         train = (
             train.orderBy(
@@ -255,7 +259,8 @@ def kmeans_cells(
     exact-sum cast to double / count), and rounded+tie-broken
     assignment. The DuckDB oracle (sqltext.kmeans_cells_cte) reproduces
     every step in SQL — cell assignments are value-oracled, which an
-    RNG k-means could never be. When the corpus is smaller than
+    RNG k-means could never be. A NULL vector is not trained on and
+    gets a NULL ``cell``. When the corpus is smaller than
     ``train_cap`` the sample IS the corpus, so small-scale results are
     identical to exact training.
 

@@ -18,7 +18,10 @@ is just a sub-plan handle, not a serialization point — the zero-copy
 analog of the in-process consumer ABI). A connector output consumed by
 more than one downstream pipeline is persisted once, mirroring the
 fanout consumer's single cached parent (internal/fanoutconsumer/
-logs.go:21-77).
+logs.go:21-77). A router connector and the table pipelines it feeds
+run as ONE fan-out: one cached parent, one partitioned write for all
+its tables and one for their aggregates (:func:`_fan_out`). This is the
+only batch executor; ``configs/flagship.yaml`` is the flagship job.
 
 Component IDs follow the reference's ``type`` or ``type/name`` format
 (component/identifiable.go). Supported types:
@@ -27,24 +30,38 @@ Component IDs follow the reference's ``type`` or ``type/name`` format
   analog over the events-derived table), ``parquet`` (path option)
 * processors: ``parse``, ``enrich``, ``filter`` (column/strict/regexp/
   mode — filterprocessor), ``sample`` (conversation-hash sampler),
-  ``route`` (adds the route column), ``attributes`` (verb list —
-  attributesprocessor)
+  ``route`` (adds the route column; unparsed rows take the
+  ``quarantine`` route), ``attributes`` (verb list — attributesprocessor)
 * exporters:  ``table`` (table option — Iceberg/parquet sink),
   ``debug`` (debugexporter), ``nop``
 * connectors: ``forward`` (forwardconnector/forward.go:17-90),
-  ``router`` (content routing to downstream pipelines by the route
-  column — connector/logs_router.go:18-69)
+  ``router`` (content routing by the route column, one table pipeline
+  per route — connector/logs_router.go:18-69)
 """
 
 from __future__ import annotations
 
 import os
 import re
+import shutil
+import time
 from collections.abc import Callable, Mapping
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+from opentelemetry_collector_spark.operators import aggregate as agg_ops
+from opentelemetry_collector_spark.operators.debugfmt import sample_per_second
+from opentelemetry_collector_spark.plans import errors as err_ops
+from opentelemetry_collector_spark.plans import lineage as lineage_ops
+from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore, StageMetric
+from opentelemetry_collector_spark.sinks.tables import TableCatalog, debug_format
+
+# the route of rows that fail to parse (set by the route processor); a
+# router writes it to its table in its own counted write
+QUARANTINE = "quarantine"
 
 
 class ConfigError(ValueError):
@@ -185,6 +202,11 @@ def _deep_merge(base: dict, over: dict) -> dict:
 def _ctype(component_id: str) -> str:
     """``type[/name]`` → type (component/identifiable.go)."""
     return component_id.split("/", 1)[0]
+
+
+def _table_name(exporter: str, exporters: dict[str, dict]) -> str:
+    """The table a ``table`` exporter writes ("/" would nest dirs)."""
+    return (exporters[exporter] or {}).get("table", exporter.replace("/", "_"))
 
 
 @dataclass
@@ -332,7 +354,50 @@ class ServiceConfig:
                     f"connector {c!r}: must be used as exporter in one pipeline "
                     "and receiver in another"
                 )
+            if _ctype(c) == "router":
+                self.router_exporters(c)
         self.topo_order()  # raises on cycles
+
+    def router_exporters(self, cid: str) -> dict[str, str]:
+        """Route value → table exporter of the router ``cid``. The
+        fan-out moves each route's partition dir into one table, so every
+        route must feed one pipeline that receives only from the router,
+        has no processors and exports to one ``table`` exporter; no two
+        routes may share a table, and every pipeline the router feeds
+        must be named by a route."""
+        exporters: dict[str, str] = {}
+        tables: set[str] = set()
+        routed: set[str] = set()
+        for rv, pipes in ((self.connectors[cid] or {}).get("routes") or {}).items():
+            where = f"connector {cid!r}: route {rv!r}"
+            if len(pipes or []) != 1:
+                raise ConfigError(f"{where}: must name exactly one pipeline")
+            name = pipes[0]
+            p = self.pipelines.get(name)
+            if p is None or cid not in p.receivers:
+                raise ConfigError(
+                    f"{where}: pipeline {name!r} is not configured or does "
+                    f"not receive from {cid!r}"
+                )
+            if (p.receivers != [cid] or p.processors or len(p.exporters) != 1
+                    or _ctype(p.exporters[0]) != "table"):
+                raise ConfigError(
+                    f"{where}: pipeline {name!r} must receive only from "
+                    f"{cid!r}, have no processors and export to one table exporter"
+                )
+            table = _table_name(p.exporters[0], self.exporters)
+            if table in tables:
+                raise ConfigError(f"{where}: table {table!r} is fed by another route")
+            tables.add(table)
+            exporters[rv] = p.exporters[0]
+            routed.add(name)
+        for name, p in self.pipelines.items():
+            if cid in p.receivers and name not in routed:
+                raise ConfigError(
+                    f"connector {cid!r}: pipeline {name!r} receives from it "
+                    "but no route names it"
+                )
+        return exporters
 
     def topo_order(self) -> list[str]:
         """Pipeline names in dependency order (upstream first). Edges:
@@ -436,7 +501,9 @@ def _make_processor(cid: str, opts: dict, spark: SparkSession) -> Callable[[Data
         keep = str(opts.get("keep_hex_lt", "29"))
         return lambda df: filter_ops.sample_conversations(df, keep_hex_lt=keep)
     if t == "route":
-        return lambda df: route_ops.route_stage(df)
+        # rows that fail to parse take the quarantine route
+        expr = F.when(F.col("parse_ok"), route_ops.route_expr()).otherwise(F.lit(QUARANTINE))
+        return lambda df: route_ops.route_stage(df, expr)
     if t == "attributes":
         # attributesprocessor action list (processor/attributesprocessor
         # config shape): set / delete / keep_keys verbs applied in order
@@ -483,8 +550,6 @@ class BuiltGraph:
 
     config: ServiceConfig
     order: list[str]
-    # exporter component id -> rows written on run()
-    sink_counts: dict[str, int] = field(default_factory=dict)
 
 
 def build(config: ServiceConfig) -> BuiltGraph:
@@ -492,172 +557,143 @@ def build(config: ServiceConfig) -> BuiltGraph:
     return BuiltGraph(config=config, order=config.topo_order())
 
 
+@dataclass
+class _Acks:
+    """A run's stage acks. ``fail_after`` raises right after that
+    stage's ack: the kill/resume test hook."""
+
+    ckpt: CheckpointStore
+    fail_after: str | None = None
+
+    def pending(self, stage: str) -> bool:
+        return not self.ckpt.is_done(stage)
+
+    def commit(self, stage: str, rows_in: int, rows_out: int, extra: dict,
+               since: float) -> None:
+        self.ckpt.commit(stage, StageMetric(
+            run_id=self.ckpt.run_id, stage=stage, rows_in=rows_in, rows_out=rows_out,
+            wall_ms=int((time.monotonic() - since) * 1000), extra=extra,
+        ))
+        if self.fail_after == stage:
+            raise RuntimeError(f"injected failure after stage {stage}")
+
+    def gate(self, stage: str, fn: Callable[[], tuple[int, int, dict]]) -> None:
+        """Run a terminal (sink-writing) stage unless already acked."""
+        if self.pending(stage):
+            t0 = time.monotonic()
+            self.commit(stage, *fn(), t0)
+
+
 def run(
     graph: BuiltGraph,
     spark: SparkSession,
     warehouse: str,
-    max_records_per_file: int = 0,
+    max_records_per_file: int = 1_000_000,
     run_id: str | None = None,
+    source: Callable[[SparkSession], DataFrame] | None = None,
+    fail_after_stage: str | None = None,
+    sink_chunks: int = 1,
 ) -> dict[str, int]:
     """Execute the graph: pipelines in topo order, connectors carrying
-    lazy sub-plans between them, one write action per table exporter.
+    lazy sub-plans between them. A router connector and the pipelines it
+    feeds run as ONE fan-out (:func:`_fan_out`); every other table
+    exporter is one counted write. A receiver or forward connector read
+    by several pipelines is persisted once (graph.go:213-248 node dedup,
+    fanoutconsumer/logs.go:21-77) and released after the run.
 
-    Returns per-exporter row counts (obsconsumer accounting). Connector
-    outputs consumed more than once are persisted (single cached parent
-    per fan-out, fanoutconsumer/logs.go:21-77) and released after run.
+    Returns per-exporter row counts (obsconsumer accounting). Every table
+    write is an idempotent overwrite (sinks/tables.py) of at most
+    ``max_records_per_file`` rows per file (the batch processor's
+    send_batch_max_size, processor/batchprocessor/config.go:26-29),
+    acked in the run's CheckpointStore: a re-run with the same ``run_id``
+    skips the acked stages (persistent_queue.go:321-428).
 
-    Every table write is an idempotent deterministic overwrite
-    (re-running a config converges; sinks/tables.py). With ``run_id``
-    set, each table exporter's write is ACKED in the same CheckpointStore
-    the flagship uses — re-running the config with the same run_id skips
-    completed exporters (at-least-once execution + idempotent commit =
-    effectively-once, persistent_queue.go:321-428).
+    Test hooks: ``source`` replaces every receiver's scan, and
+    ``fail_after_stage`` crashes the run right after that stage's ack
+    (receiver/receivertest/contract_checker.go:75-120). ``sink_chunks``
+    is the fan-out's ack granularity.
     """
-    from pyspark.sql import Observation
-
-    from opentelemetry_collector_spark.plans.checkpoint import (
-        CheckpointStore,
-        StageMetric,
-    )
-    from opentelemetry_collector_spark.sinks.tables import TableCatalog
-
     cfg = graph.config
     catalog = TableCatalog(spark, warehouse)
-    ckpt = CheckpointStore(warehouse, run_id) if run_id else None
-
-    # connector id -> list of upstream DataFrames (exporter side)
+    acks = _Acks(CheckpointStore(warehouse, run_id), fail_after_stage)
     conn_inputs: dict[str, list[DataFrame]] = {c: [] for c in cfg.connectors}
-    # how many pipelines consume each connector (for persist decision)
-    consumers = {
-        c: sum(c in p.receivers for p in cfg.pipelines.values())
-        for c in cfg.connectors
-    }
+    readers = {c: sum(c in p.receivers for p in cfg.pipelines.values())
+               for c in [*cfg.receivers, *cfg.connectors]}
+    rcv_cache: dict[str, DataFrame] = {}
     persisted: list[DataFrame] = []
     counts: dict[str, int] = {}
+    # table exporter id -> its ack stage; its count is read from the ack
+    stages: dict[str, str] = {}
 
-    # receiver node dedup (graph.go:213-248): ONE DataFrame per receiver
-    # id regardless of how many pipelines consume it, persisted when
-    # shared so the source is scanned once, not once per pipeline.
-    rcv_consumers: dict[str, int] = {}
-    for _p in cfg.pipelines.values():
-        for _r in _p.receivers:
-            if _r not in cfg.connectors:
-                rcv_consumers[_r] = rcv_consumers.get(_r, 0) + 1
-    rcv_cache: dict[str, DataFrame] = {}
+    def _shared(cid: str, df: DataFrame) -> DataFrame:
+        if readers[cid] > 1:
+            df = df.persist()
+            persisted.append(df)
+        return df
 
-    def _receiver_df(rid: str) -> DataFrame:
+    def _input(rid: str) -> DataFrame:
+        """A connector's unioned inputs, or the ONE scan of a receiver."""
+        if rid in cfg.connectors:
+            if _ctype(rid) not in ("forward", "router"):
+                raise ConfigError(f"connector {rid!r}: unknown type {_ctype(rid)!r}")
+            return reduce(DataFrame.unionByName, conn_inputs[rid])
         if rid not in rcv_cache:
-            out = _make_receiver(rid, cfg.receivers[rid] or {}, spark)
-            if rcv_consumers.get(rid, 0) > 1:
-                out = out.persist()
-                persisted.append(out)
-            rcv_cache[rid] = out
+            rcv_cache[rid] = _shared(rid, source(spark) if source else
+                                     _make_receiver(rid, cfg.receivers[rid] or {}, spark))
         return rcv_cache[rid]
-
-    def _connector_output(cid: str, consumer: ServicePipeline) -> DataFrame:
-        t = _ctype(cid)
-        ins = conn_inputs[cid]
-        if not ins:
-            raise ConfigError(f"connector {cid!r}: consumed before fed "
-                              "(topo order violated)")
-        merged = ins[0]
-        for d in ins[1:]:
-            merged = merged.unionByName(d)
-        if t == "router":
-            routes = (cfg.connectors[cid] or {}).get("routes", {})
-            wanted = [
-                rv for rv, pipes in routes.items() if consumer.name in (pipes or [])
-            ]
-            col = (cfg.connectors[cid] or {}).get("column", "route")
-            merged = merged.filter(F.col(col).isin(wanted))
-        elif t != "forward":
-            raise ConfigError(f"connector {cid!r}: unknown type {t!r}")
-        return merged
 
     try:
         for pname in graph.order:
             p = cfg.pipelines[pname]
-            # receivers: sources + connector outputs, unioned
-            dfs = []
-            for r in p.receivers:
-                if r in cfg.connectors:
-                    dfs.append(_connector_output(r, p))
-                else:
-                    dfs.append(_receiver_df(r))
-            df = dfs[0]
-            for d in dfs[1:]:
-                df = df.unionByName(d)
-            # processors in declared order
+            cid = p.receivers[0]
+            if cid in cfg.connectors and _ctype(cid) == "router":
+                # the pipelines a router feeds are the tables of ONE
+                # fan-out, run when the first of them comes up
+                if p.exporters[0] not in stages:
+                    exporters = cfg.router_exporters(cid)
+                    acked = _fan_out(
+                        catalog, acks, _input(cid),
+                        {rv: _table_name(e, cfg.exporters) for rv, e in exporters.items()},
+                        max_records_per_file, sink_chunks,
+                    )
+                    stages |= {exporters[rv]: st for rv, st in acked.items()}
+                continue
+            df = reduce(DataFrame.unionByName, map(_input, p.receivers))
             for prid in p.processors:
                 df = _make_processor(prid, cfg.processors[prid] or {}, spark)(df)
-            # exporters: connectors buffer the lazy plan; sinks write
-            terminal = [e for e in p.exporters if e not in cfg.connectors]
-            if len(terminal) > 1:
+            if sum(e not in cfg.connectors for e in p.exporters) > 1:
                 df = df.persist()
                 persisted.append(df)
             for e in p.exporters:
                 if e in cfg.connectors:
-                    out = df
-                    if consumers[e] > 1:
-                        out = out.persist()
-                        persisted.append(out)
-                    conn_inputs[e].append(out)
+                    # a router's fan-out caches its own parent
+                    conn_inputs[e].append(df if _ctype(e) == "router" else _shared(e, df))
                     continue
                 t = _ctype(e)
                 opts = cfg.exporters[e] or {}
                 if t == "table":
                     # "/" in component ids would nest checkpoint files
-                    stage = f"{pname}:{e}".replace("/", "_")
-                    if ckpt is not None and ckpt.is_done(stage):
-                        counts[e] = next(
-                            m["rows_out"] for m in ckpt.metrics()
-                            if m["stage"] == stage
-                        )
-                        continue
-                    import time as _time
+                    stages[e] = stage = f"{pname}:{e}".replace("/", "_")
 
-                    t0 = _time.monotonic()
-                    obs = Observation(f"cfg_{pname}_{e}")
-                    catalog.overwrite(
-                        opts.get("table", e.replace("/", "_")),
-                        df.observe(obs, F.count(F.lit(1)).alias("n")),
-                        max_records_per_file=max_records_per_file,
-                    )
-                    counts[e] = obs.get["n"]
-                    if ckpt is not None:
-                        ckpt.commit(stage, StageMetric(
-                            run_id=ckpt.run_id, stage=stage,
-                            rows_in=counts[e], rows_out=counts[e],
-                            wall_ms=int((_time.monotonic() - t0) * 1000),
-                            extra={"exporter": e, "pipeline": pname},
-                        ))
+                    def _write() -> tuple[int, int, dict]:
+                        n = _write_counted(catalog, _table_name(e, cfg.exporters), df,
+                                           max_records_per_file)
+                        return n, n, {"exporter": e, "pipeline": pname}
+
+                    acks.gate(stage, _write)
                 elif t == "debug":
-                    from opentelemetry_collector_spark.sinks.tables import debug_format
-
-                    out_df = df
-                    # debugexporter sampling knobs (factory.go:29-30):
-                    # first N per event-time second, then every Mth.
-                    # thereafter defaults to the reference's 1 — keep
-                    # every record after the burst; a config that sets
-                    # only sampling_initial must not silently drop
-                    # 499/500 records. validate() already rejected < 1
-                    si = int(opts.get("sampling_initial", 0))
+                    # sampling (factory.go:29-30): the first N per
+                    # event-time second, then every Mth; M defaults to the
+                    # reference's 1 (keep all after the burst) and
+                    # validate() rejected M < 1
+                    out, si = df, int(opts.get("sampling_initial", 0))
                     if si > 0:
-                        from opentelemetry_collector_spark.operators.debugfmt import (
-                            sample_per_second,
-                        )
-
-                        out_df = sample_per_second(
-                            out_df,
-                            sampling_initial=si,
-                            sampling_thereafter=int(
-                                opts.get("sampling_thereafter", 1)
-                            ),
+                        out = sample_per_second(
+                            df, sampling_initial=si,
+                            sampling_thereafter=int(opts.get("sampling_thereafter", 1)),
                             granularity=opts.get("sampling_granularity", "second"),
                         )
-                    counts[e] = debug_format(
-                        out_df, verbosity=opts.get("verbosity", "normal")
-                    ).count()
+                    counts[e] = debug_format(out, verbosity=opts.get("verbosity", "normal")).count()
                 elif t == "otlp_proto_file":
                     # wire-format file exporter: parsed rows → LogsData
                     # .pb envelope files (one per conversation batch) —
@@ -668,9 +704,7 @@ def run(
                     )
 
                     counts[e] = write_proto_files(
-                        encode_logs_proto(
-                            df, batch_size=int(opts.get("batch_size", 512))
-                        ),
+                        encode_logs_proto(df, batch_size=int(opts.get("batch_size", 512))),
                         opts["path"],
                     )
                 elif t == "nop":
@@ -680,11 +714,253 @@ def run(
     finally:
         for d in persisted:
             d.unpersist()
-    graph.sink_counts = counts
-    return counts
+    acked_rows = {m["stage"]: m["rows_out"] for m in acks.ckpt.metrics()}
+    return counts | {e: acked_rows[st] for e, st in stages.items()}
 
 
 def run_config_file(
     path: str, spark: SparkSession, warehouse: str, **kw
 ) -> dict[str, int]:
     return run(build(ServiceConfig.from_file(path)), spark, warehouse, **kw)
+
+
+# ---------------------------------------------------------------------------
+# the router fan-out (internal/fanoutconsumer/logs.go:21-77 over
+# connector/logs_router.go:18-69)
+# ---------------------------------------------------------------------------
+
+def _fan_out(
+    catalog: TableCatalog, acks: _Acks, df: DataFrame, tables: dict[str, str],
+    max_records_per_file: int, sink_chunks: int,
+) -> dict[str, str]:
+    """Write every route of a router connector; ``tables`` maps each
+    route value to its table. Returns each route's ack stage:
+    ``write_<table>``, or ``quarantine`` for the quarantine route.
+
+    One cached parent, sized by its data (the session lets AQE coalesce
+    the shuffle under a persisted plan: 4 files per table at sf0.1 on 4
+    cores), feeds a fixed set of Spark jobs however many routes there
+    are: one lineage collect, one counted write of the ``quarantine``
+    route, ONE partitioned write for every other un-acked route with
+    partial success (rows failing plans/errors.reject_reason go to
+    ``rejected_<table>``, counted in the ack), ONE partitioned write for
+    their ``agg_<table>`` tables, then the ``lineage`` table. Each
+    route's partition dir is moved from a staging dir to its flat table
+    and acked in route order, so a resume writes only the un-acked
+    tables; the staging dir is removed either way.
+
+    ``sink_chunks`` > 1 splits each table into that many conv_id-hash
+    chunks (plans/lineage.det_partition_id), written by the same write
+    and acked separately: a crash at chunk j of a table re-does only its
+    un-acked chunks (persistent_queue.go:321-428). Chunked tables land
+    as ``table/part=c/`` (partition-pruned on read).
+    """
+    ckpt = acks.ckpt
+    staging = f"_staging_{ckpt.run_id}"
+    route = F.col("route")
+    sinks = [rv for rv in tables if rv != QUARANTINE]
+
+    def _chunks(s: str) -> list[int]:
+        """The route's un-acked chunks. Acks record their sink_chunks,
+        and a resume under a DIFFERENT value is refused outright: the
+        acked chunks' rows were hashed with the old modulus, so mixing
+        moduli silently duplicates and drops rows. Acks without the key
+        are kept as-is."""
+        stage = f"write_{tables[s]}"
+        priors = {
+            m["sink_chunks"] for m in ckpt.metrics()
+            if m["stage"].startswith(f"{stage}.chunk") and "sink_chunks" in m
+        }
+        if priors and priors != {sink_chunks}:
+            raise ValueError(
+                f"{stage}: resume with sink_chunks={sink_chunks} but "
+                f"run {ckpt.run_id!r} acked chunks under "
+                f"sink_chunks={sorted(priors)}; resume with the same "
+                "value or use a fresh run_id"
+            )
+        return [c for c in range(sink_chunks) if acks.pending(f"{stage}.chunk{c:03d}")]
+
+    def _write_sinks(sinks: list[str], lineage: dict[str, list[dict]]) -> None:
+        """One write for every un-acked route (and chunk); accepted and
+        rejected counts ride one Observation placed above the validity
+        filter. ``rejected_<table>`` is written, by one more partitioned
+        write, only for routes whose rejected count is non-zero."""
+        t0 = time.monotonic()
+        flagged = routed.filter(route.isin(sinks)).withColumn(
+            "_reject_reason", err_ops.reject_reason()
+        )
+        ok = F.col("_reject_reason").isNull()
+        rejected_rows = flagged.filter(~ok).withColumnRenamed("_reject_reason", "reject_reason")
+        counts = [
+            c for s in sinks for c in (
+                F.count_if((route == s) & ok).alias(f"ok:{s}"),
+                F.count_if((route == s) & ~ok).alias(f"rejected:{s}"),
+            )
+        ]
+        by, todo = ["_sink"], ok
+        chunks: dict[str, list[int]] = {}
+        if sink_chunks > 1:
+            # the accepted rows of the un-acked chunks only; the counts
+            # and the rejected side still cover whole tables
+            chunks = {s: _chunks(s) for s in sinks}
+            flagged = flagged.withColumn(
+                "part", lineage_ops.det_partition_id(F.col("conv_id"), sink_chunks)
+            )
+            part = F.col("part")
+            by.append("part")
+            counts += [
+                F.count_if((route == s) & (part == c) & ok).alias(f"ok:{s}:{c}")
+                for s in sinks for c in chunks[s]
+            ]
+            pending = F.lit(False)
+            for s in sinks:
+                pending = pending | ((route == s) & part.isin(chunks[s]))
+            todo = ok & pending
+        obs = Observation("sink_fanout")
+        publish = _fan_out_write(
+            catalog, f"{staging}/sinks",
+            flagged.observe(obs, *counts).filter(todo)
+            .drop("_reject_reason").withColumn("_sink", route),
+            by, max_records_per_file,
+        )
+        got = obs.get
+        rejected = [s for s in sinks if got[f"rejected:{s}"]]
+        if rejected:
+            publish_rejected = _fan_out_write(
+                catalog, f"{staging}/rejected",
+                rejected_rows.filter(route.isin(rejected)).withColumn("_sink", route),
+                ["_sink"],
+            )
+        job_s = time.monotonic() - t0
+        for s in sinks:
+            # the shared job's time counts toward every table's ack
+            since = time.monotonic() - job_s
+            t = tables[s]
+            if sink_chunks > 1:
+                if len(chunks[s]) == sink_chunks:
+                    # no chunk acked yet: clear the table root, or a
+                    # previous run's flat files / other part dirs would
+                    # read back as duplicate rows
+                    shutil.rmtree(catalog.path(t), ignore_errors=True)
+                for c in chunks[s]:
+                    chunk = f"{t}/part={c}"
+                    publish((s, c), chunk)
+                    n = got[f"ok:{s}:{c}"]
+                    acks.commit(f"write_{t}.chunk{c:03d}", n, n, {
+                        "chunk": c, "sink_chunks": sink_chunks,
+                        "files": lineage_ops.file_lineage(catalog.path(chunk)),
+                    }, since)
+            else:
+                publish((s,), t)
+            if s in rejected:
+                publish_rejected((s,), f"rejected_{t}")
+            n, r = got[f"ok:{s}"], got[f"rejected:{s}"]
+            acks.commit(f"write_{t}", n + r, n, {
+                "sink": t, "rejected": r,
+                "partitions": lineage.get(s, []),
+                # recursive: a chunked table's files read as part=c/<file>
+                "files": lineage_ops.file_lineage(catalog.path(t)),
+            }, since)
+
+    def _write_aggs(sinks: list[str]) -> None:
+        """One aggregate write for every un-acked agg_<table> table."""
+        t0 = time.monotonic()
+        obs = Observation("agg_fanout")
+        agg = agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks)), with_route=True)
+        publish = _fan_out_write(
+            catalog, f"{staging}/aggs",
+            agg.observe(obs, *[F.count_if(route == s).alias(s) for s in sinks]),
+            ["route"], max_records_per_file,
+        )
+        got = obs.get
+        job_s = time.monotonic() - t0
+        for s in sinks:
+            since = time.monotonic() - job_s
+            t = f"agg_{tables[s]}"
+            publish((s,), t)
+            acks.commit(t, got[s], got[s], {
+                "sink": tables[s], "files": lineage_ops.file_lineage(catalog.path(t)),
+            }, since)
+
+    def _quarantine() -> tuple[int, int, dict]:
+        t = tables[QUARANTINE]
+        n = _write_counted(catalog, t, routed.filter(route == QUARANTINE),
+                           max_records_per_file)
+        return n, n, {
+            "partitions": lineage.get(QUARANTINE, []),
+            "files": lineage_ops.file_lineage(catalog.path(t)),
+        }
+
+    def _lineage_table() -> tuple[int, int, dict]:
+        """Flatten the run's acked lineage into queryable tables."""
+        rows, file_rows = ckpt.write_lineage_table(catalog.spark, catalog)
+        return rows, rows, {"file_rows": file_rows}
+
+    routed = df.persist()
+    try:
+        write_sinks = [s for s in sinks if acks.pending(f"write_{tables[s]}")]
+        agg_sinks = [s for s in sinks if acks.pending(f"agg_{tables[s]}")]
+        quarantine = QUARANTINE in tables and acks.pending(QUARANTINE)
+
+        # Per-partition logical lineage for every route, quarantine
+        # included, in ONE aggregation over the cached parent (A6
+        # north-rule contract; skipped when every write stage is acked).
+        lineage: dict[str, list[dict]] = {}
+        if write_sinks or quarantine:
+            for r in lineage_ops.logical_lineage(routed).collect():
+                lineage.setdefault(r["route"], []).append(
+                    {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
+                )
+        if QUARANTINE in tables:
+            acks.gate(QUARANTINE, _quarantine)
+        if write_sinks:
+            _write_sinks(write_sinks, lineage)
+        if agg_sinks:
+            _write_aggs(agg_sinks)
+        acks.gate("lineage", _lineage_table)
+    finally:
+        routed.unpersist()
+        shutil.rmtree(catalog.path(staging), ignore_errors=True)
+    return {rv: QUARANTINE if rv == QUARANTINE else f"write_{t}" for rv, t in tables.items()}
+
+
+def _fan_out_write(
+    catalog: TableCatalog, staging: str, df: DataFrame, by: list[str],
+    max_records_per_file: int = 0,
+) -> Callable[[tuple, str], None]:
+    """Write ``df`` once, partitioned by ``by``, into ``staging``; return
+    ``publish(values, table)``, which moves the partition dir for
+    ``values`` (one per column of ``by``) to ``table``. A partition with
+    no rows has no dir, so ``publish`` writes an empty table with the
+    same schema instead."""
+    catalog.overwrite(staging, df, max_records_per_file=max_records_per_file,
+                      partition_by=by)
+    schema = df.drop(*by).schema
+
+    def publish(values: tuple, table: str) -> None:
+        src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
+        dst = catalog.path(table)
+        if not os.path.isdir(src):
+            spark = catalog.spark
+            catalog.overwrite(table, spark.createDataFrame(spark.sparkContext.emptyRDD(), schema))
+            return
+        shutil.rmtree(dst, ignore_errors=True)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+
+    return publish
+
+
+def _write_counted(
+    catalog: TableCatalog, table: str, df: DataFrame, max_records_per_file: int,
+) -> int:
+    """Write + count in ONE action via the Observation API — the
+    obsconsumer item counter riding the data path instead of a second
+    scan (service/internal/obsconsumer/logs.go:53-70)."""
+    obs = Observation(f"rows_{table}")
+    catalog.overwrite(
+        table, df.observe(obs, F.count(F.lit(1)).alias("n")),
+        max_records_per_file=max_records_per_file,
+    )
+    return obs.get["n"]

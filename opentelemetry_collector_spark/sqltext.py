@@ -310,17 +310,16 @@ def kmeans_cells_cte(
     ``train_cap`` mirrors the Spark side's deterministic hash-sampled
     training set — the train_cap rows smallest by (md5(id), id); seeds
     and the centroid update read the sample, the final assignment reads
-    the full corpus."""
+    the full corpus. NULL vectors are left out of the training set and
+    get a NULL cell."""
     if emb_sql is None:
         emb_sql = (
             "SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE))"
             " AS v FROM embeddings"
         )
-    train_sql = (
-        "SELECT * FROM emb"
-        if not train_cap
-        else f"SELECT * FROM emb ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id"
-             f" LIMIT {train_cap}"
+    train_sql = "SELECT * FROM emb WHERE v IS NOT NULL" + (
+        f" ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT {train_cap}"
+        if train_cap else ""
     )
     dist = (
         "round(list_sum(list_transform(generate_series(1,{dim}), "
@@ -365,8 +364,9 @@ def kmeans_cells_cte(
           FROM emb e CROSS JOIN cents s
         ),
         kcells AS (
-          SELECT vec_id, CAST(cell AS INT) AS cell FROM (
-            SELECT vec_id, cell,
+          SELECT vec_id, CAST(CASE WHEN d2 IS NOT NULL THEN cell END AS INT) AS cell
+          FROM (
+            SELECT vec_id, cell, d2,
                    row_number() OVER (PARTITION BY vec_id ORDER BY d2, cell) AS rn
             FROM d1
           ) WHERE rn = 1

@@ -148,3 +148,24 @@ def test_round_half_away_matches_spark_and_duckdb(spark):
     assert ours == spark_r == duck_r
     # the banker's-rounding result would differ at the dyadic halves:
     assert ours[0] == 0.0313 and ours[1] == -0.0313
+
+
+def test_kmeans_cells_null_vector_gets_null_cell(spark):
+    """A NULL vector is left out of k-means training and gets a NULL
+    cell, in Spark and in the DuckDB oracle alike."""
+    from opentelemetry_collector_spark.operators import similarity
+
+    vecs = [(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0]), (4, [1.0, 1.0])]
+    emb = spark.createDataFrame(vecs, "vec_id int, embedding array<double>")
+    out, _ = similarity.kmeans_cells(emb, k=2, iters=1)
+    ours = {r["vec_id"]: r["cell"] for r in out.collect()}
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE vecs (vec_id INTEGER, v DOUBLE[])")
+    con.executemany("INSERT INTO vecs VALUES (?, ?)", vecs)
+    theirs = dict(con.execute(
+        sqltext.kmeans_cells_cte(k=2, dim=2, emb_sql="SELECT vec_id, v FROM vecs")
+        + "SELECT vec_id, cell FROM kcells"
+    ).fetchall())
+    con.close()
+    assert ours == theirs == {1: None, 2: 0, 3: 1, 4: 0}

@@ -476,3 +476,75 @@ def test_wire_file_export_then_ingest_from_config(spark, sf_dir, tmp_path):
     assert counts2["table/a"] == n_turns
     out = TableCatalog(spark, str(tmp_path / "whw2")).read("out_a")
     assert {"res_conv", "turn_idx", "body_text"} <= set(out.columns)
+
+
+def _flagship_raw() -> dict:
+    import yaml
+
+    with open(os.path.join(REPO, "configs", "flagship.yaml")) as f:
+        return yaml.safe_load(f)
+
+
+def _misspelled_pipeline(raw):
+    raw["connectors"]["router/bytool"]["routes"]["sink_search"] = ["logs/serach"]
+
+
+def _pipeline_not_fed_by_router(raw):
+    raw["service"]["pipelines"]["logs/side"] = {
+        "receivers": ["transcripts"], "exporters": ["table/search"]}
+    raw["connectors"]["router/bytool"]["routes"]["sink_search"] = ["logs/side"]
+
+
+def _consumer_with_processors(raw):
+    raw["service"]["pipelines"]["logs/search"]["processors"] = ["enrich"]
+
+
+def _consumer_with_debug_exporter(raw):
+    raw["exporters"]["debug/search"] = {}
+    raw["service"]["pipelines"]["logs/search"]["exporters"] = ["debug/search"]
+
+
+def _two_routes_one_table(raw):
+    raw["exporters"]["table/browser"]["table"] = "sink_search"
+
+
+def _route_to_two_pipelines(raw):
+    raw["connectors"]["router/bytool"]["routes"]["sink_search"].append("logs/browser")
+
+
+def _consumer_without_route(raw):
+    del raw["connectors"]["router/bytool"]["routes"]["sink_default"]
+
+
+@pytest.mark.parametrize("defect, match", [
+    pytest.param(_misspelled_pipeline,
+                 "route 'sink_search': pipeline 'logs/serach' is not configured",
+                 id="misspelled_pipeline"),
+    pytest.param(_pipeline_not_fed_by_router,
+                 "route 'sink_search': pipeline 'logs/side' .*does not receive",
+                 id="pipeline_not_fed_by_router"),
+    pytest.param(_consumer_with_processors,
+                 "route 'sink_search': pipeline 'logs/search' must .*no processors",
+                 id="consumer_with_processors"),
+    pytest.param(_consumer_with_debug_exporter,
+                 "route 'sink_search': .*one table exporter",
+                 id="consumer_with_debug_exporter"),
+    pytest.param(_two_routes_one_table,
+                 "route 'sink_browser': table 'sink_search' is fed by another route",
+                 id="two_routes_one_table"),
+    pytest.param(_route_to_two_pipelines,
+                 "route 'sink_search': must name exactly one pipeline",
+                 id="route_to_two_pipelines"),
+    pytest.param(_consumer_without_route,
+                 "pipeline 'logs/default' receives from it but no route names it",
+                 id="consumer_without_route"),
+])
+def test_router_fan_out_rejects_what_it_cannot_run(defect, match):
+    """A router runs as one partitioned fan-out, so every route must land
+    in its own table through a plain table pipeline; anything else is a
+    config error naming the route, not a table silently written empty."""
+    ServiceConfig.from_dict(_flagship_raw())
+    raw = _flagship_raw()
+    defect(raw)
+    with pytest.raises(ConfigError, match=match):
+        ServiceConfig.from_dict(raw)

@@ -8,9 +8,15 @@ import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import aggregate as agg_ops
-from opentelemetry_collector_spark.operators import enrich as enrich_ops
 from opentelemetry_collector_spark.operators import filters as filter_ops
 from opentelemetry_collector_spark.operators import parse as parse_ops
+from opentelemetry_collector_spark.operators.attributes import (
+    delete_attr as attrs_delete,
+    keep_keys as attrs_keep_keys,
+    replace_all_matches as attrs_replace_all_matches,
+    replace_match as attrs_replace_match,
+    set_attr as attrs_set,
+)
 from opentelemetry_collector_spark.plans import errors
 from opentelemetry_collector_spark.sinks.tables import debug_format
 from opentelemetry_collector_spark.sources import derive_transcripts, synth_transcripts
@@ -24,19 +30,19 @@ def parsed(spark, sf_dir):
 def test_attr_ops_rfc_semantics(spark, parsed):
     # docs/rfcs/processing.md:147-216 — set / delete / keep_keys / replace
     df = parsed.limit(20)
-    one = enrich_ops.attrs_set(df, "env", F.lit("prod")).select("attrs").first()["attrs"]
+    one = attrs_set(df, "env", F.lit("prod")).select("attrs").first()["attrs"]
     assert one["env"] == "prod"
-    gone = enrich_ops.attrs_delete(df, "msg").select("attrs").first()["attrs"]
+    gone = attrs_delete(df, "msg").select("attrs").first()["attrs"]
     assert "msg" not in gone
-    kept = enrich_ops.attrs_keep_keys(df, ["seq", "status"]).select("attrs").first()["attrs"]
+    kept = attrs_keep_keys(df, ["seq", "status"]).select("attrs").first()["attrs"]
     assert set(kept) <= {"seq", "status"}
-    red = enrich_ops.attrs_replace_all_matches(df, "[0-9]+", "#").select("attrs").first()["attrs"]
+    red = attrs_replace_all_matches(df, "[0-9]+", "#").select("attrs").first()["attrs"]
     assert all(not any(ch.isdigit() for ch in v) for v in red.values())
 
 
 def test_attrs_replace_match_only_matching_key(spark, parsed):
     df = parsed.limit(20)
-    out = enrich_ops.attrs_replace_match(df, "status", "^5..$", "5xx").select("attrs").collect()
+    out = attrs_replace_match(df, "status", "^5..$", "5xx").select("attrs").collect()
     for r in out:
         a = r["attrs"]
         if a.get("status", "").startswith("5") and len(a["status"]) == 3:
