@@ -129,13 +129,15 @@ def _bind_once(value: Column, body) -> Column:
 
 
 def shingles_col(c: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array column (no explode).
+    """Distinct k-word shingles as an array column (no explode). A NULL
+    text has none (NULL), so it has no MinHash signature and shares no
+    shingle with any doc; sqltext.SHINGLES_EXPR does the same.
 
     The gram window itself lives in textstats.grams_col — the ONE
     source of the edge semantics (bound-once split, greatest(n−k, 0)
     start positions, NULL-skipping concat_ws) shared with
     repetition_stats and every DuckDB twin."""
-    return F.array_distinct(grams_col(c, k))
+    return F.when(c.isNotNull(), F.array_distinct(grams_col(c, k)))
 
 
 _SPACE_RUN = __import__("re").compile(" +")
@@ -219,7 +221,7 @@ def minhash_signature(c: Column, n_hashes: int = MINHASH_N) -> Column:
     with ONE md5 per shingle (h folded to 32 bits, then the n-hash
     family derived by integer arithmetic — MINHASH_COEFFS shared with
     the oracle). Pure array fold: signature at scan speed, no shuffle,
-    one digest per shingle instead of n."""
+    one digest per shingle instead of n. NULL for a NULL text."""
     coeffs = MINHASH_COEFFS[:n_hashes]
 
     def per_shingle(s: Column) -> Column:
@@ -255,7 +257,7 @@ def minhash_lsh_pairs(
     sig = df.select(
         F.col(id_col).alias("id"),
         minhash_signature(F.col(text_col), bands * rows).alias("mh"),
-    )
+    ).where(F.col("mh").isNotNull())  # concat_ws would key a NULL as ""
     banded = sig.select(
         "id",
         F.explode(

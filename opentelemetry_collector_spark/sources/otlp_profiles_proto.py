@@ -1,18 +1,17 @@
 """OTLP profiles protobuf wire codec — the 4th signal's wire story
-(pdata/pprofile/encoding.go analog; field layout from the reference's
-generated marshalers: generated_proto_exportprofilesservicerequest.go
-{resource_profiles=1, dictionary=2}, generated_proto_profilesdictionary.go:332-375
-{mapping=1, location=2, function=3, link=4, string=5, attribute=6,
-stack=7}, generated_proto_profile.go {sample_type=1, samples=2, time=3
-fixed64, period_type=5, profile_id=7}, generated_proto_sample.go:252-287
-{stack_index=1, attribute_indices=2 packed, link_index=3, values=4
-packed, timestamps=5 packed fixed64}, generated_proto_stack.go
-{location_indices=1 packed}, generated_proto_location.go:227-249
-{mapping_index=1, address=2, lines=3, attributes=4},
-generated_proto_line.go {function_index=1}, generated_proto_function.go
-{name_strindex=1}, generated_proto_keyvalueandunit.go {key_strindex=1,
-value=2, unit_strindex=3}, generated_proto_valuetype.go
-{type_strindex=1, unit_strindex=2}).
+(pdata/pprofile/encoding.go analog). The message tables below are the
+field layout of the reference's generated marshalers
+(generated_proto_exportprofilesservicerequest.go,
+generated_proto_profilesdictionary.go:332-375, generated_proto_profile.go,
+generated_proto_sample.go:252-287, generated_proto_stack.go,
+generated_proto_location.go:227-249, generated_proto_line.go,
+generated_proto_function.go, generated_proto_keyvalueandunit.go,
+generated_proto_valuetype.go); encoding and strict decoding are the one
+table-driven walker of sources/otlp_proto.py, so a malformed request
+raises ``MalformedProto`` with a named reason, never part of its
+samples. Resolution adds one reason of its own: an index past its
+dictionary table (or a sample whose stack is empty) is
+``dangling_index``.
 
 Export shape: ONE ExportProfilesServiceRequest per conversation, each
 carrying its own conversation-local dictionary — the request-scoped
@@ -32,43 +31,67 @@ Conventions (documented, preserved by the decoder):
 
 from __future__ import annotations
 
+import hashlib
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.functions import pandas_udf
 
 from opentelemetry_collector_spark.sources.otlp_proto import (
-    _WT_LEN,
-    _WT_VARINT,
-    _any_string,
-    _fields,
-    _key,
-    _keyvalue,
-    _msg_field,
-    _read_varint,
-    _str_field,
-    _varint,
-    _varint_field,
+    ANY_VALUE,
+    BYTES,
+    FIXED64,
+    INT64,
+    PACKED,
+    REPEATED,
+    RESOURCE,
+    SCOPE,
+    STRING,
+    VARINT,
+    MalformedProto,
+    Message,
+    attributes,
+    decode,
+    encode,
+    explode_decoded,
+    string_attributes,
 )
 
-
-def _packed_varints(field: int, vals: list[int]) -> bytes:
-    if not vals:
-        return b""
-    body = b"".join(_varint(v) for v in vals)
-    return _key(field, _WT_LEN) + _varint(len(body)) + body
-
-
-def _packed_fixed64(field: int, vals: list[int]) -> bytes:
-    if not vals:
-        return b""
-    body = b"".join(int(v).to_bytes(8, "little") for v in vals)
-    return _key(field, _WT_LEN) + _varint(len(body)) + body
-
-
-def _any_int_msg(n: int) -> bytes:
-    """AnyValue{int_value=3} — oneof member always written."""
-    return _key(3, _WT_VARINT) + _varint(n or 0)
+VALUE_TYPE = Message({1: ("type_strindex", VARINT), 2: ("unit_strindex", VARINT)})
+SAMPLE = Message({
+    1: ("stack_index", VARINT),
+    2: ("attribute_indices", VARINT, PACKED),
+    4: ("values", INT64, PACKED),
+    5: ("timestamps_unix_nano", FIXED64, PACKED),
+})
+PROFILE = Message({
+    1: ("sample_type", VALUE_TYPE),
+    2: ("samples", SAMPLE, REPEATED),
+    5: ("period_type", VALUE_TYPE),
+    7: ("profile_id", BYTES),
+})
+SCOPE_PROFILES = Message({1: ("scope", SCOPE), 2: ("profiles", PROFILE, REPEATED)})
+RESOURCE_PROFILES = Message({
+    1: ("resource", RESOURCE),
+    2: ("scope_profiles", SCOPE_PROFILES, REPEATED),
+})
+LINE = Message({1: ("function_index", VARINT)})
+LOCATION = Message({3: ("lines", LINE, REPEATED)})
+FUNCTION = Message({1: ("name_strindex", VARINT)})
+KEY_VALUE_AND_UNIT = Message({1: ("key_strindex", VARINT), 2: ("value", ANY_VALUE)})
+STACK = Message({1: ("location_indices", VARINT, PACKED)})
+PROFILES_DICTIONARY = Message({
+    2: ("location_table", LOCATION, REPEATED),
+    3: ("function_table", FUNCTION, REPEATED),
+    5: ("string_table", STRING, REPEATED),
+    6: ("attribute_table", KEY_VALUE_AND_UNIT, REPEATED),
+    7: ("stack_table", STACK, REPEATED),
+})
+EXPORT_PROFILES_REQUEST = Message({
+    1: ("resource_profiles", RESOURCE_PROFILES, REPEATED),
+    2: ("dictionary", PROFILES_DICTIONARY),
+})
 
 
 def encode_profiles_request(conv_id: str, turns: list[dict]) -> bytes:
@@ -90,167 +113,88 @@ def encode_profiles_request(conv_id: str, turns: list[dict]) -> bytes:
         key = tuple(reversed(path))
         if key not in stacks:
             stacks[key] = len(stacks)
-        samples.append(
-            {
-                "stack": stacks[key],
-                "attr": i,  # one AttributeTable entry per sample
-                "value": int(t["value_us"]),
-                "ts": int(t["ts_unix_nano"]),
-                "turn_idx": int(t["turn_idx"]),
-            }
-        )
+        samples.append({
+            "stack_index": stacks[key],
+            "attribute_indices": [i],  # one AttributeTable entry per sample
+            "values": [int(t["value_us"])],
+            "timestamps_unix_nano": [int(t["ts_unix_nano"])],
+        })
+    sample_type = {"type_strindex": sidx["latency"], "unit_strindex": sidx["microseconds"]}
+    dictionary = {
+        "location_table": [{"lines": [{"function_index": fidx[n]}]} for n in names],
+        "function_table": [{"name_strindex": sidx[n]} for n in names],
+        "string_table": strings,
+        "attribute_table": [
+            {"key_strindex": sidx["turn.idx"], "value": {"int_value": int(t["turn_idx"])}}
+            for t in turns
+        ],
+        # stacks dict keeps first-use order, which is its index order
+        "stack_table": [{"location_indices": [fidx[n] for n in key]} for key in stacks],
+    }
+    profile = {
+        "sample_type": sample_type,
+        "samples": samples,
+        "period_type": sample_type,  # period_type mirrors
+        "profile_id": hashlib.md5(conv_id.encode()).digest(),
+    }
+    return encode(EXPORT_PROFILES_REQUEST, {
+        "resource_profiles": [{
+            "resource": {"attributes": string_attributes([("conv.id", conv_id)])},
+            "scope_profiles": [{"scope": {"name": "transcripts"}, "profiles": [profile]}],
+        }],
+        "dictionary": dictionary,
+    })
 
-    dict_body = b""
-    for n in names:  # location table (field 2): Line{function_index}
-        dict_body += _msg_field(
-            2, _msg_field(3, _varint_field(1, fidx[n]))
-        )
-    for n in names:  # function table (field 3): name_strindex
-        dict_body += _msg_field(3, _varint_field(1, sidx[n]))
-    for s in strings:  # string table (field 5)
-        raw = s.encode("utf-8")
-        dict_body += _key(5, _WT_LEN) + _varint(len(raw)) + raw
-    for sm in samples:  # attribute table (field 6): turn.idx per sample
-        kvu = _varint_field(1, sidx["turn.idx"]) + _msg_field(
-            2, _any_int_msg(sm["turn_idx"])
-        )
-        dict_body += _msg_field(6, kvu)
-    for key, _ in sorted(stacks.items(), key=lambda kv: kv[1]):
-        dict_body += _msg_field(
-            7, _packed_varints(1, [fidx[n] for n in key])
-        )
 
-    sample_type = _varint_field(1, sidx["latency"]) + _varint_field(
-        2, sidx["microseconds"]
-    )
-    profile = _msg_field(1, sample_type)
-    for sm in samples:
-        profile += _msg_field(
-            2,
-            _varint_field(1, sm["stack"])
-            + _packed_varints(2, [sm["attr"]])
-            + _packed_varints(4, [sm["value"]])
-            + _packed_fixed64(5, [sm["ts"]]),
-        )
-    profile += _msg_field(5, sample_type)  # period_type mirrors
-    import hashlib
-
-    profile += _msg_field(7, hashlib.md5(conv_id.encode()).digest())
-
-    resource = _msg_field(1, _keyvalue("conv.id", _any_string(conv_id)))
-    scope = _msg_field(1, _str_field(1, "transcripts"))
-    rp = _msg_field(1, resource) + _msg_field(
-        2, scope + _msg_field(2, profile)
-    )
-    return _msg_field(1, rp) + _msg_field(2, dict_body)
+def _entry(table: list, i: int):
+    if i < len(table):
+        return table[i]
+    raise MalformedProto("dangling_index")
 
 
 def decode_profiles_request(buf: bytes) -> list[dict]:
     """Inverse: resolve every sample through stack → location → line →
     function → string (the dictionary_helpers.go resolution pass) and
     emit (conv_id, turn_idx, stack_depth, leaf_fn, path, value_us,
-    ts_unix_nano) rows."""
-    strings: list[str] = []
-    functions: list[int] = []  # name_strindex per function
-    locations: list[int] = []  # function index per location
-    stacks: list[list[int]] = []
-    attrs: list[tuple[int, int]] = []  # (key_strindex, int value)
-    conv_id = ""
-    raw_samples = []
-    for f, _, v in _fields(buf):
-        if f == 2:  # dictionary
-            for f2, wt2, v2 in _fields(v):
-                if f2 == 5:
-                    strings.append(v2.decode("utf-8"))
-                elif f2 == 3:
-                    name = 0
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 1:
-                            name = v3
-                    functions.append(name)
-                elif f2 == 2:
-                    func = 0
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 3:
-                            for f4, _, v4 in _fields(v3):
-                                if f4 == 1:
-                                    func = v4
-                    locations.append(func)
-                elif f2 == 7:
-                    idxs: list[int] = []
-                    for f3, wt3, v3 in _fields(v2):
-                        if f3 == 1 and wt3 == _WT_LEN:
-                            i = 0
-                            while i < len(v3):
-                                n, i = _read_varint(v3, i)
-                                idxs.append(n)
-                        elif f3 == 1:
-                            idxs.append(v3)
-                    stacks.append(idxs)
-                elif f2 == 6:
-                    k, val = 0, 0
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 1:
-                            k = v3
-                        elif f3 == 2:
-                            for f4, _, v4 in _fields(v3):
-                                if f4 == 3:
-                                    val = v4
-                    attrs.append((k, val))
-        elif f == 1:  # resource_profiles
-            for f2, _, v2 in _fields(v):
-                if f2 == 1:  # resource
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 1:
-                            for f4, _, v4 in _fields(v3):
-                                if f4 == 2:
-                                    for f5, _, v5 in _fields(v4):
-                                        if f5 == 1:
-                                            conv_id = v5.decode("utf-8")
-                elif f2 == 2:  # scope_profiles
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 2:  # profile
-                            for f4, _, v4 in _fields(v3):
-                                if f4 == 2:  # sample
-                                    sm = {"stack": 0, "attr": [],
-                                          "values": [], "ts": []}
-                                    for f5, wt5, v5 in _fields(v4):
-                                        if f5 == 1:
-                                            sm["stack"] = v5
-                                        elif f5 == 2 and wt5 == _WT_LEN:
-                                            i = 0
-                                            while i < len(v5):
-                                                n, i = _read_varint(v5, i)
-                                                sm["attr"].append(n)
-                                        elif f5 == 4 and wt5 == _WT_LEN:
-                                            i = 0
-                                            while i < len(v5):
-                                                n, i = _read_varint(v5, i)
-                                                sm["values"].append(n)
-                                        elif f5 == 5 and wt5 == _WT_LEN:
-                                            for j in range(0, len(v5), 8):
-                                                sm["ts"].append(
-                                                    int.from_bytes(
-                                                        v5[j:j + 8], "little"
-                                                    )
-                                                )
-                                    raw_samples.append(sm)
+    ts_unix_nano) rows. turn_idx is the Int value of the sample's
+    attribute whose key is ``turn.idx``."""
+    req = decode(EXPORT_PROFILES_REQUEST, buf)
+    d = req.get("dictionary", {})
+    strings = d.get("string_table", [])
+    fn_names = [_entry(strings, f.get("name_strindex", 0)) for f in d.get("function_table", ())]
+    loc_names = [
+        _entry(fn_names, (loc.get("lines") or [{}])[-1].get("function_index", 0))
+        for loc in d.get("location_table", ())
+    ]
+    stacks = [
+        [_entry(loc_names, li) for li in s.get("location_indices", ())]
+        for s in d.get("stack_table", ())
+    ]
+    attrs = [
+        (_entry(strings, a.get("key_strindex", 0)), a.get("value", {}).get("int_value", 0))
+        for a in d.get("attribute_table", ())
+    ]
     out = []
-    for sm in raw_samples:
-        loc_idxs = stacks[sm["stack"]]
-        names = [strings[functions[locations[li]]] for li in loc_idxs]
-        turn_idx = attrs[sm["attr"][0]][1] if sm["attr"] else 0
-        out.append(
-            {
-                "conv_id": conv_id,
-                "turn_idx": turn_idx,
-                "stack_depth": len(names),
-                "leaf_fn": names[0],
-                "path": ";".join(names),
-                "value_us": sm["values"][0] if sm["values"] else 0,
-                "ts_unix_nano": sm["ts"][0] if sm["ts"] else 0,
-            }
-        )
+    for rp in req.get("resource_profiles", ()):
+        conv_id = attributes(rp.get("resource")).get("conv.id", "")
+        for sp in rp.get("scope_profiles", ()):
+            for prof in sp.get("profiles", ()):
+                for sm in prof.get("samples", ()):
+                    names = _entry(stacks, sm.get("stack_index", 0))
+                    turn_idx = 0
+                    for ai in sm.get("attribute_indices", ()):
+                        key, value = _entry(attrs, ai)
+                        if key == "turn.idx":
+                            turn_idx = value
+                    out.append({
+                        "conv_id": conv_id,
+                        "turn_idx": turn_idx,
+                        "stack_depth": len(names),
+                        "leaf_fn": _entry(names, 0),
+                        "path": ";".join(names),
+                        "value_us": (sm.get("values") or [0])[0],
+                        "ts_unix_nano": (sm.get("timestamps_unix_nano") or [0])[0],
+                    })
     return out
 
 
@@ -276,15 +220,7 @@ def encode_profiles_proto(parsed: DataFrame) -> DataFrame:
 
     @pandas_udf("binary")
     def _enc(conv: pd.Series, turns_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                encode_profiles_request(
-                    c, [dict(t.items()) if hasattr(t, "items") else t
-                        for t in ts]
-                )
-                for c, ts in zip(conv, turns_s)
-            ]
-        )
+        return pd.Series([encode_profiles_request(c, ts) for c, ts in zip(conv, turns_s)])
 
     return grouped.select("conv_id", _enc("conv_id", "turns").alias("wire"))
 
@@ -298,17 +234,4 @@ _SAMPLE_SCHEMA = (
 def decode_profiles_proto(df: DataFrame, wire_col: str = "wire") -> DataFrame:
     """(…, wire) → resolved sample rows (same columns the global
     profiles operator's resolve_samples emits)."""
-
-    @pandas_udf(f"array<struct<{_SAMPLE_SCHEMA}>>")
-    def _dec(wire: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                [tuple(d.values()) for d in decode_profiles_request(bytes(b))]
-                for b in wire
-            ]
-        )
-
-    return (
-        df.select(F.explode(_dec(F.col(wire_col))).alias("r"))
-        .select("r.*")
-    )
+    return explode_decoded(df, wire_col, _SAMPLE_SCHEMA, decode_profiles_request)

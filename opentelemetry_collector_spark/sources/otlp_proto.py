@@ -1,47 +1,47 @@
 """OTLP protobuf wire codec — the reference's PRIMARY wire format
 (SURVEY §2.1 S1/S2; pdata/plog/pb.go:8-25 ProtoMarshaler.MarshalLogs /
-UnmarshalLogs), re-expressed for Spark.
+UnmarshalLogs), re-expressed for Spark. Logs, traces and metrics live
+here; profiles (sources/otlp_profiles_proto.py) use the same walker.
 
-The message layout is the public opentelemetry-proto logs schema
-(opentelemetry/proto/logs/v1/logs.proto):
+The walker is three pieces, and field numbers appear only in the first:
 
-    LogsData              { repeated ResourceLogs resource_logs = 1 }
-    ResourceLogs          { Resource resource = 1;
-                            repeated ScopeLogs scope_logs = 2 }
-    Resource              { repeated KeyValue attributes = 1 }
-    ScopeLogs             { InstrumentationScope scope = 1;
-                            repeated LogRecord log_records = 2 }
-    InstrumentationScope  { string name = 1 }
-    LogRecord             { fixed64 time_unix_nano = 1;
-                            SeverityNumber severity_number = 2;   // varint
-                            string severity_text = 3;
-                            AnyValue body = 5;
-                            repeated KeyValue attributes = 6;
-                            string event_name = 12 }
-    KeyValue              { string key = 1; AnyValue value = 2 }
-    AnyValue              { oneof { string string_value = 1;
-                                    bool bool_value = 2;
-                                    int64 int_value = 3;
-                                    double double_value = 4;
-                                    bytes bytes_value = 7 } }
+* **One table per message** (``Message``): field number → (name, kind,
+  flags), transcribed from the public opentelemetry-proto schema
+  (logs/v1, trace/v1, metrics/v1, profiles/v1development). A kind is a
+  scalar (VARINT, INT64, SINT, FIXED64, SFIXED64, DOUBLE, STRING, BYTES)
+  or a nested ``Message``. REPEATED marks a repeated field, PACKED a
+  packed repeated scalar, PRESENT a field written even at its zero
+  value: a set oneof member (Go emits Int(0) as ``0x18 0x00`` and
+  Str("") as ``0x0a 0x00`` inside AnyValue; omitting it would make an
+  external pdata reader decode an EMPTY AnyValue) and the exp-histogram
+  positive/negative buckets, which the reference marshals
+  unconditionally.
+* **One encoder**, ``encode(table, value)``: canonical proto3 wire rules
+  (varint keys ``(field_number << 3) | wire_type``, little-endian
+  fixed64, length-delimited nested messages), fields in ascending order,
+  plain fields omitted at their zero value. Faithfulness is
+  decode-equality, not byte equality: Go's marshaler writes fields in
+  DESCENDING order, and protobuf decoding does not depend on field
+  order, so a pdata reader decodes these bytes to the same message.
+  Golden vectors hand-derived from the wire spec pin the bytes
+  (tests/test_otlp_proto.py); the ``proto_roundtrip`` contract query
+  (__spark_entry__.py) value-oracles the decoded records against
+  DuckDB's computation from the raw transcripts.
+* **One strict decoder**, ``decode(table, buf)``: every varint, length
+  and fixed width is bounds-checked, and a varint longer than 10 bytes
+  (or wider than 64 bits), field number 0, an unknown wire type, a known
+  field with the wrong wire type and invalid UTF-8 are rejected; unknown
+  fields are skipped, as any proto reader does. Each failure raises
+  ``MalformedProto(reason)``, a PermanentError whose reason is one of
+  ``REASONS``. A malformed payload is rejected whole, never accepted in
+  part, as the reference receiver does
+  (receiver/otlpreceiver/internal/logs/otlp.go:33-56).
+  ``decode_logs_proto`` — and so ``read_otlp_proto``, the path where
+  outside bytes arrive — turns it into one row per bad payload whose
+  ``decode_error`` column names the reason; the other decoders raise.
 
-Encoding follows the canonical proto3 wire rules (varint keys
-``(field_number << 3) | wire_type``, little-endian fixed64,
-length-delimited nested messages) with ascending field order and
-proto3 default-value omission for PLAIN fields (empty strings / zero
-scalars are not written). Oneof members are the exception: a set
-oneof field is always serialized even at its zero value (Go emits
-Int(0) as ``0x18 0x00`` and Str("") as ``0x0a 0x00`` inside AnyValue)
-— otherwise external pdata readers would decode a present-but-zero
-value as an EMPTY AnyValue. Faithfulness is decode-equality, not byte
-equality: Go's marshaler writes fields in DESCENDING order, this
-encoder in ascending order, and protobuf decoding does not depend on
-field order, so a pdata reader decodes these bytes to the same message.
-The byte layout is pinned by golden-vector tests (hand-derived from
-the wire spec) in tests/test_otlp_proto.py; semantic faithfulness by
-the ``proto_roundtrip`` driver query, which decodes what it encodes and
-value-oracles the flattened records against DuckDB's independent
-computation from the raw transcripts.
+Each signal function is a short build step (arguments → table values)
+or flatten step (decoded values → rows) over these tables.
 
 Spark shape: a wire codec is inherently per-record byte work no
 builtin expression covers, so this is the sanctioned slow path — Arrow
@@ -55,18 +55,48 @@ shuffle is introduced by the codec itself.
 
 from __future__ import annotations
 
+import struct
+
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
+from opentelemetry_collector_spark.plans.errors import PermanentError
+
 # ---------------------------------------------------------------------------
-# proto3 wire primitives (pure python, no deps)
+# the walker: message tables, one encoder, one strict decoder
 # ---------------------------------------------------------------------------
 
-_WT_VARINT = 0
-_WT_FIXED64 = 1
-_WT_LEN = 2
+# scalar kinds (a nested message's kind is its Message table) and the
+# wire type each is written with: 0 varint, 1 fixed64, 2 length-delimited
+VARINT, INT64, SINT, FIXED64, SFIXED64, DOUBLE, STRING, BYTES = range(8)
+_WIRE = (0, 0, 0, 1, 1, 1, 2, 2)
+_FIXED = {FIXED64: struct.Struct("<Q"), SFIXED64: struct.Struct("<q"), DOUBLE: struct.Struct("<d")}
+
+REPEATED, PACKED, PRESENT = 1, 2, 4
+
+REASONS = (
+    "truncated_varint",   # the buffer ends inside a varint
+    "varint_too_long",    # more than 10 bytes, or wider than 64 bits
+    "truncated_length",   # a length prefix runs past its message
+    "truncated_fixed",    # a fixed64/fixed32 (or packed fixed run) runs short
+    "bad_wire_type",      # wire type 3, 4, 6 or 7
+    "bad_field_number",   # field number 0
+    "wire_type_mismatch",  # a known field with another wire type
+    "invalid_utf8",       # a string field that is not UTF-8
+    "dangling_index",     # a profiles dictionary index past its table
+    "out_of_range",       # a logs value wider than its output column
+)
+
+
+class MalformedProto(PermanentError):
+    """Bytes that do not decode as the expected message. ``reason`` is
+    one of REASONS."""
+
+    def __init__(self, reason: str):
+        super().__init__(reason)
+        self.reason = reason
 
 
 def _varint(n: int) -> bytes:
@@ -85,58 +115,231 @@ def _varint(n: int) -> bytes:
             return bytes(out)
 
 
-def _key(field: int, wire_type: int) -> bytes:
-    return _varint((field << 3) | wire_type)
+def _len_prefixed(raw: bytes) -> bytes:
+    return _varint(len(raw)) + raw
 
 
-def _str_field(field: int, s: str | None) -> bytes:
-    """Length-delimited string; proto3 omits empty/None."""
-    if not s:
-        return b""
-    raw = s.encode("utf-8")
-    return _key(field, _WT_LEN) + _varint(len(raw)) + raw
+_SCALAR_ENCODERS = {
+    VARINT: _varint,
+    INT64: _varint,
+    SINT: lambda n: _varint((n << 1) ^ (n >> 63)),  # zigzag
+    FIXED64: _FIXED[FIXED64].pack,
+    SFIXED64: _FIXED[SFIXED64].pack,
+    DOUBLE: _FIXED[DOUBLE].pack,
+    STRING: lambda s: _len_prefixed(s.encode("utf-8")),
+    BYTES: _len_prefixed,
+}
 
 
-def _msg_field(field: int, body: bytes) -> bytes:
-    """Length-delimited nested message (written even when empty IF the
-    caller passes it — presence of a message field is meaningful)."""
-    return _key(field, _WT_LEN) + _varint(len(body)) + body
+class Message:
+    """One message table: ``{field_number: (name, kind[, flags])}``."""
+
+    def __init__(self, fields: dict[int, tuple]):
+        self.numbers = frozenset(fields)
+        self.encode_order = []  # (name, key bytes, payload encoder, flags)
+        self.by_key = {}  # wire key → (name, kind, 0 single | 1 append | 2 extend)
+        for number, (name, kind, *flags) in sorted(fields.items()):
+            flags = flags[0] if flags else 0
+            if isinstance(kind, Message):
+                wire, enc = 2, _message_encoder(kind)
+            elif flags & PACKED:
+                wire, enc = 2, _packed_encoder(_SCALAR_ENCODERS[kind])
+                # a reader must also accept the unpacked form
+                self.by_key[number << 3 | _WIRE[kind]] = (name, kind, 1)
+            else:
+                wire, enc = _WIRE[kind], _SCALAR_ENCODERS[kind]
+            mode = 2 if flags & PACKED else flags & REPEATED
+            self.by_key[number << 3 | wire] = (name, kind, mode)
+            self.encode_order.append((name, _varint(number << 3 | wire), enc, flags))
 
 
-def _varint_field(field: int, n: int) -> bytes:
-    if not n:
-        return b""
-    return _key(field, _WT_VARINT) + _varint(n)
+def _message_encoder(msg: Message):
+    # a value already encoded (bytes) is embedded as it is
+    return lambda v: _len_prefixed(v if isinstance(v, bytes) else encode(msg, v))
 
 
-def _fixed64_field(field: int, n: int) -> bytes:
-    if not n:
-        return b""
-    return _key(field, _WT_FIXED64) + int(n).to_bytes(8, "little")
+def _packed_encoder(element):
+    return lambda vs: _len_prefixed(b"".join(map(element, vs)))
 
 
-def _any_string(s: str | None) -> bytes:
-    """AnyValue{string_value=1}. A oneof member is ALWAYS serialized
-    when set, as Go's marshaler does: Str("") is written as
-    ``0x0a 0x00`` (field key + zero length), never as an empty
-    AnyValue; the proto3 zero-value-omission rule applies only to
-    plain (non-oneof) fields.
-    An external pdata reader distinguishes Str("") from an unset
-    value by the field's presence."""
-    raw = (s or "").encode("utf-8")
-    return _key(1, _WT_LEN) + _varint(len(raw)) + raw
+def encode(msg: Message, value: dict) -> bytes:
+    """``{field name: value}`` → wire bytes, fields in ascending order.
+    None (or a missing name) is unset. A plain field at its zero value
+    ("", 0, an empty message or list) is omitted; a PRESENT field is
+    written whenever set; every element of a REPEATED field is
+    written."""
+    out: list[bytes] = []
+    for name, key, enc, flags in msg.encode_order:
+        v = value.get(name)
+        if v is None:
+            continue
+        if flags & REPEATED:
+            for x in v:
+                out += (key, enc(x))
+        elif flags & PRESENT or v:
+            payload = enc(v)
+            if flags & PRESENT or payload != b"\x00":  # b"\x00": empty message
+                out += (key, payload)
+    return b"".join(out)
 
 
-def _any_int(n: int) -> bytes:
-    """AnyValue{int_value=3}. Always emitted, even for 0 — Go writes
-    Int(0) as ``0x18 0x00``; omitting it would decode as an EMPTY
-    AnyValue for external OTLP consumers (every conversation's first
-    turn carries turn.idx=0)."""
-    return _key(3, _WT_VARINT) + _varint(n or 0)
+def _read_varint(buf: bytes, i: int, end: int) -> tuple[int, int]:
+    n = shift = 0
+    while i < end:
+        b = buf[i]
+        i += 1
+        n |= (b & 0x7F) << shift
+        if b < 0x80:
+            if n >> 64:
+                raise MalformedProto("varint_too_long")
+            return n, i
+        shift += 7
+        if shift == 70:
+            raise MalformedProto("varint_too_long")
+    raise MalformedProto("truncated_varint")
 
 
-def _keyvalue(key: str, any_bytes: bytes) -> bytes:
-    return _str_field(1, key) + _msg_field(2, any_bytes)
+def _from_varint(kind: int, n: int) -> int:
+    if kind == INT64 and n >> 63:
+        return n - (1 << 64)
+    if kind == SINT:
+        return (n >> 1) ^ -(n & 1)
+    return n
+
+
+def _unpack(kind: int, buf: bytes, i: int, end: int) -> list:
+    """One packed run of scalars, buf[i:end]."""
+    if _WIRE[kind] == 1:
+        if (end - i) % 8:
+            raise MalformedProto("truncated_fixed")
+        return [v for (v,) in _FIXED[kind].iter_unpack(buf[i:end])]
+    out = []
+    while i < end:
+        n, i = _read_varint(buf, i, end)
+        out.append(_from_varint(kind, n))
+    return out
+
+
+def decode(msg: Message, buf: bytes, i: int = 0, end: int | None = None) -> dict:
+    """Wire bytes (buf[i:end]) → ``{field name: value}`` holding the
+    fields on the wire: repeated ones as lists, absent ones absent, the
+    last occurrence of a singular one. Unknown fields are stepped over
+    with the same bounds checks. Raises MalformedProto."""
+    if end is None:
+        end = len(buf)
+    out: dict = {}
+    fields = msg.by_key
+    while i < end:
+        key, i = _read_varint(buf, i, end)
+        wire = key & 7
+        if wire == 0:
+            n, j = _read_varint(buf, i, end)
+        elif wire == 2:
+            n, i = _read_varint(buf, i, end)
+            j = i + n
+            if j > end:
+                raise MalformedProto("truncated_length")
+        elif wire == 1 or wire == 5:  # fixed64 / fixed32
+            j = i + (8 if wire == 1 else 4)
+            if j > end:
+                raise MalformedProto("truncated_fixed")
+        else:
+            raise MalformedProto("bad_wire_type")
+        field = fields.get(key)
+        if field is None:
+            if key >> 3 == 0:
+                raise MalformedProto("bad_field_number")
+            if key >> 3 in msg.numbers:
+                raise MalformedProto("wire_type_mismatch")
+            i = j
+            continue
+        name, kind, mode = field
+        if mode == 2:
+            out.setdefault(name, []).extend(_unpack(kind, buf, i, j))
+            i = j
+            continue
+        if wire == 0:
+            v = _from_varint(kind, n)
+        elif wire == 1:
+            (v,) = _FIXED[kind].unpack_from(buf, i)
+        elif kind == STRING:
+            try:
+                v = str(buf[i:j], "utf-8")
+            except UnicodeDecodeError:
+                raise MalformedProto("invalid_utf8") from None
+        elif kind == BYTES:
+            v = bytes(buf[i:j])
+        else:
+            v = decode(kind, buf, i, j)
+        i = j
+        if mode:
+            out.setdefault(name, []).append(v)
+        else:
+            out[name] = v
+    return out
+
+
+# ---------------------------------------------------------------------------
+# common messages (common/v1, resource/v1)
+# ---------------------------------------------------------------------------
+
+ANY_VALUE = Message({
+    1: ("string_value", STRING, PRESENT),
+    2: ("bool_value", VARINT, PRESENT),
+    3: ("int_value", INT64, PRESENT),
+    4: ("double_value", DOUBLE, PRESENT),
+    7: ("bytes_value", BYTES, PRESENT),
+})
+KEY_VALUE = Message({1: ("key", STRING), 2: ("value", ANY_VALUE)})
+RESOURCE = Message({1: ("attributes", KEY_VALUE, REPEATED)})
+SCOPE = Message({1: ("name", STRING)})
+
+
+def string_attributes(pairs) -> list[dict]:
+    """(key, str value) pairs → KeyValue values (None encodes as Str(""))."""
+    return [{"key": k, "value": {"string_value": v or ""}} for k, v in pairs]
+
+
+def attributes(msg, member: str = "string_value", default=""):
+    """``{key: AnyValue member}`` over a decoded message's attributes
+    (the last of a repeated key wins; ``default`` when the value holds
+    another member)."""
+    return {
+        kv.get("key", ""): kv.get("value", {}).get(member, default)
+        for kv in (msg or {}).get("attributes", ())
+    }
+
+
+def explode_decoded(df: DataFrame, wire_col: str, schema: str, rows_of, carry=()) -> DataFrame:
+    """(…, wire) → one row per dict ``rows_of(bytes)`` returns: the Arrow
+    UDF + explode every ``decode_*_proto`` shares. Carry columns ride
+    along; a key a dict lacks reads NULL."""
+
+    @pandas_udf(f"array<struct<{schema}>>")
+    def _dec(wire: pd.Series) -> pd.Series:
+        return pd.Series([rows_of(bytes(b)) for b in wire])
+
+    return (
+        df.select(*carry, F.explode(_dec(F.col(wire_col))).alias("r"))
+        .select(*carry, "r.*")
+    )
+
+
+# ---------------------------------------------------------------------------
+# logs signal (logs/v1/logs.proto)
+# ---------------------------------------------------------------------------
+
+LOG_RECORD = Message({
+    1: ("time_unix_nano", FIXED64),
+    2: ("severity_number", VARINT),
+    3: ("severity_text", STRING),
+    5: ("body", ANY_VALUE),
+    6: ("attributes", KEY_VALUE, REPEATED),
+    12: ("event_name", STRING),
+})
+SCOPE_LOGS = Message({1: ("scope", SCOPE), 2: ("log_records", LOG_RECORD, REPEATED)})
+RESOURCE_LOGS = Message({1: ("resource", RESOURCE), 2: ("scope_logs", SCOPE_LOGS, REPEATED)})
+LOGS_DATA = Message({1: ("resource_logs", RESOURCE_LOGS, REPEATED)})
 
 
 def encode_log_record(
@@ -147,18 +350,17 @@ def encode_log_record(
     turn_idx: int,
     event_name: str,
 ) -> bytes:
-    """One LogRecord message, fields in ascending field order (Go
-    writes them descending; the decoded message is the same): time=1,
-    sev_num=2, sev_text=3, body=5, attributes=6 (single turn.idx int
-    attribute), event_name=12."""
-    return (
-        _fixed64_field(1, time_unix_nano)
-        + _varint_field(2, severity_number)
-        + _str_field(3, severity_text)
-        + _msg_field(5, _any_string(body))
-        + _msg_field(6, _keyvalue("turn.idx", _any_int(turn_idx)))
-        + _str_field(12, event_name)
-    )
+    """One LogRecord: the body as Str, one turn.idx Int attribute (always
+    written, even 0 — every conversation's first turn carries
+    turn.idx=0)."""
+    return encode(LOG_RECORD, {
+        "time_unix_nano": time_unix_nano,
+        "severity_number": severity_number,
+        "severity_text": severity_text,
+        "body": {"string_value": body or ""},
+        "attributes": [{"key": "turn.idx", "value": {"int_value": turn_idx or 0}}],
+        "event_name": event_name,
+    })
 
 
 def encode_resource_logs(
@@ -166,137 +368,53 @@ def encode_resource_logs(
     scopes: list[tuple[str, list[bytes]]],
 ) -> bytes:
     """LogsData{ResourceLogs} for one (conversation, export batch):
-    resource carries the conv.id attribute; each (scope_name, records)
-    becomes one ScopeLogs."""
-    resource = _keyvalue("conv.id", _any_string(conv_id))
-    body = _msg_field(1, _msg_field(1, resource))
-    for scope_name, recs in scopes:
-        scope = _str_field(1, scope_name)
-        sl = _msg_field(1, scope) + b"".join(
-            _msg_field(2, r) for r in recs
-        )
-        body += _msg_field(2, sl)
-    return _msg_field(1, body)  # LogsData.resource_logs = 1
+    resource carries the conv.id attribute; each (scope_name, encoded
+    records) becomes one ScopeLogs."""
+    return encode(LOGS_DATA, {"resource_logs": [{
+        "resource": {"attributes": string_attributes([("conv.id", conv_id)])},
+        "scope_logs": [
+            {"scope": {"name": name}, "log_records": recs} for name, recs in scopes
+        ],
+    }]})
 
 
-# ---------------------------------------------------------------------------
-# decoder (generic wire walk by field number)
-# ---------------------------------------------------------------------------
-
-
-def _read_varint(buf: bytes, i: int) -> tuple[int, int]:
-    n = 0
-    shift = 0
-    while True:
-        b = buf[i]
-        i += 1
-        n |= (b & 0x7F) << shift
-        if not b & 0x80:
-            return n, i
-        shift += 7
-
-
-def _fields(buf: bytes):
-    """Yield (field_number, wire_type, value) over a message's fields.
-    value is int for varint/fixed, bytes for length-delimited."""
-    i = 0
-    while i < len(buf):
-        key, i = _read_varint(buf, i)
-        field, wt = key >> 3, key & 7
-        if wt == _WT_VARINT:
-            v, i = _read_varint(buf, i)
-        elif wt == _WT_FIXED64:
-            v = int.from_bytes(buf[i : i + 8], "little")
-            i += 8
-        elif wt == _WT_LEN:
-            ln, i = _read_varint(buf, i)
-            v = buf[i : i + ln]
-            i += ln
-        elif wt == 5:  # fixed32
-            v = int.from_bytes(buf[i : i + 4], "little")
-            i += 4
-        else:
-            raise ValueError(f"unsupported wire type {wt}")
-        yield field, wt, v
-
-
-def _any_to_str(buf: bytes) -> str:
-    for f, _, v in _fields(buf):
-        if f == 1:
-            return v.decode("utf-8")
-    return ""
-
-
-def _any_to_int(buf: bytes) -> int:
-    for f, _, v in _fields(buf):
-        if f == 3:
-            return v if v < (1 << 63) else v - (1 << 64)
-    return 0
+_INT32 = range(-(1 << 31), 1 << 31)
 
 
 def decode_logs(buf: bytes) -> list[dict]:
     """LogsData bytes → one dict per LogRecord (the flattened receiver
-    row shape). The inverse of encode_resource_logs for the fields this
-    pipeline carries; unknown fields are skipped (forward-compatible,
-    like any proto reader)."""
+    row shape). ``turn_idx`` is the Int value of the record's
+    ``turn.idx`` attribute. A value wider than its output column
+    (turn_idx and severity_number int, ts_unix_nano bigint) is
+    ``out_of_range``: the row could not be written."""
     out: list[dict] = []
-    for f_rl, _, rl in _fields(buf):
-        if f_rl != 1:
-            continue
-        conv_id = ""
-        scope_lists = []
-        for f, _, v in _fields(rl):
-            if f == 1:  # Resource
-                for f2, _, attrs in _fields(v):
-                    if f2 != 1:
-                        continue
-                    key = val = ""
-                    for f3, _, v3 in _fields(attrs):
-                        if f3 == 1:
-                            key = v3.decode("utf-8")
-                        elif f3 == 2:
-                            val = _any_to_str(v3)
-                    if key == "conv.id":
-                        conv_id = val
-            elif f == 2:  # ScopeLogs
-                scope_lists.append(v)
-        for sl in scope_lists:
-            scope_name = ""
-            for f, _, v in _fields(sl):
-                if f == 1:
-                    for f2, _, v2 in _fields(v):
-                        if f2 == 1:
-                            scope_name = v2.decode("utf-8")
-            for f, _, v in _fields(sl):
-                if f != 2:
-                    continue
+    for rl in decode(LOGS_DATA, buf).get("resource_logs", ()):
+        conv_id = attributes(rl.get("resource")).get("conv.id", "")
+        for sl in rl.get("scope_logs", ()):
+            scope_name = sl.get("scope", {}).get("name", "")
+            for r in sl.get("log_records", ()):
                 rec = {
                     "res_conv": conv_id,
                     "scope_name": scope_name,
-                    "ts_unix_nano": 0,
-                    "severity_number": 0,
-                    "severity_text": "",
-                    "body_text": "",
-                    "event_name": "",
-                    "turn_idx": 0,
+                    "ts_unix_nano": r.get("time_unix_nano", 0),
+                    "severity_number": r.get("severity_number", 0),
+                    "severity_text": r.get("severity_text", ""),
+                    "body_text": r.get("body", {}).get("string_value", ""),
+                    "event_name": r.get("event_name", ""),
+                    "turn_idx": attributes(r, "int_value", 0).get("turn.idx", 0),
                 }
-                for f2, _, v2 in _fields(v):
-                    if f2 == 1:
-                        rec["ts_unix_nano"] = v2
-                    elif f2 == 2:
-                        rec["severity_number"] = v2
-                    elif f2 == 3:
-                        rec["severity_text"] = v2.decode("utf-8")
-                    elif f2 == 5:
-                        rec["body_text"] = _any_to_str(v2)
-                    elif f2 == 6:
-                        for f3, _, v3 in _fields(v2):
-                            if f3 == 2:
-                                rec["turn_idx"] = _any_to_int(v3)
-                    elif f2 == 12:
-                        rec["event_name"] = v2.decode("utf-8")
+                if (rec["turn_idx"] not in _INT32 or rec["severity_number"] not in _INT32
+                        or rec["ts_unix_nano"] >> 63):
+                    raise MalformedProto("out_of_range")
                 out.append(rec)
     return out
+
+
+def _logs_or_error(buf: bytes) -> list[dict]:
+    try:
+        return decode_logs(buf)
+    except MalformedProto as e:
+        return [{"decode_error": e.reason}]
 
 
 # ---------------------------------------------------------------------------
@@ -308,7 +426,7 @@ _SEV_TEXT = {17: "ERROR", 13: "WARN", 9: "INFO"}
 _DECODED_SCHEMA = (
     "res_conv string, scope_name string, turn_idx int, "
     "ts_unix_nano bigint, severity_number int, severity_text string, "
-    "body_text string, event_name string"
+    "body_text string, event_name string, decode_error string"
 )
 
 
@@ -376,28 +494,32 @@ def decode_logs_proto(
     df: DataFrame, wire_col: str = "wire", carry: list[str] | None = None
 ) -> DataFrame:
     """(…, wire: binary) → one row per LogRecord, the flat receiver
-    shape shared with the JSON path. Arrow-batched decode + explode."""
-    carry = carry or []
-
-    @pandas_udf(f"array<struct<{_DECODED_SCHEMA}>>")
-    def _dec(wire: pd.Series) -> pd.Series:
-        return pd.Series([decode_logs(bytes(b)) for b in wire])
-
-    return (
-        df.select(*carry, F.explode(_dec(F.col(wire_col))).alias("r"))
-        .select(*carry, "r.*")
-    )
+    shape shared with the JSON path, plus ``decode_error``: NULL on a
+    decoded record; for a malformed payload, ONE row with the carry
+    columns, NULL data fields and the MalformedProto reason — a bad
+    payload never fails the task and never yields part of its
+    records."""
+    return explode_decoded(df, wire_col, _DECODED_SCHEMA, _logs_or_error, carry or [])
 
 
 # ---------------------------------------------------------------------------
-# traces signal (trace/v1/trace.proto): Span wire codec
+# traces signal (trace/v1/trace.proto)
 # ---------------------------------------------------------------------------
 
-
-def _bytes_field(field: int, raw: bytes) -> bytes:
-    if not raw:
-        return b""
-    return _key(field, _WT_LEN) + _varint(len(raw)) + raw
+STATUS = Message({3: ("code", VARINT)})
+SPAN = Message({
+    1: ("trace_id", BYTES),
+    2: ("span_id", BYTES),
+    4: ("parent_span_id", BYTES),
+    5: ("name", STRING),
+    6: ("kind", VARINT),
+    7: ("start_time_unix_nano", FIXED64),
+    8: ("end_time_unix_nano", FIXED64),
+    15: ("status", STATUS),
+})
+SCOPE_SPANS = Message({1: ("scope", SCOPE), 2: ("spans", SPAN, REPEATED)})
+RESOURCE_SPANS = Message({1: ("resource", RESOURCE), 2: ("scope_spans", SCOPE_SPANS, REPEATED)})
+TRACES_DATA = Message({1: ("resource_spans", RESOURCE_SPANS, REPEATED)})
 
 
 def encode_span(
@@ -410,93 +532,49 @@ def encode_span(
     end_unix_nano: int,
     status_code: int,
 ) -> bytes:
-    """One Span message in ascending field order: trace_id=1,
-    span_id=2, parent_span_id=4, name=5, kind=6, start=7 (fixed64),
-    end=8 (fixed64), status=15 {code=3}. IDs come in as the hex the
-    column derivation produces; the wire carries raw bytes. A status
-    message is written only for non-UNSET codes (proto3 omission)."""
-    out = (
-        _bytes_field(1, bytes.fromhex(trace_id_hex))
-        + _bytes_field(2, bytes.fromhex(span_id_hex))
-        + _bytes_field(4, bytes.fromhex(parent_span_id_hex or ""))
-        + _str_field(5, name)
-        + _varint_field(6, kind)
-        + _fixed64_field(7, start_unix_nano)
-        + _fixed64_field(8, end_unix_nano)
-    )
-    if status_code:
-        out += _msg_field(15, _varint_field(3, status_code))
-    return out
+    """One Span. IDs come in as the hex the column derivation produces;
+    the wire carries raw bytes. The status message is omitted for an
+    UNSET code (proto3 omission: it would be empty)."""
+    return encode(SPAN, {
+        "trace_id": bytes.fromhex(trace_id_hex),
+        "span_id": bytes.fromhex(span_id_hex),
+        "parent_span_id": bytes.fromhex(parent_span_id_hex or ""),
+        "name": name,
+        "kind": kind,
+        "start_time_unix_nano": start_unix_nano,
+        "end_time_unix_nano": end_unix_nano,
+        "status": {"code": status_code},
+    })
 
 
 def encode_resource_spans(conv_id: str, spans: list[bytes]) -> bytes:
     """TracesData{ResourceSpans} for one conversation: resource carries
     conv.id like the logs envelope; one ScopeSpans holds the spans."""
-    resource = _keyvalue("conv.id", _any_string(conv_id))
-    sl = _msg_field(1, _str_field(1, "transcripts")) + b"".join(
-        _msg_field(2, s) for s in spans
-    )
-    body = _msg_field(1, _msg_field(1, resource)) + _msg_field(2, sl)
-    return _msg_field(1, body)
+    return encode(TRACES_DATA, {"resource_spans": [{
+        "resource": {"attributes": string_attributes([("conv.id", conv_id)])},
+        "scope_spans": [{"scope": {"name": "transcripts"}, "spans": spans}],
+    }]})
 
 
 def decode_spans(buf: bytes) -> list[dict]:
-    """TracesData bytes → one dict per Span (inverse of the encoder for
-    the carried fields; unknown fields skipped)."""
+    """TracesData bytes → one dict per Span (hex ids; an absent parent
+    is None)."""
     out: list[dict] = []
-    for f_rs, _, rs in _fields(buf):
-        if f_rs != 1:
-            continue
-        conv_id = ""
-        for f, _, v in _fields(rs):
-            if f == 1:
-                for f2, _, attrs in _fields(v):
-                    if f2 == 1:
-                        key = val = ""
-                        for f3, _, v3 in _fields(attrs):
-                            if f3 == 1:
-                                key = v3.decode("utf-8")
-                            elif f3 == 2:
-                                val = _any_to_str(v3)
-                        if key == "conv.id":
-                            conv_id = val
-        for f, _, v in _fields(rs):
-            if f != 2:
-                continue
-            for f2, _, v2 in _fields(v):
-                if f2 != 2:
-                    continue
-                rec = {
+    for rs in decode(TRACES_DATA, buf).get("resource_spans", ()):
+        conv_id = attributes(rs.get("resource")).get("conv.id", "")
+        for ss in rs.get("scope_spans", ()):
+            for s in ss.get("spans", ()):
+                out.append({
                     "res_conv": conv_id,
-                    "trace_id": "",
-                    "span_id": "",
-                    "parent_span_id": None,
-                    "name": "",
-                    "kind": 0,
-                    "start_unix_nano": 0,
-                    "end_unix_nano": 0,
-                    "status_code": 0,
-                }
-                for f3, _, v3 in _fields(v2):
-                    if f3 == 1:
-                        rec["trace_id"] = v3.hex()
-                    elif f3 == 2:
-                        rec["span_id"] = v3.hex()
-                    elif f3 == 4:
-                        rec["parent_span_id"] = v3.hex()
-                    elif f3 == 5:
-                        rec["name"] = v3.decode("utf-8")
-                    elif f3 == 6:
-                        rec["kind"] = v3
-                    elif f3 == 7:
-                        rec["start_unix_nano"] = v3
-                    elif f3 == 8:
-                        rec["end_unix_nano"] = v3
-                    elif f3 == 15:
-                        for f4, _, v4 in _fields(v3):
-                            if f4 == 3:
-                                rec["status_code"] = v4
-                out.append(rec)
+                    "trace_id": s.get("trace_id", b"").hex(),
+                    "span_id": s.get("span_id", b"").hex(),
+                    "parent_span_id": s.get("parent_span_id", b"").hex() or None,
+                    "name": s.get("name", ""),
+                    "kind": s.get("kind", 0),
+                    "start_unix_nano": s.get("start_time_unix_nano", 0),
+                    "end_unix_nano": s.get("end_time_unix_nano", 0),
+                    "status_code": s.get("status", {}).get("code", 0),
+                })
     return out
 
 
@@ -544,23 +622,15 @@ def encode_spans_proto(spans: DataFrame) -> DataFrame:
 def decode_spans_proto(
     df: DataFrame, wire_col: str = "wire", carry: list[str] | None = None
 ) -> DataFrame:
-    carry = carry or []
-
-    @pandas_udf(f"array<struct<{_SPAN_DECODED_SCHEMA}>>")
-    def _dec(wire: pd.Series) -> pd.Series:
-        return pd.Series([decode_spans(bytes(b)) for b in wire])
-
-    return (
-        df.select(*carry, F.explode(_dec(F.col(wire_col))).alias("r"))
-        .select(*carry, "r.*")
-    )
+    return explode_decoded(df, wire_col, _SPAN_DECODED_SCHEMA, decode_spans, carry or [])
 
 
 def read_otlp_proto(spark, path: str) -> DataFrame:
     """Protobuf file receiver: one LogsData proto per file under
     ``path`` (the export framing `write_proto_files` produces — one
     envelope per (conversation, batch) file, the standard object-store
-    layout for OTLP blobs) → one row per LogRecord. `binaryFile` scans
+    layout for OTLP blobs) → one row per LogRecord, or one
+    ``decode_error`` row per malformed file. `binaryFile` scans
     split across executors like any other file source; the decode is
     the same Arrow-batched walker the round-trip query uses."""
     raw = spark.read.format("binaryFile").load(path).select(
@@ -596,48 +666,80 @@ def write_proto_files(df: DataFrame, path: str, wire_col: str = "wire") -> int:
 
 
 # ---------------------------------------------------------------------------
-# metrics signal (metrics/v1/metrics.proto): MetricsData wire codec
+# metrics signal (metrics/v1/metrics.proto)
 # ---------------------------------------------------------------------------
-# Field layout from the reference's generated marshalers:
-#   MetricsData{resource_metrics=1}; ResourceMetrics{resource=1,
-#   scope_metrics=2} (generated_proto_resourcemetrics.go:228-243);
-#   ScopeMetrics{scope=1, metrics=2}; Metric{name=1, description=2,
-#   unit=3, oneof data: gauge=5, sum=7, exponential_histogram=10}
-#   (generated_proto_metric.go:513-578);
-#   ExponentialHistogram{data_points=1, aggregation_temporality=2};
-#   ExponentialHistogramDataPoint{attributes=1, count=4 fixed64,
-#   scale=6 sint32, zero_count=7 fixed64, positive=8, negative=9 —
-#   positive/negative ALWAYS serialized, even empty}
-#   (generated_proto_exponentialhistogramdatapoint.go:355-407);
-#   Buckets{offset=1 sint32, bucket_counts=2 packed uint64}
-#   (generated_proto_exponentialhistogramdatapointbuckets.go);
-#   NumberDataPoint{attributes=7 (!), start=2, time=3,
-#   oneof value: as_double=4 fixed64, as_int=6 sfixed64 — oneof always
-#   written when set} (generated_proto_numberdatapoint.go:355+);
-#   Sum{data_points=1, aggregation_temporality=2, is_monotonic=3}.
+# Field layout from the reference's generated marshalers
+# (generated_proto_metric.go:513-578, generated_proto_numberdatapoint.go,
+# generated_proto_exponentialhistogramdatapoint.go:355-407,
+# generated_proto_summarydatapoint.go, generated_proto_histogramdatapoint.go).
 
 AGG_TEMPORALITY_DELTA = 1
 AGG_TEMPORALITY_CUMULATIVE = 2
 
-
-def _sint_field(field: int, n: int) -> bytes:
-    """sint32 zigzag varint (scale/offset); proto3 omits 0."""
-    if not n:
-        return b""
-    zz = ((n << 1) ^ (n >> 31)) & 0xFFFFFFFF
-    return _key(field, _WT_VARINT) + _varint(zz)
-
-
-def _unzigzag(zz: int) -> int:
-    return (zz >> 1) ^ -(zz & 1)
-
-
-def _eh_buckets(offset: int, counts: list[int]) -> bytes:
-    body = _sint_field(1, offset)
-    if counts:
-        packed = b"".join(_varint(c) for c in counts)
-        body += _key(2, _WT_LEN) + _varint(len(packed)) + packed
-    return body
+NUMBER_DATA_POINT = Message({
+    2: ("start_time_unix_nano", FIXED64),
+    3: ("time_unix_nano", FIXED64),
+    4: ("as_double", DOUBLE, PRESENT),
+    6: ("as_int", SFIXED64, PRESENT),
+    7: ("attributes", KEY_VALUE, REPEATED),
+})
+GAUGE = Message({1: ("data_points", NUMBER_DATA_POINT, REPEATED)})
+SUM = Message({
+    1: ("data_points", NUMBER_DATA_POINT, REPEATED),
+    2: ("aggregation_temporality", VARINT),
+    3: ("is_monotonic", VARINT),
+})
+HISTOGRAM_DATA_POINT = Message({
+    3: ("time_unix_nano", FIXED64),
+    4: ("count", FIXED64),
+    5: ("sum", DOUBLE),
+    6: ("bucket_counts", FIXED64, PACKED),
+    7: ("explicit_bounds", DOUBLE, PACKED),
+    9: ("attributes", KEY_VALUE, REPEATED),
+})
+HISTOGRAM = Message({
+    1: ("data_points", HISTOGRAM_DATA_POINT, REPEATED),
+    2: ("aggregation_temporality", VARINT),
+})
+BUCKETS = Message({1: ("offset", SINT), 2: ("bucket_counts", VARINT, PACKED)})
+EXP_HISTOGRAM_DATA_POINT = Message({
+    1: ("attributes", KEY_VALUE, REPEATED),
+    2: ("start_time_unix_nano", FIXED64),
+    3: ("time_unix_nano", FIXED64),
+    4: ("count", FIXED64),
+    6: ("scale", SINT),
+    7: ("zero_count", FIXED64),
+    8: ("positive", BUCKETS, PRESENT),
+    9: ("negative", BUCKETS, PRESENT),
+})
+EXP_HISTOGRAM = Message({
+    1: ("data_points", EXP_HISTOGRAM_DATA_POINT, REPEATED),
+    2: ("aggregation_temporality", VARINT),
+})
+VALUE_AT_QUANTILE = Message({1: ("quantile", DOUBLE), 2: ("value", DOUBLE)})
+SUMMARY_DATA_POINT = Message({
+    3: ("time_unix_nano", FIXED64),
+    4: ("count", FIXED64),
+    5: ("sum", DOUBLE),
+    6: ("quantile_values", VALUE_AT_QUANTILE, REPEATED),
+    7: ("attributes", KEY_VALUE, REPEATED),
+})
+SUMMARY = Message({1: ("data_points", SUMMARY_DATA_POINT, REPEATED)})
+METRIC = Message({
+    1: ("name", STRING),
+    3: ("unit", STRING),
+    5: ("gauge", GAUGE, PRESENT),
+    7: ("sum", SUM, PRESENT),
+    9: ("histogram", HISTOGRAM, PRESENT),
+    10: ("exponential_histogram", EXP_HISTOGRAM, PRESENT),
+    11: ("summary", SUMMARY, PRESENT),
+})
+SCOPE_METRICS = Message({1: ("scope", SCOPE), 2: ("metrics", METRIC, REPEATED)})
+RESOURCE_METRICS = Message({
+    1: ("resource", RESOURCE),
+    2: ("scope_metrics", SCOPE_METRICS, REPEATED),
+})
+METRICS_DATA = Message({1: ("resource_metrics", RESOURCE_METRICS, REPEATED)})
 
 
 def encode_exp_histogram_metric(
@@ -649,69 +751,20 @@ def encode_exp_histogram_metric(
     """One Metric{exponential_histogram} message. Each point dict:
     attrs (list[(key, str value)]), start_time and time (unix nano),
     count, zero_count, scale, pos_offset, pos_counts, neg_offset,
-    neg_counts. Decode-equal to what Go's marshaler writes (field order
-    aside): positive/negative bucket messages are ALWAYS present (the
-    reference marshals them unconditionally), everything else follows
-    proto3 zero-omission."""
-    dps = b""
-    for pt in points:
-        dp = b"".join(
-            _msg_field(1, _keyvalue(k, _any_string(v)))
-            for k, v in pt.get("attrs", [])
-        )
-        dp += _fixed64_field(2, pt.get("start_time", 0))
-        dp += _fixed64_field(3, pt.get("time", 0))
-        dp += _fixed64_field(4, pt.get("count", 0))
-        dp += _sint_field(6, pt.get("scale", 0))
-        dp += _fixed64_field(7, pt.get("zero_count", 0))
-        dp += _msg_field(
-            8, _eh_buckets(pt.get("pos_offset", 0), pt.get("pos_counts", []))
-        )
-        dp += _msg_field(
-            9, _eh_buckets(pt.get("neg_offset", 0), pt.get("neg_counts", []))
-        )
-        dps += _msg_field(1, dp)
-    eh = dps + _varint_field(2, temporality)
-    return _str_field(1, name) + _str_field(3, unit) + _msg_field(10, eh)
-
-
-def encode_number_metric(
-    name: str,
-    unit: str,
-    points: list[dict],
-    kind: str = "gauge",
-    temporality: int = AGG_TEMPORALITY_CUMULATIVE,
-    monotonic: bool = False,
-) -> bytes:
-    """One Metric{gauge|sum} message. Each point dict: attrs, time
-    (unix nano), and exactly one of as_int / as_double. The oneof value
-    is always written when set (sfixed64/fixed64 8-byte), matching the
-    reference's NumberDataPoint marshaler; attributes are field 7,
-    written first here where Go's marshaler writes them last (decoding
-    does not depend on field order)."""
-    dps = b""
-    for pt in points:
-        dp = b"".join(
-            _msg_field(7, _keyvalue(k, _any_string(v)))
-            for k, v in pt.get("attrs", [])
-        )
-        dp += _fixed64_field(2, pt.get("start_time", 0))
-        dp += _fixed64_field(3, pt.get("time", 0))
-        if "as_double" in pt:
-            import struct as _struct
-
-            dp += _key(4, _WT_FIXED64) + _struct.pack("<d", pt["as_double"])
-        elif "as_int" in pt:
-            dp += _key(6, _WT_FIXED64) + (
-                int(pt["as_int"]) & 0xFFFFFFFFFFFFFFFF
-            ).to_bytes(8, "little")
-        dps += _msg_field(1, dp)
-    if kind == "gauge":
-        return _str_field(1, name) + _str_field(3, unit) + _msg_field(5, dps)
-    body = dps + _varint_field(2, temporality)
-    if monotonic:
-        body += _key(3, _WT_VARINT) + b"\x01"
-    return _str_field(1, name) + _str_field(3, unit) + _msg_field(7, body)
+    neg_counts; a missing key is unset."""
+    return encode(METRIC, {"name": name, "unit": unit, "exponential_histogram": {
+        "data_points": [{
+            "attributes": string_attributes(pt.get("attrs", ())),
+            "start_time_unix_nano": pt.get("start_time"),
+            "time_unix_nano": pt.get("time"),
+            "count": pt.get("count"),
+            "scale": pt.get("scale"),
+            "zero_count": pt.get("zero_count"),
+            "positive": {"offset": pt.get("pos_offset"), "bucket_counts": pt.get("pos_counts")},
+            "negative": {"offset": pt.get("neg_offset"), "bucket_counts": pt.get("neg_counts")},
+        } for pt in points],
+        "aggregation_temporality": temporality,
+    }})
 
 
 def encode_resource_metrics(
@@ -721,216 +774,71 @@ def encode_resource_metrics(
 ) -> bytes:
     """MetricsData{ResourceMetrics{resource, ScopeMetrics{scope,
     metrics…}}} — the same 3-level envelope shape as logs/traces."""
-    resource = b"".join(
-        _keyvalue(k, _any_string(v)) for k, v in resource_attrs
-    )
-    sm = _msg_field(1, _str_field(1, scope_name)) + b"".join(
-        _msg_field(2, m) for m in metrics
-    )
-    body = _msg_field(1, _msg_field(1, resource)) + _msg_field(2, sm)
-    return _msg_field(1, body)
+    return encode(METRICS_DATA, {"resource_metrics": [{
+        "resource": {"attributes": string_attributes(resource_attrs)},
+        "scope_metrics": [{"scope": {"name": scope_name}, "metrics": metrics}],
+    }]})
 
 
-def _decode_attrs(pairs: list[bytes]) -> dict:
-    out = {}
-    for kv in pairs:
-        k, v = "", ""
-        for f, _, val in _fields(kv):
-            if f == 1:
-                k = val.decode("utf-8")
-            elif f == 2:
-                v = _any_to_str(val)
-        out[k] = v
-    return out
+# the Metric data oneof members, each with its own data-point message
+_DATA_MEMBERS = ("gauge", "sum", "histogram", "exponential_histogram", "summary")
 
 
-def _decode_eh_buckets(buf: bytes) -> tuple[int, list[int]]:
-    offset, counts = 0, []
-    for f, wt, v in _fields(buf):
-        if f == 1:
-            offset = _unzigzag(v)
-        elif f == 2:
-            if wt == _WT_LEN:  # packed
-                i = 0
-                while i < len(v):
-                    c, i = _read_varint(v, i)
-                    counts.append(c)
-            else:
-                counts.append(v)
-    return offset, counts
+def _point(mtype: str, dp: dict) -> dict:
+    """One decoded data point in the row shape decode_metrics emits."""
+    pt = {"attrs": attributes(dp), "time": dp.get("time_unix_nano", 0)}
+    if mtype in ("gauge", "sum"):
+        pt["start_time"] = dp.get("start_time_unix_nano", 0)
+        # the value appears only as the oneof member on the wire
+        pt.update((k, dp[k]) for k in ("as_double", "as_int") if k in dp)
+        return pt
+    pt["count"] = dp.get("count", 0)
+    if mtype == "exponential_histogram":
+        pos, neg = dp.get("positive", {}), dp.get("negative", {})
+        pt.update(
+            start_time=dp.get("start_time_unix_nano", 0),
+            zero_count=dp.get("zero_count", 0), scale=dp.get("scale", 0),
+            pos_offset=pos.get("offset", 0), pos_counts=pos.get("bucket_counts", []),
+            neg_offset=neg.get("offset", 0), neg_counts=neg.get("bucket_counts", []),
+        )
+        return pt
+    pt["sum"] = dp.get("sum", 0.0)
+    if mtype == "histogram":
+        pt["bucket_counts"] = dp.get("bucket_counts", [])
+        pt["bounds"] = dp.get("explicit_bounds", [])
+    else:
+        pt["quantiles"] = [(q.get("quantile", 0.0), q.get("value", 0.0))
+                           for q in dp.get("quantile_values", ())]
+    return pt
 
 
 def decode_metrics(buf: bytes) -> list[dict]:
     """MetricsData bytes → one dict per data point: metric name/unit/
     type, resource + point attributes, and the type-specific payload
-    (exp-histogram buckets or number value). Inverse of the encoders
-    above for the fields this engine carries."""
+    (number value, exp-histogram buckets, explicit-bounds histogram or
+    summary quantiles)."""
     out = []
-    for _, _, rm in _fields(buf):
-        res_attrs: dict = {}
-        for f1, _, v1 in _fields(rm):
-            if f1 == 1:  # resource
-                for f2, _, v2 in _fields(v1):
-                    if f2 == 1:
-                        res_attrs.update(_decode_attrs([v2]))
-            elif f1 == 2:  # scope_metrics
-                scope_name = ""
-                for f2, _, v2 in _fields(v1):
-                    if f2 == 1:
-                        for f3, _, v3 in _fields(v2):
-                            if f3 == 1:
-                                scope_name = v3.decode("utf-8")
-                    elif f2 == 2:  # metric
-                        out.extend(
-                            _decode_metric(v2, res_attrs, scope_name)
-                        )
+    for rm in decode(METRICS_DATA, buf).get("resource_metrics", ()):
+        res_attrs = attributes(rm.get("resource"))
+        for sm in rm.get("scope_metrics", ()):
+            scope_name = sm.get("scope", {}).get("name", "")
+            for m in sm.get("metrics", ()):
+                mtype = next((t for t in _DATA_MEMBERS if t in m), None)
+                if mtype is None:
+                    continue
+                data = m[mtype]
+                common = {
+                    "res_attrs": res_attrs,
+                    "scope_name": scope_name,
+                    "metric_name": m.get("name", ""),
+                    "unit": m.get("unit", ""),
+                    "type": mtype,
+                    "temporality": data.get("aggregation_temporality", 0),
+                    "monotonic": bool(data.get("is_monotonic", 0)),
+                }
+                out.extend({**common, **_point(mtype, dp)}
+                           for dp in data.get("data_points", ()))
     return out
-
-
-def _decode_metric(buf: bytes, res_attrs: dict, scope_name: str) -> list[dict]:
-    import struct as _struct
-
-    name, unit = "", ""
-    pts: list[dict] = []
-    mtype = ""
-    temporality = 0
-    monotonic = False
-    for f, wt, v in _fields(buf):
-        if f == 1:
-            name = v.decode("utf-8")
-        elif f == 3:
-            unit = v.decode("utf-8")
-        elif f in (5, 7):  # gauge / sum
-            mtype = "gauge" if f == 5 else "sum"
-            for f2, wt2, v2 in _fields(v):
-                if f2 == 1:  # NumberDataPoint
-                    pt: dict = {"attrs": {}, "time": 0}
-                    for f3, wt3, v3 in _fields(v2):
-                        if f3 == 7:
-                            pt["attrs"].update(_decode_attrs([v3]))
-                        elif f3 == 2:
-                            pt["start_time"] = v3
-                        elif f3 == 3:
-                            pt["time"] = v3
-                        elif f3 == 4:
-                            pt["as_double"] = _struct.unpack(
-                                "<d", int(v3).to_bytes(8, "little")
-                            )[0]
-                        elif f3 == 6:
-                            pt["as_int"] = (
-                                v3 if v3 < (1 << 63) else v3 - (1 << 64)
-                            )
-                    pts.append(pt)
-                elif f2 == 2:
-                    temporality = v2
-                elif f2 == 3:
-                    monotonic = bool(v2)
-        elif f == 11:  # summary
-            mtype = "summary"
-            for f2, _, v2 in _fields(v):
-                if f2 == 1:  # SummaryDataPoint
-                    pt = {"attrs": {}, "time": 0, "count": 0,
-                          "sum": 0.0, "quantiles": []}
-                    for f3, _, v3 in _fields(v2):
-                        if f3 == 7:
-                            pt["attrs"].update(_decode_attrs([v3]))
-                        elif f3 == 3:
-                            pt["time"] = v3
-                        elif f3 == 4:
-                            pt["count"] = v3
-                        elif f3 == 5:
-                            pt["sum"] = _struct.unpack(
-                                "<d", int(v3).to_bytes(8, "little")
-                            )[0]
-                        elif f3 == 6:
-                            q, val = 0.0, 0.0
-                            for f4, _, v4 in _fields(v3):
-                                d = _struct.unpack(
-                                    "<d", int(v4).to_bytes(8, "little")
-                                )[0]
-                                if f4 == 1:
-                                    q = d
-                                elif f4 == 2:
-                                    val = d
-                            pt["quantiles"].append((q, val))
-                    pts.append(pt)
-        elif f == 9:  # histogram (explicit bounds)
-            mtype = "histogram"
-            for f2, _, v2 in _fields(v):
-                if f2 == 1:  # HistogramDataPoint
-                    pt = {"attrs": {}, "time": 0, "count": 0, "sum": 0.0,
-                          "bucket_counts": [], "bounds": []}
-                    for f3, wt3, v3 in _fields(v2):
-                        if f3 == 9:
-                            pt["attrs"].update(_decode_attrs([v3]))
-                        elif f3 == 3:
-                            pt["time"] = v3
-                        elif f3 == 4:
-                            pt["count"] = v3
-                        elif f3 == 5:
-                            pt["sum"] = _struct.unpack(
-                                "<d", int(v3).to_bytes(8, "little")
-                            )[0]
-                        elif f3 == 6 and wt3 == _WT_LEN:
-                            pt["bucket_counts"] = [
-                                int.from_bytes(v3[j:j + 8], "little")
-                                for j in range(0, len(v3), 8)
-                            ]
-                        elif f3 == 7 and wt3 == _WT_LEN:
-                            pt["bounds"] = [
-                                _struct.unpack("<d", v3[j:j + 8])[0]
-                                for j in range(0, len(v3), 8)
-                            ]
-                    pts.append(pt)
-                elif f2 == 2:
-                    temporality = v2
-        elif f == 10:  # exponential_histogram
-            mtype = "exponential_histogram"
-            for f2, _, v2 in _fields(v):
-                if f2 == 1:  # data point
-                    pt = {
-                        "attrs": {}, "start_time": 0, "time": 0,
-                        "count": 0, "zero_count": 0, "scale": 0,
-                        "pos_offset": 0, "pos_counts": [],
-                        "neg_offset": 0, "neg_counts": [],
-                    }
-                    for f3, wt3, v3 in _fields(v2):
-                        if f3 == 1:
-                            pt["attrs"].update(_decode_attrs([v3]))
-                        elif f3 == 2:
-                            pt["start_time"] = v3
-                        elif f3 == 3:
-                            pt["time"] = v3
-                        elif f3 == 4:
-                            pt["count"] = v3
-                        elif f3 == 6:
-                            pt["scale"] = _unzigzag(v3)
-                        elif f3 == 7:
-                            pt["zero_count"] = v3
-                        elif f3 == 8:
-                            pt["pos_offset"], pt["pos_counts"] = (
-                                _decode_eh_buckets(v3)
-                            )
-                        elif f3 == 9:
-                            pt["neg_offset"], pt["neg_counts"] = (
-                                _decode_eh_buckets(v3)
-                            )
-                    pts.append(pt)
-                elif f2 == 2:
-                    temporality = v2
-    return [
-        {
-            "res_attrs": dict(res_attrs),
-            "scope_name": scope_name,
-            "metric_name": name,
-            "unit": unit,
-            "type": mtype,
-            "temporality": temporality,
-            "monotonic": monotonic,
-            **pt,
-        }
-        for pt in pts
-    ]
 
 
 def encode_metrics_proto(
@@ -1002,121 +910,31 @@ def encode_metrics_proto(
     return rows.select(group_col, _enc(group_col, "buckets").alias("wire"))
 
 
-_DECODED_EH_SCHEMA = (
-    "grp string, scale int, sign int, idx bigint, n bigint"
-)
-
-
 def decode_metrics_proto(
     df: DataFrame, wire_col: str = "wire", group_col: str = "tool"
 ) -> DataFrame:
-    """(…, wire) → exponential-histogram rows (group, sign, idx, n) —
-    the exact inverse of encode_metrics_proto: dense bucket arrays
+    """(…, wire) → exponential-histogram rows (group, scale, sign, idx,
+    n) — the exact inverse of encode_metrics_proto: dense bucket arrays
     re-sparsify (zero counts drop), the zero bucket returns as sign 0 /
-    idx NULL. Arrow-batched decode + explode."""
+    idx NULL."""
 
-    @pandas_udf(f"array<struct<{_DECODED_EH_SCHEMA}>>")
-    def _dec(wire: pd.Series) -> pd.Series:
-        out = []
-        for b in wire:
-            rows = []
-            for pt in decode_metrics(bytes(b)):
-                if pt["type"] != "exponential_histogram":
-                    continue
-                g = pt["attrs"].get(group_col) or pt["res_attrs"].get(
-                    group_col
-                )
-                sc = pt["scale"]
-                if pt["zero_count"]:
-                    rows.append((g, sc, 0, None, pt["zero_count"]))
-                for sign, off, counts in (
-                    (1, pt["pos_offset"], pt["pos_counts"]),
-                    (-1, pt["neg_offset"], pt["neg_counts"]),
-                ):
-                    for i, c in enumerate(counts):
-                        if c:
-                            rows.append((g, sc, sign, off + i, c))
-            out.append(rows)
-        return pd.Series(out)
+    def rows_of(buf: bytes) -> list[tuple]:
+        rows = []
+        for pt in decode_metrics(buf):
+            if pt["type"] != "exponential_histogram":
+                continue
+            g = pt["attrs"].get(group_col) or pt["res_attrs"].get(group_col)
+            sc = pt["scale"]
+            if pt["zero_count"]:
+                rows.append((g, sc, 0, None, pt["zero_count"]))
+            for sign, off, counts in (
+                (1, pt["pos_offset"], pt["pos_counts"]),
+                (-1, pt["neg_offset"], pt["neg_counts"]),
+            ):
+                for i, c in enumerate(counts):
+                    if c:
+                        rows.append((g, sc, sign, off + i, c))
+        return rows
 
-    return (
-        df.select(F.explode(_dec(F.col(wire_col))).alias("r"))
-        .select(
-            F.col("r.grp").alias(group_col),
-            F.col("r.scale").alias("scale"),
-            F.col("r.sign").alias("sign"),
-            F.col("r.idx").alias("idx"),
-            F.col("r.n").alias("n"),
-        )
-    )
-
-
-def _packed_doubles(field: int, vals: list[float]) -> bytes:
-    import struct as _struct
-
-    if not vals:
-        return b""
-    body = b"".join(_struct.pack("<d", v) for v in vals)
-    return _key(field, _WT_LEN) + _varint(len(body)) + body
-
-
-def _packed_fixed64s(field: int, vals: list[int]) -> bytes:
-    if not vals:
-        return b""
-    body = b"".join(int(v).to_bytes(8, "little") for v in vals)
-    return _key(field, _WT_LEN) + _varint(len(body)) + body
-
-
-def _double_field(field: int, v: float) -> bytes:
-    import struct as _struct
-
-    if not v:
-        return b""
-    return _key(field, _WT_FIXED64) + _struct.pack("<d", v)
-
-
-def encode_summary_metric(name: str, unit: str, points: list[dict]) -> bytes:
-    """Metric{summary=11} (generated_proto_summarydatapoint.go:
-    attributes=7, time=3, count=4 fixed64, sum=5 double,
-    quantile_values=6 {quantile=1, value=2 doubles}). Point dict:
-    attrs, time, count, sum, quantiles (list of (q, v))."""
-    dps = b""
-    for pt in points:
-        dp = b"".join(
-            _msg_field(7, _keyvalue(k, _any_string(v)))
-            for k, v in pt.get("attrs", [])
-        )
-        dp += _fixed64_field(3, pt.get("time", 0))
-        dp += _fixed64_field(4, pt.get("count", 0))
-        dp += _double_field(5, pt.get("sum", 0.0))
-        for q, v in pt.get("quantiles", []):
-            dp += _msg_field(6, _double_field(1, q) + _double_field(2, v))
-        dps += _msg_field(1, dp)
-    return _str_field(1, name) + _str_field(3, unit) + _msg_field(11, dps)
-
-
-def encode_histogram_metric(
-    name: str,
-    unit: str,
-    points: list[dict],
-    temporality: int = AGG_TEMPORALITY_CUMULATIVE,
-) -> bytes:
-    """Metric{histogram=9} — the explicit-bounds histogram
-    (generated_proto_histogramdatapoint.go: attributes=9, time=3,
-    count=4 fixed64, sum=5, bucket_counts=6 packed fixed64,
-    explicit_bounds=7 packed double). Point dict: attrs, time, count,
-    sum, bucket_counts (len = len(bounds)+1), bounds."""
-    dps = b""
-    for pt in points:
-        dp = b"".join(
-            _msg_field(9, _keyvalue(k, _any_string(v)))
-            for k, v in pt.get("attrs", [])
-        )
-        dp += _fixed64_field(3, pt.get("time", 0))
-        dp += _fixed64_field(4, pt.get("count", 0))
-        dp += _double_field(5, pt.get("sum", 0.0))
-        dp += _packed_fixed64s(6, pt.get("bucket_counts", []))
-        dp += _packed_doubles(7, pt.get("bounds", []))
-        dps += _msg_field(1, dp)
-    body = dps + _varint_field(2, temporality)
-    return _str_field(1, name) + _str_field(3, unit) + _msg_field(9, body)
+    schema = f"`{group_col}` string, scale int, sign int, idx bigint, n bigint"
+    return explode_decoded(df, wire_col, schema, rows_of)

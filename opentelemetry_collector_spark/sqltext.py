@@ -245,10 +245,11 @@ FROM embeddings WHERE vec_id % 10 = 0
 # Dialect-neutral shingle/words fragments (DuckDB side; the Spark twins
 # are operators/textstats.words_col and operators/dedup.shingles_col).
 WORDS_EXPR = "string_split_regex(lower(trim(text)), '[ ]+')"
+# A NULL text has no shingles (NULL, not the empty text's one "" gram).
 SHINGLES_EXPR = (
-    "list_distinct(list_transform("
+    "CASE WHEN w IS NOT NULL THEN list_distinct(list_transform("
     "generate_series(0, greatest(len(w) - 3, 0)), "
-    "i -> concat_ws(' ', w[i+1], w[i+2], w[i+3])))"
+    "i -> concat_ws(' ', w[i+1], w[i+2], w[i+3]))) END"
 )
 
 # MinHash family shared by Spark and the oracle: ONE md5 per shingle
@@ -267,11 +268,12 @@ SHINGLE_HASH_EXPR = "CAST(concat('0x', substring(md5(s), 1, 8)) AS BIGINT)"
 
 
 def minhash_sig_sql_list(n_hashes: int = 12) -> str:
-    """DuckDB list literal: [min_s (a_i*h(s)+b_i) % P for i in 0..n)."""
-    return "[" + ", ".join(
+    """DuckDB list literal: [min_s (a_i*h(s)+b_i) % P for i in 0..n);
+    NULL when the shingle hashes ``hs`` are NULL (a NULL text)."""
+    return "CASE WHEN hs IS NOT NULL THEN [" + ", ".join(
         f"list_min(list_transform(hs, h -> ({a} * h + {b}) % {MINHASH_P}))"
         for a, b in MINHASH_COEFFS[:n_hashes]
-    ) + "]"
+    ) + "] END"
 
 
 # SimHash signature, the DuckDB side of dedup.simhash_signature_arrow:

@@ -99,6 +99,31 @@ def test_simhash_pairs_skip_null_text(spark):
     assert pairs == {(3, 4, 0)}
 
 
+def test_minhash_pairs_skip_null_text(spark):
+    """As for SimHash: a NULL text has no MinHash signature and pairs with
+    nothing. Two empty docs still agree on every band."""
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, "some other words here")],
+        "doc_id int, text string",
+    )
+    pairs = {tuple(r) for r in dedup.minhash_lsh_pairs(df).collect()}
+    dedup.release_cached()
+    assert pairs == {(3, 4, dedup.LSH_BANDS)}
+
+
+def test_minhash_signature_of_null_text_is_null_in_both_engines(spark):
+    (row,) = spark.createDataFrame([(None,)], "text string").select(
+        dedup.minhash_signature(F.col("text")).alias("mh")
+    ).collect()
+    (duck,) = duckdb.sql(f"""
+        WITH words AS (SELECT {sqltext.WORDS_EXPR} AS w FROM (SELECT NULL::VARCHAR AS text)),
+        sh AS (SELECT {sqltext.SHINGLES_EXPR} AS sh FROM words),
+        hs AS (SELECT list_transform(sh, s -> {sqltext.SHINGLE_HASH_EXPR}) AS hs FROM sh)
+        SELECT {sqltext.minhash_sig_sql_list(dedup.MINHASH_N)} FROM hs
+    """).fetchone()
+    assert row["mh"] is None and duck is None
+
+
 def _null_vectors(spark):
     return spark.createDataFrame(
         [(1, 0, [1.0, 0.0]), (2, 0, None), (3, 0, [1.0, 0.0]), (4, 0, [0.9, 0.1])],

@@ -95,6 +95,40 @@ def test_decode_inverts_encode_unicode_and_empty():
     assert row["ts_unix_nano"] == 1_700_000_000_000_000_000
 
 
+def test_decode_logs_turn_idx_is_keyed_on_turn_idx():
+    """turn_idx is the turn.idx attribute's value, even when another Int
+    attribute follows it on the wire."""
+    rec = op.encode_log_record(1, 9, "INFO", "x", 3, "")
+    # 6: KeyValue{1: "http.status", 2: AnyValue{3: Int(500)}}
+    rec += bytes.fromhex("3212" + "0a0b" + b"http.status".hex() + "1203" + "18f403")
+    (row,) = op.decode_logs(op.encode_resource_logs("c", [("s", [rec])]))
+    assert row["turn_idx"] == 3
+
+
+def test_read_otlp_proto_rejects_a_truncated_file_whole(spark, tmp_path):
+    """One good and one truncated .pb file: every good record is read
+    (decode_error NULL), and the truncated file becomes exactly one row
+    whose decode_error names the reason, its data columns NULL — the
+    task does not fail and no part of the bad file is accepted."""
+    good = op.encode_resource_logs("c-good", [("bash", [
+        op.encode_log_record(i + 1, 9, "INFO", f"t{i}", i, "") for i in range(3)
+    ])])
+    bad = op.encode_resource_logs("c-bad", [("bash", [
+        op.encode_log_record(1, 9, "INFO", "lost", 0, ""),
+    ])])
+    (tmp_path / "good.pb").write_bytes(good)
+    (tmp_path / "bad.pb").write_bytes(bad[:-3])
+    rows = op.read_otlp_proto(spark, str(tmp_path)).collect()
+    ok = sorted(
+        (r["res_conv"], r["turn_idx"], r["body_text"])
+        for r in rows if r["decode_error"] is None
+    )
+    assert ok == [("c-good", i, f"t{i}") for i in range(3)]
+    (err,) = [r for r in rows if r["decode_error"] is not None]
+    assert err["decode_error"] == "truncated_length"
+    assert all(v is None for k, v in err.asDict().items() if k != "decode_error")
+
+
 def test_span_golden_bytes_and_decode():
     """Span wire bytes hand-derived from trace/v1/trace.proto: ids as
     raw bytes, name=5, kind=6 varint, start/end fixed64, status=15
@@ -271,17 +305,16 @@ def test_metrics_number_point_roundtrip():
     monotonic + temporality flags, and attributes (field 7)."""
     from opentelemetry_collector_spark.sources import otlp_proto as m
 
-    gauge = m.encode_number_metric(
-        "g", "1",
-        [{"attrs": [("tool", "py")], "time": 123, "as_double": -2.5},
-         {"attrs": [], "time": 124, "as_int": 0}],
-        kind="gauge",
-    )
-    s = m.encode_number_metric(
-        "s", "By",
-        [{"attrs": [("tool", "ed")], "time": 125, "as_int": -7}],
-        kind="sum", temporality=m.AGG_TEMPORALITY_DELTA, monotonic=True,
-    )
+    gauge = m.encode(m.METRIC, {"name": "g", "unit": "1", "gauge": {"data_points": [
+        {"attributes": m.string_attributes([("tool", "py")]), "time_unix_nano": 123,
+         "as_double": -2.5},
+        {"time_unix_nano": 124, "as_int": 0},
+    ]}})
+    s = m.encode(m.METRIC, {"name": "s", "unit": "By", "sum": {
+        "data_points": [{"attributes": m.string_attributes([("tool", "ed")]),
+                         "time_unix_nano": 125, "as_int": -7}],
+        "aggregation_temporality": m.AGG_TEMPORALITY_DELTA, "is_monotonic": True,
+    }})
     env = m.encode_resource_metrics([("conv.id", "c1")], "scope", [gauge, s])
     pts = m.decode_metrics(env)
     assert [p["type"] for p in pts] == ["gauge", "gauge", "sum"]
@@ -329,17 +362,21 @@ def test_metrics_summary_and_histogram_roundtrip():
     five metric data-point types now round-trip on the proto wire."""
     from opentelemetry_collector_spark.sources import otlp_proto as m
 
-    summ = m.encode_summary_metric(
-        "lat_summary", "ms",
-        [{"attrs": [("tool", "s")], "time": 9, "count": 100,
-          "sum": 5050.0, "quantiles": [(0.5, 50.5), (0.99, 99.01)]}],
-    )
-    hist = m.encode_histogram_metric(
-        "lat_hist", "ms",
-        [{"attrs": [("tool", "s")], "time": 9, "count": 6, "sum": 12.5,
-          "bucket_counts": [1, 2, 3], "bounds": [10.0, 100.0]}],
-        temporality=m.AGG_TEMPORALITY_DELTA,
-    )
+    tool = m.string_attributes([("tool", "s")])
+    summ = m.encode(m.METRIC, {"name": "lat_summary", "unit": "ms", "summary": {
+        "data_points": [{
+            "attributes": tool, "time_unix_nano": 9, "count": 100, "sum": 5050.0,
+            "quantile_values": [{"quantile": 0.5, "value": 50.5},
+                                {"quantile": 0.99, "value": 99.01}],
+        }],
+    }})
+    hist = m.encode(m.METRIC, {"name": "lat_hist", "unit": "ms", "histogram": {
+        "data_points": [{
+            "attributes": tool, "time_unix_nano": 9, "count": 6, "sum": 12.5,
+            "bucket_counts": [1, 2, 3], "explicit_bounds": [10.0, 100.0],
+        }],
+        "aggregation_temporality": m.AGG_TEMPORALITY_DELTA,
+    }})
     env = m.encode_resource_metrics([("corpus", "t")], "scope", [summ, hist])
     pts = m.decode_metrics(env)
     assert [p["type"] for p in pts] == ["summary", "histogram"]

@@ -90,10 +90,7 @@ def test_profiles_wire_golden_bytes():
     # dictionary (field 2) golden bytes: one location {line{f=0 omitted}},
     # one function {name_strindex=1}, strings ["","s","turn.idx",
     # "latency","microseconds"], one turn.idx=0 attribute, one stack [0]
-    dict_bytes = None
-    for f, _, v in opp._fields(buf):
-        if f == 2:
-            dict_bytes = v
+    dict_bytes = opp.decode(opp.Message({2: ("dictionary", opp.BYTES)}), buf)["dictionary"]
     expect = bytes.fromhex(
         "12" + "02" + "1a00"            # 2: location{3: line{} (f=0 omitted)}
         + "1a" + "02" + "0801"           # 3: function{1: name_strindex=1}
@@ -106,6 +103,30 @@ def test_profiles_wire_golden_bytes():
         + "3a" + "03" + "0a0100"         # 7: stack{1: packed [0]}
     )
     assert dict_bytes == expect, (dict_bytes.hex(), expect.hex())
+
+
+def test_profiles_turn_idx_is_keyed_on_turn_idx():
+    """A sample's turn_idx is its turn.idx attribute's value, not that of
+    whichever attribute it lists first."""
+    from opentelemetry_collector_spark.sources import otlp_profiles_proto as opp
+
+    buf = opp.encode(opp.EXPORT_PROFILES_REQUEST, {
+        "resource_profiles": [{"scope_profiles": [{"profiles": [{"samples": [
+            {"stack_index": 0, "attribute_indices": [0, 1], "values": [5]},
+        ]}]}]}],
+        "dictionary": {
+            "location_table": [{"lines": [{"function_index": 0}]}],
+            "function_table": [{"name_strindex": 1}],
+            "string_table": ["", "s", "thread.id", "turn.idx"],
+            "attribute_table": [
+                {"key_strindex": 2, "value": {"int_value": 77}},
+                {"key_strindex": 3, "value": {"int_value": 4}},
+            ],
+            "stack_table": [{"location_indices": [0]}],
+        },
+    })
+    (row,) = opp.decode_profiles_request(buf)
+    assert (row["turn_idx"], row["leaf_fn"], row["value_us"]) == (4, "s", 5)
 
 
 def test_profiles_wire_spark_roundtrip_matches_resolver(spark):

@@ -7,7 +7,11 @@ occurs, as a whole word, nowhere but its own definition in the package,
 ``__spark_entry__.py``, ``main.py``, ``perfbench/`` or ``tests/`` fails.
 A name counts wherever it occurs, in strings too (perfbench patches
 functions by name). A definition whose line carries ``# noqa`` is
-exempt."""
+exempt.
+
+A second check counts only production callers (the package,
+``__spark_entry__.py``, ``main.py``, ``perfbench/``): a def that only
+``tests/`` use fails unless ``TEST_ONLY`` lists it."""
 
 from __future__ import annotations
 
@@ -47,3 +51,40 @@ def unreferenced_defs(sources: dict[Path, str]) -> list[str]:
 def test_package_defs_are_referenced():
     hits = unreferenced_defs(_sources())
     assert not hits, "defined but never referenced:\n" + "\n".join(hits)
+
+
+# Package defs that only tests use: production code a test keeps alive.
+# The list may shrink (delete the def, or use it) but never grow.
+TEST_ONLY = {
+    "functions/maps.py: map_contains",
+    "functions/maps.py: map_merge",
+    "functions/maps.py: map_remove_if",
+    "functions/values.py: lift_attrs",
+    "functions/values.py: vbytes",
+    "functions/values.py: vempty",
+    "functions/values.py: vmap_keep_keys",
+    "operators/aggregate.py: cardinality_guard",
+    "operators/attributes.py: drop_where",
+    "operators/similarity.py: load_ivf_index",
+    "operators/similarity.py: save_ivf_index",
+    "plans/errors.py: with_retry",
+    "plans/partitioning.py: assert_broadcast_join",
+    "plans/partitioning.py: assert_filter_pushed",
+    "plans/partitioning.py: assert_no_rowwise_python",
+    "plans/partitioning.py: salted_group_count",
+    "sources/otlp_proto.py: decode_spans_proto",
+    "sources/otlp_proto.py: encode_spans_proto",
+    "streaming/stream.py: conversation_state_tracker",
+}
+
+
+def test_no_new_test_only_defs():
+    tests = ROOT / "tests"
+    hits = {
+        re.sub(r"^opentelemetry_collector_spark/(.*):\d+:", r"\1:", h)
+        for h in unreferenced_defs({p: t for p, t in _sources().items()
+                                    if not p.is_relative_to(tests)})
+    }
+    assert not hits - TEST_ONLY, "used only by tests:\n" + "\n".join(sorted(hits - TEST_ONLY))
+    assert not TEST_ONLY - hits, "no longer test-only, drop from TEST_ONLY:\n" + "\n".join(
+        sorted(TEST_ONLY - hits))
