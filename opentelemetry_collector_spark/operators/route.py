@@ -15,9 +15,11 @@ connector (plans/config._fan_out, which runs the flagship
 configs/flagship.yaml) writes every sink in ONE action, partitioned by
 a copy of the route column, and moves each partition dir into its
 table — one pass over the cached parent, a Spark job count independent
-of the number of sinks. The config ``route`` processor adds the
-quarantine route for unparsed rows on top of :func:`route_expr`. For
-multi-route (a row matching several sinks) use :func:`explode_routes`.
+of the number of sinks. Streaming micro-batches write through the same
+primitive (sinks/tables.fan_out_write). The flagship's routing rule,
+:func:`route_or_quarantine`, is defined here once: the config ``route``
+processor and the streaming transform both use it. For multi-route (a
+row matching several sinks) use :func:`explode_routes`.
 """
 
 from __future__ import annotations
@@ -26,6 +28,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 TOOL_SINKS = ["search", "browser", "python", "editor"]
+
+# the route of rows that fail to parse (F7: permanent-error rows stay
+# addressable, consumererror/permanent.go:16-32)
+QUARANTINE = "quarantine"
 
 
 def route_expr() -> Column:
@@ -37,6 +43,13 @@ def route_expr() -> Column:
         )
         .otherwise(F.lit("sink_default"))
     )
+
+
+def route_or_quarantine() -> Column:
+    """The flagship's routing rule: a row that failed to parse takes the
+    :data:`QUARANTINE` route, any other row the :func:`route_expr`
+    route."""
+    return F.when(F.col("parse_ok"), route_expr()).otherwise(F.lit(QUARANTINE))
 
 
 def route_stage(df: DataFrame, expr: Column | None = None) -> DataFrame:

@@ -20,8 +20,10 @@ more than one downstream pipeline is persisted once, mirroring the
 fanout consumer's single cached parent (internal/fanoutconsumer/
 logs.go:21-77). A router connector and the table pipelines it feeds
 run as ONE fan-out: one cached parent, one partitioned write for all
-its tables and one for their aggregates (:func:`_fan_out`). This is the
-only batch executor; ``configs/flagship.yaml`` is the flagship job.
+its tables and one for their aggregates (:func:`_fan_out`, through
+sinks/tables.fan_out_write, the write streaming micro-batches share).
+This is the only batch executor; ``configs/flagship.yaml`` is the
+flagship job.
 
 Component IDs follow the reference's ``type`` or ``type/name`` format
 (component/identifiable.go). Supported types:
@@ -54,14 +56,11 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import aggregate as agg_ops
 from opentelemetry_collector_spark.operators.debugfmt import sample_per_second
+from opentelemetry_collector_spark.operators.route import QUARANTINE
 from opentelemetry_collector_spark.plans import errors as err_ops
 from opentelemetry_collector_spark.plans import lineage as lineage_ops
 from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore, StageMetric
-from opentelemetry_collector_spark.sinks.tables import TableCatalog, debug_format
-
-# the route of rows that fail to parse (set by the route processor); a
-# router writes it to its table in its own counted write
-QUARANTINE = "quarantine"
+from opentelemetry_collector_spark.sinks.tables import TableCatalog, debug_format, fan_out_write
 
 
 class ConfigError(ValueError):
@@ -501,9 +500,7 @@ def _make_processor(cid: str, opts: dict, spark: SparkSession) -> Callable[[Data
         keep = str(opts.get("keep_hex_lt", "29"))
         return lambda df: filter_ops.sample_conversations(df, keep_hex_lt=keep)
     if t == "route":
-        # rows that fail to parse take the quarantine route
-        expr = F.when(F.col("parse_ok"), route_ops.route_expr()).otherwise(F.lit(QUARANTINE))
-        return lambda df: route_ops.route_stage(df, expr)
+        return lambda df: route_ops.route_stage(df, route_ops.route_or_quarantine())
     if t == "attributes":
         # attributesprocessor action list (processor/attributesprocessor
         # config shape): set / delete / keep_keys verbs applied in order
@@ -817,7 +814,7 @@ def _fan_out(
                 pending = pending | ((route == s) & part.isin(chunks[s]))
             todo = ok & pending
         obs = Observation("sink_fanout")
-        publish = _fan_out_write(
+        publish = fan_out_write(
             catalog, f"{staging}/sinks",
             flagged.observe(obs, *counts).filter(todo)
             .drop("_reject_reason").withColumn("_sink", route),
@@ -826,7 +823,7 @@ def _fan_out(
         got = obs.get
         rejected = [s for s in sinks if got[f"rejected:{s}"]]
         if rejected:
-            publish_rejected = _fan_out_write(
+            publish_rejected = fan_out_write(
                 catalog, f"{staging}/rejected",
                 rejected_rows.filter(route.isin(rejected)).withColumn("_sink", route),
                 ["_sink"],
@@ -867,7 +864,7 @@ def _fan_out(
         t0 = time.monotonic()
         obs = Observation("agg_fanout")
         agg = agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks)), with_route=True)
-        publish = _fan_out_write(
+        publish = fan_out_write(
             catalog, f"{staging}/aggs",
             agg.observe(obs, *[F.count_if(route == s).alias(s) for s in sinks]),
             ["route"], max_records_per_file,
@@ -922,34 +919,6 @@ def _fan_out(
         routed.unpersist()
         shutil.rmtree(catalog.path(staging), ignore_errors=True)
     return {rv: QUARANTINE if rv == QUARANTINE else f"write_{t}" for rv, t in tables.items()}
-
-
-def _fan_out_write(
-    catalog: TableCatalog, staging: str, df: DataFrame, by: list[str],
-    max_records_per_file: int = 0,
-) -> Callable[[tuple, str], None]:
-    """Write ``df`` once, partitioned by ``by``, into ``staging``; return
-    ``publish(values, table)``, which moves the partition dir for
-    ``values`` (one per column of ``by``) to ``table``. A partition with
-    no rows has no dir, so ``publish`` writes an empty table with the
-    same schema instead."""
-    catalog.overwrite(staging, df, max_records_per_file=max_records_per_file,
-                      partition_by=by)
-    schema = df.drop(*by).schema
-
-    def publish(values: tuple, table: str) -> None:
-        src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
-        dst = catalog.path(table)
-        if not os.path.isdir(src):
-            spark = catalog.spark
-            catalog.overwrite(table, spark.createDataFrame(spark.sparkContext.emptyRDD(), schema))
-            return
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        open(os.path.join(dst, "_SUCCESS"), "w").close()
-
-    return publish
 
 
 def _write_counted(

@@ -7,7 +7,10 @@ retry: configretry/backoff.go:17-21). Our batch mapping:
 * permanent  → row-level quarantine (parse_ok=false rows to a failure
   table) or job abort for config errors;
 * retryable  → Spark task retries (spark.task.maxFailures) + stage
-  re-run from checkpoint; sink commit retries with backoff.
+  re-run from checkpoint: a resumed run redoes only the un-acked sink
+  writes. No production path retries a sink commit in-process: the
+  throttle-aware exponential backoff helper below is used by tests
+  only.
 """
 
 from __future__ import annotations

@@ -21,6 +21,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from opentelemetry_collector_spark.operators.route import QUARANTINE
 from opentelemetry_collector_spark.plans import config
 from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
 
@@ -75,7 +76,7 @@ def run_pipeline(
             if m["stage"].startswith("write_") and "sink" in m
         },
         quarantined=next(
-            (m["rows_out"] for m in metrics if m["stage"] == config.QUARANTINE), 0
+            (m["rows_out"] for m in metrics if m["stage"] == QUARANTINE), 0
         ),
         stages_skipped=skipped,
         metrics=metrics,

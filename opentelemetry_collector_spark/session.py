@@ -23,10 +23,10 @@ _DEFAULTS = {
     "spark.sql.session.timeZone": "UTC",
     # AQE: runtime re-plan (coalesce small partitions, split skewed
     # ones, demote/promote join strategies). The reference has no skew
-    # story (SURVEY §4); this is our addition.
+    # story (SURVEY §4); this is our addition. Skew-join splitting is
+    # set in get_spark from the engine.aqeSkewJoin feature gate.
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
-    "spark.sql.adaptive.skewJoin.enabled": "true",
     # Let AQE coalesce the shuffle under a persisted plan too (by
     # default Spark keeps a cached plan at shuffle.partitions). Size by
     # data, like the batch processor's send_batch_size: the flagship's

@@ -20,6 +20,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -44,9 +45,6 @@ class TableCatalog:
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
-
-    def append(self, table: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self.path(table))
 
     def overwrite_bucketed(
         self,
@@ -117,6 +115,36 @@ class TableCatalog:
         return os.path.isdir(p) and any(
             f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
         )
+
+
+def fan_out_write(
+    catalog: TableCatalog, staging: str, df: DataFrame, by: list[str],
+    max_records_per_file: int = 0,
+) -> Callable[[tuple, str], None]:
+    """Write ``df`` once, partitioned by ``by``, into ``staging``; return
+    ``publish(values, table)``, which moves the partition dir for
+    ``values`` (one per column of ``by``) to ``table``. A partition with
+    no rows has no dir, so ``publish`` writes an empty table with the
+    same schema instead. The caller removes ``staging``. The batch router
+    (plans/config._fan_out) and each streaming micro-batch
+    (streaming/stream.route_sink_writer) write all their routes with it."""
+    catalog.overwrite(staging, df, max_records_per_file=max_records_per_file,
+                      partition_by=by)
+    schema = df.drop(*by).schema
+
+    def publish(values: tuple, table: str) -> None:
+        src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
+        dst = catalog.path(table)
+        if not os.path.isdir(src):
+            spark = catalog.spark
+            catalog.overwrite(table, spark.createDataFrame(spark.sparkContext.emptyRDD(), schema))
+            return
+        shutil.rmtree(dst, ignore_errors=True)
+        os.makedirs(os.path.dirname(dst), exist_ok=True)
+        os.rename(src, dst)
+        open(os.path.join(dst, "_SUCCESS"), "w").close()
+
+    return publish
 
 
 def debug_format(df: DataFrame, verbosity: str = "normal") -> DataFrame:

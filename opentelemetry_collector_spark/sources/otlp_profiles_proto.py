@@ -53,6 +53,7 @@ from opentelemetry_collector_spark.sources.otlp_proto import (
     Message,
     attributes,
     decode,
+    decoder,
     encode,
     explode_decoded,
     string_attributes,
@@ -152,6 +153,13 @@ def _entry(table: list, i: int):
     raise MalformedProto("dangling_index")
 
 
+_SAMPLE_SCHEMA = (
+    "conv_id string, turn_idx int, stack_depth int, leaf_fn string, "
+    "path string, value_us bigint, ts_unix_nano bigint"
+)
+
+
+@decoder(_SAMPLE_SCHEMA)
 def decode_profiles_request(buf: bytes) -> list[dict]:
     """Inverse: resolve every sample through stack → location → line →
     function → string (the dictionary_helpers.go resolution pass) and
@@ -223,12 +231,6 @@ def encode_profiles_proto(parsed: DataFrame) -> DataFrame:
         return pd.Series([encode_profiles_request(c, ts) for c, ts in zip(conv, turns_s)])
 
     return grouped.select("conv_id", _enc("conv_id", "turns").alias("wire"))
-
-
-_SAMPLE_SCHEMA = (
-    "conv_id string, turn_idx int, stack_depth int, leaf_fn string, "
-    "path string, value_us bigint, ts_unix_nano bigint"
-)
 
 
 def decode_profiles_proto(df: DataFrame, wire_col: str = "wire") -> DataFrame:

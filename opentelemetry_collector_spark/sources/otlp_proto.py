@@ -33,7 +33,9 @@ The walker is three pieces, and field numbers appear only in the first:
   field with the wrong wire type and invalid UTF-8 are rejected; unknown
   fields are skipped, as any proto reader does. Each failure raises
   ``MalformedProto(reason)``, a PermanentError whose reason is one of
-  ``REASONS``. A malformed payload is rejected whole, never accepted in
+  ``REASONS``. Each signal's row function declares its output columns
+  (:func:`decoder`), and a value wider than its int or bigint column is
+  ``out_of_range``. A malformed payload is rejected whole, never accepted in
   part, as the reference receiver does
   (receiver/otlpreceiver/internal/logs/otlp.go:33-56).
   ``decode_logs_proto`` — and so ``read_otlp_proto``, the path where
@@ -55,6 +57,7 @@ shuffle is introduced by the codec itself.
 
 from __future__ import annotations
 
+import functools
 import struct
 
 import pandas as pd
@@ -86,7 +89,7 @@ REASONS = (
     "wire_type_mismatch",  # a known field with another wire type
     "invalid_utf8",       # a string field that is not UTF-8
     "dangling_index",     # a profiles dictionary index past its table
-    "out_of_range",       # a logs value wider than its output column
+    "out_of_range",       # a value wider than its int/bigint output column
 )
 
 
@@ -310,6 +313,35 @@ def attributes(msg, member: str = "string_value", default=""):
     }
 
 
+def decoder(schema: str):
+    """Declare the output columns (a Spark DDL string) of a function from
+    payload bytes to rows (dicts keyed by column, or tuples in column
+    order). The declared function checks every row against them: an int
+    or bigint value wider than its column raises
+    ``MalformedProto("out_of_range")`` rather than failing the Arrow
+    conversion, and with it the task."""
+    cols = [c.strip().rsplit(" ", 1) for c in schema.split(",")]
+    bounds = [
+        (i, name.strip("`"), 1 << (31 if typ == "int" else 63))
+        for i, (name, typ) in enumerate(cols) if typ in ("int", "bigint")
+    ]
+
+    def declare(rows_of):
+        @functools.wraps(rows_of)
+        def checked(buf: bytes) -> list:
+            rows = rows_of(buf)
+            for r in rows:
+                for i, name, bound in bounds:
+                    v = r.get(name) if isinstance(r, dict) else r[i]
+                    if v is not None and not -bound <= v < bound:
+                        raise MalformedProto("out_of_range")
+            return rows
+
+        return checked
+
+    return declare
+
+
 def explode_decoded(df: DataFrame, wire_col: str, schema: str, rows_of, carry=()) -> DataFrame:
     """(…, wire) → one row per dict ``rows_of(bytes)`` returns: the Arrow
     UDF + explode every ``decode_*_proto`` shares. Carry columns ride
@@ -378,22 +410,25 @@ def encode_resource_logs(
     }]})
 
 
-_INT32 = range(-(1 << 31), 1 << 31)
+_DECODED_SCHEMA = (
+    "res_conv string, scope_name string, turn_idx int, "
+    "ts_unix_nano bigint, severity_number int, severity_text string, "
+    "body_text string, event_name string, decode_error string"
+)
 
 
+@decoder(_DECODED_SCHEMA)
 def decode_logs(buf: bytes) -> list[dict]:
     """LogsData bytes → one dict per LogRecord (the flattened receiver
     row shape). ``turn_idx`` is the Int value of the record's
-    ``turn.idx`` attribute. A value wider than its output column
-    (turn_idx and severity_number int, ts_unix_nano bigint) is
-    ``out_of_range``: the row could not be written."""
+    ``turn.idx`` attribute."""
     out: list[dict] = []
     for rl in decode(LOGS_DATA, buf).get("resource_logs", ()):
         conv_id = attributes(rl.get("resource")).get("conv.id", "")
         for sl in rl.get("scope_logs", ()):
             scope_name = sl.get("scope", {}).get("name", "")
             for r in sl.get("log_records", ()):
-                rec = {
+                out.append({
                     "res_conv": conv_id,
                     "scope_name": scope_name,
                     "ts_unix_nano": r.get("time_unix_nano", 0),
@@ -402,11 +437,7 @@ def decode_logs(buf: bytes) -> list[dict]:
                     "body_text": r.get("body", {}).get("string_value", ""),
                     "event_name": r.get("event_name", ""),
                     "turn_idx": attributes(r, "int_value", 0).get("turn.idx", 0),
-                }
-                if (rec["turn_idx"] not in _INT32 or rec["severity_number"] not in _INT32
-                        or rec["ts_unix_nano"] >> 63):
-                    raise MalformedProto("out_of_range")
-                out.append(rec)
+                })
     return out
 
 
@@ -422,12 +453,6 @@ def _logs_or_error(buf: bytes) -> list[dict]:
 # ---------------------------------------------------------------------------
 
 _SEV_TEXT = {17: "ERROR", 13: "WARN", 9: "INFO"}
-
-_DECODED_SCHEMA = (
-    "res_conv string, scope_name string, turn_idx int, "
-    "ts_unix_nano bigint, severity_number int, severity_text string, "
-    "body_text string, event_name string, decode_error string"
-)
 
 
 def encode_logs_proto(parsed: DataFrame, batch_size: int = 512) -> DataFrame:
@@ -556,6 +581,14 @@ def encode_resource_spans(conv_id: str, spans: list[bytes]) -> bytes:
     }]})
 
 
+_SPAN_DECODED_SCHEMA = (
+    "res_conv string, trace_id string, span_id string, "
+    "parent_span_id string, name string, kind int, "
+    "start_unix_nano bigint, end_unix_nano bigint, status_code int"
+)
+
+
+@decoder(_SPAN_DECODED_SCHEMA)
 def decode_spans(buf: bytes) -> list[dict]:
     """TracesData bytes → one dict per Span (hex ids; an absent parent
     is None)."""
@@ -576,13 +609,6 @@ def decode_spans(buf: bytes) -> list[dict]:
                     "status_code": s.get("status", {}).get("code", 0),
                 })
     return out
-
-
-_SPAN_DECODED_SCHEMA = (
-    "res_conv string, trace_id string, span_id string, "
-    "parent_span_id string, name string, kind int, "
-    "start_unix_nano bigint, end_unix_nano bigint, status_code int"
-)
 
 
 def encode_spans_proto(spans: DataFrame) -> DataFrame:
@@ -918,6 +944,9 @@ def decode_metrics_proto(
     re-sparsify (zero counts drop), the zero bucket returns as sign 0 /
     idx NULL."""
 
+    schema = f"`{group_col}` string, scale int, sign int, idx bigint, n bigint"
+
+    @decoder(schema)
     def rows_of(buf: bytes) -> list[tuple]:
         rows = []
         for pt in decode_metrics(buf):
@@ -936,5 +965,4 @@ def decode_metrics_proto(
                         rows.append((g, sc, sign, off + i, c))
         return rows
 
-    schema = f"`{group_col}` string, scale int, sign int, idx bigint, n bigint"
     return explode_decoded(df, wire_col, schema, rows_of)

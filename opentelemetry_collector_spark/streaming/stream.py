@@ -10,9 +10,11 @@ with:
 * event-time tumbling windows + watermark for the batchprocessor-style
   accounting (the timeout flush becomes the watermark-driven state
   eviction);
-* ``foreachBatch`` fan-out to per-sink tables (each micro-batch does
-  exactly what plans/pipeline.run_pipeline does once — checkpointed by
-  Spark's streaming offset log instead of our checkpoint table);
+* ``foreachBatch`` fan-out to per-route tables through the batch
+  fan-out's write (sinks/tables.fan_out_write): one partitioned write
+  per micro-batch, every route the flagship writes, quarantine
+  included, with the batch sink schema — checkpointed by Spark's
+  streaming offset log instead of our checkpoint table;
 * ``Trigger.AvailableNow`` for incremental catch-up runs (the scraper
   controller's pull-loop analog, scraper/scraperhelper/controller.go:68-160).
 """
@@ -26,7 +28,7 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
+    TimestampNTZType,
 )
 
 from opentelemetry_collector_spark.operators import enrich as enrich_ops
@@ -41,7 +43,7 @@ TRANSCRIPT_SCHEMA = StructType(
         StructField("role", StringType(), False),
         StructField("text", StringType(), False),
         StructField("tool", StringType(), False),
-        StructField("ts", TimestampType(), False),
+        StructField("ts", TimestampNTZType(), False),
     ]
 )
 
@@ -57,31 +59,17 @@ def stream_transcripts(spark: SparkSession, path: str, max_files: int = 16) -> D
     )
 
 
-def transform(
-    stream: DataFrame, spark: SparkSession, quarantine: bool = False
-) -> DataFrame:
-    """parse → enrich → route, identical code to the batch plan.
-
-    ``quarantine=True`` gives the streaming path the batch pipeline's F7
-    semantics: unparseable records are NOT dropped — they route to the
-    ``quarantine`` sink (permanent-error rows stay addressable,
-    consumererror/permanent.go:16-32), while parseable records route
-    normally. The writer just needs ``quarantine`` in its sink list."""
-    parsed = parse_ops.parse_stage(stream)
-    if not quarantine:
-        parsed = parsed.filter(F.col("parse_ok"))
+def transform(stream: DataFrame, spark: SparkSession) -> DataFrame:
+    """The flagship's processors (configs/flagship.yaml), identical code
+    to the batch plan: parse without the attrs map → enrich → route.
+    Unparseable records are NOT dropped: they take the ``quarantine``
+    route (:func:`route_ops.route_or_quarantine`, F7 — permanent-error
+    rows stay addressable, consumererror/permanent.go:16-32)."""
+    parsed = parse_ops.parse_stage(stream, with_attrs=False)
     enriched = enrich_ops.enrich_stage(
         parsed, tool_lookup_df(spark), role_lookup_df(spark)
     )
-    routed = route_ops.route_stage(enriched)
-    if quarantine:
-        routed = routed.withColumn(
-            "route",
-            F.when(F.col("parse_ok"), F.col("route")).otherwise(
-                F.lit("quarantine")
-            ),
-        )
-    return routed
+    return route_ops.route_stage(enriched, route_ops.route_or_quarantine())
 
 
 def windowed_accounting(routed: DataFrame, watermark: str = "2 hours",
@@ -89,9 +77,14 @@ def windowed_accounting(routed: DataFrame, watermark: str = "2 hours",
     """Streaming batchprocessor accounting: watermarked tumbling-window
     counts per (route, conv_id, tool). Late rows beyond the watermark
     are dropped from state — the bounded-memory analog of the batch
-    processor's timeout flush."""
+    processor's timeout flush. Quarantined rows are dropped before the
+    watermark, so they neither count nor move it. A watermark needs a
+    TIMESTAMP column, so ``ts`` (timestamp_ntz, as in the batch tables)
+    is read in the session time zone (UTC, session.py)."""
     return (
-        routed.withWatermark("ts", watermark)
+        routed.filter(F.col("route") != route_ops.QUARANTINE)
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .withWatermark("ts", watermark)
         .groupBy(
             F.window("ts", window).alias("w"),
             "route", "conv_id", "tool",
@@ -108,36 +101,35 @@ def windowed_accounting(routed: DataFrame, watermark: str = "2 hours",
     )
 
 
-def route_sink_writer(warehouse: str, sinks: list[str] | None = None,
-                      edge_metrics: bool = True, run_id: str | None = None,
+def route_sink_writer(warehouse: str, run_id: str | None = None,
                       data_dir: str | None = None):
-    """foreachBatch fan-out: per-micro-batch routed write to per-sink
-    tables, landing each epoch as ``sink/epoch=N/`` with OVERWRITE
-    semantics. foreachBatch may REPLAY an epoch after a failure (its
-    documented at-least-once contract); a plain append would duplicate
-    that epoch's rows, while the deterministic epoch-partitioned
-    overwrite converges — offset log + idempotent epoch commit =
-    effectively-once, the same two-phase shape as the batch
-    checkpoint acks (persistent_queue.go:321-428). Readers see a plain
-    partitioned table (the epoch partition column prunes like any
-    other).
+    """foreachBatch fan-out: each micro-batch is written to every route
+    the flagship writes (``sqltext.SINK_NAMES`` and ``quarantine``),
+    landing as ``<route>/epoch=N/`` with OVERWRITE semantics.
+    foreachBatch may REPLAY an epoch after a failure (its documented
+    at-least-once contract); a plain append would duplicate that epoch's
+    rows, while the deterministic epoch-partitioned overwrite converges
+    — offset log + idempotent epoch commit = effectively-once, the same
+    two-phase shape as the batch checkpoint acks
+    (persistent_queue.go:321-428). Readers see a plain partitioned table
+    (the epoch partition column prunes like any other).
 
-    The route domain is static (``sqltext.SINK_NAMES`` — the configured
-    exporter set, exactly like the reference's fanout consumer is built
-    from the config graph, not discovered from data), so the writer
-    iterates that list: zero driver round-trips per micro-batch. The
-    previous ``select("route").distinct().collect()`` added a full
-    extra aggregation + driver sync to every micro-batch in the hot
-    path for information the config already holds.
+    The epoch write is the batch fan-out's primitive
+    (sinks/tables.fan_out_write): ONE write of the micro-batch,
+    partitioned by route, into a per-epoch staging dir under
+    ``data_dir``, removed afterwards. The route domain is static — the
+    configured exporter set, as the reference's fanout consumer is built
+    from the config graph — so no driver round-trip finds the routes.
 
-    ``edge_metrics``: per-(epoch, sink) item/byte counters ride each
-    append via an Observation (the streaming face of the A6 obsconsumer
-    edge telemetry) and are acked into the SAME CheckpointStore the
-    batch pipeline uses — one driver-side JSON ack per (epoch, sink),
-    no extra Spark action. ``flush_lineage(spark)`` (an attribute on
-    the returned function) flattens the acks into the shared queryable
-    ``lineage`` warehouse table (part_id = epoch), so streaming and
-    batch A6 telemetry share one store and one query surface.
+    Per-(epoch, route) item/byte counters ride that write in one
+    Observation (the streaming face of the A6 obsconsumer edge
+    telemetry) and are acked into the SAME CheckpointStore the batch
+    pipeline uses: one driver-side JSON ack per (epoch, route) under
+    stage ``stream.<route>``, no extra Spark action.
+    ``flush_lineage(spark)`` (an attribute on the returned function)
+    flattens the acks into the shared queryable ``lineage`` warehouse
+    table (part_id = epoch), so streaming and batch A6 telemetry share
+    one store and one query surface.
 
     ``data_dir`` (default: the warehouse) is where the sink tables
     land. A streaming sink MUST NOT share a table directory with flat
@@ -147,6 +139,7 @@ def route_sink_writer(warehouse: str, sinks: list[str] | None = None,
     ``data_dir`` somewhere else (the lineage store still shares the
     warehouse) or clear the table."""
     import os
+    import shutil
     import time
 
     from pyspark.sql import Observation
@@ -155,10 +148,11 @@ def route_sink_writer(warehouse: str, sinks: list[str] | None = None,
         CheckpointStore,
         StageMetric,
     )
+    from opentelemetry_collector_spark.sinks.tables import TableCatalog, fan_out_write
     from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
-    sink_list = sinks or SINK_NAMES
-    ckpt = CheckpointStore(warehouse, run_id) if edge_metrics else None
+    routes = SINK_NAMES + [route_ops.QUARANTINE]
+    ckpt = CheckpointStore(warehouse, run_id)
     tables = data_dir or warehouse
     checked: set = set()
 
@@ -185,56 +179,56 @@ def route_sink_writer(warehouse: str, sinks: list[str] | None = None,
         checked.add(sink)
 
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        batch_df.persist()
+        for sink in routes:
+            _guard_layout(sink)
+        catalog = TableCatalog(batch_df.sparkSession, tables)
+        staging = f"_staging_{ckpt.run_id}_{epoch_id:08d}"
+        route = F.col("route")
+        obs = Observation(f"edge_{epoch_id}")
+        counts = [
+            c for s in routes for c in (
+                F.count_if(route == s).alias(f"rows:{s}"),
+                F.coalesce(
+                    F.sum(F.when(route == s, F.octet_length("text"))), F.lit(0)
+                ).alias(f"bytes:{s}"),
+            )
+        ]
+        t0 = time.monotonic()
         try:
-            for sink in sink_list:
-                _guard_layout(sink)
-                branch = batch_df.filter(F.col("route") == sink)
-                if edge_metrics:
-                    obs = Observation(f"edge_{epoch_id}_{sink}")
-                    branch = branch.observe(
-                        obs,
-                        F.count(F.lit(1)).alias("rows"),
-                        F.coalesce(
-                            F.sum(F.octet_length("text")), F.lit(0)
-                        ).alias("bytes"),
-                    )
-                t0 = time.monotonic()
-                branch.write.mode("overwrite").parquet(
-                    f"{tables}/{sink}/epoch={epoch_id}"
+            publish = fan_out_write(
+                catalog, staging,
+                batch_df.observe(obs, *counts).withColumn("_sink", route), ["_sink"],
+            )
+            got = obs.get
+            for sink in routes:
+                publish((sink,), f"{sink}/epoch={epoch_id}")
+                rows = got[f"rows:{sink}"]
+                ckpt.commit(
+                    f"stream.{sink}.epoch{epoch_id:08d}",
+                    StageMetric(
+                        run_id=ckpt.run_id,
+                        stage=f"stream.{sink}",
+                        rows_in=rows,
+                        rows_out=rows,
+                        # the shared write's time counts toward every route
+                        wall_ms=int((time.monotonic() - t0) * 1000),
+                        extra={
+                            "epoch": epoch_id,
+                            "sink": sink,
+                            "partitions": [{
+                                "part_id": epoch_id,
+                                "rows": rows,
+                                "bytes": got[f"bytes:{sink}"],
+                            }],
+                        },
+                    ),
                 )
-                if edge_metrics:
-                    got = obs.get
-                    ckpt.commit(
-                        f"stream.{sink}.epoch{epoch_id:08d}",
-                        StageMetric(
-                            run_id=ckpt.run_id,
-                            stage=f"stream.{sink}",
-                            rows_in=got["rows"],
-                            rows_out=got["rows"],
-                            wall_ms=int((time.monotonic() - t0) * 1000),
-                            extra={
-                                "epoch": epoch_id,
-                                "sink": sink,
-                                "partitions": [{
-                                    "part_id": epoch_id,
-                                    "rows": got["rows"],
-                                    "bytes": got["bytes"],
-                                }],
-                            },
-                        ),
-                    )
         finally:
-            batch_df.unpersist()
+            shutil.rmtree(catalog.path(staging), ignore_errors=True)
 
     def flush_lineage(spark: SparkSession) -> tuple[int, int]:
-        from opentelemetry_collector_spark.sinks.tables import TableCatalog
-
-        if ckpt is None:
-            return (0, 0)
         return ckpt.write_lineage_table(spark, TableCatalog(spark, warehouse))
 
-    write_batch.ckpt = ckpt
     write_batch.flush_lineage = flush_lineage
     return write_batch
 

@@ -32,3 +32,19 @@ def sf_dir():
 def contract_sf_dir():
     """sf0.01, the scale the contract entries are checked at, next to SF_DIR."""
     return os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+
+
+@pytest.fixture(scope="session")
+def jobs_of(spark):
+    """``jobs_of(group, fn)``: the number of Spark jobs ``fn()`` runs."""
+
+    def count(group: str, fn) -> int:
+        sc = spark.sparkContext
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

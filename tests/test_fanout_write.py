@@ -29,16 +29,6 @@ TABLES = sorted(
 )
 
 
-def _jobs_of(spark, group: str, fn) -> int:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def _union(catalog):
     out = None
     for s in SINK_NAMES:
@@ -48,10 +38,10 @@ def _union(catalog):
 
 
 @pytest.mark.parametrize("chunks", [1, 3])
-def test_job_count_is_fixed(spark, sf_dir, tmp_path, chunks):
+def test_job_count_is_fixed(spark, sf_dir, tmp_path, jobs_of, chunks):
     wh = str(tmp_path / "wh")
-    jobs = _jobs_of(
-        spark, f"fanout-{chunks}",
+    jobs = jobs_of(
+        f"fanout-{chunks}",
         lambda: run_pipeline(spark, sf_dir, wh, sink_chunks=chunks),
     )
     assert jobs <= MAX_JOBS, jobs

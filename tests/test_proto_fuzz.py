@@ -148,6 +148,40 @@ def test_logs_value_wider_than_its_column_is_out_of_range():
     assert _decode_or_reason(op.decode_logs, buf) == (None, "out_of_range")
 
 
+WIDE = [
+    pytest.param(
+        lambda df: op.decode_spans_proto(df),
+        op.encode_resource_spans("c", [op.encode_span("0f" * 16, "ab" * 8, None, "s", 1 << 40, 1, 2, 0)]),
+        id="spans_int",
+    ),
+    pytest.param(
+        lambda df: op.decode_metrics_proto(df),
+        op.encode_resource_metrics([], "scope", [op.encode_exp_histogram_metric("lat", "ms", [{
+            "attrs": [("tool", "s")], "count": 1 << 63, "zero_count": 1 << 63, "scale": 0,
+            "pos_offset": 0, "pos_counts": [], "neg_offset": 0, "neg_counts": [],
+        }])]),
+        id="metrics_fixed64",
+    ),
+    pytest.param(
+        lambda df: opp.decode_profiles_proto(df),
+        opp.encode_profiles_request("c", [
+            {"turn_idx": 1 << 40, "fname": "f", "value_us": 1, "ts_unix_nano": 1},
+        ]),
+        id="profiles_int",
+    ),
+]
+
+
+@pytest.mark.parametrize("decode_proto,payload", WIDE)
+def test_value_wider_than_its_column_is_out_of_range(spark, decode_proto, payload):
+    """A well-formed value too wide for its int/bigint output column
+    raises MalformedProto("out_of_range") in the decoder, where the Arrow
+    conversion would otherwise fail the task with ArrowInvalid."""
+    df = spark.createDataFrame([(bytearray(payload),)], "wire binary")
+    with pytest.raises(Exception, match="MalformedProto: out_of_range"):
+        decode_proto(df).collect()
+
+
 def test_profiles_index_past_its_table_is_dangling():
     buf = opp.encode(opp.EXPORT_PROFILES_REQUEST, {"resource_profiles": [{"scope_profiles": [
         {"profiles": [{"samples": [{"stack_index": 5}]}]}

@@ -170,12 +170,10 @@ def test_streaming_quarantine_route(spark, sf_dir, tmp_path):
     base.write.mode("overwrite").parquet(src)
     n_total = base.count()
 
-    routed = ss.transform(
-        ss.stream_transcripts(spark, src, max_files=8), spark, quarantine=True
-    )
+    routed = ss.transform(ss.stream_transcripts(spark, src, max_files=8), spark)
     from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
-    writer = ss.route_sink_writer(wh, sinks=SINK_NAMES + ["quarantine"])
+    writer = ss.route_sink_writer(wh)
     q = (
         routed.writeStream.foreachBatch(writer)
         .option("checkpointLocation", str(tmp_path / "ckptq"))
@@ -273,3 +271,58 @@ def test_streaming_static_join_side_is_local(spark, sf_dir, tmp_path):
     plan = q._jsq.explainInternal(False)
     assert "ExistingRDD" not in plan, plan
     assert plan.split("== Initial Plan ==")[0].count("LocalTableScan") == 2, plan
+
+
+def _every_route_batch(spark, sf_dir, tmp_path):
+    """A static micro-batch through the streaming transform in which
+    every route, quarantine included, has rows."""
+    src = str(tmp_path / "src_all")
+    derive_transcripts(spark, sf_dir).withColumn(
+        "text",
+        F.when(
+            F.col("turn_idx") % 13 == 0,
+            F.regexp_replace("text", r"^\[seq=[0-9]+\] ", ""),
+        ).otherwise(F.col("text")),
+    ).write.parquet(src)
+    batch = ss.transform(spark.read.parquet(src), spark)
+    routes = {r["route"] for r in batch.select("route").distinct().collect()}
+    assert routes == set(SINK_NAMES) | {"quarantine"}
+    return batch
+
+
+def test_epoch_write_is_one_fan_out(spark, sf_dir, tmp_path, jobs_of):
+    """One writer call writes every route in one partitioned write (the
+    batch fan-out's primitive), not one write per route."""
+    batch = _every_route_batch(spark, sf_dir, tmp_path)
+    writer = ss.route_sink_writer(str(tmp_path / "wh"))
+    assert jobs_of("stream-epoch", lambda: writer(batch, 0)) <= 3
+
+
+def test_streaming_sink_schema_is_the_batch_sink_schema(spark, sf_dir, tmp_path):
+    """A streaming sink table has the batch sink table's columns (plus
+    its epoch partition column), for every route the flagship writes."""
+    from opentelemetry_collector_spark.plans.pipeline import run_pipeline
+
+    src = str(tmp_path / "src")
+    derive_transcripts(spark, sf_dir).write.parquet(src)
+    batch_wh, stream_wh = str(tmp_path / "batch"), str(tmp_path / "stream")
+    run_pipeline(spark, sf_dir, batch_wh)
+    ss.run_available_now(spark, src, stream_wh, str(tmp_path / "ckpt"), accounting=False)
+    for s in SINK_NAMES + ["quarantine"]:
+        streamed = spark.read.parquet(f"{stream_wh}/{s}").drop("epoch")
+        assert streamed.dtypes == spark.read.parquet(f"{batch_wh}/{s}").dtypes, s
+
+
+def test_streaming_run_leaves_only_its_tables(spark, sf_dir, tmp_path):
+    """After run_available_now the data dir holds every route's table
+    and the shared checkpoint and lineage tables — no ``_staging_*``
+    dir."""
+    import os
+
+    src = str(tmp_path / "src")
+    wh = str(tmp_path / "wh")
+    derive_transcripts(spark, sf_dir).write.parquet(src)
+    ss.run_available_now(spark, src, wh, str(tmp_path / "ckpt"), accounting=False)
+    assert sorted(os.listdir(wh)) == sorted(
+        SINK_NAMES + ["quarantine", "checkpoint", "lineage"]
+    )
