@@ -97,6 +97,7 @@ def _cap_buckets(
     return keyed
 
 from opentelemetry_collector_spark.operators.textstats import (
+    bind_once,
     grams_col,
     norm_text,
 )
@@ -112,20 +113,6 @@ LSH_ROWS = 3
 # (A 32-bit/8-bit-band variant has only 256 keys per band — buckets of
 # n/256 docs each make the verify quadratic in corpus size.)
 SIMHASH_BITS = 64
-
-
-def _bind_once(value: Column, body) -> Column:
-    """Evaluate ``value`` exactly once and feed it to ``body``.
-
-    Higher-order-function lambdas are interpreted (not codegen'd), and
-    Catalyst's projection collapsing can inline an aliased expression
-    into every use site — so an expensive expression (md5, split)
-    referenced N times inside a lambda would run N times per row.
-    Wrapping it as the element of a 1-element array binds it to a lambda
-    variable, which IS evaluated once. This is the single biggest
-    constant-factor lever in the signature computations below.
-    """
-    return F.element_at(F.transform(F.array(value), body), 1)
 
 
 def shingles_col(c: Column, k: int = 3) -> Column:
@@ -226,7 +213,7 @@ def minhash_signature(c: Column, n_hashes: int = MINHASH_N) -> Column:
 
     def per_shingle(s: Column) -> Column:
         # bind h once, then derive the n-vector with int ops only
-        return _bind_once(
+        return bind_once(
             shingle_hash(s),
             lambda h: F.array(
                 *[(F.lit(a) * h + F.lit(b)) % F.lit(MINHASH_P) for a, b in coeffs]

@@ -12,11 +12,12 @@ Reference semantics to preserve:
 
 Scale shape: ``route`` is a pure column expression, so a router
 connector (plans/config._fan_out, which runs the flagship
-configs/flagship.yaml) writes every sink in ONE action, partitioned by
-a copy of the route column, and moves each partition dir into its
-table — one pass over the cached parent, a Spark job count independent
-of the number of sinks. Streaming micro-batches write through the same
-primitive (sinks/tables.fan_out_write). The flagship's routing rule,
+configs/flagship.yaml) writes every route, :data:`QUARANTINE` included,
+in ONE action, partitioned by a copy of the route column, and moves
+each partition dir into its table — one pass over the cached parent, a
+Spark job count independent of the number of routes (a route with no
+rows gets its empty table on the driver). Streaming micro-batches write
+through the same primitive (sinks/tables.fan_out_write). The flagship's routing rule,
 :func:`route_or_quarantine`, is defined here once: the config ``route``
 processor and the streaming transform both use it. For multi-route (a
 row matching several sinks) use :func:`explode_routes`.

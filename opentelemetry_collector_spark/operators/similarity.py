@@ -25,6 +25,7 @@ precision in sequential dimension order, the order of DuckDB's
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -426,7 +427,7 @@ def save_ivf_index(
     ]
     catalog.overwrite_local(
         f"{name}_centroids", rows,
-        [("cell", "int32"), ("pos", "int32"), ("x", "float64")],
+        pa.schema([("cell", pa.int32()), ("pos", pa.int32()), ("x", pa.float64())]),
     )
 
 

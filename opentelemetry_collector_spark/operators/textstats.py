@@ -34,9 +34,15 @@ def norm_text(c: Column) -> Column:
 
 
 def bind_once(value: Column, body) -> Column:
-    """Evaluate ``value`` exactly once and feed it to ``body`` (HOF
-    lambdas are interpreted and Catalyst inlines aliased expressions
-    into every use site — see dedup._bind_once, which aliases this)."""
+    """Evaluate ``value`` exactly once and feed it to ``body``.
+
+    Higher-order-function lambdas are interpreted (not codegen'd), and
+    Catalyst's projection collapsing can inline an aliased expression
+    into every use site — so an expensive expression (md5, split)
+    referenced N times inside a lambda would run N times per row.
+    Wrapping it as the element of a 1-element array binds it to a lambda
+    variable, which IS evaluated once: the biggest constant-factor lever
+    in the dedup signature computations."""
     return F.element_at(F.transform(F.array(value), body), 1)
 
 

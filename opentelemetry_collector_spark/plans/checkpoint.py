@@ -43,6 +43,9 @@ import time
 import uuid
 from dataclasses import dataclass, field
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+
 
 @dataclass
 class StageMetric:
@@ -172,10 +175,6 @@ class CheckpointStore:
         Columns are selected BY NAME in the declared schema order — a
         future on-disk schema reorder/extension fails loudly (KeyError)
         instead of silently merging shifted tuples."""
-        import os
-
-        import pyarrow.parquet as pq
-
         path = catalog.path(table)
         if not os.path.isdir(path):
             return new_rows
@@ -219,21 +218,20 @@ class CheckpointStore:
                      int(fr["rows"]), int(fr["bytes"]))
                 )
         with self._flush_lock():
-            lineage_schema = [
-                ("run_id", "string"), ("stage", "string"),
-                ("part_id", "int32"), ("rows", "int64"),
-                ("bytes", "int64"), ("wall_ms", "int64"),
-            ]
-            files_schema = [
-                ("run_id", "string"), ("stage", "string"),
-                ("file", "string"), ("rows", "int64"), ("bytes", "int64"),
-            ]
+            lineage_schema = pa.schema([
+                ("run_id", pa.string()), ("stage", pa.string()),
+                ("part_id", pa.int32()), ("rows", pa.int64()),
+                ("bytes", pa.int64()), ("wall_ms", pa.int64()),
+            ])
+            files_schema = pa.schema([
+                ("run_id", pa.string()), ("stage", pa.string()),
+                ("file", pa.string()), ("rows", pa.int64()), ("bytes", pa.int64()),
+            ])
             if lineage_rows:
                 catalog.overwrite_local(
                     "lineage",
                     self._merge_other_runs(
-                        catalog, "lineage", lineage_rows,
-                        [n for n, _ in lineage_schema],
+                        catalog, "lineage", lineage_rows, lineage_schema.names,
                     ),
                     lineage_schema,
                 )
@@ -241,8 +239,7 @@ class CheckpointStore:
                 catalog.overwrite_local(
                     "file_stats",
                     self._merge_other_runs(
-                        catalog, "file_stats", file_rows,
-                        [n for n, _ in files_schema],
+                        catalog, "file_stats", file_rows, files_schema.names,
                     ),
                     files_schema,
                 )

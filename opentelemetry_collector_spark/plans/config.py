@@ -20,8 +20,10 @@ more than one downstream pipeline is persisted once, mirroring the
 fanout consumer's single cached parent (internal/fanoutconsumer/
 logs.go:21-77). A router connector and the table pipelines it feeds
 run as ONE fan-out: one cached parent, one partitioned write for all
-its tables and one for their aggregates (:func:`_fan_out`, through
+its tables, the quarantine route's included, and one for the
+aggregates of all but quarantine (:func:`_fan_out`, through
 sinks/tables.fan_out_write, the write streaming micro-batches share).
+Every route is written and acked by the same rules.
 This is the only batch executor; ``configs/flagship.yaml`` is the
 flagship job.
 
@@ -731,20 +733,21 @@ def _fan_out(
     max_records_per_file: int, sink_chunks: int,
 ) -> dict[str, str]:
     """Write every route of a router connector; ``tables`` maps each
-    route value to its table. Returns each route's ack stage:
-    ``write_<table>``, or ``quarantine`` for the quarantine route.
+    route value to its table. Returns each route's ack stage,
+    ``write_<table>``.
 
     One cached parent, sized by its data (the session lets AQE coalesce
     the shuffle under a persisted plan: 4 files per table at sf0.1 on 4
     cores), feeds a fixed set of Spark jobs however many routes there
-    are: one lineage collect, one counted write of the ``quarantine``
-    route, ONE partitioned write for every other un-acked route with
-    partial success (rows failing plans/errors.reject_reason go to
-    ``rejected_<table>``, counted in the ack), ONE partitioned write for
-    their ``agg_<table>`` tables, then the ``lineage`` table. Each
-    route's partition dir is moved from a staging dir to its flat table
-    and acked in route order, so a resume writes only the un-acked
-    tables; the staging dir is removed either way.
+    are: one lineage collect, ONE partitioned write for every un-acked
+    route, the ``quarantine`` route included, with partial success
+    (rows failing plans/errors.reject_reason go to ``rejected_<table>``,
+    counted in the ack), ONE partitioned write for the ``agg_<table>``
+    tables of every route but ``quarantine``, then the ``lineage``
+    table. Each route's partition dir is moved from a staging dir to its
+    flat table and acked in route order, so a resume writes only the
+    un-acked tables; the staging dir is removed either way. A route with
+    no rows gets an empty table written on the driver, with no Spark job.
 
     ``sink_chunks`` > 1 splits each table into that many conv_id-hash
     chunks (plans/lineage.det_partition_id), written by the same write
@@ -755,7 +758,6 @@ def _fan_out(
     ckpt = acks.ckpt
     staging = f"_staging_{ckpt.run_id}"
     route = F.col("route")
-    sinks = [rv for rv in tables if rv != QUARANTINE]
 
     def _chunks(s: str) -> list[int]:
         """The route's un-acked chunks. Acks record their sink_chunks,
@@ -863,7 +865,7 @@ def _fan_out(
         """One aggregate write for every un-acked agg_<table> table."""
         t0 = time.monotonic()
         obs = Observation("agg_fanout")
-        agg = agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks)), with_route=True)
+        agg = agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks)))
         publish = fan_out_write(
             catalog, f"{staging}/aggs",
             agg.observe(obs, *[F.count_if(route == s).alias(s) for s in sinks]),
@@ -879,15 +881,6 @@ def _fan_out(
                 "sink": tables[s], "files": lineage_ops.file_lineage(catalog.path(t)),
             }, since)
 
-    def _quarantine() -> tuple[int, int, dict]:
-        t = tables[QUARANTINE]
-        n = _write_counted(catalog, t, routed.filter(route == QUARANTINE),
-                           max_records_per_file)
-        return n, n, {
-            "partitions": lineage.get(QUARANTINE, []),
-            "files": lineage_ops.file_lineage(catalog.path(t)),
-        }
-
     def _lineage_table() -> tuple[int, int, dict]:
         """Flatten the run's acked lineage into queryable tables."""
         rows, file_rows = ckpt.write_lineage_table(catalog.spark, catalog)
@@ -895,22 +888,18 @@ def _fan_out(
 
     routed = df.persist()
     try:
-        write_sinks = [s for s in sinks if acks.pending(f"write_{tables[s]}")]
-        agg_sinks = [s for s in sinks if acks.pending(f"agg_{tables[s]}")]
-        quarantine = QUARANTINE in tables and acks.pending(QUARANTINE)
+        write_sinks = [s for s in tables if acks.pending(f"write_{tables[s]}")]
+        agg_sinks = [s for s in tables
+                     if s != QUARANTINE and acks.pending(f"agg_{tables[s]}")]
 
-        # Per-partition logical lineage for every route, quarantine
-        # included, in ONE aggregation over the cached parent (A6
-        # north-rule contract; skipped when every write stage is acked).
-        lineage: dict[str, list[dict]] = {}
-        if write_sinks or quarantine:
+        if write_sinks:
+            # Per-partition logical lineage for every route in ONE
+            # aggregation over the cached parent (A6 north-rule contract)
+            lineage: dict[str, list[dict]] = {}
             for r in lineage_ops.logical_lineage(routed).collect():
                 lineage.setdefault(r["route"], []).append(
                     {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
                 )
-        if QUARANTINE in tables:
-            acks.gate(QUARANTINE, _quarantine)
-        if write_sinks:
             _write_sinks(write_sinks, lineage)
         if agg_sinks:
             _write_aggs(agg_sinks)
@@ -918,7 +907,7 @@ def _fan_out(
     finally:
         routed.unpersist()
         shutil.rmtree(catalog.path(staging), ignore_errors=True)
-    return {rv: QUARANTINE if rv == QUARANTINE else f"write_{t}" for rv, t in tables.items()}
+    return {rv: f"write_{t}" for rv, t in tables.items()}
 
 
 def _write_counted(

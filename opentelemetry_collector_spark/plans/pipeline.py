@@ -7,10 +7,11 @@ enrich → route, unparseable rows to the quarantine route, then a router
 connector to one table per route), points its receiver at ``sf_dir`` and
 hands it to the one batch executor, plans/config.run. Its router runs as
 the fan-out (plans/config._fan_out): one cached parent, one lineage
-collect, one quarantine write, ONE partitioned write for all sinks and
-ONE partitioned aggregate write, each sink acked on its own so resume
-stays per sink (per chunk with ``sink_chunks``). ``main.py`` and
-``main.py --config configs/flagship.yaml`` write the same warehouse.
+collect, ONE partitioned write for all sinks, the quarantine table
+included, and ONE partitioned aggregate write, each table acked on its
+own so resume stays per table (per chunk with ``sink_chunks``): 10
+Spark jobs at sf0.1. ``main.py`` and ``main.py --config
+configs/flagship.yaml`` write the same warehouse.
 """
 
 from __future__ import annotations
@@ -69,15 +70,14 @@ def run_pipeline(
         source=source, fail_after_stage=fail_after_stage, sink_chunks=sink_chunks,
     )
     metrics = ckpt.metrics()
+    written = {
+        m["sink"]: m["rows_out"] for m in metrics
+        if m["stage"].startswith("write_") and "sink" in m
+    }
     return RunResult(
         run_id=ckpt.run_id,
-        sink_counts={
-            m["sink"]: m["rows_out"] for m in metrics
-            if m["stage"].startswith("write_") and "sink" in m
-        },
-        quarantined=next(
-            (m["rows_out"] for m in metrics if m["stage"] == QUARANTINE), 0
-        ),
+        sink_counts={s: n for s, n in written.items() if s != QUARANTINE},
+        quarantined=written.get(QUARANTINE, 0),
         stages_skipped=skipped,
         metrics=metrics,
     )

@@ -22,7 +22,10 @@ import os
 import shutil
 from collections.abc import Callable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 class TableCatalog:
@@ -83,25 +86,19 @@ class TableCatalog:
         path would silently lose the no-shuffle join property."""
         return self.spark.table(table.replace("/", "_").replace("-", "_"))
 
-    def overwrite_local(
-        self, table: str, rows: list[tuple], schema: list[tuple[str, str]]
-    ) -> None:
-        """Driver-side metadata table write (pyarrow, no Spark job) —
-        for tiny O(stages) tables like lineage/file_stats, the way
-        Iceberg writes manifest metadata alongside data files. Atomic
-        via write-then-rename of the whole directory."""
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        arrays = {
-            name: pa.array([r[i] for r in rows], type=getattr(pa, typ)())
-            for i, (name, typ) in enumerate(schema)
-        }
+    def overwrite_local(self, table: str, rows: list[tuple], schema: pa.Schema) -> None:
+        """Driver-side table write (pyarrow, no Spark job) — for tiny
+        O(stages) tables like lineage/file_stats, the way Iceberg writes
+        manifest metadata alongside data files, and for the empty table
+        of a fan-out route with no rows. Atomic via write-then-rename of
+        the whole directory."""
+        arrays = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(schema)]
         target = self.path(table)
         tmp = target + "._tmp"
         shutil.rmtree(tmp, ignore_errors=True)
         os.makedirs(tmp, exist_ok=True)
-        pq.write_table(pa.table(arrays), os.path.join(tmp, "part-00000.parquet"))
+        pq.write_table(pa.Table.from_arrays(arrays, schema=schema),
+                       os.path.join(tmp, "part-00000.parquet"))
         with open(os.path.join(tmp, "_SUCCESS"), "w"):
             pass
         shutil.rmtree(target, ignore_errors=True)
@@ -109,12 +106,6 @@ class TableCatalog:
 
     def read(self, table: str) -> DataFrame:
         return self.spark.read.parquet(self.path(table))
-
-    def exists(self, table: str) -> bool:
-        p = self.path(table)
-        return os.path.isdir(p) and any(
-            f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
-        )
 
 
 def fan_out_write(
@@ -125,19 +116,20 @@ def fan_out_write(
     ``publish(values, table)``, which moves the partition dir for
     ``values`` (one per column of ``by``) to ``table``. A partition with
     no rows has no dir, so ``publish`` writes an empty table with the
-    same schema instead. The caller removes ``staging``. The batch router
-    (plans/config._fan_out) and each streaming micro-batch
-    (streaming/stream.route_sink_writer) write all their routes with it."""
+    same schema on the driver (:meth:`TableCatalog.overwrite_local`): a
+    route with no rows costs no Spark job. The caller removes
+    ``staging``. The batch router (plans/config._fan_out) and each
+    streaming micro-batch (streaming/stream.route_sink_writer) write all
+    their routes with it."""
     catalog.overwrite(staging, df, max_records_per_file=max_records_per_file,
                       partition_by=by)
-    schema = df.drop(*by).schema
+    schema = to_arrow_schema(df.drop(*by).schema)
 
     def publish(values: tuple, table: str) -> None:
         src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
         dst = catalog.path(table)
         if not os.path.isdir(src):
-            spark = catalog.spark
-            catalog.overwrite(table, spark.createDataFrame(spark.sparkContext.emptyRDD(), schema))
+            catalog.overwrite_local(table, [], schema)
             return
         shutil.rmtree(dst, ignore_errors=True)
         os.makedirs(os.path.dirname(dst), exist_ok=True)

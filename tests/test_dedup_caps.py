@@ -175,16 +175,19 @@ def test_role_bit_nulls_match_count_distinct(spark):
         [("c1", None, "t", "x", 1), ("c1", None, "t", "x", 2),
          ("c2", "user", "t", "x", 1), ("c2", None, "t", "x", 2)],
         "conv_id string, role string, tool string, text string, turn_idx int",
-    ).withColumn("ts", F.to_timestamp(F.lit("2025-01-01 00:00:00")))
+    ).withColumn("ts", F.to_timestamp(F.lit("2025-01-01 00:00:00"))).withColumn(
+        "route", F.lit("sink_default")
+    )
     fast = {
         r.conv_id: r.distinct_roles
-        for r in agg_ops.hourly_sink_accounting(df, with_route=False).collect()
+        for r in agg_ops.hourly_sink_accounting(df).collect()
     }
+    # the exact reference: countDistinct over the same group-by
     exact = {
-        r.conv_id: r.distinct_roles
-        for r in agg_ops.hourly_sink_accounting(
-            df, with_route=False, exact_distinct=True
-        ).collect()
+        r.conv_id: r.n
+        for r in df.groupBy(
+            "route", F.date_trunc("hour", F.col("ts")), "conv_id", "tool"
+        ).agg(F.countDistinct("role").alias("n")).collect()
     }
     assert fast == exact == {"c1": 0, "c2": 1}
 

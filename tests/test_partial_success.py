@@ -5,6 +5,7 @@ and counted in the stage ack — the OTLP partial-success contract
 
 from __future__ import annotations
 
+import os
 from datetime import datetime
 
 from pyspark.sql import functions as F
@@ -45,7 +46,7 @@ def test_clean_write_has_no_rejected_table(spark, tmp_path):
     df = spark.createDataFrame([("c1", 0, "user", "ok", "search", TS)], SCHEMA)
     ok, rejected = errors.write_with_partial_success(catalog, "out", df)
     assert (ok, rejected) == (1, 0)
-    assert not catalog.exists("rejected_out")
+    assert not os.path.isdir(catalog.path("rejected_out"))
 
 
 def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
@@ -69,3 +70,24 @@ def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
     assert catalog.read("sink_search").filter(F.col("conv_id").isNull()).count() == 0
     m = next(x for x in res.metrics if x["stage"] == "write_sink_search")
     assert m["rejected"] == 1 and m["rows_in"] == m["rows_out"] + 1
+
+
+def test_quarantine_route_has_partial_success(spark, sf_dir, tmp_path):
+    """The quarantine route is written by the same rules as every sink:
+    an unparseable turn with a NULL conv_id lands in rejected_quarantine
+    and the write_quarantine ack counts it as rejected."""
+
+    def src(s):
+        return derive_transcripts(s, sf_dir).unionByName(s.createDataFrame(
+            [(None, 0, "user", "no header at all", "search", TS),
+             ("c-bad", 0, "user", "no header either", "search", TS)], SCHEMA))
+
+    wh = str(tmp_path / "whq")
+    res = run_pipeline(spark, sf_dir, wh, source=src)
+    catalog = TableCatalog(spark, wh)
+    rej = catalog.read("rejected_quarantine").collect()
+    assert [(r["conv_id"], r["reject_reason"]) for r in rej] == [(None, "null_conv_id")]
+    assert [r["conv_id"] for r in catalog.read("quarantine").collect()] == ["c-bad"]
+    m = next(x for x in res.metrics if x["stage"] == "write_quarantine")
+    assert (m["rows_in"], m["rows_out"], m["rejected"]) == (2, 1, 1)
+    assert res.quarantined == 1

@@ -47,7 +47,7 @@ def test_resume_skips_completed_and_is_idempotent(spark, sf_dir, tmp_path):
 
     # resume with the same run_id: completed stages skipped, rest executed
     res = run_pipeline(spark, sf_dir, wh, run_id="runA")
-    assert "quarantine" in res.stages_skipped
+    assert "write_quarantine" in res.stages_skipped
     assert "write_sink_search" in res.stages_skipped
 
     # no loss, no duplication after resume

@@ -244,7 +244,7 @@ def test_streaming_refuses_flat_batch_sink_dirs(spark, sf_dir, tmp_path):
         .filter(F.col("parse_ok"))
     ).limit(50)
     writer = ss.route_sink_writer(wh)
-    with pytest.raises(ValueError, match="flat"):
+    with pytest.raises(ValueError, match="non-epoch content"):
         writer(batch, 0)
 
 
@@ -296,6 +296,22 @@ def test_epoch_write_is_one_fan_out(spark, sf_dir, tmp_path, jobs_of):
     batch = _every_route_batch(spark, sf_dir, tmp_path)
     writer = ss.route_sink_writer(str(tmp_path / "wh"))
     assert jobs_of("stream-epoch", lambda: writer(batch, 0)) <= 3
+
+
+def test_empty_routes_cost_no_job(spark, sf_dir, tmp_path, jobs_of):
+    """A route with no rows in the micro-batch gets its empty epoch table
+    on the driver: a batch holding only sink_search rows runs no more
+    jobs than one with every route populated."""
+    batch = _every_route_batch(spark, sf_dir, tmp_path).filter(
+        F.col("route") == "sink_search"
+    )
+    wh = tmp_path / "wh"
+    writer = ss.route_sink_writer(str(wh))
+    assert jobs_of("stream-search-only", lambda: writer(batch, 0)) <= 3
+    for s in SINK_NAMES + ["quarantine"]:
+        t = spark.read.parquet(str(wh / s))
+        assert t.drop("epoch").dtypes == batch.dtypes, s
+        assert t.count() == (batch.count() if s == "sink_search" else 0), s
 
 
 def test_streaming_sink_schema_is_the_batch_sink_schema(spark, sf_dir, tmp_path):
