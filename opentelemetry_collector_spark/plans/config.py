@@ -587,30 +587,30 @@ def run(
     graph: BuiltGraph,
     spark: SparkSession,
     warehouse: str,
-    max_records_per_file: int = 1_000_000,
     run_id: str | None = None,
     source: Callable[[SparkSession], DataFrame] | None = None,
     fail_after_stage: str | None = None,
-    sink_chunks: int = 1,
 ) -> dict[str, int]:
     """Execute the graph: pipelines in topo order, connectors carrying
     lazy sub-plans between them. A router connector and the pipelines it
     feeds run as ONE fan-out (:func:`_fan_out`); every other table
-    exporter is one counted write. A receiver or forward connector read
-    by several pipelines is persisted once (graph.go:213-248 node dedup,
+    exporter is one write with partial success
+    (plans/errors.write_with_partial_success): a row whose
+    ``decode_error`` is set (a malformed wire file) goes to
+    ``rejected_<table>``. A receiver or forward connector read by
+    several pipelines is persisted once (graph.go:213-248 node dedup,
     fanoutconsumer/logs.go:21-77) and released after the run.
 
-    Returns per-exporter row counts (obsconsumer accounting). Every table
-    write is an idempotent overwrite (sinks/tables.py) of at most
-    ``max_records_per_file`` rows per file (the batch processor's
-    send_batch_max_size, processor/batchprocessor/config.go:26-29),
-    acked in the run's CheckpointStore: a re-run with the same ``run_id``
-    skips the acked stages (persistent_queue.go:321-428).
+    Returns per-exporter row counts (obsconsumer accounting), rejected
+    rows excluded. Every table write is an idempotent overwrite
+    (sinks/tables.py), its files sized by the session
+    (``spark.sql.files.maxRecordsPerFile``, session.py), acked in the
+    run's CheckpointStore: a re-run with the same ``run_id`` skips the
+    acked stages (persistent_queue.go:321-428).
 
     Test hooks: ``source`` replaces every receiver's scan, and
     ``fail_after_stage`` crashes the run right after that stage's ack
-    (receiver/receivertest/contract_checker.go:75-120). ``sink_chunks``
-    is the fan-out's ack granularity.
+    (receiver/receivertest/contract_checker.go:75-120).
     """
     cfg = graph.config
     catalog = TableCatalog(spark, warehouse)
@@ -653,7 +653,6 @@ def run(
                     acked = _fan_out(
                         catalog, acks, _input(cid),
                         {rv: _table_name(e, cfg.exporters) for rv, e in exporters.items()},
-                        max_records_per_file, sink_chunks,
                     )
                     stages |= {exporters[rv]: st for rv, st in acked.items()}
                 continue
@@ -675,9 +674,11 @@ def run(
                     stages[e] = stage = f"{pname}:{e}".replace("/", "_")
 
                     def _write() -> tuple[int, int, dict]:
-                        n = _write_counted(catalog, _table_name(e, cfg.exporters), df,
-                                           max_records_per_file)
-                        return n, n, {"exporter": e, "pipeline": pname}
+                        valid = ([("decode_error", F.col("decode_error").isNull())]
+                                 if "decode_error" in df.columns else [])
+                        n, r = err_ops.write_with_partial_success(
+                            catalog, _table_name(e, cfg.exporters), df, valid)
+                        return n + r, n, {"exporter": e, "pipeline": pname, "rejected": r}
 
                     acks.gate(stage, _write)
                 elif t == "debug":
@@ -730,7 +731,6 @@ def run_config_file(
 
 def _fan_out(
     catalog: TableCatalog, acks: _Acks, df: DataFrame, tables: dict[str, str],
-    max_records_per_file: int, sink_chunks: int,
 ) -> dict[str, str]:
     """Write every route of a router connector; ``tables`` maps each
     route value to its table. Returns each route's ack stage,
@@ -746,44 +746,19 @@ def _fan_out(
     tables of every route but ``quarantine``, then the ``lineage``
     table. Each route's partition dir is moved from a staging dir to its
     flat table and acked in route order, so a resume writes only the
-    un-acked tables; the staging dir is removed either way. A route with
-    no rows gets an empty table written on the driver, with no Spark job.
-
-    ``sink_chunks`` > 1 splits each table into that many conv_id-hash
-    chunks (plans/lineage.det_partition_id), written by the same write
-    and acked separately: a crash at chunk j of a table re-does only its
-    un-acked chunks (persistent_queue.go:321-428). Chunked tables land
-    as ``table/part=c/`` (partition-pruned on read).
+    un-acked tables (persistent_queue.go:321-428); the staging dir is
+    removed either way. A route with no rows gets an empty table written
+    on the driver, with no Spark job.
     """
     ckpt = acks.ckpt
     staging = f"_staging_{ckpt.run_id}"
     route = F.col("route")
 
-    def _chunks(s: str) -> list[int]:
-        """The route's un-acked chunks. Acks record their sink_chunks,
-        and a resume under a DIFFERENT value is refused outright: the
-        acked chunks' rows were hashed with the old modulus, so mixing
-        moduli silently duplicates and drops rows. Acks without the key
-        are kept as-is."""
-        stage = f"write_{tables[s]}"
-        priors = {
-            m["sink_chunks"] for m in ckpt.metrics()
-            if m["stage"].startswith(f"{stage}.chunk") and "sink_chunks" in m
-        }
-        if priors and priors != {sink_chunks}:
-            raise ValueError(
-                f"{stage}: resume with sink_chunks={sink_chunks} but "
-                f"run {ckpt.run_id!r} acked chunks under "
-                f"sink_chunks={sorted(priors)}; resume with the same "
-                "value or use a fresh run_id"
-            )
-        return [c for c in range(sink_chunks) if acks.pending(f"{stage}.chunk{c:03d}")]
-
     def _write_sinks(sinks: list[str], lineage: dict[str, list[dict]]) -> None:
-        """One write for every un-acked route (and chunk); accepted and
-        rejected counts ride one Observation placed above the validity
-        filter. ``rejected_<table>`` is written, by one more partitioned
-        write, only for routes whose rejected count is non-zero."""
+        """One write for every un-acked route; accepted and rejected
+        counts ride one Observation placed above the validity filter.
+        ``rejected_<table>`` is written, by one more partitioned write,
+        only for routes whose rejected count is non-zero."""
         t0 = time.monotonic()
         flagged = routed.filter(route.isin(sinks)).withColumn(
             "_reject_reason", err_ops.reject_reason()
@@ -796,31 +771,12 @@ def _fan_out(
                 F.count_if((route == s) & ~ok).alias(f"rejected:{s}"),
             )
         ]
-        by, todo = ["_sink"], ok
-        chunks: dict[str, list[int]] = {}
-        if sink_chunks > 1:
-            # the accepted rows of the un-acked chunks only; the counts
-            # and the rejected side still cover whole tables
-            chunks = {s: _chunks(s) for s in sinks}
-            flagged = flagged.withColumn(
-                "part", lineage_ops.det_partition_id(F.col("conv_id"), sink_chunks)
-            )
-            part = F.col("part")
-            by.append("part")
-            counts += [
-                F.count_if((route == s) & (part == c) & ok).alias(f"ok:{s}:{c}")
-                for s in sinks for c in chunks[s]
-            ]
-            pending = F.lit(False)
-            for s in sinks:
-                pending = pending | ((route == s) & part.isin(chunks[s]))
-            todo = ok & pending
         obs = Observation("sink_fanout")
         publish = fan_out_write(
             catalog, f"{staging}/sinks",
-            flagged.observe(obs, *counts).filter(todo)
+            flagged.observe(obs, *counts).filter(ok)
             .drop("_reject_reason").withColumn("_sink", route),
-            by, max_records_per_file,
+            ["_sink"],
         )
         got = obs.get
         rejected = [s for s in sinks if got[f"rejected:{s}"]]
@@ -835,29 +791,13 @@ def _fan_out(
             # the shared job's time counts toward every table's ack
             since = time.monotonic() - job_s
             t = tables[s]
-            if sink_chunks > 1:
-                if len(chunks[s]) == sink_chunks:
-                    # no chunk acked yet: clear the table root, or a
-                    # previous run's flat files / other part dirs would
-                    # read back as duplicate rows
-                    shutil.rmtree(catalog.path(t), ignore_errors=True)
-                for c in chunks[s]:
-                    chunk = f"{t}/part={c}"
-                    publish((s, c), chunk)
-                    n = got[f"ok:{s}:{c}"]
-                    acks.commit(f"write_{t}.chunk{c:03d}", n, n, {
-                        "chunk": c, "sink_chunks": sink_chunks,
-                        "files": lineage_ops.file_lineage(catalog.path(chunk)),
-                    }, since)
-            else:
-                publish((s,), t)
+            publish((s,), t)
             if s in rejected:
                 publish_rejected((s,), f"rejected_{t}")
             n, r = got[f"ok:{s}"], got[f"rejected:{s}"]
             acks.commit(f"write_{t}", n + r, n, {
                 "sink": t, "rejected": r,
                 "partitions": lineage.get(s, []),
-                # recursive: a chunked table's files read as part=c/<file>
                 "files": lineage_ops.file_lineage(catalog.path(t)),
             }, since)
 
@@ -869,7 +809,7 @@ def _fan_out(
         publish = fan_out_write(
             catalog, f"{staging}/aggs",
             agg.observe(obs, *[F.count_if(route == s).alias(s) for s in sinks]),
-            ["route"], max_records_per_file,
+            ["route"],
         )
         got = obs.get
         job_s = time.monotonic() - t0
@@ -909,16 +849,3 @@ def _fan_out(
         shutil.rmtree(catalog.path(staging), ignore_errors=True)
     return {rv: f"write_{t}" for rv, t in tables.items()}
 
-
-def _write_counted(
-    catalog: TableCatalog, table: str, df: DataFrame, max_records_per_file: int,
-) -> int:
-    """Write + count in ONE action via the Observation API — the
-    obsconsumer item counter riding the data path instead of a second
-    scan (service/internal/obsconsumer/logs.go:53-70)."""
-    obs = Observation(f"rows_{table}")
-    catalog.overwrite(
-        table, df.observe(obs, F.count(F.lit(1)).alias("n")),
-        max_records_per_file=max_records_per_file,
-    )
-    return obs.get["n"]

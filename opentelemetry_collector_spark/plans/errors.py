@@ -63,9 +63,12 @@ def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[
 
 def reject_reason(constraints: list[tuple[str, Column]] | None = None) -> Column:
     """The name of the first constraint a row fails, NULL for a valid
-    row. A NULL check result counts as a failure."""
+    row. A NULL check result counts as a failure. ``None`` checks the
+    default sink constraints; ``[]`` checks nothing."""
+    if constraints is None:
+        constraints = default_sink_constraints()
     reason = F.lit(None).cast("string")
-    for name, ok in reversed(constraints or default_sink_constraints()):
+    for name, ok in reversed(constraints):
         reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
     return reason
 
@@ -75,12 +78,12 @@ def write_with_partial_success(
     table: str,
     df: DataFrame,
     constraints: list[tuple[str, Column]] | None = None,
-    max_records_per_file: int = 0,
 ) -> tuple[int, int]:
     """Sink write with per-write rejected-row accounting (OTLP partial
     success: the push succeeds while reporting rejected_log_records,
     exporter/otlpexporter/otlp.go:143-149 + internal/queue_sender
-    partial-success logging).
+    partial-success logging). plans/config.run writes every plain
+    ``table`` exporter through it.
 
     Scale shape: the accepted/rejected counts ride the ONE sink write
     via an Observation placed above the validity filter (CollectMetrics
@@ -103,7 +106,6 @@ def write_with_partial_success(
     catalog.overwrite(
         table,
         observed.filter(F.col("_reject_reason").isNull()).drop("_reject_reason"),
-        max_records_per_file=max_records_per_file,
     )
     n_total, n_rejected = obs.get["n_total"], obs.get["n_rejected"]
     if n_rejected:

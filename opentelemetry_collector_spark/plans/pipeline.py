@@ -9,9 +9,9 @@ hands it to the one batch executor, plans/config.run. Its router runs as
 the fan-out (plans/config._fan_out): one cached parent, one lineage
 collect, ONE partitioned write for all sinks, the quarantine table
 included, and ONE partitioned aggregate write, each table acked on its
-own so resume stays per table (per chunk with ``sink_chunks``): 10
-Spark jobs at sf0.1. ``main.py`` and ``main.py --config
-configs/flagship.yaml`` write the same warehouse.
+own so a resume redoes only the un-acked tables: 10 Spark jobs at
+sf0.1. ``main.py`` and ``main.py --config configs/flagship.yaml``
+write the same warehouse.
 """
 
 from __future__ import annotations
@@ -48,26 +48,19 @@ def run_pipeline(
     run_id: str | None = None,
     source: Callable[[SparkSession], DataFrame] | None = None,
     fail_after_stage: str | None = None,
-    send_batch_max_size: int = 1_000_000,
-    sink_chunks: int = 1,
 ) -> RunResult:
     """Run ``configs/flagship.yaml`` over the transcripts of ``sf_dir``
     (or over ``source``'s rows) into ``warehouse``, checkpoint-gated per
     stage: re-running with the same ``run_id`` skips the acked stages.
-
-    ``send_batch_max_size`` is the batch processor's file-splitting knob
-    (processor/batchprocessor/config.go:26-29), the executor's
-    ``max_records_per_file``. ``source``, ``fail_after_stage`` and
-    ``sink_chunks`` pass through to plans/config.run.
+    ``source`` and ``fail_after_stage`` pass through to plans/config.run.
     """
     cfg = config.ServiceConfig.from_file(FLAGSHIP_CONFIG)
     cfg.receivers["transcripts"]["sf_dir"] = sf_dir
     ckpt = CheckpointStore(warehouse, run_id)
     skipped = [m["stage"] for m in ckpt.metrics()]
     config.run(
-        config.build(cfg), spark, warehouse,
-        max_records_per_file=send_batch_max_size, run_id=ckpt.run_id,
-        source=source, fail_after_stage=fail_after_stage, sink_chunks=sink_chunks,
+        config.build(cfg), spark, warehouse, run_id=ckpt.run_id,
+        source=source, fail_after_stage=fail_after_stage,
     )
     metrics = ckpt.metrics()
     written = {

@@ -4,7 +4,9 @@ The reference collector tunes throughput with batch size / queue depth /
 consumer-count knobs (processor/batchprocessor/factory.go:19-20,
 exporter/exporterhelper/internal/queue_sender.go:25-37). The Spark
 analogs are shuffle partitioning, AQE, and file sizing, set here once so
-every entry point (tests, bench, spark-submit main) shares them.
+every entry point (tests, bench, spark-submit main) shares them: no
+write takes a sizing parameter, every sink write reads the session's
+``spark.sql.files.maxRecordsPerFile``.
 """
 
 from __future__ import annotations
@@ -42,6 +44,11 @@ _DEFAULTS = {
     # Sink files: zstd parquet (reference supports zstd transport
     # compression, config/configcompression/compressiontype.go:23-29).
     "spark.sql.parquet.compression.codec": "zstd",
+    # Rows per sink file: the batch processor's send_batch_max_size
+    # (processor/batchprocessor/config.go:26-29) bounds a request's
+    # size; here it bounds every written file, so downstream readers
+    # get uniform splits.
+    "spark.sql.files.maxRecordsPerFile": "1000000",
     # Attribute-map upserts: last write wins (pcommon.Map.PutStr
     # overwrite semantics, pdata/pcommon/map.go:77-90).
     "spark.sql.mapKeyDedupPolicy": "LAST_WIN",

@@ -11,8 +11,9 @@ level — re-running a failed stage cannot double-append, which is the
 property the reference's persistent-queue ack protocol exists to provide
 (exporter/exporterhelper/internal/queue/persistent_queue.go:321-428).
 
-``maxRecordsPerFile`` plays the reference's send_batch_max_size role
-(processor/batchprocessor/config.go:26-29): bounds output file size so
+Rows per file are bounded by the session's
+``spark.sql.files.maxRecordsPerFile`` (session.py), the reference's
+send_batch_max_size (processor/batchprocessor/config.go:26-29), so
 downstream readers get uniform splits.
 """
 
@@ -38,13 +39,11 @@ class TableCatalog:
     def path(self, table: str) -> str:
         return os.path.join(self.base_dir, table)
 
-    def overwrite(self, table: str, df: DataFrame, max_records_per_file: int = 0,
+    def overwrite(self, table: str, df: DataFrame,
                   partition_by: list[str] | None = None) -> None:
         """Idempotent full-replace write (deterministic target → re-runs
         converge instead of duplicating)."""
         w = df.write.mode("overwrite")
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", str(max_records_per_file))
         if partition_by:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
@@ -56,7 +55,6 @@ class TableCatalog:
         buckets: int,
         bucket_cols: list[str],
         sort_cols: list[str] | None = None,
-        max_records_per_file: int = 0,
     ) -> None:
         """Hash-bucketed table write (``bucketBy`` + ``saveAsTable``):
         two tables bucketed identically on the join key join with NO
@@ -73,8 +71,6 @@ class TableCatalog:
             .format("parquet")
             .option("path", self.path(table))
         )
-        if max_records_per_file:
-            w = w.option("maxRecordsPerFile", str(max_records_per_file))
         w = w.bucketBy(buckets, *bucket_cols)
         if sort_cols:
             w = w.sortBy(*sort_cols)
@@ -110,7 +106,6 @@ class TableCatalog:
 
 def fan_out_write(
     catalog: TableCatalog, staging: str, df: DataFrame, by: list[str],
-    max_records_per_file: int = 0,
 ) -> Callable[[tuple, str], None]:
     """Write ``df`` once, partitioned by ``by``, into ``staging``; return
     ``publish(values, table)``, which moves the partition dir for
@@ -121,8 +116,7 @@ def fan_out_write(
     ``staging``. The batch router (plans/config._fan_out) and each
     streaming micro-batch (streaming/stream.route_sink_writer) write all
     their routes with it."""
-    catalog.overwrite(staging, df, max_records_per_file=max_records_per_file,
-                      partition_by=by)
+    catalog.overwrite(staging, df, partition_by=by)
     schema = to_arrow_schema(df.drop(*by).schema)
 
     def publish(values: tuple, table: str) -> None:

@@ -168,8 +168,8 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
             ]
             if foreign:
                 # flat batch files hide behind partition discovery;
-                # other partition schemes (the batch path's part=N
-                # chunk layout) collide on the partition column name
+                # any other partition scheme collides on the partition
+                # column name
                 raise ValueError(
                     f"streaming sink {root!r} already contains non-epoch "
                     f"content ({foreign[:3]}...); mixing layouts in one "

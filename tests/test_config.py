@@ -478,6 +478,41 @@ def test_wire_file_export_then_ingest_from_config(spark, sf_dir, tmp_path):
     assert {"res_conv", "turn_idx", "body_text"} <= set(out.columns)
 
 
+def test_malformed_pb_file_lands_in_rejected_table(spark, tmp_path):
+    """A truncated .pb file's decode_error row does not reach a table
+    exporter as a record: it lands in rejected_<table>, the ack counts
+    it as rejected and the returned count excludes it."""
+    from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
+    from opentelemetry_collector_spark.sources import otlp_proto as op
+
+    def envelope(conv, n):
+        return op.encode_resource_logs(conv, [("bash", [
+            op.encode_log_record(i + 1, 9, "INFO", f"t{i}", i, "") for i in range(n)
+        ])])
+
+    pb_dir = tmp_path / "pb"
+    pb_dir.mkdir()
+    (pb_dir / "good.pb").write_bytes(envelope("c-good", 3))
+    (pb_dir / "bad.pb").write_bytes(envelope("c-bad", 1)[:-3])
+    raw = _base({"logs": {"receivers": ["otlp_proto/in"], "processors": [],
+                          "exporters": ["table/a"]}})
+    raw["receivers"]["otlp_proto/in"] = {"path": str(pb_dir)}
+    wh = str(tmp_path / "wh")
+    counts = run(build(ServiceConfig.from_dict(raw)), spark, wh, run_id="pb")
+
+    cat = TableCatalog(spark, wh)
+    out = cat.read("out_a")
+    assert sorted((r["res_conv"], r["turn_idx"]) for r in out.collect()) == [
+        ("c-good", i) for i in range(3)
+    ]
+    (rej,) = cat.read("rejected_out_a").collect()
+    assert rej["decode_error"] == "truncated_length"
+    assert counts["table/a"] == 3
+    (ack,) = [m for m in CheckpointStore(wh, "pb").metrics()
+              if m["stage"] == "logs:table_a"]
+    assert (ack["rows_in"], ack["rows_out"], ack["rejected"]) == (4, 3, 1)
+
+
 def _flagship_raw() -> dict:
     import yaml
 

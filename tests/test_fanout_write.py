@@ -1,7 +1,7 @@
 """The flagship's single fan-out write: a fixed Spark job count whatever
-the number of routes and chunks, resume after a crash between sinks,
-empty tables for routes with no rows and partial success on chunked
-sinks (the fan-out consumer's one pass over a batch,
+the number of routes, table-granular resume after a crash between
+sinks, empty tables for routes with no rows and files sized by the
+data (the fan-out consumer's one pass over a batch,
 internal/fanoutconsumer/logs.go:21-77)."""
 
 from __future__ import annotations
@@ -17,11 +17,10 @@ from opentelemetry_collector_spark.sinks.tables import TableCatalog
 from opentelemetry_collector_spark.sources import derive_transcripts
 from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
-# Spark jobs of one run_pipeline at test scale, 10 measured both with
-# and without sink_chunks: the lineage collect, one write for every
-# route (quarantine included), one aggregate write and the shuffle
-# stages under them. One write per sink (and per chunk) would take 24
-# (34 with 3 chunks).
+# Spark jobs of one run_pipeline at test scale, 10 measured: the lineage
+# collect, one write for every route (quarantine included), one
+# aggregate write and the shuffle stages under them. One write per sink
+# would take 24.
 MAX_JOBS = 10
 
 TABLES = sorted(
@@ -38,13 +37,9 @@ def _union(catalog):
     return out
 
 
-@pytest.mark.parametrize("chunks", [1, 3])
-def test_job_count_is_fixed(spark, sf_dir, tmp_path, jobs_of, chunks):
+def test_job_count_is_fixed(spark, sf_dir, tmp_path, jobs_of):
     wh = str(tmp_path / "wh")
-    jobs = jobs_of(
-        f"fanout-{chunks}",
-        lambda: run_pipeline(spark, sf_dir, wh, sink_chunks=chunks),
-    )
+    jobs = jobs_of("fanout", lambda: run_pipeline(spark, sf_dir, wh))
     assert jobs <= MAX_JOBS, jobs
     # the staging dir is gone: the warehouse holds exactly the tables
     assert sorted(os.listdir(wh)) == TABLES
@@ -107,33 +102,6 @@ def test_routes_with_no_rows_still_get_empty_tables(spark, sf_dir, tmp_path):
         assert acks[f"write_{s}"]["partitions"] == []
         assert acks[f"agg_{s}"]["rows_out"] == 0
     con.close()
-
-
-def test_chunked_write_diverts_invalid_rows(spark, sf_dir, tmp_path):
-    """Chunked sinks share the one write, so partial success covers them
-    too: a row with a NULL conv_id (no chunk to hash into) lands in
-    rejected_<sink> and is counted in the sink's ack."""
-    from datetime import datetime
-
-    poison = (None, 0, "user", "[seq=1] call tool=search status=200 latency_ms=5 msg=x",
-              "search", datetime(2025, 1, 1))
-
-    def src(s):
-        return derive_transcripts(s, sf_dir).unionByName(s.createDataFrame(
-            [poison], "conv_id string, turn_idx int, role string, text string, "
-                      "tool string, ts timestamp"))
-
-    wh = str(tmp_path / "wh")
-    res = run_pipeline(spark, sf_dir, wh, source=src, sink_chunks=3)
-    catalog = TableCatalog(spark, wh)
-    rej = catalog.read("rejected_sink_search")
-    assert [r["reject_reason"] for r in rej.collect()] == ["null_conv_id"]
-    assert "part" not in rej.columns
-    ack = next(m for m in res.metrics if m["stage"] == "write_sink_search")
-    assert ack["rejected"] == 1 and ack["rows_in"] == ack["rows_out"] + 1
-    chunk_rows = sum(m["rows_out"] for m in res.metrics
-                     if m["stage"].startswith("write_sink_search.chunk"))
-    assert chunk_rows == ack["rows_out"] == catalog.read("sink_search").count()
 
 
 def test_sink_files_follow_the_data_not_shuffle_partitions(spark, sf_dir, tmp_path):

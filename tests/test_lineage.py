@@ -1,12 +1,11 @@
-"""Per-partition lineage + bytes accounting and partition-granular
-resume (SURVEY §2.4 A6, the north rule's checkpoint-table contract;
-bytes axis mirrors sizer/logs_sizer.go:29-49, resume granularity
-mirrors persistent_queue.go:321-428 per-item acks).
+"""Per-partition lineage + bytes accounting and file sizing (SURVEY
+§2.4 A6, the north rule's checkpoint-table contract; bytes axis mirrors
+sizer/logs_sizer.go:29-49). Table-granular resume is pinned in
+test_fanout_write.py and test_pipeline_e2e.py.
 """
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.plans import lineage as lineage_ops
@@ -70,86 +69,23 @@ def test_logical_lineage_matches_file_truth_when_partition_aligned(spark, tmp_pa
     assert logical == physical
 
 
-def test_chunked_write_partition_granular_resume(spark, sf_dir, tmp_path):
-    wh = str(tmp_path / "wh3")
-    with pytest.raises(RuntimeError, match="chunk"):
-        run_pipeline(
-            spark, sf_dir, wh, run_id="runC", sink_chunks=3,
-            fail_after_stage="write_sink_search.chunk001",
-        )
-
-    res = run_pipeline(spark, sf_dir, wh, run_id="runC", sink_chunks=3)
-    # partition-granular skip: the two acked chunks of the interrupted
-    # stage are NOT rewritten; only chunk002 (and later stages) run
-    assert "write_sink_search.chunk000" in res.stages_skipped
-    assert "write_sink_search.chunk001" in res.stages_skipped
-    assert "write_sink_search.chunk002" not in res.stages_skipped
-
-    # no loss, no duplication across the chunked layout
-    catalog = TableCatalog(spark, wh)
-    n_input = derive_transcripts(spark, sf_dir).count()
-    union = None
-    for s in SINK_NAMES:
-        t = catalog.read(s).drop("part")
-        union = t if union is None else union.unionByName(t)
-    assert union.count() == n_input
-    assert union.select("conv_id", "turn_idx").distinct().count() == n_input
-
-
-def test_chunked_write_clears_stale_parts(spark, sf_dir, tmp_path):
-    """Re-running the same warehouse with fewer sink_chunks — or after a
-    non-chunked run that wrote flat files — must not leave stale part
-    dirs that read back as duplicate rows."""
-    import os
-
-    wh = str(tmp_path / "wh5")
-    catalog = TableCatalog(spark, wh)
-    n_input = derive_transcripts(spark, sf_dir).count()
-
-    run_pipeline(spark, sf_dir, wh, run_id="runA")  # flat files
-    run_pipeline(spark, sf_dir, wh, run_id="runB", sink_chunks=3)
-    run_pipeline(spark, sf_dir, wh, run_id="runD", sink_chunks=2)
-
-    for s in SINK_NAMES:
-        parts = sorted(
-            d for d in os.listdir(catalog.path(s)) if d.startswith("part=")
-        )
-        assert parts == ["part=0", "part=1"], s
-        assert not any(
-            f.endswith(".parquet") for f in os.listdir(catalog.path(s))
-        ), f"{s}: stale flat files at table root"
-    union = None
-    for s in SINK_NAMES:
-        t = catalog.read(s).drop("part")
-        union = t if union is None else union.unionByName(t)
-    assert union.count() == n_input
-
-
 def test_send_batch_max_size_bounds_files(spark, sf_dir, tmp_path):
-    wh = str(tmp_path / "wh4")
-    run_pipeline(spark, sf_dir, wh, send_batch_max_size=100)
+    """File size is one session setting (send_batch_max_size's analog),
+    and it reaches every table of the fan-out: sinks, aggregates and
+    quarantine."""
+    conf = spark.conf
+    before = conf.get("spark.sql.files.maxRecordsPerFile")
+    conf.set("spark.sql.files.maxRecordsPerFile", "100")
+    try:
+        wh = str(tmp_path / "wh4")
+        run_pipeline(spark, sf_dir, wh)
+    finally:
+        conf.set("spark.sql.files.maxRecordsPerFile", before)
     catalog = TableCatalog(spark, wh)
-    for s in SINK_NAMES:
-        stats = lineage_ops.file_lineage(catalog.path(s))
-        assert stats, s
-        assert max(fr["rows"] for fr in stats) <= 100, s
-
-
-def test_chunked_resume_with_different_sink_chunks_refused(spark, sf_dir, tmp_path):
-    """Resuming a run whose chunks were acked under a different
-    sink_chunks must be refused: the acked data was hashed with the old
-    modulus, so mixing moduli silently duplicates and drops rows."""
-    wh = str(tmp_path / "wh6")
-    with pytest.raises(RuntimeError, match="chunk"):
-        run_pipeline(
-            spark, sf_dir, wh, run_id="runE", sink_chunks=4,
-            fail_after_stage="write_sink_search.chunk001",
-        )
-    with pytest.raises(ValueError, match="acked chunks under"):
-        run_pipeline(spark, sf_dir, wh, run_id="runE", sink_chunks=2)
-    # same value resumes fine
-    res = run_pipeline(spark, sf_dir, wh, run_id="runE", sink_chunks=4)
-    assert "write_sink_search.chunk001" in res.stages_skipped
+    for t in SINK_NAMES + [f"agg_{s}" for s in SINK_NAMES] + ["quarantine"]:
+        stats = lineage_ops.file_lineage(catalog.path(t))
+        assert stats, t
+        assert max(fr["rows"] for fr in stats) <= 100, t
 
 
 def test_batch_and_stream_lineage_share_one_table(spark, sf_dir, tmp_path):

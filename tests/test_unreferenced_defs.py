@@ -1,10 +1,12 @@
-"""Every top-level function and class of the package is used somewhere.
+"""Every top-level function, class and method of the package is used
+somewhere.
 
 A function nothing calls is dead code that still has to be read and kept
 working. Stdlib only: each module under ``opentelemetry_collector_spark/``
-is parsed with ``ast``, and a top-level ``def`` or ``class`` whose name
-occurs, as a whole word, nowhere but its own definition in the package,
-``__spark_entry__.py``, ``main.py``, ``perfbench/`` or ``tests/`` fails.
+is parsed with ``ast``, and a top-level ``def`` or ``class``, or a
+method of a top-level class, whose name occurs, as a whole word, nowhere
+but its own definition in the package, ``__spark_entry__.py``,
+``main.py``, ``perfbench/`` or ``tests/`` fails.
 A name counts wherever it occurs, in strings too (perfbench patches
 functions by name). A definition whose line carries ``# noqa`` is
 exempt.
@@ -39,13 +41,25 @@ def unreferenced_defs(sources: dict[Path, str]) -> list[str]:
         if not path.is_relative_to(PACKAGE):
             continue
         lines = text.splitlines()
-        for node in ast.parse(text).body:
-            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
-                continue
+        for node, qualname in _defs(ast.parse(text)):
             if "# noqa" in lines[node.lineno - 1] or words[node.name] > 1:
                 continue
-            hits.append(f"{path.relative_to(ROOT)}:{node.lineno}: {node.name}")
+            hits.append(f"{path.relative_to(ROOT)}:{node.lineno}: {qualname}")
     return hits
+
+
+def _defs(tree: ast.Module):
+    """Top-level defs and classes, and the methods of each class (as
+    ``Class.method``; dunder methods are called by Python itself)."""
+    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    for node in tree.body:
+        if not isinstance(node, kinds):
+            continue
+        yield node, node.name
+        if isinstance(node, ast.ClassDef):
+            for m in node.body:
+                if isinstance(m, kinds[:2]) and not m.name.startswith("__"):
+                    yield m, f"{node.name}.{m.name}"
 
 
 def test_package_defs_are_referenced():
@@ -67,12 +81,15 @@ TEST_ONLY = {
     "operators/attributes.py: drop_where",
     "operators/similarity.py: load_ivf_index",
     "operators/similarity.py: save_ivf_index",
+    "plans/config.py: ServiceConfig.from_files",
     "plans/errors.py: with_retry",
+    "plans/featuregate.py: Registry.flag_string",
     "plans/partitioning.py: assert_broadcast_join",
     "plans/partitioning.py: assert_filter_pushed",
     "plans/partitioning.py: assert_no_rowwise_python",
     "plans/partitioning.py: salted_group_count",
     "sources/otlp_proto.py: decode_spans_proto",
+    "sinks/tables.py: TableCatalog.overwrite_bucketed",
     "sources/otlp_proto.py: encode_spans_proto",
     "streaming/stream.py: conversation_state_tracker",
 }
