@@ -20,8 +20,17 @@ def enrich_stage(df: DataFrame, tool_lookup: DataFrame, role_lookup: DataFrame) 
     """Left-join both lookups (broadcast), add ``enrich_miss`` flag.
 
     Left join: a missing key yields NULL enrichment columns and
-    enrich_miss=true; rows are never dropped (the processor contract —
-    enrichment must not lose data).
+    enrich_miss=true; rows are never dropped or duplicated (the
+    processor contract — enrichment must not lose or invent data). Each
+    lookup is deduplicated on its key first, so a key listed twice
+    attaches its first row instead of fanning the turn out. The
+    ``coalesce(1)`` keeps that dedupe a single task with no shuffle.
+
+    The dedupe Aggregate also tells Catalyst the lookup is unique on its
+    key, so a left join whose lookup columns no consumer reads is
+    removed from the optimized plan (the accounting chain keeps no
+    join); a plan that writes the lookup columns keeps its broadcast
+    hash join.
 
     The broadcast hint is governed by the engine.broadcastEnrich
     feature gate (beta, default on). Disabling it drops the explicit
@@ -32,6 +41,8 @@ def enrich_stage(df: DataFrame, tool_lookup: DataFrame, role_lookup: DataFrame) 
         global_registry,
     )
 
+    tool_lookup = tool_lookup.coalesce(1).dropDuplicates(["tool"])
+    role_lookup = role_lookup.coalesce(1).dropDuplicates(["role"])
     if global_registry().is_enabled("engine.broadcastEnrich"):
         tool_lookup = F.broadcast(tool_lookup)
         role_lookup = F.broadcast(role_lookup)

@@ -147,11 +147,11 @@ SEVERITY_CASE_SQL = (
 PARSE_SQL = f"""
 SELECT
   conv_id, turn_idx, role, text, tool, ts,
-  CAST(nullif(regexp_extract(text, '{RE_SEQ}', 1), '') AS BIGINT)      AS seq,
+  TRY_CAST(regexp_extract(text, '{RE_SEQ}', 1) AS BIGINT)              AS seq,
   regexp_extract(text, '{RE_KIND}', 1)                                 AS event_kind,
-  CAST(nullif(regexp_extract(text, '{RE_STATUS}', 1), '') AS INT)      AS status_code,
+  TRY_CAST(regexp_extract(text, '{RE_STATUS}', 1) AS INT)              AS status_code,
   CAST(nullif(regexp_extract(text, '{RE_LATENCY}', 1), '') AS DOUBLE)  AS latency_ms,
-  CAST(nullif(regexp_extract(text, '{RE_BYTES}', 1), '') AS BIGINT)    AS bytes,
+  TRY_CAST(nullif(regexp_extract(text, '{RE_BYTES}', 1), '') AS BIGINT) AS bytes,
   nullif(regexp_extract(text, '{RE_MSG}', 1), '')                      AS msg,
   nullif(regexp_extract(text, '{RE_TOOL}', 1), '')                     AS tool_parsed
 FROM transcripts

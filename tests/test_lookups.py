@@ -69,3 +69,26 @@ def test_flagship_enrich_scans_no_python_rows(spark, sf_dir):
     assert "isFinalPlan=true" in final
     assert "ExistingRDD" not in plan, plan
     assert final.count("LocalTableScan") == 2, plan
+
+
+@pytest.mark.parametrize("rows", [TOOL_LOOKUP_ROWS, ROLE_LOOKUP_ROWS], ids=["tool", "role"])
+def test_shipped_lookup_keys_are_unique(rows):
+    """The enrich dedupe is the identity on the shipped lookups, so the
+    oracle's plain VALUES join attaches the same rows."""
+    keys = [r[0] for r in rows]
+    assert len(keys) == len(set(keys))
+
+
+def test_duplicate_lookup_key_never_duplicates_a_turn(spark):
+    """A tool lookup that lists ``search`` twice still enriches each
+    turn exactly once."""
+    turns = spark.createDataFrame(
+        [("c1", 0, "user", "search"), ("c1", 1, "tool", "python")],
+        "conv_id string, turn_idx int, role string, tool string",
+    )
+    tools = tool_lookup_df(spark)
+    doubled = tools.unionByName(tools.filter("tool = 'search'"))
+    out = enrich_ops.enrich_stage(turns, doubled, role_lookup_df(spark))
+    got = sorted((r["turn_idx"], r["tool_category"]) for r in out.collect())
+    want = {t: c for t, c, _, _ in TOOL_LOOKUP_ROWS}
+    assert got == [(0, want["search"]), (1, want["python"])]

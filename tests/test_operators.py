@@ -24,7 +24,11 @@ from opentelemetry_collector_spark.sources import derive_transcripts, synth_tran
 
 @pytest.fixture(scope="module")
 def parsed(spark, sf_dir):
-    return parse_ops.parse_stage(derive_transcripts(spark, sf_dir)).cache()
+    # unpersisted after the module: a leaked cache of the parse plan
+    # would stand in for that plan in every later test's query
+    df = parse_ops.parse_stage(derive_transcripts(spark, sf_dir)).cache()
+    yield df
+    df.unpersist()
 
 
 def test_attr_ops_rfc_semantics(spark, parsed):

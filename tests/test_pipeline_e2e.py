@@ -4,9 +4,14 @@ receiver/receivertest/contract_checker.go:75-120)."""
 
 from __future__ import annotations
 
+from datetime import datetime
+
+import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from opentelemetry_collector_spark import sqltext
+from opentelemetry_collector_spark.operators import parse as parse_ops
 from opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from opentelemetry_collector_spark.sinks.tables import TableCatalog
 from opentelemetry_collector_spark.sources import derive_transcripts
@@ -81,3 +86,55 @@ def test_turn_order_stability(spark, sf_dir):
         .collect()
     )
     assert a == b
+
+
+def test_out_of_range_numbers_reach_quarantine(spark, sf_dir, tmp_path):
+    """A digit run too large for its column never fails the task: an
+    overflowing seq or status sends the turn to quarantine, and an
+    overflowing bytes leaves the turn in its sink with NULL bytes. The
+    DuckDB twin PARSED_SQL agrees row for row."""
+    big = "12345678901234567890"
+    rows = [
+        ("c-seq", 0, "user", f"[seq={big}] call tool=search status=200 latency_ms=5 msg=a", "search"),
+        ("c-status", 0, "user", "[seq=1] call tool=search status=20000000000 latency_ms=5 msg=b", "search"),
+        ("c-bytes", 0, "tool", f"[seq=2] result status=200 latency_ms=5 bytes={big} msg=c", "search"),
+    ]
+    ts = datetime(2025, 1, 1)
+    schema = "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    src = spark.createDataFrame([r + (ts,) for r in rows], schema)
+    cols = ["conv_id", "seq", "status_code", "bytes", "parse_ok"]
+    want = [
+        ("c-bytes", 2, 200, None, True),
+        ("c-seq", None, 200, None, False),
+        ("c-status", 1, None, None, False),
+    ]
+
+    parsed = parse_ops.parse_stage(src)
+    assert sorted(tuple(r) for r in parsed.select(cols).collect()) == want
+    good, bad = parse_ops.quarantine_split(parsed)
+    assert [r["conv_id"] for r in good.collect()] == ["c-bytes"]
+    assert sorted(r["conv_id"] for r in bad.collect()) == ["c-seq", "c-status"]
+
+    con = duckdb.connect()
+    con.execute(
+        "CREATE TABLE transcripts (conv_id VARCHAR, turn_idx INT, role VARCHAR, "
+        "text VARCHAR, tool VARCHAR, ts TIMESTAMP)"
+    )
+    con.executemany("INSERT INTO transcripts VALUES (?, ?, ?, ?, ?, ?)",
+                    [r + (ts,) for r in rows])
+    got = con.sql(
+        f"SELECT {', '.join(cols)} FROM ({sqltext.PARSED_SQL}) ORDER BY conv_id"
+    ).fetchall()
+    assert got == want
+
+    wh = str(tmp_path / "who")
+    res = run_pipeline(spark, sf_dir, wh, source=lambda s: src)
+    assert res.quarantined == 2
+    assert res.sink_counts["sink_search"] == 1
+    catalog = TableCatalog(spark, wh)
+    assert [(r["conv_id"], r["bytes"]) for r in catalog.read("sink_search").collect()] == [
+        ("c-bytes", None)
+    ]
+    assert sorted(r["conv_id"] for r in catalog.read("quarantine").collect()) == [
+        "c-seq", "c-status"
+    ]

@@ -297,3 +297,38 @@ def test_span_links_window_partitioned_by_conv(spark, sf_dir):
     assert specs and all(
         "conv_id" in s or "user_id" in s for s in specs
     ), plan[:800]
+
+
+def test_accounting_plan_reads_only_what_it_aggregates(spark, sf_dir, jobs_of):
+    """parse → good side of quarantine_split → enrich → route →
+    hourly_sink_accounting: the aggregate reads no lookup column, so
+    Catalyst removes both enrich joins (each lookup is unique on its
+    key), and the parse_ok filter scans the seq and status regexes once
+    each per row."""
+    from opentelemetry_collector_spark import sqltext
+    from opentelemetry_collector_spark.operators import aggregate as agg_ops
+    from opentelemetry_collector_spark.operators import enrich as enrich_ops
+    from opentelemetry_collector_spark.operators import parse as parse_ops
+    from opentelemetry_collector_spark.operators import route as route_ops
+    from opentelemetry_collector_spark.sources import (
+        derive_transcripts,
+        role_lookup_df,
+        tool_lookup_df,
+    )
+
+    good, _ = parse_ops.quarantine_split(
+        parse_ops.parse_stage(derive_transcripts(spark, sf_dir))
+    )
+    agg = agg_ops.hourly_sink_accounting(
+        route_ops.route_stage(
+            enrich_ops.enrich_stage(good, tool_lookup_df(spark), role_lookup_df(spark))
+        )
+    )
+    opt = agg._jdf.queryExecution().optimizedPlan().toString()
+    assert "Join" not in opt, opt
+    assert opt.count(sqltext.RE_SEQ) == 1, opt
+    assert opt.count(sqltext.RE_STATUS) == 1, opt
+    n = jobs_of(
+        "accounting-plan", lambda: agg.write.format("noop").mode("overwrite").save()
+    )
+    assert n == 3
