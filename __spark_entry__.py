@@ -1691,31 +1691,22 @@ def oracle_sql() -> dict[str, str]:
             FROM parsed
         """,
         "parse_errors": f"""
-            {t},
-            corrupted AS (
+            WITH clean AS ({sqltext.transcripts_sql("events")}),
+            transcripts AS (
               SELECT conv_id, turn_idx, role,
                      CASE WHEN turn_idx % 13 = 0
                           THEN regexp_replace(text, ' status=', ' st=')
                           ELSE text END AS text,
                      tool, ts
-              FROM transcripts
-            ),
-            cp AS (
-              SELECT conv_id, turn_idx,
-                CAST(nullif(regexp_extract(text, '[RESEQ]', 1), '') AS BIGINT) AS seq,
-                CAST(nullif(regexp_extract(text, '[RESTATUS]', 1), '') AS INT) AS status_code
-              FROM corrupted
+              FROM clean
             )
-            SELECT conv_id, turn_idx,
-                   CASE WHEN status_code >= 500 THEN 17
-                        WHEN status_code >= 400 THEN 13
-                        WHEN status_code >= 200 THEN 9 ELSE 0 END AS severity_num,
+            SELECT conv_id, turn_idx, severity_num,
                    CASE WHEN seq IS NULL AND status_code IS NULL THEN 'no_seq_no_status'
                         WHEN seq IS NULL THEN 'no_seq'
                         ELSE 'no_status' END AS reason
-            FROM cp
-            WHERE seq IS NULL OR status_code IS NULL
-        """.replace('[RESEQ]', sqltext.RE_SEQ).replace('[RESTATUS]', sqltext.RE_STATUS),
+            FROM ({sqltext.PARSED_SQL})
+            WHERE NOT parse_ok
+        """,
         "otlp_json": f"""
             {p},
             spiced AS (

@@ -53,10 +53,11 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark(app_name="otelcol-spark", master=args.master)
     try:
         if args.config:
-            from opentelemetry_collector_spark.plans.config import run_config_file
+            from opentelemetry_collector_spark.plans import config
 
-            counts = run_config_file(
-                args.config, spark, args.warehouse, run_id=args.run_id
+            counts = config.run(
+                config.ServiceConfig.from_file(args.config), spark,
+                args.warehouse, run_id=args.run_id,
             )
             print(json.dumps({
                 "mode": "config",

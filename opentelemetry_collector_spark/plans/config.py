@@ -61,7 +61,7 @@ from opentelemetry_collector_spark.operators.debugfmt import sample_per_second
 from opentelemetry_collector_spark.operators.route import QUARANTINE
 from opentelemetry_collector_spark.plans import errors as err_ops
 from opentelemetry_collector_spark.plans import lineage as lineage_ops
-from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore, StageMetric
+from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
 from opentelemetry_collector_spark.sinks.tables import TableCatalog, debug_format, fan_out_write
 
 
@@ -544,54 +544,36 @@ def _make_processor(cid: str, opts: dict, spark: SparkSession) -> Callable[[Data
 
 
 @dataclass
-class BuiltGraph:
-    """Resolved service graph, ready to run."""
-
-    config: ServiceConfig
-    order: list[str]
-
-
-def build(config: ServiceConfig) -> BuiltGraph:
-    """Validate + topo-sort (already done in from_dict; idempotent)."""
-    return BuiltGraph(config=config, order=config.topo_order())
-
-
-@dataclass
 class _Acks:
-    """A run's stage acks. ``fail_after`` raises right after that
-    stage's ack: the kill/resume test hook."""
+    """A run's CheckpointStore and the kill/resume test hook:
+    ``fail_after`` raises right after that stage's ack."""
 
     ckpt: CheckpointStore
     fail_after: str | None = None
 
-    def pending(self, stage: str) -> bool:
-        return not self.ckpt.is_done(stage)
-
     def commit(self, stage: str, rows_in: int, rows_out: int, extra: dict,
                since: float) -> None:
-        self.ckpt.commit(stage, StageMetric(
-            run_id=self.ckpt.run_id, stage=stage, rows_in=rows_in, rows_out=rows_out,
-            wall_ms=int((time.monotonic() - since) * 1000), extra=extra,
-        ))
+        self.ckpt.commit(stage, rows_in, rows_out,
+                         int((time.monotonic() - since) * 1000), extra)
         if self.fail_after == stage:
             raise RuntimeError(f"injected failure after stage {stage}")
 
     def gate(self, stage: str, fn: Callable[[], tuple[int, int, dict]]) -> None:
         """Run a terminal (sink-writing) stage unless already acked."""
-        if self.pending(stage):
+        if not self.ckpt.is_done(stage):
             t0 = time.monotonic()
             self.commit(stage, *fn(), t0)
 
 
 def run(
-    graph: BuiltGraph,
+    cfg: ServiceConfig,
     spark: SparkSession,
     warehouse: str,
     run_id: str | None = None,
     source: Callable[[SparkSession], DataFrame] | None = None,
     fail_after_stage: str | None = None,
 ) -> dict[str, int]:
-    """Execute the graph: pipelines in topo order, connectors carrying
+    """Execute ``cfg``'s graph: pipelines in topo order, connectors carrying
     lazy sub-plans between them. A router connector and the pipelines it
     feeds run as ONE fan-out (:func:`_fan_out`); every other table
     exporter is one write with partial success
@@ -612,7 +594,6 @@ def run(
     ``fail_after_stage`` crashes the run right after that stage's ack
     (receiver/receivertest/contract_checker.go:75-120).
     """
-    cfg = graph.config
     catalog = TableCatalog(spark, warehouse)
     acks = _Acks(CheckpointStore(warehouse, run_id), fail_after_stage)
     conn_inputs: dict[str, list[DataFrame]] = {c: [] for c in cfg.connectors}
@@ -642,7 +623,7 @@ def run(
         return rcv_cache[rid]
 
     try:
-        for pname in graph.order:
+        for pname in cfg.topo_order():
             p = cfg.pipelines[pname]
             cid = p.receivers[0]
             if cid in cfg.connectors and _ctype(cid) == "router":
@@ -716,12 +697,6 @@ def run(
             d.unpersist()
     acked_rows = {m["stage"]: m["rows_out"] for m in acks.ckpt.metrics()}
     return counts | {e: acked_rows[st] for e, st in stages.items()}
-
-
-def run_config_file(
-    path: str, spark: SparkSession, warehouse: str, **kw
-) -> dict[str, int]:
-    return run(build(ServiceConfig.from_file(path)), spark, warehouse, **kw)
 
 
 # ---------------------------------------------------------------------------
@@ -823,14 +798,14 @@ def _fan_out(
 
     def _lineage_table() -> tuple[int, int, dict]:
         """Flatten the run's acked lineage into queryable tables."""
-        rows, file_rows = ckpt.write_lineage_table(catalog.spark, catalog)
+        rows, file_rows = ckpt.write_lineage_table()
         return rows, rows, {"file_rows": file_rows}
 
     routed = df.persist()
     try:
-        write_sinks = [s for s in tables if acks.pending(f"write_{tables[s]}")]
+        write_sinks = [s for s in tables if not ckpt.is_done(f"write_{tables[s]}")]
         agg_sinks = [s for s in tables
-                     if s != QUARANTINE and acks.pending(f"agg_{tables[s]}")]
+                     if s != QUARANTINE and not ckpt.is_done(f"agg_{tables[s]}")]
 
         if write_sinks:
             # Per-partition logical lineage for every route in ONE

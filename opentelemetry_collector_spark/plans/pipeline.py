@@ -59,7 +59,7 @@ def run_pipeline(
     ckpt = CheckpointStore(warehouse, run_id)
     skipped = [m["stage"] for m in ckpt.metrics()]
     config.run(
-        config.build(cfg), spark, warehouse, run_id=ckpt.run_id,
+        cfg, spark, warehouse, run_id=ckpt.run_id,
         source=source, fail_after_stage=fail_after_stage,
     )
     metrics = ckpt.metrics()

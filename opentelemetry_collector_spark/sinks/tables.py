@@ -64,7 +64,10 @@ class TableCatalog:
         directly). ``sort_cols`` additionally pre-sorts within buckets
         so the merge join skips its sort. Bucket metadata lives in the
         session catalog (local sandbox); on a real deployment this is
-        an Iceberg bucket-partitioned table, same plan shape."""
+        an Iceberg bucket-partitioned table, same plan shape. Read it
+        back through the catalog (``spark.table``): the bucket spec
+        rides the catalog entry, so ``spark.read.parquet`` on the same
+        path would silently lose the no-shuffle join property."""
         name = table.replace("/", "_").replace("-", "_")
         w = (
             df.write.mode("overwrite")
@@ -76,15 +79,9 @@ class TableCatalog:
             w = w.sortBy(*sort_cols)
         w.saveAsTable(name)
 
-    def read_table(self, table: str) -> DataFrame:
-        """Catalog read — REQUIRED for bucketed tables: the bucket spec
-        rides the catalog entry, so ``spark.read.parquet`` on the same
-        path would silently lose the no-shuffle join property."""
-        return self.spark.table(table.replace("/", "_").replace("-", "_"))
-
     def overwrite_local(self, table: str, rows: list[tuple], schema: pa.Schema) -> None:
         """Driver-side table write (pyarrow, no Spark job) — for tiny
-        O(stages) tables like lineage/file_stats, the way Iceberg writes
+        tables like an IVF index's centroids, the way Iceberg writes
         manifest metadata alongside data files, and for the empty table
         of a fan-out route with no rows. Atomic via write-then-rename of
         the whole directory."""

@@ -15,6 +15,10 @@ with:
   per micro-batch, every route the flagship writes, quarantine
   included, with the batch sink schema — checkpointed by Spark's
   streaming offset log instead of our checkpoint table;
+* per-(epoch, route) acks through the batch pipeline's one
+  ``CheckpointStore.commit`` call, and ``flush_lineage()``, which writes
+  the stream run's own file of the shared ``lineage`` table — the batch
+  runs' files are neither read nor rewritten;
 * ``Trigger.AvailableNow`` for incremental catch-up runs (the scraper
   controller's pull-loop analog, scraper/scraperhelper/controller.go:68-160).
 """
@@ -126,10 +130,10 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     telemetry) and are acked into the SAME CheckpointStore the batch
     pipeline uses: one driver-side JSON ack per (epoch, route) under
     stage ``stream.<route>``, no extra Spark action.
-    ``flush_lineage(spark)`` (an attribute on the returned function)
-    flattens the acks into the shared queryable ``lineage`` warehouse
-    table (part_id = epoch), so streaming and batch A6 telemetry share
-    one store and one query surface.
+    ``flush_lineage()`` (an attribute on the returned function) flattens
+    the acks into this run's file of the shared queryable ``lineage``
+    warehouse table (part_id = epoch), so streaming and batch A6
+    telemetry share one store and one query surface.
 
     ``data_dir`` (default: the warehouse) is where the sink tables
     land. A streaming sink MUST NOT share a table directory with flat
@@ -144,10 +148,7 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
 
     from pyspark.sql import Observation
 
-    from opentelemetry_collector_spark.plans.checkpoint import (
-        CheckpointStore,
-        StageMetric,
-    )
+    from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
     from opentelemetry_collector_spark.sinks.tables import TableCatalog, fan_out_write
     from opentelemetry_collector_spark.sqltext import SINK_NAMES
 
@@ -203,33 +204,17 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
             for sink in routes:
                 publish((sink,), f"{sink}/epoch={epoch_id}")
                 rows = got[f"rows:{sink}"]
-                ckpt.commit(
-                    f"stream.{sink}.epoch{epoch_id:08d}",
-                    StageMetric(
-                        run_id=ckpt.run_id,
-                        stage=f"stream.{sink}",
-                        rows_in=rows,
-                        rows_out=rows,
-                        # the shared write's time counts toward every route
-                        wall_ms=int((time.monotonic() - t0) * 1000),
-                        extra={
-                            "epoch": epoch_id,
-                            "sink": sink,
-                            "partitions": [{
-                                "part_id": epoch_id,
-                                "rows": rows,
-                                "bytes": got[f"bytes:{sink}"],
-                            }],
-                        },
-                    ),
-                )
+                # the shared write's time counts toward every route
+                ckpt.commit(f"stream.{sink}", rows, rows,
+                            int((time.monotonic() - t0) * 1000), {
+                                "epoch": epoch_id, "sink": sink,
+                                "partitions": [{"part_id": epoch_id, "rows": rows,
+                                                "bytes": got[f"bytes:{sink}"]}],
+                            })
         finally:
             shutil.rmtree(catalog.path(staging), ignore_errors=True)
 
-    def flush_lineage(spark: SparkSession) -> tuple[int, int]:
-        return ckpt.write_lineage_table(spark, TableCatalog(spark, warehouse))
-
-    write_batch.flush_lineage = flush_lineage
+    write_batch.flush_lineage = ckpt.write_lineage_table
     return write_batch
 
 
@@ -306,9 +291,9 @@ def run_available_now(
     routed = transform(stream_transcripts(spark, src_path), spark)
     # STABLE run_id derived from the checkpoint location: a restarted
     # stream (foreachBatch's at-least-once replay) re-acks its epochs
-    # under the SAME run_id, so the run_id-keyed lineage merge replaces
-    # rather than double-counts (a fresh random id per restart would
-    # leave the dead run's rows in the shared lineage table).
+    # under the SAME run_id, so its lineage flush replaces the run's own
+    # file rather than double-counting (a fresh random id per restart
+    # would leave the dead run's file in the shared lineage table).
     import hashlib
 
     writer = route_sink_writer(
@@ -323,7 +308,7 @@ def run_available_now(
     )
     q1.awaitTermination()
     # flatten the per-(epoch, sink) acks into the shared lineage table
-    writer.flush_lineage(spark)
+    writer.flush_lineage()
     if accounting:
         acc = windowed_accounting(routed)
         q2 = (

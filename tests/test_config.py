@@ -13,7 +13,6 @@ from opentelemetry_collector_spark.plans import config as cfg_mod
 from opentelemetry_collector_spark.plans.config import (
     ConfigError,
     ServiceConfig,
-    build,
     run,
 )
 from opentelemetry_collector_spark.sinks.tables import TableCatalog
@@ -122,7 +121,7 @@ def test_forward_connector_end_to_end(spark, sf_dir, tmp_path):
     raw["receivers"]["transcripts"]["sf_dir"] = str(sf_dir)
     raw["connectors"] = {"forward/x": {}}
     cfg = ServiceConfig.from_dict(raw)
-    counts = run(build(cfg), spark, str(tmp_path / "wh"))
+    counts = run(cfg, spark, str(tmp_path / "wh"))
     from opentelemetry_collector_spark.sources import derive_transcripts
 
     assert counts["table/a"] == derive_transcripts(spark, str(sf_dir)).count()
@@ -138,7 +137,7 @@ def test_flagship_yaml_router_fanout(spark, sf_dir, tmp_path):
     # retarget the receiver at the test's sf_dir
     cfg.receivers["transcripts"]["sf_dir"] = str(sf_dir)
     wh = str(tmp_path / "whf")
-    counts = run(build(cfg), spark, wh)
+    counts = run(cfg, spark, wh)
 
     from opentelemetry_collector_spark.operators import parse as parse_ops
     from opentelemetry_collector_spark.operators import route as route_ops
@@ -180,7 +179,7 @@ def test_attributes_processor_from_config(spark, sf_dir, tmp_path):
         ]
     }
     cfg = ServiceConfig.from_dict(raw)
-    run(build(cfg), spark, str(tmp_path / "wha"))
+    run(cfg, spark, str(tmp_path / "wha"))
     out = TableCatalog(spark, str(tmp_path / "wha")).read("out_a")
     row = out.select(F.map_keys("attrs").alias("ks")).first()
     assert "env" in row["ks"] and "msg" not in row["ks"]
@@ -326,7 +325,7 @@ def test_receiver_node_dedup_single_scan(spark, sf_dir, tmp_path, monkeypatch):
     )
     raw["receivers"]["transcripts"]["sf_dir"] = str(sf_dir)
     cfg = ServiceConfig.from_dict(raw)
-    counts = run(build(cfg), spark, str(tmp_path / "whd"))
+    counts = run(cfg, spark, str(tmp_path / "whd"))
     assert calls == ["transcripts"]  # built exactly once for both pipelines
     assert counts["table/a"] == counts["table/b"] > 0
 
@@ -339,9 +338,9 @@ def test_config_run_with_checkpoint_resume(spark, sf_dir, tmp_path):
     cfg = ServiceConfig.from_file(os.path.join(REPO, "configs", "flagship.yaml"))
     cfg.receivers["transcripts"]["sf_dir"] = str(sf_dir)
     wh = str(tmp_path / "whr")
-    counts1 = run(build(cfg), spark, wh, run_id="cfgrun")
+    counts1 = run(cfg, spark, wh, run_id="cfgrun")
     t0 = time.monotonic()
-    counts2 = run(build(cfg), spark, wh, run_id="cfgrun")
+    counts2 = run(cfg, spark, wh, run_id="cfgrun")
     resumed = time.monotonic() - t0
     assert counts1 == counts2
     # all-skip path runs no Spark jobs — idle it's <0.1s, but a loaded
@@ -368,7 +367,7 @@ def test_debug_exporter_sampling_from_config(spark, sf_dir, tmp_path):
         "sampling_thereafter": 3, "sampling_granularity": "hour",
     }
     raw["exporters"]["debug/all"] = {"verbosity": "normal"}
-    counts = run(build(ServiceConfig.from_dict(raw)), spark, str(tmp_path / "whs"))
+    counts = run(ServiceConfig.from_dict(raw), spark, str(tmp_path / "whs"))
 
     parsed = parse_ops.parse_stage(derive_transcripts(spark, str(sf_dir)))
     expected = sample_per_second(
@@ -433,7 +432,7 @@ def test_multi_signal_pipelines_from_config(spark, sf_dir, tmp_path):
     raw["exporters"]["table/spans"] = {"table": "out_spans"}
     raw["exporters"]["table/hist"] = {"table": "out_hist"}
 
-    counts = run(build(ServiceConfig.from_dict(raw)), spark,
+    counts = run(ServiceConfig.from_dict(raw), spark,
                  str(tmp_path / "whsig"))
     n_turns = counts["table/a"]
     assert counts["table/spans"] == n_turns > 0   # one span per turn
@@ -458,7 +457,7 @@ def test_wire_file_export_then_ingest_from_config(spark, sf_dir, tmp_path):
     )
     raw["receivers"]["transcripts"]["sf_dir"] = str(sf_dir)
     raw["exporters"]["otlp_proto_file/out"] = {"path": pb_dir}
-    counts = run(build(ServiceConfig.from_dict(raw)), spark,
+    counts = run(ServiceConfig.from_dict(raw), spark,
                  str(tmp_path / "whw"))
     assert counts["otlp_proto_file/out"] > 0  # envelope files written
 
@@ -467,7 +466,7 @@ def test_wire_file_export_then_ingest_from_config(spark, sf_dir, tmp_path):
                   "exporters": ["table/a"]}}
     )
     raw2["receivers"]["otlp_proto/in"] = {"path": pb_dir}
-    counts2 = run(build(ServiceConfig.from_dict(raw2)), spark,
+    counts2 = run(ServiceConfig.from_dict(raw2), spark,
                   str(tmp_path / "whw2"))
 
     from opentelemetry_collector_spark.sources import derive_transcripts
@@ -498,7 +497,7 @@ def test_malformed_pb_file_lands_in_rejected_table(spark, tmp_path):
                           "exporters": ["table/a"]}})
     raw["receivers"]["otlp_proto/in"] = {"path": str(pb_dir)}
     wh = str(tmp_path / "wh")
-    counts = run(build(ServiceConfig.from_dict(raw)), spark, wh, run_id="pb")
+    counts = run(ServiceConfig.from_dict(raw), spark, wh, run_id="pb")
 
     cat = TableCatalog(spark, wh)
     out = cat.read("out_a")

@@ -6,9 +6,15 @@ test_fanout_write.py and test_pipeline_e2e.py.
 
 from __future__ import annotations
 
+import os
+import sys
+import threading
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.plans import lineage as lineage_ops
+from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
 from opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from opentelemetry_collector_spark.sinks.tables import TableCatalog
 from opentelemetry_collector_spark.sources import derive_transcripts
@@ -90,8 +96,8 @@ def test_send_batch_max_size_bounds_files(spark, sf_dir, tmp_path):
 
 def test_batch_and_stream_lineage_share_one_table(spark, sf_dir, tmp_path):
     """A streaming run flushing lineage into a warehouse where a batch
-    run already committed must MERGE (run_id-keyed replace), not clobber
-    — one A6 store for both modes, each run owning its rows."""
+    run already committed must keep the batch run's rows, not clobber
+    them — one A6 store for both modes, each run owning its own file."""
     import os
 
     from opentelemetry_collector_spark.streaming import stream as ss
@@ -114,7 +120,7 @@ def test_batch_and_stream_lineage_share_one_table(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination()
-    writer.flush_lineage(spark)
+    writer.flush_lineage()
 
     lin = spark.read.parquet(os.path.join(wh, "lineage"))
     runs = {r["run_id"] for r in lin.select("run_id").distinct().collect()}
@@ -124,6 +130,73 @@ def test_batch_and_stream_lineage_share_one_table(spark, sf_dir, tmp_path):
     ).agg(F.sum("rows")).collect()[0][0]
     assert batch_rows == sum(res.sink_counts.values())
     # re-flushing the stream run is idempotent (replaces its own rows)
-    writer.flush_lineage(spark)
+    writer.flush_lineage()
     lin2 = spark.read.parquet(os.path.join(wh, "lineage"))
     assert lin2.count() == lin.count()
+
+
+def test_lineage_flush_reads_no_other_run(spark, sf_dir, tmp_path):
+    """A run's lineage flush opens no file of another run: a file in
+    ``lineage/`` that is not even parquet does not stop it, and this
+    run's file holds exactly the partitions its acks carry."""
+    wh = str(tmp_path / "whother")
+    other = os.path.join(wh, "lineage", "part-other.parquet")
+    os.makedirs(os.path.dirname(other))
+    with open(other, "wb") as f:
+        f.write(b"not a parquet file")
+    res = run_pipeline(spark, sf_dir, wh, run_id="mine")
+
+    got = pq.read_table(os.path.join(wh, "lineage", "part-mine.parquet")).to_pylist()
+    want = [
+        (m["stage"], -1 if p["part_id"] is None else p["part_id"], p["rows"])
+        for m in res.metrics for p in m.get("partitions", [])
+    ]
+    assert sorted((r["stage"], r["part_id"], r["rows"]) for r in got) == sorted(want)
+    assert {r["run_id"] for r in got} == {"mine"}
+    with open(other, "rb") as f:
+        assert f.read() == b"not a parquet file"
+
+
+def test_concurrent_flushes_keep_every_run(tmp_path):
+    """Runs flushing into one warehouse at the same time, many times
+    over and more of them than cores, each leave their own rows exactly
+    once."""
+    wh = str(tmp_path / "whconc")
+    n_runs = 6
+    stores = [CheckpointStore(wh, run_id=f"run{i}") for i in range(n_runs)]
+    for i, ckpt in enumerate(stores):
+        for s in range(3):
+            ckpt.commit(f"write_t{s}", 10 + i, 10 + i, 5, {
+                "partitions": [{"part_id": p, "rows": p + i, "bytes": 7} for p in range(4)],
+                "files": [{"file": f"t{s}/f{i}.parquet", "rows": 10 + i, "bytes": 99}],
+            })
+    errors = []
+
+    def flush(ckpt):
+        try:
+            for _ in range(40):
+                assert ckpt.write_lineage_table() == (12, 3)
+        except Exception as e:  # a thread's failure fails the test below
+            errors.append(e)
+
+    threads = [threading.Thread(target=flush, args=(c,)) for c in stores]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors
+    lin = pq.read_table(os.path.join(wh, "lineage")).to_pylist()
+    for i in range(n_runs):
+        mine = sorted((r["stage"], r["part_id"], r["rows"])
+                      for r in lin if r["run_id"] == f"run{i}")
+        assert mine == sorted((f"write_t{s}", p, p + i)
+                              for s in range(3) for p in range(4))
+    files = pq.read_table(os.path.join(wh, "file_stats")).to_pylist()
+    assert sorted((r["run_id"], r["stage"]) for r in files) == sorted(
+        (f"run{i}", f"write_t{s}") for i in range(n_runs) for s in range(3))

@@ -7,7 +7,7 @@ from __future__ import annotations
 import os
 from datetime import datetime
 
-from opentelemetry_collector_spark.plans.config import ServiceConfig, build, run
+from opentelemetry_collector_spark.plans.config import ServiceConfig, run
 from opentelemetry_collector_spark.plans.pipeline import run_pipeline
 from opentelemetry_collector_spark.sinks.tables import TableCatalog
 from opentelemetry_collector_spark.sources import derive_transcripts
@@ -34,7 +34,7 @@ def test_main_and_config_write_the_same_warehouse(spark, sf_dir, tmp_path):
     cfg.receivers = {"parquet/in": {"path": rows}}
     cfg.pipelines["logs/in"].receivers = ["parquet/in"]
     wh_config = str(tmp_path / "config")
-    counts = run(build(cfg), spark, wh_config)
+    counts = run(cfg, spark, wh_config)
 
     for wh in (wh_main, wh_config):
         assert sorted(set(os.listdir(wh)) - RUN_TABLES) == DATA_TABLES

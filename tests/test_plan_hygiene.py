@@ -100,9 +100,9 @@ def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
         8, ["conv_id"], sort_cols=["conv_id"],
     )
     joined = (
-        cat.read_table("bturns")
+        spark.table("bturns")
         .hint("merge")
-        .join(cat.read_table("bstats"), "conv_id")
+        .join(spark.table("bstats"), "conv_id")
     )
     plan = _plan(joined)
     assert "SortMergeJoin" in plan

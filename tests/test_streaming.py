@@ -128,7 +128,7 @@ def test_streaming_edge_metrics_in_lineage_table(spark, sf_dir, tmp_path):
         .start()
     )
     q.awaitTermination()
-    n_lineage, _ = writer.flush_lineage(spark)
+    n_lineage, _ = writer.flush_lineage()
     assert n_lineage > 0
 
     lin = spark.read.parquet(os.path.join(wh, "lineage")).filter(
@@ -212,7 +212,7 @@ def test_epoch_replay_does_not_duplicate(spark, sf_dir, tmp_path):
     writer = ss.route_sink_writer(wh)
     writer(batch, 7)
     writer(batch, 7)  # replayed epoch — must converge, not append
-    n_lineage, _ = writer.flush_lineage(spark)
+    n_lineage, _ = writer.flush_lineage()
 
     total = sum(
         spark.read.parquet(os.path.join(wh, s)).count()

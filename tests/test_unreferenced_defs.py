@@ -84,9 +84,6 @@ TEST_ONLY = {
     "plans/config.py: ServiceConfig.from_files",
     "plans/errors.py: with_retry",
     "plans/featuregate.py: Registry.flag_string",
-    "plans/partitioning.py: assert_broadcast_join",
-    "plans/partitioning.py: assert_filter_pushed",
-    "plans/partitioning.py: assert_no_rowwise_python",
     "plans/partitioning.py: salted_group_count",
     "sources/otlp_proto.py: decode_spans_proto",
     "sinks/tables.py: TableCatalog.overwrite_bucketed",
