@@ -46,6 +46,7 @@ import json
 import os
 import time
 import uuid
+from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -96,6 +97,14 @@ class CheckpointStore:
             }, f)
         os.replace(tmp, self._stage_path(key))
 
+    def gate(self, stage: str, fn: Callable[[], tuple[int, int, dict]]) -> None:
+        """Run a terminal (sink-writing) stage unless already acked, and
+        ack the (rows_in, rows_out, extra) it returns."""
+        if not self.is_done(stage):
+            t0 = time.monotonic()
+            rows_in, rows_out, extra = fn()
+            self.commit(stage, rows_in, rows_out, int((time.monotonic() - t0) * 1000), extra)
+
     def metrics(self) -> list[dict]:
         out = []
         for fn in sorted(os.listdir(self._dir())):
@@ -122,11 +131,8 @@ class CheckpointStore:
         lineage_rows, file_rows = [], []
         for m in self.metrics():
             for p in m.get("partitions", []):
-                # part_id is NULL for rows whose partition key is NULL
-                # (e.g. poison rows headed for rejection) — bucket -1
                 lineage_rows.append({
-                    "run_id": m["run_id"], "stage": m["stage"],
-                    "part_id": -1 if p["part_id"] is None else int(p["part_id"]),
+                    "run_id": m["run_id"], "stage": m["stage"], "part_id": int(p["part_id"]),
                     "rows": int(p["rows"]), "bytes": int(p["bytes"] or 0),
                     "wall_ms": int(m["wall_ms"]),
                 })

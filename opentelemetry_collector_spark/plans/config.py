@@ -21,9 +21,11 @@ fanout consumer's single cached parent (internal/fanoutconsumer/
 logs.go:21-77). A router connector and the table pipelines it feeds
 run as ONE fan-out: one cached parent, one partitioned write for all
 its tables, the quarantine route's included, and one for the
-aggregates of all but quarantine (:func:`_fan_out`, through
-sinks/tables.fan_out_write, the write streaming micro-batches share).
-Every route is written and acked by the same rules.
+aggregates of all but quarantine (:func:`_fan_out`). Every table, a
+plain ``table`` exporter's too, is written by the one table writer
+sinks/tables.fan_out_write, which streaming micro-batches share: it
+flags, counts and splits rejected rows, so this module keeps only the
+policy (which constraints, lineage, acks and resume).
 This is the only batch executor; ``configs/flagship.yaml`` is the
 flagship job.
 
@@ -53,7 +55,7 @@ from collections.abc import Callable, Mapping
 from dataclasses import dataclass
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import aggregate as agg_ops
@@ -62,7 +64,12 @@ from opentelemetry_collector_spark.operators.route import QUARANTINE
 from opentelemetry_collector_spark.plans import errors as err_ops
 from opentelemetry_collector_spark.plans import lineage as lineage_ops
 from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
-from opentelemetry_collector_spark.sinks.tables import TableCatalog, debug_format, fan_out_write
+from opentelemetry_collector_spark.sinks.tables import (
+    TableCatalog,
+    debug_format,
+    fan_out_write,
+    reject_reason,
+)
 
 
 class ConfigError(ValueError):
@@ -543,35 +550,12 @@ def _make_processor(cid: str, opts: dict, spark: SparkSession) -> Callable[[Data
     raise ConfigError(f"processor {cid!r}: unknown type {t!r}")
 
 
-@dataclass
-class _Acks:
-    """A run's CheckpointStore and the kill/resume test hook:
-    ``fail_after`` raises right after that stage's ack."""
-
-    ckpt: CheckpointStore
-    fail_after: str | None = None
-
-    def commit(self, stage: str, rows_in: int, rows_out: int, extra: dict,
-               since: float) -> None:
-        self.ckpt.commit(stage, rows_in, rows_out,
-                         int((time.monotonic() - since) * 1000), extra)
-        if self.fail_after == stage:
-            raise RuntimeError(f"injected failure after stage {stage}")
-
-    def gate(self, stage: str, fn: Callable[[], tuple[int, int, dict]]) -> None:
-        """Run a terminal (sink-writing) stage unless already acked."""
-        if not self.ckpt.is_done(stage):
-            t0 = time.monotonic()
-            self.commit(stage, *fn(), t0)
-
-
 def run(
     cfg: ServiceConfig,
     spark: SparkSession,
     warehouse: str,
     run_id: str | None = None,
     source: Callable[[SparkSession], DataFrame] | None = None,
-    fail_after_stage: str | None = None,
 ) -> dict[str, int]:
     """Execute ``cfg``'s graph: pipelines in topo order, connectors carrying
     lazy sub-plans between them. A router connector and the pipelines it
@@ -590,12 +574,10 @@ def run(
     run's CheckpointStore: a re-run with the same ``run_id`` skips the
     acked stages (persistent_queue.go:321-428).
 
-    Test hooks: ``source`` replaces every receiver's scan, and
-    ``fail_after_stage`` crashes the run right after that stage's ack
-    (receiver/receivertest/contract_checker.go:75-120).
+    Test hook: ``source`` replaces every receiver's scan.
     """
     catalog = TableCatalog(spark, warehouse)
-    acks = _Acks(CheckpointStore(warehouse, run_id), fail_after_stage)
+    ckpt = CheckpointStore(warehouse, run_id)
     conn_inputs: dict[str, list[DataFrame]] = {c: [] for c in cfg.connectors}
     readers = {c: sum(c in p.receivers for p in cfg.pipelines.values())
                for c in [*cfg.receivers, *cfg.connectors]}
@@ -632,7 +614,7 @@ def run(
                 if p.exporters[0] not in stages:
                     exporters = cfg.router_exporters(cid)
                     acked = _fan_out(
-                        catalog, acks, _input(cid),
+                        catalog, ckpt, _input(cid),
                         {rv: _table_name(e, cfg.exporters) for rv, e in exporters.items()},
                     )
                     stages |= {exporters[rv]: st for rv, st in acked.items()}
@@ -655,13 +637,13 @@ def run(
                     stages[e] = stage = f"{pname}:{e}".replace("/", "_")
 
                     def _write() -> tuple[int, int, dict]:
-                        valid = ([("decode_error", F.col("decode_error").isNull())]
+                        valid = ([("decode_error", "decode_error IS NULL")]
                                  if "decode_error" in df.columns else [])
                         n, r = err_ops.write_with_partial_success(
                             catalog, _table_name(e, cfg.exporters), df, valid)
                         return n + r, n, {"exporter": e, "pipeline": pname, "rejected": r}
 
-                    acks.gate(stage, _write)
+                    ckpt.gate(stage, _write)
                 elif t == "debug":
                     # sampling (factory.go:29-30): the first N per
                     # event-time second, then every Mth; M defaults to the
@@ -695,7 +677,7 @@ def run(
     finally:
         for d in persisted:
             d.unpersist()
-    acked_rows = {m["stage"]: m["rows_out"] for m in acks.ckpt.metrics()}
+    acked_rows = {m["stage"]: m["rows_out"] for m in ckpt.metrics()}
     return counts | {e: acked_rows[st] for e, st in stages.items()}
 
 
@@ -705,7 +687,7 @@ def run(
 # ---------------------------------------------------------------------------
 
 def _fan_out(
-    catalog: TableCatalog, acks: _Acks, df: DataFrame, tables: dict[str, str],
+    catalog: TableCatalog, ckpt: CheckpointStore, df: DataFrame, tables: dict[str, str],
 ) -> dict[str, str]:
     """Write every route of a router connector; ``tables`` maps each
     route value to its table. Returns each route's ack stage,
@@ -714,87 +696,19 @@ def _fan_out(
     One cached parent, sized by its data (the session lets AQE coalesce
     the shuffle under a persisted plan: 4 files per table at sf0.1 on 4
     cores), feeds a fixed set of Spark jobs however many routes there
-    are: one lineage collect, ONE partitioned write for every un-acked
-    route, the ``quarantine`` route included, with partial success
-    (rows failing plans/errors.reject_reason go to ``rejected_<table>``,
-    counted in the ack), ONE partitioned write for the ``agg_<table>``
-    tables of every route but ``quarantine``, then the ``lineage``
-    table. Each route's partition dir is moved from a staging dir to its
-    flat table and acked in route order, so a resume writes only the
+    are: one lineage collect over the accepted rows, ONE
+    sinks/tables.fan_out_write for every un-acked route, the
+    ``quarantine`` route included, with partial success (rows failing
+    the default sink constraints go to ``rejected_<table>``, counted in
+    the ack), ONE for the ``agg_<table>`` tables of every route but
+    ``quarantine``, which checks no constraint, then the ``lineage``
+    table. Each table is published and acked in route order, the shared
+    write's time counting toward every ack, so a resume writes only the
     un-acked tables (persistent_queue.go:321-428); the staging dir is
-    removed either way. A route with no rows gets an empty table written
-    on the driver, with no Spark job.
+    removed either way.
     """
-    ckpt = acks.ckpt
     staging = f"_staging_{ckpt.run_id}"
     route = F.col("route")
-
-    def _write_sinks(sinks: list[str], lineage: dict[str, list[dict]]) -> None:
-        """One write for every un-acked route; accepted and rejected
-        counts ride one Observation placed above the validity filter.
-        ``rejected_<table>`` is written, by one more partitioned write,
-        only for routes whose rejected count is non-zero."""
-        t0 = time.monotonic()
-        flagged = routed.filter(route.isin(sinks)).withColumn(
-            "_reject_reason", err_ops.reject_reason()
-        )
-        ok = F.col("_reject_reason").isNull()
-        rejected_rows = flagged.filter(~ok).withColumnRenamed("_reject_reason", "reject_reason")
-        counts = [
-            c for s in sinks for c in (
-                F.count_if((route == s) & ok).alias(f"ok:{s}"),
-                F.count_if((route == s) & ~ok).alias(f"rejected:{s}"),
-            )
-        ]
-        obs = Observation("sink_fanout")
-        publish = fan_out_write(
-            catalog, f"{staging}/sinks",
-            flagged.observe(obs, *counts).filter(ok)
-            .drop("_reject_reason").withColumn("_sink", route),
-            ["_sink"],
-        )
-        got = obs.get
-        rejected = [s for s in sinks if got[f"rejected:{s}"]]
-        if rejected:
-            publish_rejected = fan_out_write(
-                catalog, f"{staging}/rejected",
-                rejected_rows.filter(route.isin(rejected)).withColumn("_sink", route),
-                ["_sink"],
-            )
-        job_s = time.monotonic() - t0
-        for s in sinks:
-            # the shared job's time counts toward every table's ack
-            since = time.monotonic() - job_s
-            t = tables[s]
-            publish((s,), t)
-            if s in rejected:
-                publish_rejected((s,), f"rejected_{t}")
-            n, r = got[f"ok:{s}"], got[f"rejected:{s}"]
-            acks.commit(f"write_{t}", n + r, n, {
-                "sink": t, "rejected": r,
-                "partitions": lineage.get(s, []),
-                "files": lineage_ops.file_lineage(catalog.path(t)),
-            }, since)
-
-    def _write_aggs(sinks: list[str]) -> None:
-        """One aggregate write for every un-acked agg_<table> table."""
-        t0 = time.monotonic()
-        obs = Observation("agg_fanout")
-        agg = agg_ops.hourly_sink_accounting(routed.filter(route.isin(sinks)))
-        publish = fan_out_write(
-            catalog, f"{staging}/aggs",
-            agg.observe(obs, *[F.count_if(route == s).alias(s) for s in sinks]),
-            ["route"],
-        )
-        got = obs.get
-        job_s = time.monotonic() - t0
-        for s in sinks:
-            since = time.monotonic() - job_s
-            t = f"agg_{tables[s]}"
-            publish((s,), t)
-            acks.commit(t, got[s], got[s], {
-                "sink": tables[s], "files": lineage_ops.file_lineage(catalog.path(t)),
-            }, since)
 
     def _lineage_table() -> tuple[int, int, dict]:
         """Flatten the run's acked lineage into queryable tables."""
@@ -808,19 +722,39 @@ def _fan_out(
                      if s != QUARANTINE and not ckpt.is_done(f"agg_{tables[s]}")]
 
         if write_sinks:
-            # Per-partition logical lineage for every route in ONE
-            # aggregation over the cached parent (A6 north-rule contract)
+            # Per-partition logical lineage of the rows the writer accepts,
+            # every route in ONE aggregation (A6 north-rule contract)
             lineage: dict[str, list[dict]] = {}
-            for r in lineage_ops.logical_lineage(routed).collect():
+            accepted = routed.filter(reject_reason().isNull())
+            for r in lineage_ops.logical_lineage(accepted).collect():
                 lineage.setdefault(r["route"], []).append(
                     {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
                 )
-            _write_sinks(write_sinks, lineage)
+            t0 = time.monotonic()
+            publish = fan_out_write(catalog, f"{staging}/sinks",
+                                    routed.withColumn("_sink", route), "_sink", write_sinks)
+            for s in write_sinks:
+                t = tables[s]
+                n, r = publish(s, t)
+                ckpt.commit(f"write_{t}", n + r, n, int((time.monotonic() - t0) * 1000), {
+                    "sink": t, "rejected": r, "partitions": lineage.get(s, []),
+                    "files": lineage_ops.file_lineage(catalog.path(t)),
+                })
         if agg_sinks:
-            _write_aggs(agg_sinks)
-        acks.gate("lineage", _lineage_table)
+            t0 = time.monotonic()
+            publish = fan_out_write(
+                catalog, f"{staging}/aggs",
+                agg_ops.hourly_sink_accounting(routed.filter(route.isin(agg_sinks))),
+                "route", agg_sinks, constraints=[],
+            )
+            for s in agg_sinks:
+                t = f"agg_{tables[s]}"
+                n, _ = publish(s, t)
+                ckpt.commit(t, n, n, int((time.monotonic() - t0) * 1000), {
+                    "sink": tables[s], "files": lineage_ops.file_lineage(catalog.path(t)),
+                })
+        ckpt.gate("lineage", _lineage_table)
     finally:
         routed.unpersist()
         shutil.rmtree(catalog.path(staging), ignore_errors=True)
     return {rv: f"write_{t}" for rv, t in tables.items()}
-

@@ -5,7 +5,9 @@ consumer/consumererror/permanent.go:16-32) and retryable (back off and
 retry: configretry/backoff.go:17-21). Our batch mapping:
 
 * permanent  → row-level quarantine (parse_ok=false rows to a failure
-  table) or job abort for config errors;
+  table), a rejected row (partial success, applied by the one table
+  writer sinks/tables.fan_out_write; :func:`write_with_partial_success`
+  is its one-table form) or job abort for config errors;
 * retryable  → Spark task retries (spark.task.maxFailures) + stage
   re-run from checkpoint: a resumed run redoes only the un-acked sink
   writes. No production path retries a sink commit in-process: the
@@ -15,12 +17,16 @@ retry: configretry/backoff.go:17-21). Our batch mapping:
 
 from __future__ import annotations
 
+import shutil
 import time
+import uuid
 from collections.abc import Callable
 from typing import TypeVar
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from opentelemetry_collector_spark.sinks.tables import TableCatalog, fan_out_write
 
 T = TypeVar("T")
 
@@ -44,40 +50,11 @@ class ThrottleError(RetryableError):
         self.retry_after_s = float(retry_after_s)
 
 
-# Default sink-write row contract (the exporter's input validation; a
-# violating row is the per-push "rejected_log_records" of OTLP partial
-# success, exporter/otlpexporter/otlp.go:143-149). max item size plays
-# the batch sender's max-size role.
-MAX_SINK_TEXT_BYTES = 1 << 20
-
-
-def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[tuple[str, Column]]:
-    """(reason, passes) pairs checked in order; first failure names the
-    rejection reason."""
-    return [
-        ("null_conv_id", F.col("conv_id").isNotNull()),
-        ("negative_turn_idx", F.col("turn_idx") >= 0),
-        ("oversized_text", F.octet_length(F.col("text")) <= max_text_bytes),
-    ]
-
-
-def reject_reason(constraints: list[tuple[str, Column]] | None = None) -> Column:
-    """The name of the first constraint a row fails, NULL for a valid
-    row. A NULL check result counts as a failure. ``None`` checks the
-    default sink constraints; ``[]`` checks nothing."""
-    if constraints is None:
-        constraints = default_sink_constraints()
-    reason = F.lit(None).cast("string")
-    for name, ok in reversed(constraints):
-        reason = F.when(~F.coalesce(ok, F.lit(False)), F.lit(name)).otherwise(reason)
-    return reason
-
-
 def write_with_partial_success(
-    catalog,
+    catalog: TableCatalog,
     table: str,
     df: DataFrame,
-    constraints: list[tuple[str, Column]] | None = None,
+    constraints: list[tuple[str, str]] | None = None,
 ) -> tuple[int, int]:
     """Sink write with per-write rejected-row accounting (OTLP partial
     success: the push succeeds while reporting rejected_log_records,
@@ -85,36 +62,15 @@ def write_with_partial_success(
     partial-success logging). plans/config.run writes every plain
     ``table`` exporter through it.
 
-    Scale shape: the accepted/rejected counts ride the ONE sink write
-    via an Observation placed above the validity filter (CollectMetrics
-    is a pushdown barrier, so it sees every input row). The rejected
-    side is written to ``rejected_<table>`` ONLY when the count is
-    non-zero — the clean-data fast path stays a single action with two
-    codegen'd predicates, no second pass.
-
-    Returns (accepted_rows, rejected_rows).
-    """
-    from pyspark.sql import Observation
-
-    flagged = df.withColumn("_reject_reason", reject_reason(constraints))
-    obs = Observation(f"partial_{table}")
-    observed = flagged.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_total"),
-        F.count(F.col("_reject_reason")).alias("n_rejected"),
-    )
-    catalog.overwrite(
-        table,
-        observed.filter(F.col("_reject_reason").isNull()).drop("_reject_reason"),
-    )
-    n_total, n_rejected = obs.get["n_total"], obs.get["n_rejected"]
-    if n_rejected:
-        catalog.overwrite(
-            f"rejected_{table}",
-            flagged.filter(F.col("_reject_reason").isNotNull())
-            .withColumnRenamed("_reject_reason", "reject_reason"),
-        )
-    return n_total - n_rejected, n_rejected
+    One route of the table writer sinks/tables.fan_out_write. Returns
+    (accepted_rows, rejected_rows)."""
+    staging = f"_staging_{uuid.uuid4().hex}"
+    try:
+        publish = fan_out_write(catalog, staging, df.withColumn("_table", F.lit("t")),
+                                "_table", ["t"], constraints)
+        return publish("t", table)
+    finally:
+        shutil.rmtree(catalog.path(staging), ignore_errors=True)
 
 
 def with_retry(

@@ -47,21 +47,17 @@ def run_pipeline(
     warehouse: str,
     run_id: str | None = None,
     source: Callable[[SparkSession], DataFrame] | None = None,
-    fail_after_stage: str | None = None,
 ) -> RunResult:
     """Run ``configs/flagship.yaml`` over the transcripts of ``sf_dir``
     (or over ``source``'s rows) into ``warehouse``, checkpoint-gated per
     stage: re-running with the same ``run_id`` skips the acked stages.
-    ``source`` and ``fail_after_stage`` pass through to plans/config.run.
+    ``source`` passes through to plans/config.run.
     """
     cfg = config.ServiceConfig.from_file(FLAGSHIP_CONFIG)
     cfg.receivers["transcripts"]["sf_dir"] = sf_dir
     ckpt = CheckpointStore(warehouse, run_id)
     skipped = [m["stage"] for m in ckpt.metrics()]
-    config.run(
-        cfg, spark, warehouse, run_id=ckpt.run_id,
-        source=source, fail_after_stage=fail_after_stage,
-    )
+    config.run(cfg, spark, warehouse, run_id=ckpt.run_id, source=source)
     metrics = ckpt.metrics()
     written = {
         m["sink"]: m["rows_out"] for m in metrics

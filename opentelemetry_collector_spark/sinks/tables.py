@@ -11,6 +11,10 @@ level — re-running a failed stage cannot double-append, which is the
 property the reference's persistent-queue ack protocol exists to provide
 (exporter/exporterhelper/internal/queue/persistent_queue.go:321-428).
 
+Router sinks, aggregates, plain ``table`` exporters and streaming epochs
+all write through :func:`fan_out_write`, which applies OTLP partial
+success once: a rejected row lands in ``rejected_<table>``.
+
 Rows per file are bounded by the session's
 ``spark.sql.files.maxRecordsPerFile`` (session.py), the reference's
 send_batch_max_size (processor/batchprocessor/config.go:26-29), so
@@ -25,7 +29,8 @@ from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 
 
@@ -101,32 +106,92 @@ class TableCatalog:
         return self.spark.read.parquet(self.path(table))
 
 
+# Default sink-write row contract (the exporter's input validation; a
+# violating row is the per-push "rejected_log_records" of OTLP partial
+# success, exporter/otlpexporter/otlp.go:143-149). max item size plays
+# the batch sender's max-size role.
+MAX_SINK_TEXT_BYTES = 1 << 20
+
+
+def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[tuple[str, str]]:
+    """(reason, passes) pairs, ``passes`` a SQL predicate, checked in
+    order; first failure names the rejection reason."""
+    return [
+        ("null_conv_id", "conv_id IS NOT NULL"),
+        ("negative_turn_idx", "turn_idx >= 0"),
+        ("oversized_text", f"octet_length(text) <= {max_text_bytes}"),
+    ]
+
+
+def reject_reason(constraints: list[tuple[str, str]] | None = None) -> Column:
+    """The name of the first constraint a row fails, NULL for a valid
+    row. A NULL check result counts as a failure. ``None`` checks the
+    default sink constraints; ``[]`` checks nothing. One SQL CASE: built
+    operator by operator it would cost a JVM round trip each."""
+    if constraints is None:
+        constraints = default_sink_constraints()
+    whens = "".join(f" WHEN NOT coalesce({ok}, false) THEN '{name}'" for name, ok in constraints)
+    return F.expr(f"CASE{whens} END" if whens else "CAST(NULL AS STRING)")
+
+
 def fan_out_write(
-    catalog: TableCatalog, staging: str, df: DataFrame, by: list[str],
-) -> Callable[[tuple, str], None]:
-    """Write ``df`` once, partitioned by ``by``, into ``staging``; return
-    ``publish(values, table)``, which moves the partition dir for
-    ``values`` (one per column of ``by``) to ``table``. A partition with
-    no rows has no dir, so ``publish`` writes an empty table with the
-    same schema on the driver (:meth:`TableCatalog.overwrite_local`): a
-    route with no rows costs no Spark job. The caller removes
-    ``staging``. The batch router (plans/config._fan_out) and each
-    streaming micro-batch (streaming/stream.route_sink_writer) write all
-    their routes with it."""
-    catalog.overwrite(staging, df, partition_by=by)
-    schema = to_arrow_schema(df.drop(*by).schema)
+    catalog: TableCatalog, staging: str, df: DataFrame, by: str, values: list[str],
+    constraints: list[tuple[str, str]] | None = None,
+    sums: dict[str, str] | None = None,
+) -> Callable[[str, str], tuple[int, int]]:
+    """The one table writer. Flags each row of ``df`` whose ``by`` column
+    holds one of ``values`` with :func:`reject_reason` of ``constraints``
+    (OTLP partial success, exporter/otlpexporter/otlp.go:143-149). ONE
+    Observation above the validity filter (a pushdown barrier, so it
+    sees every row) counts accepted and rejected rows per value and sums
+    each SQL expression of ``sums`` over the accepted ones
+    (``publish.observed["<name>:<value>"]``).
+    The accepted rows are written once into ``staging``, partitioned by
+    ``by``; the rejected ones, with their ``reject_reason``, take one
+    more write only when some value has any.
 
-    def publish(values: tuple, table: str) -> None:
-        src = catalog.path(os.path.join(staging, *(f"{c}={v}" for c, v in zip(by, values))))
-        dst = catalog.path(table)
-        if not os.path.isdir(src):
+    Returns ``publish(value, table)``: it moves the value's rows to
+    ``table`` (a value with none gets an empty table written on the
+    driver, no Spark job) and its rejected rows to ``rejected_<table>``
+    (removed when it has none), and returns its ``(accepted, rejected)``.
+    The caller removes ``staging``."""
+    key, ok = F.col(by), F.col("_reject_reason").isNull()
+    flagged = df.filter(key.isin(values)).withColumn("_reject_reason", reject_reason(constraints))
+    # one SQL expression per metric (values are route names), as in
+    # reject_reason: ~0.1 s less driver time a write than Column operators
+    metrics = [
+        F.expr(f"{agg} AS `{name}:{v}`")
+        for v in values
+        for name, agg in (
+            ("accepted", f"count_if(`{by}` = '{v}' AND _reject_reason IS NULL)"),
+            ("rejected", f"count_if(`{by}` = '{v}' AND _reject_reason IS NOT NULL)"),
+            *((name, f"coalesce(sum(IF(`{by}` = '{v}' AND _reject_reason IS NULL, {expr}, NULL)), 0)")
+              for name, expr in (sums or {}).items()),
+        )
+    ]
+    obs = Observation()
+    accepted = flagged.observe(obs, *metrics).filter(ok).drop("_reject_reason")
+    catalog.overwrite(f"{staging}/accepted", accepted, partition_by=[by])
+    got = obs.get
+    if any(got[f"rejected:{v}"] for v in values):
+        rejected = flagged.filter(~ok).withColumnRenamed("_reject_reason", "reject_reason")
+        catalog.overwrite(f"{staging}/rejected", rejected, partition_by=[by])
+    schema = to_arrow_schema(accepted.drop(by).schema)
+
+    def publish(value: str, table: str) -> tuple[int, int]:
+        n, r = got[f"accepted:{value}"], got[f"rejected:{value}"]
+        for kind, rows, dst in (("accepted", n, table), ("rejected", r, f"rejected_{table}")):
+            path = catalog.path(dst)
+            shutil.rmtree(path, ignore_errors=True)
+            if rows:
+                os.makedirs(os.path.dirname(path), exist_ok=True)
+                os.rename(catalog.path(f"{staging}/{kind}/{by}={value}"), path)
+                open(os.path.join(path, "_SUCCESS"), "w").close()
+        if not n:
             catalog.overwrite_local(table, [], schema)
-            return
-        shutil.rmtree(dst, ignore_errors=True)
-        os.makedirs(os.path.dirname(dst), exist_ok=True)
-        os.rename(src, dst)
-        open(os.path.join(dst, "_SUCCESS"), "w").close()
+        return n, r
 
+    publish.observed = got
     return publish
 
 
@@ -136,8 +201,6 @@ def debug_format(df: DataFrame, verbosity: str = "normal") -> DataFrame:
     with attributes in insertion order. Our attrs map uses a fixed key
     order, so we render the known keys in that order.
     """
-    from pyspark.sql import functions as F
-
     if verbosity == "basic":
         # basic = just counts (debugexporter/exporter.go:88-95)
         return df.groupBy().agg(F.count(F.lit(1)).alias("resource_logs"))

@@ -13,8 +13,9 @@ with:
 * ``foreachBatch`` fan-out to per-route tables through the batch
   fan-out's write (sinks/tables.fan_out_write): one partitioned write
   per micro-batch, every route the flagship writes, quarantine
-  included, with the batch sink schema — checkpointed by Spark's
-  streaming offset log instead of our checkpoint table;
+  included, with the batch sink schema and partial success —
+  checkpointed by Spark's streaming offset log instead of our
+  checkpoint table;
 * per-(epoch, route) acks through the batch pipeline's one
   ``CheckpointStore.commit`` call, and ``flush_lineage()``, which writes
   the stream run's own file of the shared ``lineage`` table — the batch
@@ -125,11 +126,12 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     configured exporter set, as the reference's fanout consumer is built
     from the config graph — so no driver round-trip finds the routes.
 
-    Per-(epoch, route) item/byte counters ride that write in one
-    Observation (the streaming face of the A6 obsconsumer edge
-    telemetry) and are acked into the SAME CheckpointStore the batch
-    pipeline uses: one driver-side JSON ack per (epoch, route) under
-    stage ``stream.<route>``, no extra Spark action.
+    A row failing the batch sink constraints lands in
+    ``rejected_<route>/epoch=N``. Per-(epoch, route) counts and accepted
+    bytes ride that write's Observation (the streaming face of the A6
+    obsconsumer edge telemetry) and are acked into the SAME
+    CheckpointStore the batch pipeline uses, as batch acks them: one
+    driver-side JSON ack per (epoch, route), stage ``stream.<route>``.
     ``flush_lineage()`` (an attribute on the returned function) flattens
     the acks into this run's file of the shared queryable ``lineage``
     warehouse table (part_id = epoch), so streaming and batch A6
@@ -145,8 +147,6 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     import os
     import shutil
     import time
-
-    from pyspark.sql import Observation
 
     from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
     from opentelemetry_collector_spark.sinks.tables import TableCatalog, fan_out_write
@@ -184,32 +184,20 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
             _guard_layout(sink)
         catalog = TableCatalog(batch_df.sparkSession, tables)
         staging = f"_staging_{ckpt.run_id}_{epoch_id:08d}"
-        route = F.col("route")
-        obs = Observation(f"edge_{epoch_id}")
-        counts = [
-            c for s in routes for c in (
-                F.count_if(route == s).alias(f"rows:{s}"),
-                F.coalesce(
-                    F.sum(F.when(route == s, F.octet_length("text"))), F.lit(0)
-                ).alias(f"bytes:{s}"),
-            )
-        ]
         t0 = time.monotonic()
         try:
             publish = fan_out_write(
-                catalog, staging,
-                batch_df.observe(obs, *counts).withColumn("_sink", route), ["_sink"],
+                catalog, staging, batch_df.withColumn("_sink", F.col("route")), "_sink",
+                routes, sums={"bytes": "octet_length(text)"},
             )
-            got = obs.get
             for sink in routes:
-                publish((sink,), f"{sink}/epoch={epoch_id}")
-                rows = got[f"rows:{sink}"]
+                n, r = publish(sink, f"{sink}/epoch={epoch_id}")
                 # the shared write's time counts toward every route
-                ckpt.commit(f"stream.{sink}", rows, rows,
+                ckpt.commit(f"stream.{sink}", n + r, n,
                             int((time.monotonic() - t0) * 1000), {
-                                "epoch": epoch_id, "sink": sink,
-                                "partitions": [{"part_id": epoch_id, "rows": rows,
-                                                "bytes": got[f"bytes:{sink}"]}],
+                                "epoch": epoch_id, "sink": sink, "rejected": r,
+                                "partitions": [{"part_id": epoch_id, "rows": n,
+                                                "bytes": publish.observed[f"bytes:{sink}"]}],
                             })
         finally:
             shutil.rmtree(catalog.path(staging), ignore_errors=True)

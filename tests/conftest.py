@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import contextlib
 import os
 import sys
 
@@ -48,3 +49,26 @@ def jobs_of(spark):
         return len(sc.statusTracker().getJobIdsForGroup(group))
 
     return count
+
+
+@pytest.fixture
+def crash_after_ack(monkeypatch):
+    """``with crash_after_ack(stage):`` makes ``CheckpointStore.commit``
+    raise right after ``stage``'s ack is written — the kill point of a
+    crash/resume test (receiver/receivertest/contract_checker.go:75-120)."""
+    from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
+
+    commit = CheckpointStore.commit
+
+    @contextlib.contextmanager
+    def crash(stage: str):
+        def commit_then_crash(self, acked: str, *args, **kwargs):
+            commit(self, acked, *args, **kwargs)
+            if acked == stage:
+                raise RuntimeError(f"injected failure after stage {acked}")
+
+        with monkeypatch.context() as m:
+            m.setattr(CheckpointStore, "commit", commit_then_crash)
+            yield
+
+    return crash

@@ -45,12 +45,11 @@ def test_job_count_is_fixed(spark, sf_dir, tmp_path, jobs_of):
     assert sorted(os.listdir(wh)) == TABLES
 
 
-def test_crash_between_sinks_resumes_only_unacked(spark, sf_dir, tmp_path):
+def test_crash_between_sinks_resumes_only_unacked(spark, sf_dir, tmp_path, crash_after_ack):
     wh = str(tmp_path / "wh")
     catalog = TableCatalog(spark, wh)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, sf_dir, wh, run_id="runM",
-                     fail_after_stage="write_sink_python")
+    with crash_after_ack("write_sink_python"), pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, sf_dir, wh, run_id="runM")
     assert not [d for d in os.listdir(wh) if d not in TABLES]
     acked = ["sink_search", "sink_browser", "sink_python"]
     files_before = {s: sorted(os.listdir(catalog.path(s))) for s in acked}

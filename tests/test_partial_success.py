@@ -49,6 +49,19 @@ def test_clean_write_has_no_rejected_table(spark, tmp_path):
     assert not os.path.isdir(catalog.path("rejected_out"))
 
 
+def test_clean_rewrite_removes_stale_rejected_table(spark, tmp_path):
+    """A rewrite replaces a table's rejected side too: a clean write
+    after one whose only row was rejected leaves no ``rejected_<table>``
+    behind, and the all-rejected write still leaves an empty table."""
+    catalog = TableCatalog(spark, str(tmp_path / "whs"))
+    poison = spark.createDataFrame([(None, 0, "user", "x", "search", TS)], SCHEMA)
+    assert errors.write_with_partial_success(catalog, "out", poison) == (0, 1)
+    assert catalog.read("out").count() == 0
+    clean = spark.createDataFrame([("c1", 0, "user", "ok", "search", TS)], SCHEMA)
+    assert errors.write_with_partial_success(catalog, "out", clean) == (1, 0)
+    assert not os.path.isdir(catalog.path("rejected_out"))
+
+
 def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
     poison_text = "[seq=1] call tool=search status=200 latency_ms=5 msg=x k1"
 
@@ -70,6 +83,9 @@ def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
     assert catalog.read("sink_search").filter(F.col("conv_id").isNull()).count() == 0
     m = next(x for x in res.metrics if x["stage"] == "write_sink_search")
     assert m["rejected"] == 1 and m["rows_in"] == m["rows_out"] + 1
+    # lineage counts what landed: the rejected row is in no partition
+    lin = spark.read.parquet(catalog.path("lineage")).filter(F.col("stage") == "write_sink_search")
+    assert lin.agg(F.sum("rows")).first()[0] == m["rows_out"]
 
 
 def test_quarantine_route_has_partial_success(spark, sf_dir, tmp_path):

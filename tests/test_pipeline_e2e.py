@@ -44,11 +44,11 @@ def test_fanout_exactly_once(spark, sf_dir, tmp_path):
         assert agg.agg(F.sum("turn_count")).collect()[0][0] == (n or None) or n == 0
 
 
-def test_resume_skips_completed_and_is_idempotent(spark, sf_dir, tmp_path):
+def test_resume_skips_completed_and_is_idempotent(spark, sf_dir, tmp_path, crash_after_ack):
     wh = str(tmp_path / "wh2")
     # first attempt crashes after the search-sink write is acked
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_pipeline(spark, sf_dir, wh, run_id="runA", fail_after_stage="write_sink_search")
+    with crash_after_ack("write_sink_search"), pytest.raises(RuntimeError, match="injected failure"):
+        run_pipeline(spark, sf_dir, wh, run_id="runA")
 
     # resume with the same run_id: completed stages skipped, rest executed
     res = run_pipeline(spark, sf_dir, wh, run_id="runA")

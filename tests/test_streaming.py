@@ -314,6 +314,32 @@ def test_empty_routes_cost_no_job(spark, sf_dir, tmp_path, jobs_of):
         assert t.count() == (batch.count() if s == "sink_search" else 0), s
 
 
+def test_epoch_write_has_partial_success(spark, sf_dir, tmp_path):
+    """A streaming epoch splits rejects as batch does: a sink_search row
+    with a NULL conv_id and one with text over 1 MiB land in
+    ``rejected_sink_search/epoch=0`` with their reasons, not in
+    ``sink_search``, and the epoch's ack counts them."""
+    from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
+
+    batch = _every_route_batch(spark, sf_dir, tmp_path)
+    row = batch.filter(F.col("route") == "sink_search").orderBy("conv_id", "turn_idx").limit(1)
+    batch = batch.unionByName(row.withColumn("conv_id", F.lit(None).cast("string"))).unionByName(
+        row.withColumn("text", F.repeat(F.lit("x"), (1 << 20) + 1)))
+    wh = str(tmp_path / "wh")
+    ss.route_sink_writer(wh, run_id="rej")(batch, 0)
+
+    rej = spark.read.parquet(f"{wh}/rejected_sink_search")
+    assert sorted((r["epoch"], r["reject_reason"]) for r in rej.collect()) == [
+        (0, "null_conv_id"), (0, "oversized_text")]
+    sink = spark.read.parquet(f"{wh}/sink_search")
+    assert sink.filter(F.col("conv_id").isNull() | (F.length("text") > 1 << 20)).count() == 0
+    n = batch.filter(F.col("route") == "sink_search").count() - 2
+    assert sink.count() == n
+    (ack,) = [m for m in CheckpointStore(wh, "rej").metrics() if m["stage"] == "stream.sink_search"]
+    assert (ack["rows_in"], ack["rows_out"], ack["rejected"]) == (n + 2, n, 2)
+    assert ack["partitions"][0]["rows"] == n
+
+
 def test_streaming_sink_schema_is_the_batch_sink_schema(spark, sf_dir, tmp_path):
     """A streaming sink table has the batch sink table's columns (plus
     its epoch partition column), for every route the flagship writes."""

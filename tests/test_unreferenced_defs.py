@@ -4,11 +4,13 @@ somewhere.
 A function nothing calls is dead code that still has to be read and kept
 working. Stdlib only: each module under ``opentelemetry_collector_spark/``
 is parsed with ``ast``, and a top-level ``def`` or ``class``, or a
-method of a top-level class, whose name occurs, as a whole word, nowhere
-but its own definition in the package, ``__spark_entry__.py``,
-``main.py``, ``perfbench/`` or ``tests/`` fails.
-A name counts wherever it occurs, in strings too (perfbench patches
-functions by name). A definition whose line carries ``# noqa`` is
+method of a top-level class, that nothing in the package,
+``__spark_entry__.py``, ``main.py``, ``perfbench/`` or ``tests/``
+references fails. A reference is a name, an attribute access, a name
+imported from the package, or a word in a string (perfbench patches
+functions by name). An attribute of a module or object imported from
+outside the package is not one: ``pq.read_table`` does not keep a
+``read_table`` def alive. A definition whose line carries ``# noqa`` is
 exempt.
 
 A second check counts only production callers (the package,
@@ -19,6 +21,7 @@ from __future__ import annotations
 
 import ast
 import re
+from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -31,18 +34,40 @@ def _sources() -> dict[Path, str]:
     return {p: p.read_text() for p in paths}
 
 
+def _references(tree: ast.Module) -> Counter:
+    """Names, attribute accesses, names imported from the package and
+    string words in ``tree``; attribute accesses on a name bound to an
+    import from outside the package are left out."""
+    foreign = {
+        a.asname or a.name.split(".")[0]
+        for node in ast.walk(tree) if isinstance(node, (ast.Import, ast.ImportFrom))
+        for a in node.names
+        if not (getattr(node, "module", None) or a.name).startswith(PACKAGE.name)
+    }
+    refs: Counter = Counter()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Name):
+            refs[node.id] += 1
+        elif isinstance(node, ast.Attribute):
+            if not (isinstance(node.value, ast.Name) and node.value.id in foreign):
+                refs[node.attr] += 1
+        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE.name):
+            refs.update(a.name for a in node.names)
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            refs.update(re.findall(r"\w+", node.value))
+    return refs
+
+
 def unreferenced_defs(sources: dict[Path, str]) -> list[str]:
-    words: dict[str, int] = {}
-    for text in sources.values():
-        for w in re.findall(r"\w+", text):
-            words[w] = words.get(w, 0) + 1
+    trees = {path: ast.parse(text) for path, text in sources.items()}
+    refs: Counter = sum(map(_references, trees.values()), Counter())
     hits = []
-    for path, text in sorted(sources.items()):
+    for path, tree in sorted(trees.items()):
         if not path.is_relative_to(PACKAGE):
             continue
-        lines = text.splitlines()
-        for node, qualname in _defs(ast.parse(text)):
-            if "# noqa" in lines[node.lineno - 1] or words[node.name] > 1:
+        lines = sources[path].splitlines()
+        for node, qualname in _defs(tree):
+            if "# noqa" in lines[node.lineno - 1] or refs[node.name]:
                 continue
             hits.append(f"{path.relative_to(ROOT)}:{node.lineno}: {qualname}")
     return hits
@@ -60,6 +85,18 @@ def _defs(tree: ast.Module):
             for m in node.body:
                 if isinstance(m, kinds[:2]) and not m.name.startswith("__"):
                     yield m, f"{node.name}.{m.name}"
+
+
+def test_library_attribute_is_no_reference():
+    """``pq.read_table`` names pyarrow's function, not the package's
+    ``read_table``; a call through a package module does reference it."""
+    sources = {
+        PACKAGE / "m.py": "def read_table(path):\n    return path\n",
+        ROOT / "main.py": "import pyarrow.parquet as pq\n\npq.read_table('x')\n",
+    }
+    assert unreferenced_defs(sources) == ["opentelemetry_collector_spark/m.py:1: read_table"]
+    sources[ROOT / "main.py"] += "from opentelemetry_collector_spark import m\n\nm.read_table('x')\n"
+    assert unreferenced_defs(sources) == []
 
 
 def test_package_defs_are_referenced():
