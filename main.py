@@ -85,9 +85,7 @@ def main(argv: list[str] | None = None) -> int:
             if src is None:
                 src = f"{args.warehouse}/_stream_src"
                 derive_transcripts(spark, args.sf_dir).write.mode("overwrite").parquet(src)
-            ss.run_available_now(
-                spark, src, args.warehouse, f"{args.warehouse}/_ckpt", accounting=False
-            )
+            ss.run_available_now(spark, src, args.warehouse, f"{args.warehouse}/_ckpt")
             print(json.dumps({"mode": "stream", "warehouse": args.warehouse}))
         else:
             from opentelemetry_collector_spark.plans.pipeline import run_pipeline

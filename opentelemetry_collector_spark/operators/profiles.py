@@ -78,9 +78,12 @@ def dense_index(df: DataFrame, key_col: str, out_col: str) -> DataFrame:
     (ORDER BY key) - 1`` — which would sort in ONE task — without the
     single-task bottleneck; this is how a 100 TB dictionary-encode
     stays parallel. Both engines derive identical indices (pure
-    lexicographic rank). The persisted block is released by the
-    ContextCleaner once the returned DataFrame's Python reference
-    drops — same lifecycle as the dedup pair frames."""
+    lexicographic rank). The persisted block is registered with
+    dedup.release_cached, like the dedup pair frames: Spark's
+    CacheManager holds a persisted plan until it is unpersisted, so
+    dropping the returned DataFrame does not free it."""
+    from opentelemetry_collector_spark.operators.dedup import _persist
+
     parts = df.repartitionByRange(F.col(key_col)).withColumn(
         "_pid", F.spark_partition_id()
     )
@@ -90,7 +93,7 @@ def dense_index(df: DataFrame, key_col: str, out_col: str) -> DataFrame:
     # same key a different (pid, rn) in different consumers — persist
     # BEFORE the counts collect so every downstream join reads the
     # indices the offsets were computed from
-    local = parts.withColumn("_rn", F.row_number().over(w)).persist()
+    local = _persist(parts.withColumn("_rn", F.row_number().over(w)))
     counts = sorted(
         local.groupBy("_pid").agg(F.max("_rn").alias("c")).collect(),
         key=lambda r: r["_pid"],

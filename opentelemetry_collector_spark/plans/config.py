@@ -23,11 +23,15 @@ run as ONE fan-out: one cached parent, one partitioned write for all
 its tables, the quarantine route's included, and one for the
 aggregates of all but quarantine (:func:`_fan_out`). Every table, a
 plain ``table`` exporter's too, is written by the one table writer
-sinks/tables.fan_out_write, which streaming micro-batches share: it
-flags, counts and splits rejected rows, so this module keeps only the
-policy (which constraints, lineage, acks and resume).
+sinks/tables.fan_out_write, which streaming micro-batches share: one
+call flags, counts and splits rejected rows, publishes the tables and
+removes its staging dir, so this module keeps only the policy (which
+constraints, lineage, acks and resume).
 This is the only batch executor; ``configs/flagship.yaml`` is the
-flagship job.
+flagship job. As in the reference (otelcol/collector.go:179-270), a
+run's behaviour comes from its resolved config alone: ``${...}``
+references resolve against the process environment, and no call
+parameter replaces a component.
 
 Component IDs follow the reference's ``type`` or ``type/name`` format
 (component/identifiable.go). Supported types:
@@ -49,9 +53,8 @@ from __future__ import annotations
 
 import os
 import re
-import shutil
 import time
-from collections.abc import Callable, Mapping
+from collections.abc import Callable
 from dataclasses import dataclass
 from functools import reduce
 
@@ -89,52 +92,54 @@ class ConfigError(ValueError):
 _REF_RE = re.compile(r"\$\$|\$\{((?:[^${}]|\{[^{}]*\})+)\}")
 
 
-def _default_providers() -> dict[str, Callable[[str, Mapping[str, str]], str]]:
-    """Built-in scheme providers, mirroring the reference's env, file
-    and yaml providers. A provider maps a URI to raw text; the resolved
-    text is YAML-parsed when the reference was the entire string (so
-    ``port: ${env:PORT}`` yields an int, exactly like confmap).
-
-    Out of scope v1: the reference's ``http://`` / ``https://``
-    providers (confmap/provider/httpprovider, httpsprovider) — config
-    fetched over the network at submit time is an anti-pattern for a
-    Spark job (the driver may relaunch where the endpoint is absent;
-    cluster configs belong in the artifact store shipped with the job),
-    and this sandbox has no network. The provider registry is a plain
-    dict, so a deployment that needs them registers a scheme in one
-    line."""
-
-    def env_provider(uri: str, env: Mapping[str, str]) -> str:
-        if uri not in env:
-            raise ConfigError(f"environment variable {uri!r} is not set")
-        return env[uri]
-
-    def file_provider(uri: str, env: Mapping[str, str]) -> str:
-        try:
-            with open(uri) as f:
-                return f.read()
-        except OSError as e:
-            raise ConfigError(f"cannot read ${{file:{uri}}}: {e}") from e
-
-    def yaml_provider(uri: str, env: Mapping[str, str]) -> str:
-        """Inline-YAML provider (confmap/provider/yamlprovider): the
-        URI body IS the value, e.g. ``${yaml:[a, b]}`` or
-        ``${yaml:{timeout: 2s}}`` — returned as text here and
-        YAML-parsed type-preservingly by _expand_value exactly like
-        env/file payloads. Validation happens at parse time so a
-        malformed fragment fails at config load, not at first use."""
-        import yaml as _yaml
-
-        try:
-            _yaml.safe_load(uri)
-        except _yaml.YAMLError as e:
-            raise ConfigError(f"${{yaml:...}}: invalid YAML fragment: {e}") from e
-        return uri
-
-    return {"env": env_provider, "file": file_provider, "yaml": yaml_provider}
+def _env_provider(uri: str) -> str:
+    if uri not in os.environ:
+        raise ConfigError(f"environment variable {uri!r} is not set")
+    return os.environ[uri]
 
 
-def _resolve_ref(inner: str, env: Mapping[str, str], providers) -> str:
+def _file_provider(uri: str) -> str:
+    try:
+        with open(uri) as f:
+            return f.read()
+    except OSError as e:
+        raise ConfigError(f"cannot read ${{file:{uri}}}: {e}") from e
+
+
+def _yaml_provider(uri: str) -> str:
+    """Inline-YAML provider (confmap/provider/yamlprovider): the URI
+    body IS the value, e.g. ``${yaml:[a, b]}`` or ``${yaml:{timeout:
+    2s}}`` — returned as text here and YAML-parsed type-preservingly by
+    _expand_value exactly like env/file payloads. Validation happens at
+    parse time so a malformed fragment fails at config load, not at
+    first use."""
+    import yaml
+
+    try:
+        yaml.safe_load(uri)
+    except yaml.YAMLError as e:
+        raise ConfigError(f"${{yaml:...}}: invalid YAML fragment: {e}") from e
+    return uri
+
+
+# Built-in scheme providers, mirroring the reference's env, file and
+# yaml providers. A provider maps a URI to raw text; the resolved text
+# is YAML-parsed when the reference was the entire string (so ``port:
+# ${env:PORT}`` yields an int, exactly like confmap).
+#
+# Out of scope v1: the reference's ``http://`` / ``https://`` providers
+# (confmap/provider/httpprovider, httpsprovider) — config fetched over
+# the network at submit time is an anti-pattern for a Spark job (the
+# driver may relaunch where the endpoint is absent; cluster configs
+# belong in the artifact store shipped with the job). The registry is a
+# plain dict, so a deployment that needs them registers a scheme in one
+# line.
+PROVIDERS: dict[str, Callable[[str], str]] = {
+    "env": _env_provider, "file": _file_provider, "yaml": _yaml_provider,
+}
+
+
+def _resolve_ref(inner: str) -> str:
     """Resolve the inside of one ``${...}`` to raw text. Syntax
     (envprovider): ``env:NAME``, ``env:NAME:-default``, and the bare
     legacy form ``NAME`` / ``NAME:-default`` (default scheme env)."""
@@ -151,21 +156,21 @@ def _resolve_ref(inner: str, env: Mapping[str, str], providers) -> str:
             scheme, uri = ref.split(":", 1)
         else:
             scheme, uri = "env", ref
-    provider = providers.get(scheme)
+    provider = PROVIDERS.get(scheme)
     if provider is None:
         raise ConfigError(
             f"config reference ${{{inner}}}: unsupported scheme {scheme!r} "
-            f"(have: {', '.join(sorted(providers))})"
+            f"(have: {', '.join(sorted(PROVIDERS))})"
         )
     try:
-        return provider(uri, env)
+        return provider(uri)
     except ConfigError:
         if default is not None:
             return default
         raise
 
 
-def _expand_value(v, env: Mapping[str, str], providers):
+def _expand_value(v):
     """Recursively expand ``${scheme:uri}`` references in a loaded YAML
     structure. A string that is exactly one reference resolves to the
     YAML-parsed value (type-preserving); embedded references substitute
@@ -173,15 +178,15 @@ def _expand_value(v, env: Mapping[str, str], providers):
     import yaml
 
     if isinstance(v, dict):
-        return {k: _expand_value(x, env, providers) for k, x in v.items()}
+        return {k: _expand_value(x) for k, x in v.items()}
     if isinstance(v, list):
-        return [_expand_value(x, env, providers) for x in v]
+        return [_expand_value(x) for x in v]
     if not isinstance(v, str) or "$" not in v:
         return v
 
     whole = _REF_RE.fullmatch(v)
     if whole and whole.group(1) is not None:
-        text = _resolve_ref(whole.group(1), env, providers)
+        text = _resolve_ref(whole.group(1))
         try:
             return yaml.safe_load(text)
         except yaml.YAMLError:
@@ -190,7 +195,7 @@ def _expand_value(v, env: Mapping[str, str], providers):
     def sub(m: re.Match) -> str:
         if m.group(0) == "$$":
             return "$"
-        return _resolve_ref(m.group(1), env, providers)
+        return _resolve_ref(m.group(1))
 
     return _REF_RE.sub(sub, v)
 
@@ -234,36 +239,23 @@ class ServiceConfig:
     pipelines: dict[str, ServicePipeline]
 
     @staticmethod
-    def from_yaml(
-        text: str,
-        env: Mapping[str, str] | None = None,
-        providers: dict | None = None,
-    ) -> "ServiceConfig":
+    def from_yaml(text: str) -> "ServiceConfig":
         """Load one YAML source, resolving ``${env:VAR}`` /
-        ``${env:VAR:-default}`` / ``${file:path}`` references
-        (confmap/resolver.go:73-128; providers under confmap/provider/).
-        ``env`` defaults to os.environ; pass a mapping to pin it in
-        tests. Unresolvable references raise ConfigError."""
+        ``${env:VAR:-default}`` / ``${file:path}`` / ``${yaml:...}``
+        references (confmap/resolver.go:73-128; providers under
+        confmap/provider/) against the process environment.
+        Unresolvable references raise ConfigError."""
         import yaml
 
-        raw = yaml.safe_load(text) or {}
-        raw = _expand_value(
-            raw, os.environ if env is None else env,
-            providers or _default_providers(),
-        )
-        return ServiceConfig.from_dict(raw)
+        return ServiceConfig.from_dict(_expand_value(yaml.safe_load(text) or {}))
 
     @staticmethod
-    def from_file(path: str, **kw) -> "ServiceConfig":
+    def from_file(path: str) -> "ServiceConfig":
         with open(path) as f:
-            return ServiceConfig.from_yaml(f.read(), **kw)
+            return ServiceConfig.from_yaml(f.read())
 
     @staticmethod
-    def from_files(
-        paths: list[str],
-        env: Mapping[str, str] | None = None,
-        providers: dict | None = None,
-    ) -> "ServiceConfig":
+    def from_files(paths: list[str]) -> "ServiceConfig":
         """Multi-source config: later files deep-merge over earlier ones
         (maps merge recursively, scalars/lists replace — the resolver's
         Conf.Merge semantics), THEN references expand over the merged
@@ -276,11 +268,7 @@ class ServiceConfig:
         for p in paths:
             with open(p) as f:
                 merged = _deep_merge(merged, yaml.safe_load(f.read()) or {})
-        merged = _expand_value(
-            merged, os.environ if env is None else env,
-            providers or _default_providers(),
-        )
-        return ServiceConfig.from_dict(merged)
+        return ServiceConfig.from_dict(_expand_value(merged))
 
     @staticmethod
     def from_dict(raw: dict) -> "ServiceConfig":
@@ -555,7 +543,6 @@ def run(
     spark: SparkSession,
     warehouse: str,
     run_id: str | None = None,
-    source: Callable[[SparkSession], DataFrame] | None = None,
 ) -> dict[str, int]:
     """Execute ``cfg``'s graph: pipelines in topo order, connectors carrying
     lazy sub-plans between them. A router connector and the pipelines it
@@ -573,8 +560,6 @@ def run(
     (``spark.sql.files.maxRecordsPerFile``, session.py), acked in the
     run's CheckpointStore: a re-run with the same ``run_id`` skips the
     acked stages (persistent_queue.go:321-428).
-
-    Test hook: ``source`` replaces every receiver's scan.
     """
     catalog = TableCatalog(spark, warehouse)
     ckpt = CheckpointStore(warehouse, run_id)
@@ -600,8 +585,7 @@ def run(
                 raise ConfigError(f"connector {rid!r}: unknown type {_ctype(rid)!r}")
             return reduce(DataFrame.unionByName, conn_inputs[rid])
         if rid not in rcv_cache:
-            rcv_cache[rid] = _shared(rid, source(spark) if source else
-                                     _make_receiver(rid, cfg.receivers[rid] or {}, spark))
+            rcv_cache[rid] = _shared(rid, _make_receiver(rid, cfg.receivers[rid] or {}, spark))
         return rcv_cache[rid]
 
     try:
@@ -702,12 +686,11 @@ def _fan_out(
     the default sink constraints go to ``rejected_<table>``, counted in
     the ack), ONE for the ``agg_<table>`` tables of every route but
     ``quarantine``, which checks no constraint, then the ``lineage``
-    table. Each table is published and acked in route order, the shared
-    write's time counting toward every ack, so a resume writes only the
-    un-acked tables (persistent_queue.go:321-428); the staging dir is
-    removed either way.
+    table. Each write publishes its tables and removes its staging dir
+    itself; the tables are then acked in route order, the shared write's
+    time counting toward every ack, so a resume writes only the
+    un-acked tables (persistent_queue.go:321-428).
     """
-    staging = f"_staging_{ckpt.run_id}"
     route = F.col("route")
 
     def _lineage_table() -> tuple[int, int, dict]:
@@ -717,9 +700,9 @@ def _fan_out(
 
     routed = df.persist()
     try:
-        write_sinks = [s for s in tables if not ckpt.is_done(f"write_{tables[s]}")]
-        agg_sinks = [s for s in tables
-                     if s != QUARANTINE and not ckpt.is_done(f"agg_{tables[s]}")]
+        write_sinks = {s: t for s, t in tables.items() if not ckpt.is_done(f"write_{t}")}
+        agg_sinks = {s: f"agg_{t}" for s, t in tables.items()
+                     if s != QUARANTINE and not ckpt.is_done(f"agg_{t}")}
 
         if write_sinks:
             # Per-partition logical lineage of the rows the writer accepts,
@@ -731,30 +714,29 @@ def _fan_out(
                     {"part_id": r["part_id"], "rows": r["rows"], "bytes": r["bytes"]}
                 )
             t0 = time.monotonic()
-            publish = fan_out_write(catalog, f"{staging}/sinks",
-                                    routed.withColumn("_sink", route), "_sink", write_sinks)
-            for s in write_sinks:
-                t = tables[s]
-                n, r = publish(s, t)
-                ckpt.commit(f"write_{t}", n + r, n, int((time.monotonic() - t0) * 1000), {
+            got = fan_out_write(catalog, f"_staging_{ckpt.run_id}_sinks",
+                                routed.withColumn("_sink", route), "_sink", write_sinks)
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            for s, t in write_sinks.items():
+                n, r = got[s]["accepted"], got[s]["rejected"]
+                ckpt.commit(f"write_{t}", n + r, n, wall_ms, {
                     "sink": t, "rejected": r, "partitions": lineage.get(s, []),
                     "files": lineage_ops.file_lineage(catalog.path(t)),
                 })
         if agg_sinks:
             t0 = time.monotonic()
-            publish = fan_out_write(
-                catalog, f"{staging}/aggs",
-                agg_ops.hourly_sink_accounting(routed.filter(route.isin(agg_sinks))),
+            got = fan_out_write(
+                catalog, f"_staging_{ckpt.run_id}_aggs",
+                agg_ops.hourly_sink_accounting(routed.filter(route.isin(list(agg_sinks)))),
                 "route", agg_sinks, constraints=[],
             )
-            for s in agg_sinks:
-                t = f"agg_{tables[s]}"
-                n, _ = publish(s, t)
-                ckpt.commit(t, n, n, int((time.monotonic() - t0) * 1000), {
+            wall_ms = int((time.monotonic() - t0) * 1000)
+            for s, t in agg_sinks.items():
+                n = got[s]["accepted"]
+                ckpt.commit(t, n, n, wall_ms, {
                     "sink": tables[s], "files": lineage_ops.file_lineage(catalog.path(t)),
                 })
         ckpt.gate("lineage", _lineage_table)
     finally:
         routed.unpersist()
-        shutil.rmtree(catalog.path(staging), ignore_errors=True)
     return {rv: f"write_{t}" for rv, t in tables.items()}

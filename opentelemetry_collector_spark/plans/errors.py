@@ -17,7 +17,6 @@ retry: configretry/backoff.go:17-21). Our batch mapping:
 
 from __future__ import annotations
 
-import shutil
 import time
 import uuid
 from collections.abc import Callable
@@ -64,13 +63,9 @@ def write_with_partial_success(
 
     One route of the table writer sinks/tables.fan_out_write. Returns
     (accepted_rows, rejected_rows)."""
-    staging = f"_staging_{uuid.uuid4().hex}"
-    try:
-        publish = fan_out_write(catalog, staging, df.withColumn("_table", F.lit("t")),
-                                "_table", ["t"], constraints)
-        return publish("t", table)
-    finally:
-        shutil.rmtree(catalog.path(staging), ignore_errors=True)
+    got = fan_out_write(catalog, f"_staging_{uuid.uuid4().hex}",
+                        df.withColumn("_table", F.lit("t")), "_table", {"t": table}, constraints)
+    return got["t"]["accepted"], got["t"]["rejected"]
 
 
 def with_retry(

@@ -44,41 +44,26 @@ def det_partition_id(c: Column, n: int = DEFAULT_LINEAGE_PARTITIONS) -> Column:
     """Deterministic partition id: first 8 md5 hex chars of the key as an
     integer, mod n. Engine-independent (Spark ``conv(hex,16,10)`` ==
     DuckDB ``CAST('0x'||hex AS BIGINT)``; value ≤ 0xFFFFFFFF so plain
-    ``%`` is non-negative in both) — the oracle twin is
-    :func:`det_partition_id_sql`."""
+    ``%`` is non-negative in both) — the ``lineage`` oracle in
+    ``__spark_entry__.oracle_sql()`` writes the same expression."""
     return (
         F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % F.lit(n)
     ).cast("int")
 
 
-def det_partition_id_sql(col_sql: str, n: int = DEFAULT_LINEAGE_PARTITIONS) -> str:
-    """DuckDB twin of :func:`det_partition_id`."""
+def logical_lineage(df: DataFrame) -> DataFrame:
+    """Rows + payload bytes per (``route``, partition of ``conv_id``) in
+    one aggregation.
+
+    ``bytes`` is the UTF-8 size of ``text`` (octet_length — DuckDB twin
+    is strlen), the LogsSizer analog for a text pipeline. Partial
+    (map-side) aggregation applies; output cardinality is |routes| ×
+    :data:`DEFAULT_LINEAGE_PARTITIONS` — tiny."""
     return (
-        f"CAST(CAST(concat('0x', substr(md5({col_sql}), 1, 8)) AS BIGINT) "
-        f"% {n} AS INT)"
-    )
-
-
-def logical_lineage(
-    df: DataFrame,
-    keys: list[str] | None = None,
-    part_col: str = "conv_id",
-    bytes_col: str = "text",
-    n: int = DEFAULT_LINEAGE_PARTITIONS,
-) -> DataFrame:
-    """Per-(key..., partition) rows + payload bytes in one aggregation.
-
-    ``bytes`` is the UTF-8 payload size (octet_length — DuckDB twin is
-    strlen), the LogsSizer analog for a text pipeline. Partial (map-side)
-    aggregation applies; output cardinality is |keys| × n — tiny."""
-    keys = keys if keys is not None else ["route"]
-    return (
-        df.groupBy(
-            *keys, det_partition_id(F.col(part_col), n).alias("part_id")
-        )
+        df.groupBy("route", det_partition_id(F.col("conv_id")).alias("part_id"))
         .agg(
             F.count(F.lit(1)).alias("rows"),
-            F.sum(F.octet_length(F.col(bytes_col))).alias("bytes"),
+            F.sum(F.octet_length(F.col("text"))).alias("bytes"),
         )
     )
 

@@ -17,10 +17,9 @@ write the same warehouse.
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 
 from opentelemetry_collector_spark.operators.route import QUARANTINE
 from opentelemetry_collector_spark.plans import config
@@ -46,18 +45,16 @@ def run_pipeline(
     sf_dir: str,
     warehouse: str,
     run_id: str | None = None,
-    source: Callable[[SparkSession], DataFrame] | None = None,
 ) -> RunResult:
     """Run ``configs/flagship.yaml`` over the transcripts of ``sf_dir``
-    (or over ``source``'s rows) into ``warehouse``, checkpoint-gated per
-    stage: re-running with the same ``run_id`` skips the acked stages.
-    ``source`` passes through to plans/config.run.
+    into ``warehouse``, checkpoint-gated per stage: re-running with the
+    same ``run_id`` skips the acked stages.
     """
     cfg = config.ServiceConfig.from_file(FLAGSHIP_CONFIG)
     cfg.receivers["transcripts"]["sf_dir"] = sf_dir
     ckpt = CheckpointStore(warehouse, run_id)
     skipped = [m["stage"] for m in ckpt.metrics()]
-    config.run(cfg, spark, warehouse, run_id=ckpt.run_id, source=source)
+    config.run(cfg, spark, warehouse, run_id=ckpt.run_id)
     metrics = ckpt.metrics()
     written = {
         m["sink"]: m["rows_out"] for m in metrics

@@ -13,7 +13,9 @@ property the reference's persistent-queue ack protocol exists to provide
 
 Router sinks, aggregates, plain ``table`` exporters and streaming epochs
 all write through :func:`fan_out_write`, which applies OTLP partial
-success once: a rejected row lands in ``rejected_<table>``.
+success once (a rejected row lands in ``rejected_<table>``). One call
+writes, publishes every table and removes its staging dir; the caller
+only acks.
 
 Rows per file are bounded by the session's
 ``spark.sql.files.maxRecordsPerFile`` (session.py), the reference's
@@ -25,7 +27,6 @@ from __future__ import annotations
 
 import os
 import shutil
-from collections.abc import Callable
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -106,62 +107,61 @@ class TableCatalog:
         return self.spark.read.parquet(self.path(table))
 
 
-# Default sink-write row contract (the exporter's input validation; a
+# The sink-write row contract (the exporter's input validation; a
 # violating row is the per-push "rejected_log_records" of OTLP partial
-# success, exporter/otlpexporter/otlp.go:143-149). max item size plays
-# the batch sender's max-size role.
-MAX_SINK_TEXT_BYTES = 1 << 20
-
-
-def default_sink_constraints(max_text_bytes: int = MAX_SINK_TEXT_BYTES) -> list[tuple[str, str]]:
-    """(reason, passes) pairs, ``passes`` a SQL predicate, checked in
-    order; first failure names the rejection reason."""
-    return [
-        ("null_conv_id", "conv_id IS NOT NULL"),
-        ("negative_turn_idx", "turn_idx >= 0"),
-        ("oversized_text", f"octet_length(text) <= {max_text_bytes}"),
-    ]
+# success, exporter/otlpexporter/otlp.go:143-149): (reason, passes)
+# pairs, ``passes`` a SQL predicate, checked in order. The 1 MiB text
+# cap plays the batch sender's max-size role.
+SINK_CONSTRAINTS = [
+    ("null_conv_id", "conv_id IS NOT NULL"),
+    ("negative_turn_idx", "turn_idx >= 0"),
+    ("oversized_text", f"octet_length(text) <= {1 << 20}"),
+]
 
 
 def reject_reason(constraints: list[tuple[str, str]] | None = None) -> Column:
     """The name of the first constraint a row fails, NULL for a valid
-    row. A NULL check result counts as a failure. ``None`` checks the
-    default sink constraints; ``[]`` checks nothing. One SQL CASE: built
+    row. A NULL check result counts as a failure. ``None`` checks
+    :data:`SINK_CONSTRAINTS`; ``[]`` checks nothing. One SQL CASE: built
     operator by operator it would cost a JVM round trip each."""
     if constraints is None:
-        constraints = default_sink_constraints()
+        constraints = SINK_CONSTRAINTS
     whens = "".join(f" WHEN NOT coalesce({ok}, false) THEN '{name}'" for name, ok in constraints)
     return F.expr(f"CASE{whens} END" if whens else "CAST(NULL AS STRING)")
 
 
 def fan_out_write(
-    catalog: TableCatalog, staging: str, df: DataFrame, by: str, values: list[str],
+    catalog: TableCatalog, staging: str, df: DataFrame, by: str, tables: dict[str, str],
     constraints: list[tuple[str, str]] | None = None,
     sums: dict[str, str] | None = None,
-) -> Callable[[str, str], tuple[int, int]]:
-    """The one table writer. Flags each row of ``df`` whose ``by`` column
-    holds one of ``values`` with :func:`reject_reason` of ``constraints``
+) -> dict[str, dict[str, int]]:
+    """The one table writer: writes the rows of ``df`` whose ``by``
+    column holds a key of ``tables`` to that key's table, publishes
+    every table and removes ``staging``, all in one call.
+
+    Each row is flagged with :func:`reject_reason` of ``constraints``
     (OTLP partial success, exporter/otlpexporter/otlp.go:143-149). ONE
     Observation above the validity filter (a pushdown barrier, so it
     sees every row) counts accepted and rejected rows per value and sums
-    each SQL expression of ``sums`` over the accepted ones
-    (``publish.observed["<name>:<value>"]``).
-    The accepted rows are written once into ``staging``, partitioned by
-    ``by``; the rejected ones, with their ``reject_reason``, take one
-    more write only when some value has any.
+    each SQL expression of ``sums`` over the accepted ones. The accepted
+    rows are written once into ``staging``, partitioned by ``by``; the
+    rejected ones, with their ``reject_reason``, take one more write
+    only when some value has any. Then each value's rows move to its
+    table (a value with none gets an empty table written on the driver,
+    no Spark job) and its rejected rows to ``rejected_<table>`` (removed
+    when it has none).
 
-    Returns ``publish(value, table)``: it moves the value's rows to
-    ``table`` (a value with none gets an empty table written on the
-    driver, no Spark job) and its rejected rows to ``rejected_<table>``
-    (removed when it has none), and returns its ``(accepted, rejected)``.
-    The caller removes ``staging``."""
+    Returns ``{value: {"accepted": n, "rejected": r, <sum>: s, ...}}``.
+    The caller acks each table after the return; a table whose ack a
+    crash prevents is rewritten by the resume, an idempotent overwrite."""
     key, ok = F.col(by), F.col("_reject_reason").isNull()
-    flagged = df.filter(key.isin(values)).withColumn("_reject_reason", reject_reason(constraints))
+    flagged = df.filter(key.isin(list(tables))).withColumn(
+        "_reject_reason", reject_reason(constraints))
     # one SQL expression per metric (values are route names), as in
     # reject_reason: ~0.1 s less driver time a write than Column operators
     metrics = [
         F.expr(f"{agg} AS `{name}:{v}`")
-        for v in values
+        for v in tables
         for name, agg in (
             ("accepted", f"count_if(`{by}` = '{v}' AND _reject_reason IS NULL)"),
             ("rejected", f"count_if(`{by}` = '{v}' AND _reject_reason IS NOT NULL)"),
@@ -171,28 +171,27 @@ def fan_out_write(
     ]
     obs = Observation()
     accepted = flagged.observe(obs, *metrics).filter(ok).drop("_reject_reason")
-    catalog.overwrite(f"{staging}/accepted", accepted, partition_by=[by])
-    got = obs.get
-    if any(got[f"rejected:{v}"] for v in values):
-        rejected = flagged.filter(~ok).withColumnRenamed("_reject_reason", "reject_reason")
-        catalog.overwrite(f"{staging}/rejected", rejected, partition_by=[by])
-    schema = to_arrow_schema(accepted.drop(by).schema)
-
-    def publish(value: str, table: str) -> tuple[int, int]:
-        n, r = got[f"accepted:{value}"], got[f"rejected:{value}"]
-        for kind, rows, dst in (("accepted", n, table), ("rejected", r, f"rejected_{table}")):
-            path = catalog.path(dst)
-            shutil.rmtree(path, ignore_errors=True)
-            if rows:
-                os.makedirs(os.path.dirname(path), exist_ok=True)
-                os.rename(catalog.path(f"{staging}/{kind}/{by}={value}"), path)
-                open(os.path.join(path, "_SUCCESS"), "w").close()
-        if not n:
-            catalog.overwrite_local(table, [], schema)
-        return n, r
-
-    publish.observed = got
-    return publish
+    try:
+        catalog.overwrite(f"{staging}/accepted", accepted, partition_by=[by])
+        got = obs.get
+        if any(got[f"rejected:{v}"] for v in tables):
+            rejected = flagged.filter(~ok).withColumnRenamed("_reject_reason", "reject_reason")
+            catalog.overwrite(f"{staging}/rejected", rejected, partition_by=[by])
+        schema = to_arrow_schema(accepted.drop(by).schema)
+        for value, table in tables.items():
+            for kind, dst in (("accepted", table), ("rejected", f"rejected_{table}")):
+                path = catalog.path(dst)
+                shutil.rmtree(path, ignore_errors=True)
+                if got[f"{kind}:{value}"]:
+                    os.makedirs(os.path.dirname(path), exist_ok=True)
+                    os.rename(catalog.path(f"{staging}/{kind}/{by}={value}"), path)
+                    open(os.path.join(path, "_SUCCESS"), "w").close()
+            if not got[f"accepted:{value}"]:
+                catalog.overwrite_local(table, [], schema)
+        return {v: {m: got[f"{m}:{v}"] for m in ("accepted", "rejected", *(sums or {}))}
+                for v in tables}
+    finally:
+        shutil.rmtree(catalog.path(staging), ignore_errors=True)
 
 
 def debug_format(df: DataFrame, verbosity: str = "normal") -> DataFrame:

@@ -9,13 +9,15 @@ with:
 
 * event-time tumbling windows + watermark for the batchprocessor-style
   accounting (the timeout flush becomes the watermark-driven state
-  eviction);
+  eviction): :func:`windowed_accounting`, a query of its own (the
+  contract's ``streaming_accounting``), not part of
+  :func:`run_available_now`;
 * ``foreachBatch`` fan-out to per-route tables through the batch
-  fan-out's write (sinks/tables.fan_out_write): one partitioned write
-  per micro-batch, every route the flagship writes, quarantine
-  included, with the batch sink schema and partial success —
-  checkpointed by Spark's streaming offset log instead of our
-  checkpoint table;
+  fan-out's write (sinks/tables.fan_out_write): one call per
+  micro-batch writes every route the flagship writes, quarantine
+  included, with the batch sink schema and partial success, publishes
+  the tables and removes its staging dir — checkpointed by Spark's
+  streaming offset log instead of our checkpoint table;
 * per-(epoch, route) acks through the batch pipeline's one
   ``CheckpointStore.commit`` call, and ``flush_lineage()``, which writes
   the stream run's own file of the shared ``lineage`` table — the batch
@@ -77,8 +79,15 @@ def transform(stream: DataFrame, spark: SparkSession) -> DataFrame:
     return route_ops.route_stage(enriched, route_ops.route_or_quarantine())
 
 
-def windowed_accounting(routed: DataFrame, watermark: str = "2 hours",
-                        window: str = "1 hour") -> DataFrame:
+# The accounting's event-time window and how late a row may arrive: a
+# window is emitted once the watermark (max event time - 2 h) passes
+# its end. The contract oracle (__spark_entry__ streaming_accounting)
+# applies the same cut.
+ACCOUNTING_WINDOW = "1 hour"
+ACCOUNTING_WATERMARK = "2 hours"
+
+
+def windowed_accounting(routed: DataFrame) -> DataFrame:
     """Streaming batchprocessor accounting: watermarked tumbling-window
     counts per (route, conv_id, tool). Late rows beyond the watermark
     are dropped from state — the bounded-memory analog of the batch
@@ -89,9 +98,9 @@ def windowed_accounting(routed: DataFrame, watermark: str = "2 hours",
     return (
         routed.filter(F.col("route") != route_ops.QUARANTINE)
         .withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", ACCOUNTING_WATERMARK)
         .groupBy(
-            F.window("ts", window).alias("w"),
+            F.window("ts", ACCOUNTING_WINDOW).alias("w"),
             "route", "conv_id", "tool",
         )
         .agg(
@@ -122,9 +131,10 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     The epoch write is the batch fan-out's primitive
     (sinks/tables.fan_out_write): ONE write of the micro-batch,
     partitioned by route, into a per-epoch staging dir under
-    ``data_dir``, removed afterwards. The route domain is static — the
-    configured exporter set, as the reference's fanout consumer is built
-    from the config graph — so no driver round-trip finds the routes.
+    ``data_dir``, which the same call publishes and removes. The route
+    domain is static — the configured exporter set, as the reference's
+    fanout consumer is built from the config graph — so no driver
+    round-trip finds the routes.
 
     A row failing the batch sink constraints lands in
     ``rejected_<route>/epoch=N``. Per-(epoch, route) counts and accepted
@@ -145,7 +155,6 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     ``data_dir`` somewhere else (the lineage store still shares the
     warehouse) or clear the table."""
     import os
-    import shutil
     import time
 
     from opentelemetry_collector_spark.plans.checkpoint import CheckpointStore
@@ -182,25 +191,21 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     def write_batch(batch_df: DataFrame, epoch_id: int) -> None:
         for sink in routes:
             _guard_layout(sink)
-        catalog = TableCatalog(batch_df.sparkSession, tables)
-        staging = f"_staging_{ckpt.run_id}_{epoch_id:08d}"
         t0 = time.monotonic()
-        try:
-            publish = fan_out_write(
-                catalog, staging, batch_df.withColumn("_sink", F.col("route")), "_sink",
-                routes, sums={"bytes": "octet_length(text)"},
-            )
-            for sink in routes:
-                n, r = publish(sink, f"{sink}/epoch={epoch_id}")
-                # the shared write's time counts toward every route
-                ckpt.commit(f"stream.{sink}", n + r, n,
-                            int((time.monotonic() - t0) * 1000), {
-                                "epoch": epoch_id, "sink": sink, "rejected": r,
-                                "partitions": [{"part_id": epoch_id, "rows": n,
-                                                "bytes": publish.observed[f"bytes:{sink}"]}],
-                            })
-        finally:
-            shutil.rmtree(catalog.path(staging), ignore_errors=True)
+        got = fan_out_write(
+            TableCatalog(batch_df.sparkSession, tables), f"_staging_{ckpt.run_id}_{epoch_id:08d}",
+            batch_df.withColumn("_sink", F.col("route")), "_sink",
+            {sink: f"{sink}/epoch={epoch_id}" for sink in routes},
+            sums={"bytes": "octet_length(text)"},
+        )
+        # the shared write's time counts toward every route
+        wall_ms = int((time.monotonic() - t0) * 1000)
+        for sink in routes:
+            n, r = got[sink]["accepted"], got[sink]["rejected"]
+            ckpt.commit(f"stream.{sink}", n + r, n, wall_ms, {
+                "epoch": epoch_id, "sink": sink, "rejected": r,
+                "partitions": [{"part_id": epoch_id, "rows": n, "bytes": got[sink]["bytes"]}],
+            })
 
     write_batch.flush_lineage = ckpt.write_lineage_table
     return write_batch
@@ -271,11 +276,11 @@ def run_available_now(
     src_path: str,
     warehouse: str,
     checkpoint: str,
-    accounting: bool = True,
-):
-    """One catch-up pass over everything currently in ``src_path``:
-    routed sink writes + (optionally) windowed accounting to memory.
-    Returns the accounting query name for inspection."""
+) -> None:
+    """One catch-up pass over everything currently in ``src_path``: the
+    routed sink writes, then their lineage flush. The windowed
+    accounting runs as its own query (``__spark_entry__``'s
+    ``streaming_accounting``)."""
     routed = transform(stream_transcripts(spark, src_path), spark)
     # STABLE run_id derived from the checkpoint location: a restarted
     # stream (foreachBatch's at-least-once replay) re-acks its epochs
@@ -288,25 +293,12 @@ def run_available_now(
         warehouse,
         run_id="stream" + hashlib.md5(checkpoint.encode()).hexdigest()[:10],
     )
-    q1 = (
+    q = (
         routed.writeStream.foreachBatch(writer)
         .option("checkpointLocation", f"{checkpoint}/route")
         .trigger(availableNow=True)
         .start()
     )
-    q1.awaitTermination()
+    q.awaitTermination()
     # flatten the per-(epoch, sink) acks into the shared lineage table
     writer.flush_lineage()
-    if accounting:
-        acc = windowed_accounting(routed)
-        q2 = (
-            acc.writeStream.format("memory")
-            .queryName("stream_accounting")
-            .outputMode("append")
-            .option("checkpointLocation", f"{checkpoint}/acc")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q2.awaitTermination()
-        return "stream_accounting"
-    return None

@@ -52,6 +52,21 @@ def jobs_of(spark):
 
 
 @pytest.fixture
+def receiver_rows(monkeypatch):
+    """``with receiver_rows(df):`` makes every receiver that
+    plans/config.run builds (run_pipeline's included) scan ``df``."""
+    from opentelemetry_collector_spark.plans import config
+
+    @contextlib.contextmanager
+    def scan(df):
+        with monkeypatch.context() as m:
+            m.setattr(config, "_make_receiver", lambda cid, opts, spark: df)
+            yield
+
+    return scan
+
+
+@pytest.fixture
 def crash_after_ack(monkeypatch):
     """``with crash_after_ack(stage):`` makes ``CheckpointStore.commit``
     raise right after ``stage``'s ack is written — the kill point of a

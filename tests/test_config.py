@@ -185,7 +185,7 @@ def test_attributes_processor_from_config(spark, sf_dir, tmp_path):
     assert "env" in row["ks"] and "msg" not in row["ks"]
 
 
-def test_env_expansion_basic_and_default():
+def test_env_expansion_basic_and_default(monkeypatch):
     """${env:VAR} / ${env:VAR:-default} resolution with type-preserving
     whole-string refs (confmap/resolver.go:73-128, envprovider)."""
     raw = _base({"logs": {"receivers": ["transcripts"], "exporters": ["table/a"]}})
@@ -194,16 +194,20 @@ def test_env_expansion_basic_and_default():
     text = yaml.safe_dump(raw).replace(
         "sf_dir: /root/testdata/sf0.001", "sf_dir: ${env:GRAFT_SF}"
     )
-    cfg = ServiceConfig.from_yaml(text, env={"GRAFT_SF": "/tmp/somewhere"})
+    monkeypatch.setenv("GRAFT_SF", "/tmp/somewhere")
+    cfg = ServiceConfig.from_yaml(text)
     assert cfg.receivers["transcripts"]["sf_dir"] == "/tmp/somewhere"
     # default used when unset; env wins when set
+    monkeypatch.delenv("GRAFT_SF")
     cfg2 = ServiceConfig.from_yaml(
-        text.replace("${env:GRAFT_SF}", "${env:GRAFT_SF:-/d/efault}"), env={}
+        text.replace("${env:GRAFT_SF}", "${env:GRAFT_SF:-/d/efault}")
     )
     assert cfg2.receivers["transcripts"]["sf_dir"] == "/d/efault"
 
 
-def test_env_expansion_type_preserving_and_embedded():
+def test_env_expansion_type_preserving_and_embedded(monkeypatch):
+    for name, value in {"PORT": "8080", "FLAG": "true", "HOST": "h1"}.items():
+        monkeypatch.setenv(name, value)
     out = cfg_mod._expand_value(
         {
             "port": "${env:PORT}",
@@ -211,8 +215,6 @@ def test_env_expansion_type_preserving_and_embedded():
             "url": "http://${env:HOST}:${env:PORT}/x",
             "lit": "cost is $$5",
         },
-        {"PORT": "8080", "FLAG": "true", "HOST": "h1"},
-        cfg_mod._default_providers(),
     )
     assert out["port"] == 8080 and out["flag"] is True  # YAML-parsed
     assert out["url"] == "http://h1:8080/x"  # embedded: text substitution
@@ -230,57 +232,44 @@ def test_yaml_provider_inline_fragments():
             "map": "${yaml:{timeout: 2s, max: 7}}",
             "s": "${yaml:plain}",
         },
-        {},
-        cfg_mod._default_providers(),
     )
     assert out["n"] == 42
     assert out["lst"] == ["a", "b", "c"]
     assert out["map"] == {"timeout": "2s", "max": 7}
     assert out["s"] == "plain"
     with pytest.raises(ConfigError, match="invalid YAML fragment"):
-        cfg_mod._expand_value(
-            {"x": "${yaml:{a: [}}"},
-            {},
-            cfg_mod._default_providers(),
-        )
+        cfg_mod._expand_value({"x": "${yaml:{a: [}}"})
     # an unbalanced reference never matches the resolver grammar and
     # passes through verbatim (same as any non-reference '$' text)
-    out = cfg_mod._expand_value(
-        {"x": "${yaml:{unclosed: [}"}, {}, cfg_mod._default_providers()
-    )
+    out = cfg_mod._expand_value({"x": "${yaml:{unclosed: [}"})
     assert out["x"] == "${yaml:{unclosed: [}"
 
 
-def test_yaml_provider_body_is_exempt_from_default_grammar():
+def test_yaml_provider_body_is_exempt_from_default_grammar(monkeypatch):
     """The yaml provider's URI body is a LITERAL fragment: a ':-' inside
     it is YAML text, not the envprovider's NAME:-default grammar.
     ${yaml:-5} is the scalar -5 (not env '' defaulting to '5'), and an
     embedded ':-' in a flow map survives; the env forms keep their
     default splitting."""
-    providers = cfg_mod._default_providers()
+    monkeypatch.delenv("OTELCOL_NOT_SET_XYZ", raising=False)
     out = cfg_mod._expand_value(
         {
             "neg": "${yaml:-5}",
             "dash": "${yaml:{sep: a:-b}}",
             "envd": "${env:OTELCOL_NOT_SET_XYZ:-fallback}",
         },
-        {},
-        providers,
     )
     assert out["neg"] == -5
     assert out["dash"] == {"sep": "a:-b"}
     assert out["envd"] == "fallback"
 
 
-def test_env_expansion_errors():
+def test_env_expansion_errors(monkeypatch):
+    monkeypatch.delenv("MISSING_VAR", raising=False)
     with pytest.raises(ConfigError, match="MISSING_VAR.*not set"):
-        cfg_mod._expand_value(
-            {"x": "${env:MISSING_VAR}"}, {}, cfg_mod._default_providers()
-        )
+        cfg_mod._expand_value({"x": "${env:MISSING_VAR}"})
     with pytest.raises(ConfigError, match="unsupported scheme 'bogus'"):
-        cfg_mod._expand_value(
-            {"x": "${bogus:uri}"}, {}, cfg_mod._default_providers()
-        )
+        cfg_mod._expand_value({"x": "${bogus:uri}"})
 
 
 def test_file_provider_and_multi_file_merge(tmp_path):
@@ -298,7 +287,7 @@ def test_file_provider_and_multi_file_merge(tmp_path):
     )
     over = tmp_path / "override.yaml"
     over.write_text("exporters: {table/a: {table: out_override}}\n")
-    cfg = ServiceConfig.from_files([str(base), str(over)], env={})
+    cfg = ServiceConfig.from_files([str(base), str(over)])
     assert cfg.exporters["table/a"]["table"] == "out_override"  # later wins
     assert cfg.exporters["table/a"]["token"] == "s3cr3t"  # map-merged + file ref
 

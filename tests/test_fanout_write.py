@@ -71,13 +71,14 @@ def test_crash_between_sinks_resumes_only_unacked(spark, sf_dir, tmp_path, crash
         assert catalog.read(f"agg_{s}").agg(F.sum("turn_count")).first()[0] == n, s
 
 
-def test_routes_with_no_rows_still_get_empty_tables(spark, sf_dir, tmp_path):
+def test_routes_with_no_rows_still_get_empty_tables(spark, sf_dir, tmp_path, receiver_rows):
     wh = str(tmp_path / "wh")
 
     def only_search(s):
         return derive_transcripts(s, sf_dir).withColumn("tool", F.lit("search"))
 
-    res = run_pipeline(spark, sf_dir, wh, source=only_search)
+    with receiver_rows(only_search(spark)):
+        res = run_pipeline(spark, sf_dir, wh)
     catalog = TableCatalog(spark, wh)
     n_input = only_search(spark).count()
     assert res.sink_counts == {s: (n_input if s == "sink_search" else 0) for s in SINK_NAMES}
@@ -101,6 +102,39 @@ def test_routes_with_no_rows_still_get_empty_tables(spark, sf_dir, tmp_path):
         assert acks[f"write_{s}"]["partitions"] == []
         assert acks[f"agg_{s}"]["rows_out"] == 0
     con.close()
+
+
+def test_failed_write_leaves_no_staging_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A write that fails after its rows reached the staging dir
+    re-raises and leaves no ``_staging_*`` dir, in each caller of the
+    one table writer: the flagship run, a plain table write and a
+    streaming epoch."""
+    from opentelemetry_collector_spark.plans import errors
+    from opentelemetry_collector_spark.streaming import stream as ss
+
+    overwrite = TableCatalog.overwrite
+    turns = derive_transcripts(spark, sf_dir).limit(50)
+    calls = {
+        "batch": lambda wh: run_pipeline(spark, sf_dir, wh),
+        "table": lambda wh: errors.write_with_partial_success(TableCatalog(spark, wh), "out", turns),
+        "epoch": lambda wh: ss.route_sink_writer(wh)(ss.transform(turns, spark), 0),
+    }
+    for name, call in calls.items():
+        failed: list[str] = []
+
+        def write_then_fail(self, table, df, partition_by=None, failed=failed):
+            overwrite(self, table, df, partition_by)
+            if not failed:
+                failed.append(table)
+                raise RuntimeError(f"injected failure after writing {table}")
+
+        wh = str(tmp_path / name)
+        with monkeypatch.context() as m:
+            m.setattr(TableCatalog, "overwrite", write_then_fail)
+            with pytest.raises(RuntimeError, match="injected failure"):
+                call(wh)
+        assert failed[0].startswith("_staging_"), (name, failed)
+        assert not [d for d in os.listdir(wh) if d.startswith("_staging_")], name
 
 
 def test_sink_files_follow_the_data_not_shuffle_partitions(spark, sf_dir, tmp_path):

@@ -55,18 +55,18 @@ def test_logical_lineage_matches_file_truth_when_partition_aligned(spark, tmp_pa
     logical lineage (groupBy) and physical lineage (parquet footers)
     agree row-for-row — the two views of A6 are the same truth."""
     df = spark.range(500).select(
+        F.lit("r").alias("route"),
         F.concat(F.lit("c"), (F.col("id") % 61).cast("string")).alias("conv_id"),
         F.col("id").cast("string").alias("text"),
     )
-    n = 8
     out = str(tmp_path / "aligned")
     (
-        df.withColumn("part_id", lineage_ops.det_partition_id(F.col("conv_id"), n))
+        df.withColumn("part_id", lineage_ops.det_partition_id(F.col("conv_id")))
         .write.partitionBy("part_id").parquet(out)
     )
     logical = {
         r["part_id"]: r["rows"]
-        for r in lineage_ops.logical_lineage(df, keys=[], n=n).collect()
+        for r in lineage_ops.logical_lineage(df).collect()
     }
     physical: dict[int, int] = {}
     for fr in lineage_ops.file_lineage(out):

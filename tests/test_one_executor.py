@@ -18,7 +18,7 @@ DATA_TABLES = sorted(SINK_NAMES + [f"agg_{s}" for s in SINK_NAMES] + ["quarantin
 RUN_TABLES = {"checkpoint", "lineage", "file_stats"}
 
 
-def test_main_and_config_write_the_same_warehouse(spark, sf_dir, tmp_path):
+def test_main_and_config_write_the_same_warehouse(spark, sf_dir, tmp_path, receiver_rows):
     malformed = spark.createDataFrame(
         [("malformed-conv", 0, "assistant", "call tool=search without a sequence",
           "search", datetime(2025, 1, 1))],
@@ -28,7 +28,8 @@ def test_main_and_config_write_the_same_warehouse(spark, sf_dir, tmp_path):
     derive_transcripts(spark, sf_dir).unionByName(malformed).write.parquet(rows)
 
     wh_main = str(tmp_path / "main")
-    res = run_pipeline(spark, sf_dir, wh_main, source=lambda s: s.read.parquet(rows))
+    with receiver_rows(spark.read.parquet(rows)):
+        res = run_pipeline(spark, sf_dir, wh_main)
 
     cfg = ServiceConfig.from_file(os.path.join(REPO, "configs", "flagship.yaml"))
     cfg.receivers = {"parquet/in": {"path": rows}}

@@ -62,7 +62,7 @@ def test_clean_rewrite_removes_stale_rejected_table(spark, tmp_path):
     assert not os.path.isdir(catalog.path("rejected_out"))
 
 
-def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
+def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path, receiver_rows):
     poison_text = "[seq=1] call tool=search status=200 latency_ms=5 msg=x k1"
 
     def src(s):
@@ -73,7 +73,8 @@ def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
         return base.unionByName(poison)
 
     wh = str(tmp_path / "whp")
-    res = run_pipeline(spark, sf_dir, wh, source=src)
+    with receiver_rows(src(spark)):
+        res = run_pipeline(spark, sf_dir, wh)
     catalog = TableCatalog(spark, wh)
 
     # the sink commit succeeded, poison excluded, accounted in the ack
@@ -88,7 +89,7 @@ def test_flagship_poison_row_lands_in_rejected_table(spark, sf_dir, tmp_path):
     assert lin.agg(F.sum("rows")).first()[0] == m["rows_out"]
 
 
-def test_quarantine_route_has_partial_success(spark, sf_dir, tmp_path):
+def test_quarantine_route_has_partial_success(spark, sf_dir, tmp_path, receiver_rows):
     """The quarantine route is written by the same rules as every sink:
     an unparseable turn with a NULL conv_id lands in rejected_quarantine
     and the write_quarantine ack counts it as rejected."""
@@ -99,7 +100,8 @@ def test_quarantine_route_has_partial_success(spark, sf_dir, tmp_path):
              ("c-bad", 0, "user", "no header either", "search", TS)], SCHEMA))
 
     wh = str(tmp_path / "whq")
-    res = run_pipeline(spark, sf_dir, wh, source=src)
+    with receiver_rows(src(spark)):
+        res = run_pipeline(spark, sf_dir, wh)
     catalog = TableCatalog(spark, wh)
     rej = catalog.read("rejected_quarantine").collect()
     assert [(r["conv_id"], r["reject_reason"]) for r in rej] == [(None, "null_conv_id")]

@@ -88,7 +88,7 @@ def test_turn_order_stability(spark, sf_dir):
     assert a == b
 
 
-def test_out_of_range_numbers_reach_quarantine(spark, sf_dir, tmp_path):
+def test_out_of_range_numbers_reach_quarantine(spark, sf_dir, tmp_path, receiver_rows):
     """A digit run too large for its column never fails the task: an
     overflowing seq or status sends the turn to quarantine, and an
     overflowing bytes leaves the turn in its sink with NULL bytes. The
@@ -128,7 +128,8 @@ def test_out_of_range_numbers_reach_quarantine(spark, sf_dir, tmp_path):
     assert got == want
 
     wh = str(tmp_path / "who")
-    res = run_pipeline(spark, sf_dir, wh, source=lambda s: src)
+    with receiver_rows(src):
+        res = run_pipeline(spark, sf_dir, wh)
     assert res.quarantined == 2
     assert res.sink_counts["sink_search"] == 1
     catalog = TableCatalog(spark, wh)

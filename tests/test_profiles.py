@@ -32,6 +32,23 @@ def test_dense_index_is_dense_lexicographic(spark):
     assert out == {"a": 0, "k": 1, "m": 2, "z": 3}
 
 
+def test_string_table_frame_is_released(spark):
+    """dense_index pins one materialization of its indexed frame, and
+    dedup.release_cached frees it: Spark's CacheManager holds a
+    persisted plan until it is unpersisted, so dropping the DataFrame
+    alone would keep the block for the session's life."""
+    from opentelemetry_collector_spark.operators import dedup
+
+    def persistent():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    dedup.release_cached()
+    before = persistent()
+    profiles.string_table(_mini_parsed(spark)).collect()
+    dedup.release_cached()
+    assert persistent() == before
+
+
 def test_dictionary_tables_shapes(spark):
     t = profiles.dictionary_tables(_mini_parsed(spark))
     strings = {r["s"]: r["strindex"] for r in t["strings"].collect()}

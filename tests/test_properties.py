@@ -83,8 +83,8 @@ def test_lineage_partition_counts_conserve_rows(spark, rows):
     from opentelemetry_collector_spark.plans import lineage as lineage_ops
 
     df = spark.createDataFrame(
-        [(f"conv-{v}", "x" * (v + 1)) for v in rows], "conv_id string, text string"
+        [("r", f"conv-{v}", "x" * (v + 1)) for v in rows], "route string, conv_id string, text string"
     )
-    out = lineage_ops.logical_lineage(df, keys=[]).collect()
+    out = lineage_ops.logical_lineage(df).collect()
     assert sum(r["rows"] for r in out) == len(rows)
     assert sum(r["bytes"] for r in out) == sum(v + 1 for v in rows)

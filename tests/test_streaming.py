@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+import __spark_entry__ as entrymod
 from opentelemetry_collector_spark.sources import derive_transcripts
 from opentelemetry_collector_spark.sqltext import SINK_NAMES
 from opentelemetry_collector_spark.streaming import stream as ss
@@ -19,7 +20,7 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     batch.repartition(4).write.parquet(src)
     n_input = batch.count()
 
-    qname = ss.run_available_now(spark, src, wh, ckpt)
+    ss.run_available_now(spark, src, wh, ckpt)
 
     # fan-out exactly-once across sink tables
     total = 0
@@ -34,7 +35,7 @@ def test_streaming_matches_batch(spark, sf_dir, tmp_path):
     # windowed accounting emits exactly the windows past the final
     # watermark (max event time - 2h); later windows are withheld as
     # potentially-late state — the streaming contract, not loss.
-    acc = spark.sql(f"SELECT * FROM {qname}")
+    acc = entrymod.q_streaming_accounting(spark, sf_dir)
     assert {"window_start", "window_end", "route", "conv_id"} <= set(acc.columns)
     max_ts = batch.agg(F.max("ts")).collect()[0][0]
     expected = (
@@ -55,8 +56,8 @@ def test_streaming_is_incremental(spark, sf_dir, tmp_path):
     ckpt = str(tmp_path / "ckpt")
     batch = derive_transcripts(spark, sf_dir).limit(200)
     batch.write.parquet(src)
-    ss.run_available_now(spark, src, wh, ckpt, accounting=False)
-    ss.run_available_now(spark, src, wh, ckpt, accounting=False)  # no-op
+    ss.run_available_now(spark, src, wh, ckpt)
+    ss.run_available_now(spark, src, wh, ckpt)  # no-op
     total = 0
     for s in SINK_NAMES:
         try:
@@ -349,7 +350,7 @@ def test_streaming_sink_schema_is_the_batch_sink_schema(spark, sf_dir, tmp_path)
     derive_transcripts(spark, sf_dir).write.parquet(src)
     batch_wh, stream_wh = str(tmp_path / "batch"), str(tmp_path / "stream")
     run_pipeline(spark, sf_dir, batch_wh)
-    ss.run_available_now(spark, src, stream_wh, str(tmp_path / "ckpt"), accounting=False)
+    ss.run_available_now(spark, src, stream_wh, str(tmp_path / "ckpt"))
     for s in SINK_NAMES + ["quarantine"]:
         streamed = spark.read.parquet(f"{stream_wh}/{s}").drop("epoch")
         assert streamed.dtypes == spark.read.parquet(f"{batch_wh}/{s}").dtypes, s
@@ -364,7 +365,7 @@ def test_streaming_run_leaves_only_its_tables(spark, sf_dir, tmp_path):
     src = str(tmp_path / "src")
     wh = str(tmp_path / "wh")
     derive_transcripts(spark, sf_dir).write.parquet(src)
-    ss.run_available_now(spark, src, wh, str(tmp_path / "ckpt"), accounting=False)
+    ss.run_available_now(spark, src, wh, str(tmp_path / "ckpt"))
     assert sorted(os.listdir(wh)) == sorted(
         SINK_NAMES + ["quarantine", "checkpoint", "lineage"]
     )
