@@ -2,7 +2,7 @@
 
     spark-submit --py-files otelcol_spark.zip main.py \
         --sf-dir /data/testdata/sf0.1 --warehouse /data/wh [--run-id R] [--stream]
-    spark-submit ... main.py --config configs/flagship.yaml --warehouse /data/wh
+    spark-submit ... main.py --config base.yaml [--config override.yaml ...] --warehouse /data/wh
 
 Runs the flagship parse → enrich → route → aggregate pipeline,
 configs/flagship.yaml with its receiver at --sf-dir, with checkpointed,
@@ -11,7 +11,9 @@ skipping acked stages. With --config, runs that YAML service config
 (receivers/processors/exporters/connectors + service.pipelines — the
 otelcol config surface, plans/config.py) through the same executor, so
 --config configs/flagship.yaml writes the same warehouse as the default
-run. Prints one JSON line with per-sink counts (the obsreport summary).
+run. --config may repeat: later files deep-merge over earlier ones, as
+the collector's confmap resolver merges its --config sources. Prints one
+JSON line with per-sink counts (the obsreport summary).
 """
 
 from __future__ import annotations
@@ -31,9 +33,10 @@ def main(argv: list[str] | None = None) -> int:
                     help="run the Structured Streaming variant (AvailableNow)")
     ap.add_argument("--source-path", default=None,
                     help="streaming: directory of transcript parquet files")
-    ap.add_argument("--config", default=None,
+    ap.add_argument("--config", action="append", default=None,
                     help="YAML service config (pipelines/connectors graph) "
-                         "to run instead of configs/flagship.yaml at --sf-dir")
+                         "to run instead of configs/flagship.yaml at --sf-dir; "
+                         "repeat to deep-merge later files over earlier ones")
     ap.add_argument("--curate", action="store_true",
                     help="run the corpus-curation job over the documents "
                          "table: near-dup keep-one + quality/language gate")
@@ -56,7 +59,7 @@ def main(argv: list[str] | None = None) -> int:
             from opentelemetry_collector_spark.plans import config
 
             counts = config.run(
-                config.ServiceConfig.from_file(args.config), spark,
+                config.ServiceConfig.from_files(args.config), spark,
                 args.warehouse, run_id=args.run_id,
             )
             print(json.dumps({

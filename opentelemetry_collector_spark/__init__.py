@@ -9,9 +9,9 @@ its operator semantics (filter, attribute mutation, enrichment, routing
 fan-out, batch accounting), and its reliability protocol (persistent
 queue → checkpoint table) as idiomatic Spark: declarative DataFrame
 plans optimized by Catalyst, broadcast hash joins for enrichment,
-partition-hash routing with AQE/salting for skew, and idempotent
-deterministic sink commits for at-least-once → effectively-once
-delivery (exporter/exporterhelper/internal/queue/persistent_queue.go:50-95).
+partition-hash routing with AQE and partial aggregation for skew, and
+idempotent deterministic sink commits for at-least-once →
+effectively-once delivery (exporter/exporterhelper/internal/queue/persistent_queue.go:50-95).
 """
 
 __version__ = "0.1.0"

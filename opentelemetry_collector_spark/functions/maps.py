@@ -1,7 +1,7 @@
 """Attribute-bag operations — pcommon.Map analog (SURVEY §2.2 P6).
 
 The reference's Map is a sorted-insertion array of KeyValue pairs with
-Get/Put*/Remove/RemoveIf/Range/CopyTo (pdata/pcommon/map.go:65-319).
+Get/Put*/Remove/Range (pdata/pcommon/map.go:65-319).
 Spark's MapType column + higher-order functions express every one of
 them declaratively; all run inside codegen. The mutating ops return new
 map columns (immutability replaces the AssertMutable machinery,
@@ -10,8 +10,6 @@ pcommon/value.go:283-290).
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -19,10 +17,6 @@ from pyspark.sql import functions as F
 def map_get(m: Column, key: str) -> Column:
     """Map.Get (map.go:65-75) — NULL when absent (Go returns ok=false)."""
     return F.element_at(m, F.lit(key))
-
-
-def map_contains(m: Column, key: str) -> Column:
-    return F.array_contains(F.map_keys(m), key)
 
 
 def map_put(m: Column, key: str, value: Column) -> Column:
@@ -36,20 +30,9 @@ def map_remove(m: Column, key: str) -> Column:
     return F.map_filter(m, lambda k, _: k != F.lit(key))
 
 
-def map_remove_if(m: Column, pred: Callable[[Column, Column], Column]) -> Column:
-    """Map.RemoveIf (map.go:107-120): keep entries where pred is false."""
-    return F.map_filter(m, lambda k, v: ~pred(k, v))
-
-
 def map_len(m: Column) -> Column:
     """Map.Len (map.go:55-63)."""
     return F.size(m)
-
-
-def map_merge(base: Column, overlay: Column) -> Column:
-    """CopyTo/FromRaw-style merge: overlay wins on key conflict
-    (requires spark.sql.mapKeyDedupPolicy=LAST_WIN, set in session.py)."""
-    return F.map_concat(base, overlay)
 
 
 def map_sorted_entries(m: Column) -> Column:

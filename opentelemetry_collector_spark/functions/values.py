@@ -81,14 +81,6 @@ def vbool(c: Column) -> Column:
     return _variant("bool", b=c.cast("boolean"))
 
 
-def vbytes(c: Column) -> Column:
-    return _variant("bytes", bin=c.cast("binary"))
-
-
-def vempty() -> Column:
-    return _variant("empty")
-
-
 # JSON escape table: the two structural characters, the short-form
 # control escapes, then \u00XX for every remaining control char < 0x20
 # (ALL 32 are JSON-mandatory — a bare ESC from ANSI-colored log text
@@ -208,28 +200,6 @@ def vmap_put(m: Column, key: str, value: Column) -> Column:
 def vmap_remove(m: Column, key: str) -> Column:
     """Map.Remove (map.go:95-105)."""
     return F.map_filter(m, lambda k, _: k != F.lit(key))
-
-
-def vmap_keep_keys(m: Column, keys: list[str]) -> Column:
-    """attributesprocessor keep_keys verb over variant maps."""
-    arr = F.array(*[F.lit(k) for k in keys])
-    return F.map_filter(m, lambda k, _: F.array_contains(arr, k))
-
-
-def lift_attrs(m: Column) -> Column:
-    """Lift a flat ``map<string,string>`` attribute bag (the pipeline's
-    parse-stage attrs) into a variant-valued map, so the nested verbs
-    and renderings apply to existing columns without re-parsing —
-    pcommon's FromRaw promotion (value.go:252-320) for the string
-    case."""
-    return F.map_from_entries(
-        F.transform(
-            F.map_entries(m),
-            lambda e: F.struct(
-                e["key"].alias("key"), vstr(e["value"]).alias("value")
-            ),
-        )
-    )
 
 
 def vmap_as_raw_json(m: Column) -> Column:

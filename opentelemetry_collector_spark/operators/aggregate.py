@@ -9,8 +9,8 @@ client-metadata keys with case-insensitive sorted key normalization and
 
 Scale notes: partial aggregation (map-side combine) is automatic for
 hash aggregates; the group key (window, conv_id, tool) is high-cardinality
-and evenly spread except hot conversations — AQE skew handling plus the
-salting helper in partitioning.py covers those.
+and evenly spread except hot conversations, whose rows the partial
+aggregation combines before the shuffle.
 """
 
 from __future__ import annotations
@@ -88,18 +88,7 @@ def severity_histogram(df: DataFrame) -> DataFrame:
     )
 
 
-def cardinality_guard(df: DataFrame, keys: list[str], limit: int) -> int:
-    """metadata_cardinality_limit guardrail (batch_processor.go:332-339):
-    error when the distinct key-combination count exceeds the limit."""
-    n = df.select(*[F.lower(F.col(k)) for k in sorted(keys)]).distinct().count()
-    if n > limit:
-        raise ValueError(
-            f"cardinality limit exceeded: {n} > {limit} for keys {sorted(keys)}"
-        )
-    return n
-
-
-def rollup_accounting(df: DataFrame, ts_col: str = "ts") -> DataFrame:
+def rollup_accounting(df: DataFrame) -> DataFrame:
     """Hypertable-style multi-resolution rollup: per-(route, day, hour)
     counts/bytes AND every coarser grain — (route, day), (route), and
     the grand total — in ONE pass via ROLLUP grouping sets (Catalyst
@@ -108,8 +97,8 @@ def rollup_accounting(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     materialize exactly these grains). Rolled-up levels surface as NULL
     group columns, the standard ROLLUP encoding — engine-independent,
     value-oracled against DuckDB's ROLLUP."""
-    day = F.date_trunc("day", F.col(ts_col))
-    hour = F.date_trunc("hour", F.col(ts_col))
+    day = F.date_trunc("day", F.col("ts"))
+    hour = F.date_trunc("hour", F.col("ts"))
     return (
         df.withColumn("day", day)
         .withColumn("hour", hour)

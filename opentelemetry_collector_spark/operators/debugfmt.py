@@ -1,4 +1,7 @@
-"""Debug-exporter "normal" text rendering (SURVEY §2.1 S5).
+"""Debug-exporter text rendering (SURVEY §2.1 S5): the normal line and
+the detailed block as Column expressions, which the ``debug_exporter``
+contract query selects, and the zap sampler over a DataFrame, which the
+YAML ``debug`` exporter also runs.
 
 The reference's debug exporter at normal verbosity writes one line per
 log record: ``<body.AsString()> <k1=v1> <k2=v2> ...`` with attribute
@@ -14,8 +17,9 @@ the reference order. Missing captures are skipped entirely (a missing
 key never prints ``k=``). Divergence: when every attribute is missing
 the reference emits a trailing space after the body; we emit none.
 
-Everything is concat/CASE column work — codegen-friendly, no shuffle,
-no Python.
+The line and the block are concat/CASE column work — codegen-friendly,
+no shuffle, no Python; the sampler ranks records in one window per
+sampling period.
 """
 
 from __future__ import annotations
@@ -36,8 +40,7 @@ _SEV_NAMES = {9: "Info", 13: "Warn", 17: "Error"}
 
 
 def block_expr() -> Column:
-    """Detailed-verbosity block as a Column over parsed-stage names —
-    shared by detailed_block and the merged debug_exporter query (the
+    """Detailed-verbosity block as a Column over parsed-stage names (the
     otlptext marshaler's field dump, exporter/debugexporter/internal/
     otlptext/logs.go:35-50 — Timestamp / SeverityText / SeverityNumber
     name(n) / EventName when set / Body: Str(...) / indented attribute
@@ -78,15 +81,8 @@ def block_expr() -> Column:
     return block
 
 
-def detailed_block(parsed: DataFrame) -> DataFrame:
-    """Detailed verbosity: one multi-line block per record (see
-    block_expr)."""
-    return parsed.select("conv_id", "turn_idx", block_expr().alias("block"))
-
-
 def line_expr() -> Column:
-    """Normal-verbosity line as a Column over parsed-stage names —
-    shared by normal_lines and the merged debug_exporter query."""
+    """Normal-verbosity line as a Column over parsed-stage names."""
     return F.concat_ws(
         " ",
         F.col("text"),
@@ -102,17 +98,10 @@ def line_expr() -> Column:
     )
 
 
-def normal_lines(parsed: DataFrame) -> DataFrame:
-    """parsed transcripts → (conv_id, turn_idx, line)."""
-    return parsed.select("conv_id", "turn_idx", line_expr().alias("line"))
-
-
 def sample_per_second(
     df: DataFrame,
     sampling_initial: int = 2,
     sampling_thereafter: int = 1,
-    ts_col: str = "ts",
-    shards: int = 1,
     granularity: str = "second",
 ) -> DataFrame:
     """The debug exporter's zap-sampler semantics in batch form
@@ -124,25 +113,14 @@ def sample_per_second(
     deterministic (conv_id, turn_idx) — a wall-clock arrival order
     replayed deterministically, so the sample is value-oracle-able.
 
-    Scale shape: the reference runs ONE sampler per collector instance;
-    ``shards`` > 1 reproduces exactly that — records hash into shards
-    (md5 of conv_id, engine-independent) and each shard samples
-    independently, bounding the per-second rank window to
-    second-volume/shards while keeping per-shard semantics identical
-    to a reference instance's. shards=1 is the single-collector
-    ground truth the oracle mirrors. ``granularity`` widens the
+    One sampler covers all records, as one collector instance runs
+    one sampler; the oracle mirrors it. ``granularity`` widens the
     sampling window (second/minute/hour) — the reference is per-second;
     coarser windows exist so sparse test corpora actually exercise the
     thereafter path."""
-    sec = F.date_trunc(granularity, F.col(ts_col))
-    parts = [sec]
-    if shards > 1:
-        from opentelemetry_collector_spark.plans.lineage import det_partition_id
-
-        parts.append(det_partition_id(F.col("conv_id"), shards))
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy(*parts).orderBy(
+    w = Window.partitionBy(F.date_trunc(granularity, F.col("ts"))).orderBy(
         F.asc("conv_id"), F.asc("turn_idx")
     )
     ranked = df.withColumn("_rn", F.row_number().over(w))

@@ -20,7 +20,7 @@ All hashing is md5-based so the DuckDB oracle reproduces results
 bit-for-bit; no RNG anywhere.
 
 Every candidate-generation path bounds its bucket cardinality: the
-n-gram inverted index caps posting lists (``max_posting``), and the
+n-gram inverted index caps posting lists (``NGRAM_MAX_POSTING``), and the
 LSH / SimHash band joins and the embedding cell join cap bucket/cell
 membership (``max_bucket`` / ``max_cell``) — a degenerate key (empty or
 templated docs hashing to one band key, a hot k-means cell) is
@@ -113,18 +113,29 @@ LSH_ROWS = 3
 # (A 32-bit/8-bit-band variant has only 256 keys per band — buckets of
 # n/256 docs each make the verify quadratic in corpus size.)
 SIMHASH_BITS = 64
+SIMHASH_BANDS = 4
+# Hamming distance ≤ 3 bits of 64 is a near-dup; 4 bands guarantee
+# such a pair shares a band (pigeonhole).
+SIMHASH_MAX_HAMMING = 3
+# Word-shingle width of every shingle-based operator (sqltext.SHINGLES_EXPR).
+SHINGLE_K = 3
+# n-gram Jaccard: a pair is a near-dup at 0.8; a shingle in more than
+# 1000 documents is boilerplate and leaves the inverted index.
+NGRAM_JACCARD_MIN = 0.8
+NGRAM_MAX_POSTING = 1000
 
 
-def shingles_col(c: Column, k: int = 3) -> Column:
-    """Distinct k-word shingles as an array column (no explode). A NULL
-    text has none (NULL), so it has no MinHash signature and shares no
-    shingle with any doc; sqltext.SHINGLES_EXPR does the same.
+def shingles_col(c: Column) -> Column:
+    """Distinct SHINGLE_K-word shingles as an array column (no
+    explode). A NULL text has none (NULL), so it has no MinHash
+    signature and shares no shingle with any doc; sqltext.SHINGLES_EXPR
+    does the same.
 
     The gram window itself lives in textstats.grams_col — the ONE
     source of the edge semantics (bound-once split, greatest(n−k, 0)
     start positions, NULL-skipping concat_ws) shared with
     repetition_stats and every DuckDB twin."""
-    return F.when(c.isNotNull(), F.array_distinct(grams_col(c, k)))
+    return F.when(c.isNotNull(), F.array_distinct(grams_col(c, SHINGLE_K)))
 
 
 _SPACE_RUN = __import__("re").compile(" +")
@@ -184,11 +195,11 @@ def simhash_signature_arrow(bits: int = SIMHASH_BITS):
     return sig
 
 
-def exact_dedup(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def exact_dedup(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """Hash-groupBy exact dedup: one row per distinct normalized text
     with the kept (minimum) id and the duplicate count."""
     return (
-        df.select(F.col(id_col), F.md5(norm_text(F.col(text_col))).alias("fp"))
+        df.select(F.col(id_col), F.md5(norm_text(F.col("text"))).alias("fp"))
         .groupBy("fp")
         .agg(
             F.min(id_col).alias("keep_id"),
@@ -231,31 +242,29 @@ def minhash_signature(c: Column, n_hashes: int = MINHASH_N) -> Column:
 def minhash_lsh_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    bands: int = LSH_BANDS,
-    rows: int = LSH_ROWS,
     max_bucket: int = 10_000,
 ) -> DataFrame:
     """Candidate near-dup pairs via banded MinHash: docs agreeing on all
-    ``rows`` minhashes of any band share a bucket. Returns distinct
-    (id_a < id_b) pairs with the number of matching bands. Band buckets
+    LSH_ROWS minhashes of any of the LSH_BANDS bands share a bucket.
+    Returns distinct (id_a < id_b) pairs with the number of matching
+    bands. Band buckets
     larger than ``max_bucket`` are dropped (logged) before the self-join
     — see the module docstring's degenerate-key argument."""
     sig = df.select(
         F.col(id_col).alias("id"),
-        minhash_signature(F.col(text_col), bands * rows).alias("mh"),
+        minhash_signature(F.col("text"), LSH_BANDS * LSH_ROWS).alias("mh"),
     ).where(F.col("mh").isNotNull())  # concat_ws would key a NULL as ""
     banded = sig.select(
         "id",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(bands - 1)),
+                F.sequence(F.lit(0), F.lit(LSH_BANDS - 1)),
                 lambda b: F.struct(
                     b.cast("int").alias("band"),
                     F.concat_ws(
                         "|",
                         F.transform(
-                            F.slice(F.col("mh"), b * rows + 1, rows),
+                            F.slice(F.col("mh"), b * LSH_ROWS + 1, LSH_ROWS),
                             lambda v: v.cast("string"),
                         ),
                     ).alias("key"),
@@ -281,26 +290,21 @@ def minhash_lsh_pairs(
     return pairs
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    max_posting: int = 1000,
-) -> DataFrame:
-    """Exact n-gram Jaccard over candidate pairs sharing ≥1 shingle
-    (inverted-index join). ``max_posting`` drops degenerate hot
-    shingles — at web scale a shingle shared by millions of docs
-    carries no signal and would quadratically blow up the join."""
+def ngram_jaccard_pairs(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
+    """Pairs with exact n-gram Jaccard ≥ NGRAM_JACCARD_MIN, over
+    candidates sharing ≥1 shingle (inverted-index join).
+    NGRAM_MAX_POSTING drops degenerate hot shingles — at web scale a
+    shingle shared by millions of docs carries no signal and would
+    quadratically blow up the join."""
     sh = df.select(
         F.col(id_col).alias("id"),
-        shingles_col(F.col(text_col)).alias("sh"),
+        shingles_col(F.col("text")).alias("sh"),
     ).withColumn("n_sh", F.size("sh"))
     posting = _persist(sh.select("id", "n_sh", F.explode("sh").alias("s")))
     # drop hot shingles (posting-list cap)
     hot = (
         posting.groupBy("s").agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") > max_posting)
+        .filter(F.col("n") > NGRAM_MAX_POSTING)
         .select("s")
     )
     posting = posting.join(F.broadcast(hot), "s", "left_anti")
@@ -310,8 +314,8 @@ def ngram_jaccard_pairs(
     # below the threshold cannot reach it — drop those candidates inside
     # the join. Cuts the candidate aggregation hard on template-heavy
     # corpora where many docs share shingles but differ in length.
-    size_ok = (F.col("a.n_sh") >= threshold * F.col("b.n_sh")) & (
-        F.col("b.n_sh") >= threshold * F.col("a.n_sh")
+    size_ok = (F.col("a.n_sh") >= NGRAM_JACCARD_MIN * F.col("b.n_sh")) & (
+        F.col("b.n_sh") >= NGRAM_JACCARD_MIN * F.col("a.n_sh")
     )
     inter = (
         a.join(
@@ -335,7 +339,7 @@ def ngram_jaccard_pairs(
                 F.col("inter") / (F.col("na") + F.col("nb") - F.col("inter")), 6
             ),
         )
-        .filter(F.col("jaccard") >= threshold)
+        .filter(F.col("jaccard") >= NGRAM_JACCARD_MIN)
         .select("id_a", "id_b", "jaccard")
     )
 
@@ -343,20 +347,18 @@ def ngram_jaccard_pairs(
 def simhash_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
-    max_hamming: int = 3,
-    band_count: int = 4,
     max_bucket: int = 10_000,
 ) -> DataFrame:
-    """Near-dup pairs by SimHash: candidates share one of ``band_count``
+    """Near-dup pairs by SimHash: candidates share one of SIMHASH_BANDS
     signature bands (pigeonhole: hamming ≤ bands-1 guarantees a shared
-    band), verified by exact Hamming distance. Band buckets larger than
-    ``max_bucket`` are dropped (logged) before the self-join."""
+    band), verified by exact Hamming distance ≤ SIMHASH_MAX_HAMMING.
+    Band buckets larger than ``max_bucket`` are dropped (logged) before
+    the self-join."""
     bits = SIMHASH_BITS
-    bw = bits // band_count
+    bw = bits // SIMHASH_BANDS
     sig = df.select(
         F.col(id_col).alias("id"),
-        simhash_signature_arrow(bits)(F.col(text_col)).alias("sh"),
+        simhash_signature_arrow(bits)(F.col("text")).alias("sh"),
     )
     # fold the bit-string into two 32-bit ints once, so the per-candidate
     # Hamming distance is bit_count(xor) — codegen integer ops instead of
@@ -371,7 +373,7 @@ def simhash_pairs(
         "id", "h1", "h2",
         F.explode(
             F.transform(
-                F.sequence(F.lit(0), F.lit(band_count - 1)),
+                F.sequence(F.lit(0), F.lit(SIMHASH_BANDS - 1)),
                 lambda b: F.struct(
                     b.cast("int").alias("band"),
                     F.col("sh").substr(b * bw + 1, F.lit(bw)).alias("key"),
@@ -399,7 +401,7 @@ def simhash_pairs(
             hamming.alias("hamming"),
         )
         .distinct()
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= SIMHASH_MAX_HAMMING)
     )
 
 
@@ -601,16 +603,16 @@ def dedup_survivors(
     df: DataFrame,
     pairs: DataFrame,
     id_col: str = "doc_id",
-    strict: bool = False,
     stats: dict | None = None,
 ) -> DataFrame:
     """Keep-one dedup: drop every document that belongs to a duplicate
     component but is not its min-id representative. One broadcast-able
     anti-join against the (tiny, component-bounded) non-representative
-    set; documents in no pair pass through untouched. ``strict`` /
-    ``stats`` forward to :func:`connected_components` (exact keep-one
-    semantics require a converged fixpoint)."""
-    groups = connected_components(pairs, strict=strict, stats=stats)
+    set; documents in no pair pass through untouched. ``stats`` forwards
+    to :func:`connected_components`. Exact keep-one semantics require a
+    converged fixpoint: a run that hits ``max_iters`` logs a warning and
+    may under-deduplicate."""
+    groups = connected_components(pairs, stats=stats)
     losers = groups.filter(F.col("id") != F.col("grp")).select(
         F.col("id").alias(id_col)
     )
@@ -621,7 +623,6 @@ def contamination_overlap(
     corpus: DataFrame,
     bench: DataFrame,
     id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents that share
     word-shingle content with a held-out evaluation set (the standard
@@ -643,10 +644,10 @@ def contamination_overlap(
     and exploded straight into the join.
     """
     bench_sh = (
-        bench.select(F.explode(shingles_col(F.col(text_col))).alias("s"))
+        bench.select(F.explode(shingles_col(F.col("text"))).alias("s"))
         .distinct()
     )
-    sh = corpus.select(F.col(id_col), shingles_col(F.col(text_col)).alias("sh"))
+    sh = corpus.select(F.col(id_col), shingles_col(F.col("text")).alias("sh"))
     corpus_sh = sh.select(
         id_col, F.size("sh").alias("n_shingles"), F.explode("sh").alias("s")
     )
@@ -665,11 +666,7 @@ def contamination_overlap(
     )
 
 
-def top_shingles(
-    df: DataFrame,
-    text_col: str = "text",
-    k: int = 50,
-) -> DataFrame:
+def top_shingles(df: DataFrame, k: int = 50) -> DataFrame:
     """Corpus-wide top-k shingle document frequencies (the n-gram
     frequency table curation uses for boilerplate discovery: shingles
     appearing in thousands of documents are templates/boilerplate, and
@@ -681,6 +678,6 @@ def top_shingles(
     the shingle string so the result SET is deterministic. Shingles are
     distinct per document (shingles_col), so counts are document
     frequencies, not raw occurrences."""
-    grams = df.select(F.explode(shingles_col(F.col(text_col))).alias("gram"))
+    grams = df.select(F.explode(shingles_col(F.col("text"))).alias("gram"))
     counts = grams.groupBy("gram").agg(F.count(F.lit(1)).alias("n"))
     return counts.orderBy(F.col("n").desc(), F.col("gram")).limit(k)

@@ -88,9 +88,8 @@ def downscale(
     hist: DataFrame,
     from_scale: int,
     to_scale: int,
-    group_cols: tuple[str, ...] = ("tool",),
 ) -> DataFrame:
-    """Downscale an exponential histogram to a coarser scale — the
+    """Downscale a per-tool exponential histogram to a coarser scale — the
     OTLP merge primitive (two histograms at different scales merge by
     downscaling the finer to the coarser, then summing counts).
 
@@ -116,11 +115,11 @@ def downscale(
         F.pow(F.lit(2.0), (F.col("idx") + 1) * F.lit(base_log2)), 6
     )
     return (
-        hist.select(*group_cols, "sign", idx2.alias("idx"), "n")
-        .groupBy(*group_cols, "sign", "idx")
+        hist.select("tool", "sign", idx2.alias("idx"), "n")
+        .groupBy("tool", "sign", "idx")
         .agg(F.sum("n").alias("n"))
         .select(
-            *group_cols,
+            "tool",
             "sign",
             "idx",
             "n",
@@ -135,20 +134,19 @@ def merge_histograms(
     b: DataFrame,
     a_scale: int,
     b_scale: int,
-    group_cols: tuple[str, ...] = ("tool",),
 ) -> tuple[DataFrame, int]:
-    """Merge two exponential histograms (the ExponentialHistogram
-    aggregation-temporality merge): downscale the finer operand to the
-    coarser scale, union, sum counts per bucket. Returns (merged,
-    scale)."""
+    """Merge two per-tool exponential histograms (the
+    ExponentialHistogram aggregation-temporality merge): downscale the
+    finer operand to the coarser scale, union, sum counts per bucket.
+    Returns (merged, scale)."""
     scale = min(a_scale, b_scale)
-    a2 = downscale(a, a_scale, scale, group_cols)
-    b2 = downscale(b, b_scale, scale, group_cols)
+    a2 = downscale(a, a_scale, scale)
+    b2 = downscale(b, b_scale, scale)
     merged = (
         a2.unionByName(b2)
-        .groupBy(*group_cols, "sign", "idx", "lo", "hi")
+        .groupBy("tool", "sign", "idx", "lo", "hi")
         .agg(F.sum("n").alias("n"))
-        .select(*group_cols, "sign", "idx", "n", "lo", "hi")
+        .select("tool", "sign", "idx", "n", "lo", "hi")
     )
     return merged, scale
 
@@ -157,14 +155,13 @@ def exponential_histogram_sql(
     table_expr: str,
     value_col: str,
     scale: int = 2,
-    group_cols: tuple[str, ...] = ("tool",),
     lead: str = "WITH",
 ) -> str:
-    """The DuckDB oracle twin — same index arithmetic, same rounding,
-    same output columns (shared so the query and oracle can never
-    drift). Pass ``lead=','`` to splice into an existing WITH chain
+    """The DuckDB oracle twin, per tool — same index arithmetic, same
+    rounding, same output columns (shared so the query and oracle can
+    never drift). Pass ``lead=','`` to splice into an existing WITH chain
     (``table_expr`` may then reference that chain's CTEs)."""
-    g = ", ".join(group_cols)
+    g = "tool"
     mul = float(2 ** scale)
     blog2 = float(2 ** -scale)
     idx_pos = f"CAST(ceil(round(log2({value_col}) * {mul!r}, 9)) AS BIGINT) - 1"
@@ -211,18 +208,17 @@ def histogram_exemplars(
     span_id_col,
     ts_ns_col,
     scale: int = 2,
-    group_cols: tuple[str, ...] = ("tool",),
 ) -> DataFrame:
     """Exponential-histogram buckets WITH exemplars — the reference's
     metrics↔traces link (pdata/pmetric/generated_exemplar.go:56-129:
     an Exemplar carries value, timestamp, trace_id, span_id). Each
-    (group, sign, bucket) keeps its MAX-value observation as the
+    (tool, sign, bucket) keeps its MAX-value observation as the
     exemplar (deterministic: ties broken by the trace/span id struct
     order), so an operator seeing a hot latency bucket can jump
     straight to a representative span.
 
     One partial-aggregated groupBy (count + max_by ride the same
-    shuffle); no window, no second pass. Columns: group…, sign, idx,
+    shuffle); no window, no second pass. Columns: tool, sign, idx,
     n, lo, hi, exemplar_value, exemplar_trace_id, exemplar_span_id,
     exemplar_ts_unix_nano."""
     v = F.col(value_col)
@@ -243,16 +239,14 @@ def histogram_exemplars(
     lo, hi = bucket_bounds(scale)
     return (
         df.filter(v.isNotNull())
-        .select(
-            *group_cols, sign.alias("sign"), idx.alias("idx"), ex.alias("ex")
-        )
-        .groupBy(*group_cols, "sign", "idx")
+        .select("tool", sign.alias("sign"), idx.alias("idx"), ex.alias("ex"))
+        .groupBy("tool", "sign", "idx")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.max_by(F.col("ex"), F.col("ex")).alias("_ex"),
         )
         .select(
-            *group_cols,
+            "tool",
             "sign",
             "idx",
             "n",

@@ -72,10 +72,10 @@ def filter_stage(df: DataFrame, specs: list[MatchSpec], mode: str = "include") -
     raise ValueError(f"mode must be include|exclude, got {mode!r}")
 
 
-def sample_conversations(df: DataFrame, keep_hex_lt: str = "29", conv_col: str = "conv_id") -> DataFrame:
+def sample_conversations(df: DataFrame, keep_hex_lt: str = "29") -> DataFrame:
     """Deterministic ~(int(keep_hex_lt,16)/256) conversation-level sample.
 
     md5(conv_id) prefix comparison — no RNG, identical result in any
     engine, any partitioning, any cluster size. Default '29' ≈ 16%.
     """
-    return df.filter(F.substring(F.md5(F.col(conv_col)), 1, 2) < F.lit(keep_hex_lt))
+    return df.filter(F.substring(F.md5(F.col("conv_id")), 1, 2) < F.lit(keep_hex_lt))

@@ -73,19 +73,19 @@ def delta_to_cumulative(
     value_col: str,
     order_cols: tuple[str, ...],
     stream_cols: tuple[str, ...],
-    out_col: str = "cumulative",
 ) -> DataFrame:
-    """DELTA → CUMULATIVE (aggregation_temporality.go:17-20): running
-    sum of deltas in point order per stream — the value "since a fixed
-    start time". NULL deltas contribute 0 but keep their row (a point
-    with no recorded change still reports the running total)."""
+    """DELTA → CUMULATIVE (aggregation_temporality.go:17-20): a
+    ``cumulative`` column, the running sum of deltas in point order per
+    stream — the value "since a fixed start time". NULL deltas
+    contribute 0 but keep their row (a point with no recorded change
+    still reports the running total)."""
     w = (
         Window.partitionBy(*stream_cols)
         .orderBy(*order_cols)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
     return df.withColumn(
-        out_col, F.sum(F.coalesce(F.col(value_col), F.lit(0))).over(w)
+        "cumulative", F.sum(F.coalesce(F.col(value_col), F.lit(0))).over(w)
     )
 
 

@@ -54,12 +54,11 @@ def stratified_sample(
     rates: dict[str, float],
     strat_col: str = "lang",
     key_col: str = "doc_id",
-    default_rate: float = 0.0,
 ) -> DataFrame:
     """Keep each row iff its md5-prefix falls below the stratum's
-    threshold; strata absent from ``rates`` use ``default_rate`` (0 =
-    drop, the explicit allowlist semantics a curated mix wants)."""
-    thr = F.lit(rate_threshold(default_rate))
+    threshold; strata absent from ``rates`` are dropped (rate 0, the
+    explicit allowlist semantics a curated mix wants)."""
+    thr = F.lit(rate_threshold(0.0))
     for s, r in sorted(rates.items()):
         thr = F.when(
             F.col(strat_col) == s, F.lit(rate_threshold(r))
@@ -80,7 +79,6 @@ def stratified_sample_sql(
     rates: dict[str, float],
     strat_col: str = "lang",
     key_col: str = "doc_id",
-    default_rate: float = 0.0,
     cols: str = "*",
 ) -> str:
     """DuckDB twin of :func:`stratified_sample` (same md5 prefix, same
@@ -94,7 +92,7 @@ def stratified_sample_sql(
             SELECT {cols} FROM {table_expr}
             WHERE substring(md5(CAST({key_col} AS VARCHAR)), 1, 6) <
                   (CASE {branches}
-                        ELSE '{rate_threshold(default_rate)}' END)
+                        ELSE '{rate_threshold(0.0)}' END)
         """
 
 

@@ -30,7 +30,6 @@ from opentelemetry_collector_spark.operators.textstats import bind_once, words_c
 def chunk_documents(
     df: DataFrame,
     id_col: str = "id",
-    text_col: str = "text",
     chunk_tokens: int = 64,
     overlap: int = 8,
 ) -> DataFrame:
@@ -44,7 +43,7 @@ def chunk_documents(
     if overlap >= chunk_tokens:
         raise ValueError("overlap must be < chunk_tokens")
     stride = chunk_tokens - overlap
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
 
     def body(wb: Column) -> Column:
         n = F.size(wb)
@@ -93,20 +92,19 @@ ROWS_PER_SHARD = 4_000_000
 MAX_SHARDS = 65_536
 
 
-def derive_shards(n_rows: int, rows_per_shard: int = ROWS_PER_SHARD) -> int:
-    """Shard count scaling with input size: ceil(n / rows_per_shard),
+def derive_shards(n_rows: int) -> int:
+    """Shard count scaling with input size: ceil(n / ROWS_PER_SHARD),
     clamped to [1, MAX_SHARDS]. At 10^12 rows this yields 250k→capped
     65k shards of ~15M rows — still bounded window partitions and a
     bounded driver-side totals collect."""
     if n_rows <= 0:
         return 1
-    return max(1, min(MAX_SHARDS, -(-n_rows // rows_per_shard)))
+    return max(1, min(MAX_SHARDS, -(-n_rows // ROWS_PER_SHARD)))
 
 
 def pack_sequences(
     df: DataFrame,
     id_col: str = "id",
-    token_col: str = "n_tokens",
     budget: int = 512,
     shards: int | None = None,
 ) -> DataFrame:
@@ -150,11 +148,11 @@ def pack_sequences(
     local = _persist(
         df.select(
             F.col(id_col),
-            F.col(token_col).cast("bigint").alias(token_col),
+            F.col("n_tokens").cast("bigint").alias("n_tokens"),
             shard.alias("_shard"),
         ).withColumn(
             "_local_end",
-            F.sum(token_col).over(
+            F.sum("n_tokens").over(
                 Window.partitionBy("_shard")
                 .orderBy(id_col)
                 .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -173,16 +171,16 @@ def pack_sequences(
     base_df = spark.createDataFrame(
         [(int(k), int(v)) for k, v in base.items()], "_shard bigint, _base bigint"
     )
-    start = F.col("_base") + F.col("_local_end") - F.col(token_col)
+    start = F.col("_base") + F.col("_local_end") - F.col("n_tokens")
     seq_id = F.floor(start / F.lit(budget))
     return (
         local.join(F.broadcast(base_df), "_shard")
         .select(
             id_col,
-            token_col,
+            "n_tokens",
             start.alias("start_offset"),
             seq_id.alias("seq_id"),
-            (F.floor((start + F.col(token_col) - 1) / F.lit(budget)) > seq_id)
+            (F.floor((start + F.col("n_tokens") - 1) / F.lit(budget)) > seq_id)
             .cast("int")
             .alias("straddles"),
         )

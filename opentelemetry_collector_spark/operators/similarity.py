@@ -25,7 +25,6 @@ precision in sequential dimension order, the order of DuckDB's
 from __future__ import annotations
 
 import pandas as pd  # noqa: F401 — resolves pandas_udf type hints
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -132,7 +131,6 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
     vec_col: str = "embedding",
     fanout: int = 64,
 ) -> DataFrame:
@@ -142,10 +140,10 @@ def brute_force_topk(
     (:func:`_topk_per_query`), so no task ever sorts the whole corpus.
     A NULL vector scores a NULL cosine and ranks last."""
     c = corpus.select(
-        F.col(id_col).alias("nbr_id"), _as_double(F.col(vec_col)).alias("cv")
+        F.col("vec_id").alias("nbr_id"), _as_double(F.col(vec_col)).alias("cv")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
+        F.col("vec_id").alias("query_id"), _as_double(F.col(vec_col)).alias("qv")
     )
     scored = c.join(F.broadcast(q), F.col("query_id") != F.col("nbr_id")).select(
         "query_id",
@@ -316,8 +314,6 @@ def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     cell_col: str = "label",
     fanout: int = 64,
     max_cell: int | None = None,
@@ -334,18 +330,18 @@ def ivf_topk(
     neighborhood signal and the drop is an explicit recall/cost choice,
     so it is OFF by default and the oracle runs uncapped."""
     c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
+        F.col("vec_id").alias("nbr_id"),
         F.col(cell_col).alias("cell"),
-        _as_double(F.col(vec_col)).alias("cv"),
+        _as_double(F.col("embedding")).alias("cv"),
     )
     if max_cell:
         from opentelemetry_collector_spark.operators.dedup import _cap_buckets
 
         c = _cap_buckets(c, ["cell"], max_cell, "ivf_topk probe cells")
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.col(cell_col).alias("qcell"),
-        _as_double(F.col(vec_col)).alias("qv"),
+        _as_double(F.col("embedding")).alias("qv"),
     )
     scored = c.join(
         F.broadcast(q),
@@ -363,30 +359,25 @@ def ivf_topk_probed(
     queries: DataFrame,
     centroids: list[list[float]],
     probes: int = 2,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-    fanout: int = 64,
 ) -> DataFrame:
     """Multi-probe IVF: each query searches its ``probes`` nearest
     k-means cells (probe_cells_expr over the broadcast centroids) —
     the standard recall/cost knob one level up from single-probe
     :func:`ivf_topk`. Cells are disjoint, so the probed candidate sets
     union without duplicates; the rank is the same bounded two-level
-    form. ``corpus`` must carry ``cell_col`` (the argmin assignment);
-    measured recall vs exact is the ``ann_recall`` pattern."""
+    form, keeping the top 5. ``corpus`` must carry ``cell`` (the argmin
+    assignment); measured recall vs exact is the ``ann_recall`` pattern."""
     c = corpus.select(
-        F.col(id_col).alias("nbr_id"),
-        F.col(cell_col).alias("cell"),
-        _as_double(F.col(vec_col)).alias("cv"),
+        F.col("vec_id").alias("nbr_id"),
+        F.col("cell"),
+        _as_double(F.col("embedding")).alias("cv"),
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col("vec_id").alias("query_id"),
         F.explode(
-            probe_cells_expr(_as_double(F.col(vec_col)), centroids, probes)
+            probe_cells_expr(_as_double(F.col("embedding")), centroids, probes)
         ).alias("qcell"),
-        _as_double(F.col(vec_col)).alias("qv"),
+        _as_double(F.col("embedding")).alias("qv"),
     )
     scored = c.join(
         F.broadcast(q),
@@ -396,53 +387,7 @@ def ivf_topk_probed(
         "nbr_id",
         cosine_rounded_arrow(4)(F.col("qv"), F.col("cv")).alias("cos"),
     )
-    return _topk_per_query(scored, k, fanout)
-
-
-def save_ivf_index(
-    catalog,
-    name: str,
-    df_with_cells: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "cell",
-) -> None:
-    """Persist an IVF index: the assigned corpus lands cell-PARTITIONED
-    (``name/cell=J/``), so a probe reads only its cell's files —
-    partition pruning is the on-disk face of the cell restriction that
-    makes IVF 100 TB-feasible. Centroids (k×dim doubles) are a tiny
-    driver-side metadata table (``name_centroids``), the same
-    manifest-style write the lineage tables use. Build once, probe
-    many — the index lifecycle a real vector pipeline runs."""
-    catalog.overwrite(
-        name,
-        df_with_cells.select(id_col, vec_col, cell_col),
-        partition_by=[cell_col],
-    )
-    rows = [
-        (j, pos, float(x))
-        for j, c in enumerate(centroids)
-        for pos, x in enumerate(c)
-    ]
-    catalog.overwrite_local(
-        f"{name}_centroids", rows,
-        pa.schema([("cell", pa.int32()), ("pos", pa.int32()), ("x", pa.float64())]),
-    )
-
-
-def load_ivf_index(catalog, name: str) -> tuple[DataFrame, list[list[float]]]:
-    """Load a saved IVF index: (cell-partitioned corpus DataFrame,
-    centroids). Filtering the returned frame on the cell column prunes
-    to that cell's partition directory (asserted in plan tests)."""
-    df = catalog.read(name)
-    crows = catalog.read(f"{name}_centroids").collect()
-    k = max(r["cell"] for r in crows) + 1
-    dim = max(r["pos"] for r in crows) + 1
-    cents = [[0.0] * dim for _ in range(k)]
-    for r in crows:
-        cents[r["cell"]][r["pos"]] = r["x"]
-    return df, cents
+    return _topk_per_query(scored, 5)
 
 
 def lsh_planes(dim: int, n_planes: int = 8) -> list[list[float]]:
@@ -482,17 +427,12 @@ def lsh_topk(
     n_planes: int = 8,
     dim: int | None = None,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    fanout: int = 64,
-    max_cell: int | None = None,
 ) -> DataFrame:
     """LSH-bucketed ANN — the other standard cell function next to the
     k-means IVF: candidates are corpus vectors in the query's sign-LSH
     bucket (cosine-direction cells, no training pass at all). Same
     bounded-rank machinery as :func:`ivf_topk`; the recall/cost knob is
-    ``n_planes`` (fewer planes = bigger buckets = higher recall), and
-    ``max_cell`` sheds degenerate buckets exactly like the IVF probe.
+    ``n_planes`` (fewer planes = bigger buckets = higher recall).
     Callers that know the vector length pass ``dim`` explicitly and
     skip the probe job entirely; only when ``dim`` is None does one
     tiny driver probe over the first NON-NULL vector derive it (an
@@ -505,67 +445,52 @@ def lsh_topk(
     if dim is not None:
         def _guard(df: DataFrame) -> DataFrame:
             return df.withColumn(
-                vec_col,
-                F.when(F.size(F.col(vec_col)) == F.lit(dim), F.col(vec_col))
+                "embedding",
+                F.when(F.size(F.col("embedding")) == F.lit(dim), F.col("embedding"))
                 .otherwise(F.raise_error(F.concat(
-                    F.lit(f"lsh_topk: explicit dim={dim} but size({vec_col})="),
-                    F.size(F.col(vec_col)).cast("string"),
+                    F.lit(f"lsh_topk: explicit dim={dim} but size(embedding)="),
+                    F.size(F.col("embedding")).cast("string"),
                 ))),
             )
         corpus = _guard(corpus)
         queries = _guard(queries)
     if dim is None:
         probe = (
-            corpus.select(F.col(vec_col).alias("_v"))
+            corpus.select(F.col("embedding").alias("_v"))
             .filter(F.col("_v").isNotNull())
             .first()
         )
         if probe is None:
             raise ValueError(
-                f"lsh_topk: corpus has no non-null {vec_col!r} vectors — "
+                "lsh_topk: corpus has no non-null 'embedding' vectors — "
                 "cannot derive a hyperplane dimension"
             )
         dim = len(probe[0])
     planes = lsh_planes(dim, n_planes)
-    bucket = lsh_bucket_expr(_as_double(F.col(vec_col)), planes)
+    bucket = lsh_bucket_expr(_as_double(F.col("embedding")), planes)
     return ivf_topk(
         corpus.withColumn("_lshb", bucket),
         queries.withColumn("_lshb", bucket),
-        k=k, id_col=id_col, vec_col=vec_col, cell_col="_lshb",
-        fanout=fanout, max_cell=max_cell,
+        k=k, cell_col="_lshb",
     )
 
 
-def quantize_int8(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def quantize_int8(df: DataFrame) -> DataFrame:
     """Per-vector symmetric int8 quantization — the standard 4× storage
     cut for 100 TB embedding corpora (float32 → int8 + one float scale
     per vector): scale = max|x|/127, q_i = round(x_i/scale) ∈ [-127,
     127]. Pure fold/transform column math (codegen, no UDF), exactly
     invertible to within scale/2 per component; zero vectors quantize
-    to zeros with scale 0. ``dequantize_int8`` reconstructs."""
-    v = _as_double(F.col(vec_col))
+    to zeros with scale 0. Search runs on the quantized arrays
+    directly (cosine ignores the scale), so nothing here dequantizes."""
+    v = _as_double(F.col("embedding"))
     amax = F.array_max(F.transform(v, lambda x: F.abs(x)))
     scale = amax / F.lit(127.0)
     q = F.when(amax == 0.0, F.transform(v, lambda x: F.lit(0).cast("tinyint"))).otherwise(
         F.transform(v, lambda x: F.round(x / scale, 0).cast("tinyint"))
     )
     return df.select(
-        F.col(id_col),
+        F.col("vec_id"),
         scale.alias("q_scale"),
         q.alias("q_vec"),
-    )
-
-
-def dequantize_int8(
-    df: DataFrame,
-    scale_col: str = "q_scale",
-    q_col: str = "q_vec",
-) -> Column:
-    """Reconstructed double vector: x̂_i = q_i · scale."""
-    return F.transform(
-        F.col(q_col), lambda x: x.cast("double") * F.col(scale_col)
     )

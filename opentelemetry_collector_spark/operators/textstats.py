@@ -68,23 +68,23 @@ def grams_col(c: Column, k: int) -> Column:
     return bind_once(words_col(c), body)
 
 
-def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
+def token_count(df: DataFrame) -> DataFrame:
     """Whitespace token count + a BPE-ish subword estimate (≈ chars/4,
     the common rule of thumb — cheap, deterministic, scan-speed)."""
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
     return df.withColumns(
         {
             "n_tokens": F.size(w),
-            "n_subwords_est": F.ceil(F.length(norm_text(F.col(text_col))) / F.lit(4)).cast("bigint"),
+            "n_subwords_est": F.ceil(F.length(norm_text(F.col("text"))) / F.lit(4)).cast("bigint"),
         }
     )
 
 
-def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_score(df: DataFrame) -> DataFrame:
     """Length/punct/stopword-ratio quality features + a composite score
     in [0,1]. Rounded to 6 digits for cross-engine stability."""
-    t = norm_text(F.col(text_col))
-    w = words_col(F.col(text_col))
+    t = norm_text(F.col("text"))
+    w = words_col(F.col("text"))
     n_chars = F.length(t)
     n_tok = F.size(w)
     punct = F.length(F.regexp_replace(t, "[a-z0-9 ]", ""))
@@ -111,7 +111,7 @@ def quality_score(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
+def lang_id(df: DataFrame) -> DataFrame:
     """Marker-word language guess (n-gram-heuristic class). ONE fold
     over the token array tallies every language's marker hits at once
     (an array-of-counters accumulator), then a when-chain argmax with a
@@ -119,7 +119,7 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     interpreted filter per language, and the counter array is bound
     once so the fold isn't re-evaluated per argmax reference."""
     langs = list(LANG_MARKERS)  # insertion order is fixed
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
     counts = F.aggregate(
         w,
         F.array_repeat(F.lit(0), len(langs)),
@@ -161,9 +161,7 @@ PII_PATTERNS: list[tuple[str, str, str]] = [
 ]
 
 
-def redact_pii(
-    df: DataFrame, id_col: str = "id", text_col: str = "text"
-) -> DataFrame:
+def redact_pii(df: DataFrame, id_col: str = "id") -> DataFrame:
     """PII scrubbing (training-data hygiene): replace email addresses,
     IPv4 addresses and international phone numbers with typed
     placeholder tokens, and count each category before redaction.
@@ -180,7 +178,7 @@ def redact_pii(
     already replaced) is never counted in a category that did not
     actually redact it — the counts sum to the number of replacements
     performed."""
-    red = F.col(text_col)
+    red = F.col("text")
     counts = {}
     for name, pat, token in PII_PATTERNS:
         counts[f"n_{name}s"] = F.size(F.regexp_extract_all(red, F.lit(pat), 0))
@@ -192,9 +190,7 @@ def redact_pii(
     )
 
 
-def repetition_stats(
-    df: DataFrame, id_col: str = "id", text_col: str = "text"
-) -> DataFrame:
+def repetition_stats(df: DataFrame, id_col: str = "id") -> DataFrame:
     """Gopher/C4-class intra-document repetition signals, per doc:
 
     * ``dup_2gram_frac`` — fraction of word 2-grams that are repeats of
@@ -213,9 +209,9 @@ def repetition_stats(
     edge semantics) so a one-word doc has exactly one "gram" and the
     denominator is never 0.
     """
-    w = words_col(F.col(text_col))
+    w = words_col(F.col("text"))
     counts = bind_once(
-        grams_col(F.col(text_col), 2),
+        grams_col(F.col("text"), 2),
         lambda g: F.array(F.size(g), F.size(F.array_distinct(g))),
     )
     base = df.select(
@@ -259,7 +255,7 @@ ROLL_B = 1_000_003
 ROLL_P = 2_147_483_647
 
 
-def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprints:
 
     * ``fp_exact`` — md5 of normalized text (order- and spacing-exact);
@@ -269,8 +265,8 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
       conversation is O(1) given the previous hash — the property that
       makes it the fingerprint for streaming/append-only corpora).
     """
-    t = norm_text(F.col(text_col))
-    w = words_col(F.col(text_col))
+    t = norm_text(F.col("text"))
+    w = words_col(F.col("text"))
     hs = F.transform(
         w,
         lambda x: F.conv(F.substring(F.md5(x), 1, 8), 16, 10).cast("bigint")

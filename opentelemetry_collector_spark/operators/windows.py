@@ -10,9 +10,8 @@ deterministic tiebreaker) assigns each turn its stable rank. Per-turn
 text equality vs the reference (BASELINE.json input_hint) is checked
 under exactly this ordering.
 
-Scale notes: the window partitions by conv_id — the same key the
-pipeline already hash-partitions on (plans/partitioning.py), so Catalyst
-reuses one shuffle for windowing + downstream grouping. No global sort
+Scale notes: the window partitions by conv_id, so Catalyst reuses one
+shuffle for windowing and any downstream grouping on conv_id. No global sort
 anywhere except the explicitly-bounded top-k, which aggregates first
 (per-conv counts, tiny) and only then ranks.
 """
@@ -21,6 +20,12 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+# Sliding windows of an hour every half hour; sessions split on a
+# 30-minute gap.
+SLIDING_SIZE = "1 hour"
+SLIDING_SLIDE = "30 minutes"
+SESSION_GAP = "30 minutes"
 
 
 def stabilize_turn_order(df: DataFrame) -> DataFrame:
@@ -48,14 +53,12 @@ def conversation_stats(df: DataFrame) -> DataFrame:
     )
 
 
-def sliding_window_counts(
-    df: DataFrame, size: str = "1 hour", slide: str = "30 minutes"
-) -> DataFrame:
+def sliding_window_counts(df: DataFrame) -> DataFrame:
     """Sliding-window accounting: each turn lands in size/slide
     overlapping windows (``window()`` in batch mode — same operator the
     streaming variant uses with a watermark). Counts per (window, tool).
     """
-    w = F.window("ts", size, slide)
+    w = F.window("ts", SLIDING_SIZE, SLIDING_SLIDE)
     return (
         df.groupBy(w.alias("w"), "tool")
         .agg(F.count(F.lit(1)).alias("turn_count"))
@@ -67,10 +70,10 @@ def sliding_window_counts(
     )
 
 
-def session_window_stats(df: DataFrame, gap: str = "30 minutes") -> DataFrame:
-    """Session windows per conversation: turns closer than ``gap`` merge
-    into one session (``session_window`` — the stateful streaming
-    operator, exact in batch mode). Sessionization is THE conversation
+def session_window_stats(df: DataFrame) -> DataFrame:
+    """Session windows per conversation: turns closer than
+    ``SESSION_GAP`` merge into one session (``session_window`` — the
+    stateful streaming operator, exact in batch mode). Sessionization is THE conversation
     analytic the hourly grid can't express: a session's extent follows
     the data, not the clock.
 
@@ -78,7 +81,7 @@ def session_window_stats(df: DataFrame, gap: str = "30 minutes") -> DataFrame:
     on conv_id — the same partitioning the rest of the pipeline uses.
     """
     return (
-        df.groupBy(F.session_window("ts", gap).alias("w"), F.col("conv_id"))
+        df.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), F.col("conv_id"))
         .agg(
             F.count(F.lit(1)).alias("n_turns"),
             F.min("turn_idx").alias("first_turn"),

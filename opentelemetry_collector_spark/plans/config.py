@@ -239,29 +239,17 @@ class ServiceConfig:
     pipelines: dict[str, ServicePipeline]
 
     @staticmethod
-    def from_yaml(text: str) -> "ServiceConfig":
-        """Load one YAML source, resolving ``${env:VAR}`` /
+    def from_files(paths: list[str]) -> "ServiceConfig":
+        """Load the YAML sources ``paths``: later files deep-merge over
+        earlier ones (maps merge recursively, scalars/lists replace — the
+        resolver's Conf.Merge semantics), THEN ``${env:VAR}`` /
         ``${env:VAR:-default}`` / ``${file:path}`` / ``${yaml:...}``
         references (confmap/resolver.go:73-128; providers under
-        confmap/provider/) against the process environment.
-        Unresolvable references raise ConfigError."""
-        import yaml
-
-        return ServiceConfig.from_dict(_expand_value(yaml.safe_load(text) or {}))
-
-    @staticmethod
-    def from_file(path: str) -> "ServiceConfig":
-        with open(path) as f:
-            return ServiceConfig.from_yaml(f.read())
-
-    @staticmethod
-    def from_files(paths: list[str]) -> "ServiceConfig":
-        """Multi-source config: later files deep-merge over earlier ones
-        (maps merge recursively, scalars/lists replace — the resolver's
-        Conf.Merge semantics), THEN references expand over the merged
-        result — matching the reference's resolve-after-merge order, so
-        an override file can replace a ``${env:...}`` reference with a
-        literal (or vice versa)."""
+        confmap/provider/) expand over the merged result against the
+        process environment — the reference's resolve-after-merge order,
+        so an override file can replace a ``${env:...}`` reference with
+        a literal (or vice versa). Unresolvable references raise
+        ConfigError."""
         import yaml
 
         merged: dict = {}

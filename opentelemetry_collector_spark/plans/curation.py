@@ -19,19 +19,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+# The held-out eval split: documents with doc_id ≡ 3 (mod 13), about 8%.
+HELDOUT_MOD = 13
+HELDOUT_REM = 3
+CURATED_TABLE = "curated_documents"
+
 
 def curate_corpus(
     spark: SparkSession,
     docs: DataFrame,
     catalog,
     quality_min: float = 0.5,
-    heldout_mod: int = 13,
-    heldout_rem: int = 3,
-    table: str = "curated_documents",
-    pairs: DataFrame | None = None,
 ) -> dict:
     """Run the full curation pipeline over ``docs`` (doc_id, text,
-    ...), write survivors to ``table`` via ``catalog`` and return the
+    ...), write survivors to CURATED_TABLE via ``catalog`` and return the
     per-stage accounting dict. Stages cascade: a document removed by
     decontamination is not re-counted by the repetition or quality
     gates. Input hygiene: NULL text is coalesced to '' (degenerate
@@ -47,28 +48,21 @@ def curate_corpus(
     Observation. Every persisted intermediate is released in a finally
     (exceptions in a long-lived session must not leak cached blocks).
 
-    ``pairs`` optionally supplies a precomputed duplicate-pair frame
-    over the SAME train split (a suite that already ran the pair
-    oracle, or a nightly job reusing yesterday's candidates) so the
-    MinHash pass is not regenerated; it must cover exactly the train
-    documents — a full-corpus pair set would elect held-out docs as
-    component representatives and over-drop. The returned accounting
-    includes ``cc_converged`` — False means the component fixpoint was
-    not reached and dup_removed is a LOWER bound (split components keep
-    one representative per fragment)."""
+    The returned accounting includes ``cc_converged`` — False means the
+    component fixpoint was not reached and dup_removed is a LOWER bound
+    (split components keep one representative per fragment)."""
     from opentelemetry_collector_spark.operators import dedup, textstats
 
     docs = docs.select(
         "doc_id", F.coalesce(F.col("text"), F.lit("")).alias("text")
     )
-    heldout = F.pmod(F.col("doc_id"), F.lit(heldout_mod)) == heldout_rem
+    heldout = F.pmod(F.col("doc_id"), F.lit(HELDOUT_MOD)) == HELDOUT_REM
     bench = docs.filter(heldout).select("text")
     train = docs.filter(~heldout).dropDuplicates(["doc_id"])
 
     cc_stats: dict = {}
     try:
-        if pairs is None:
-            pairs = dedup.minhash_lsh_pairs(train)
+        pairs = dedup.minhash_lsh_pairs(train)
         kept = dedup.dedup_survivors(train, pairs, stats=cc_stats)
 
         scored = textstats.lang_id(textstats.quality_score(kept))
@@ -130,7 +124,7 @@ def curate_corpus(
                 "lang_guess",
             )
         )
-        catalog.overwrite(table, out)
+        catalog.overwrite(CURATED_TABLE, out)
         metrics = obs.get
     finally:
         dedup.release_cached()
@@ -147,7 +141,7 @@ def curate_corpus(
         "pii_redactions": int(metrics["n_pii"]),
         "docs_out": int(metrics["n"]),
         "quality_min": quality_min,
-        "table": table,
+        "table": CURATED_TABLE,
         "cc_converged": bool(cc_stats.get("converged", False)),
         "cc_rounds": int(cc_stats.get("rounds", 0)),
     }

@@ -44,7 +44,6 @@ class Gate:
     stage: str
     enabled: bool
     description: str = ""
-    from_version: str = ""
     to_version: str = ""
 
 
@@ -57,7 +56,6 @@ class Registry:
         gate_id: str,
         stage: str,
         description: str = "",
-        from_version: str = "",
         to_version: str = "",
     ) -> Gate:
         """registry.go:128-167 Register: validated id, stage-derived
@@ -86,7 +84,6 @@ class Registry:
             stage=stage,
             enabled=stage in (BETA, STABLE),
             description=description,
-            from_version=from_version,
             to_version=to_version,
         )
         self._gates[gate_id] = g
@@ -126,10 +123,6 @@ class Registry:
             )
         return g.enabled
 
-    def visit_all(self) -> list[Gate]:
-        """Lexicographic order (registry.go:199-211 VisitAll)."""
-        return [self._gates[k] for k in sorted(self._gates)]
-
     def apply_flag(self, spec: str) -> None:
         """``--feature-gates`` grammar (flag.go:51-71): comma-delimited
         ids, '-' prefix disables, '+' or bare enables; empty spec is a
@@ -151,13 +144,6 @@ class Registry:
                 errs.append(str(e))
         if errs:
             raise GateError("; ".join(errs))
-
-    def flag_string(self) -> str:
-        """flag.go:33-49 String: every gate id, '-'-prefixed when
-        disabled, comma-joined in visit order."""
-        return ",".join(
-            g.id if g.enabled else f"-{g.id}" for g in self.visit_all()
-        )
 
 
 _global = Registry()

@@ -10,10 +10,10 @@ proto-bytes sizer). Two views of the same truth here:
 
 * **Logical lineage** (:func:`logical_lineage`): rows + payload bytes
   per (route, partition). The partition id is a *deterministic,
-  engine-independent* function of conv_id (md5-prefix mod N — the same
-  hash family as plans/partitioning's salter), so the DuckDB oracle
-  reproduces the lineage table bit-for-bit; the ``lineage`` entry in
-  ``__spark_entry__.oracle_sql()`` is exactly this aggregation. ONE
+  engine-independent* function of conv_id (md5-prefix mod N), so the
+  DuckDB oracle reproduces the lineage table bit-for-bit; the
+  ``lineage`` entry in ``__spark_entry__.oracle_sql()`` is exactly this
+  aggregation. ONE
   aggregation pass over the cached routed parent produces lineage for
   every sink at once — no per-sink recount.
 * **Physical file lineage** (:func:`file_lineage`): rows + bytes per
@@ -40,14 +40,15 @@ from pyspark.sql import functions as F
 DEFAULT_LINEAGE_PARTITIONS = 32
 
 
-def det_partition_id(c: Column, n: int = DEFAULT_LINEAGE_PARTITIONS) -> Column:
+def det_partition_id(c: Column) -> Column:
     """Deterministic partition id: first 8 md5 hex chars of the key as an
-    integer, mod n. Engine-independent (Spark ``conv(hex,16,10)`` ==
+    integer, mod DEFAULT_LINEAGE_PARTITIONS. Engine-independent (Spark ``conv(hex,16,10)`` ==
     DuckDB ``CAST('0x'||hex AS BIGINT)``; value ≤ 0xFFFFFFFF so plain
     ``%`` is non-negative in both) — the ``lineage`` oracle in
     ``__spark_entry__.oracle_sql()`` writes the same expression."""
     return (
-        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % F.lit(n)
+        F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint")
+        % F.lit(DEFAULT_LINEAGE_PARTITIONS)
     ).cast("int")
 
 

@@ -50,7 +50,7 @@ def run_pipeline(
     into ``warehouse``, checkpoint-gated per stage: re-running with the
     same ``run_id`` skips the acked stages.
     """
-    cfg = config.ServiceConfig.from_file(FLAGSHIP_CONFIG)
+    cfg = config.ServiceConfig.from_files([FLAGSHIP_CONFIG])
     cfg.receivers["transcripts"]["sf_dir"] = sf_dir
     ckpt = CheckpointStore(warehouse, run_id)
     skipped = [m["stage"] for m in ckpt.metrics()]

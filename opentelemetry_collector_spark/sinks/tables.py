@@ -54,42 +54,10 @@ class TableCatalog:
             w = w.partitionBy(*partition_by)
         w.parquet(self.path(table))
 
-    def overwrite_bucketed(
-        self,
-        table: str,
-        df: DataFrame,
-        buckets: int,
-        bucket_cols: list[str],
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        """Hash-bucketed table write (``bucketBy`` + ``saveAsTable``):
-        two tables bucketed identically on the join key join with NO
-        exchange on either side — the co-located fact-fact join that a
-        100 TB warehouse needs (a plain join of two 50 TB tables
-        shuffles both; bucketed, each task reads matching bucket files
-        directly). ``sort_cols`` additionally pre-sorts within buckets
-        so the merge join skips its sort. Bucket metadata lives in the
-        session catalog (local sandbox); on a real deployment this is
-        an Iceberg bucket-partitioned table, same plan shape. Read it
-        back through the catalog (``spark.table``): the bucket spec
-        rides the catalog entry, so ``spark.read.parquet`` on the same
-        path would silently lose the no-shuffle join property."""
-        name = table.replace("/", "_").replace("-", "_")
-        w = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", self.path(table))
-        )
-        w = w.bucketBy(buckets, *bucket_cols)
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(name)
-
     def overwrite_local(self, table: str, rows: list[tuple], schema: pa.Schema) -> None:
         """Driver-side table write (pyarrow, no Spark job) — for tiny
-        tables like an IVF index's centroids, the way Iceberg writes
-        manifest metadata alongside data files, and for the empty table
-        of a fan-out route with no rows. Atomic via write-then-rename of
+        tables, the way Iceberg writes manifest metadata alongside data
+        files, such as the empty table of a fan-out route with no rows. Atomic via write-then-rename of
         the whole directory."""
         arrays = [pa.array([r[i] for r in rows], type=f.type) for i, f in enumerate(schema)]
         target = self.path(table)

@@ -34,11 +34,10 @@ OTLP_LOGS_SCHEMA = (
 
 def flatten_envelope(
     df: DataFrame,
-    wire_col: str = "wire",
     res_id_alias: str = "conv_id",
     carry: list[str] | None = None,
 ) -> DataFrame:
-    """Decode + flatten envelope JSON documents to one row per
+    """Decode + flatten the ``wire`` envelope JSON documents to one row per
     LogRecord: the conv.id resource attribute surfaces as
     ``res_id_alias``, scope name and record fields as flat columns.
     ``carry`` names input columns to pass through unchanged (the
@@ -47,7 +46,7 @@ def flatten_envelope(
     byte-oracled round-trip query use."""
     carry = carry or []
     dec = df.select(
-        *carry, F.from_json(F.col(wire_col), OTLP_LOGS_SCHEMA).alias("d")
+        *carry, F.from_json(F.col("wire"), OTLP_LOGS_SCHEMA).alias("d")
     )
     flat = (
         dec.select(*carry, F.explode("d.resourceLogs").alias("rl"))
@@ -96,15 +95,19 @@ from opentelemetry_collector_spark.functions.values import (  # noqa: E402
 )
 
 
-def encode_envelope(df: DataFrame, batch_size: int = 512) -> DataFrame:
+# Turns per export batch: the envelope's send_batch_max_size.
+EXPORT_BATCH = 512
+
+
+def encode_envelope(df: DataFrame) -> DataFrame:
     """Parsed turns → one OTLP/JSON envelope document per
-    (conversation, export batch of ≤ batch_size turns): resource =
+    (conversation, export batch of ≤ EXPORT_BATCH turns): resource =
     conversation (conv.id attribute), scope = tool, records in turn
     order via sorted aggregation — the exporter-side encoder whose
     byte-exactness is oracled by the ``otlp_envelope`` query. The batch
     key bounds every aggregation row (the send_batch_max_size
     boundary). Returns (conv_id, _batch, wire)."""
-    df = df.withColumn("_batch", (F.col("turn_idx") / F.lit(batch_size)).cast("int"))
+    df = df.withColumn("_batch", (F.col("turn_idx") / F.lit(EXPORT_BATCH)).cast("int"))
     sev_text = (
         F.when(F.col("severity_num") == 17, "ERROR")
         .when(F.col("severity_num") == 13, "WARN")

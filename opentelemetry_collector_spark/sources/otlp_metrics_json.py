@@ -132,12 +132,12 @@ def encode_metrics_json(
     )
 
 
-def decode_metrics_json(df: DataFrame, wire_col: str = "wire") -> DataFrame:
+def decode_metrics_json(df: DataFrame) -> DataFrame:
     """Envelope documents → one row per data point: (metric_name, unit,
     mtype, tool, as_double, as_int, ts_unix_nano, temporality,
     monotonic). Omitted fields decode to NULL/defaults."""
     dec = df.select(
-        F.from_json(F.col(wire_col), OTLP_METRICS_SCHEMA).alias("d")
+        F.from_json(F.col("wire"), OTLP_METRICS_SCHEMA).alias("d")
     )
     metrics = (
         dec.select(F.explode("d.resourceMetrics").alias("rm"))

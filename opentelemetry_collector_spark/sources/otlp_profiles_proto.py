@@ -233,7 +233,7 @@ def encode_profiles_proto(parsed: DataFrame) -> DataFrame:
     return grouped.select("conv_id", _enc("conv_id", "turns").alias("wire"))
 
 
-def decode_profiles_proto(df: DataFrame, wire_col: str = "wire") -> DataFrame:
+def decode_profiles_proto(df: DataFrame) -> DataFrame:
     """(…, wire) → resolved sample rows (same columns the global
     profiles operator's resolve_samples emits)."""
-    return explode_decoded(df, wire_col, _SAMPLE_SCHEMA, decode_profiles_request)
+    return explode_decoded(df, "wire", _SAMPLE_SCHEMA, decode_profiles_request)

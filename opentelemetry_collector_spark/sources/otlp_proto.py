@@ -1,13 +1,14 @@
 """OTLP protobuf wire codec — the reference's PRIMARY wire format
 (SURVEY §2.1 S1/S2; pdata/plog/pb.go:8-25 ProtoMarshaler.MarshalLogs /
-UnmarshalLogs), re-expressed for Spark. Logs, traces and metrics live
-here; profiles (sources/otlp_profiles_proto.py) use the same walker.
+UnmarshalLogs), re-expressed for Spark. Logs and metrics live here;
+profiles (sources/otlp_profiles_proto.py) use the same walker. Traces
+travel as OTLP/JSON (sources/otlp_trace_json.py).
 
 The walker is three pieces, and field numbers appear only in the first:
 
 * **One table per message** (``Message``): field number → (name, kind,
   flags), transcribed from the public opentelemetry-proto schema
-  (logs/v1, trace/v1, metrics/v1, profiles/v1development). A kind is a
+  (logs/v1, metrics/v1, profiles/v1development). A kind is a
   scalar (VARINT, INT64, SINT, FIXED64, SFIXED64, DOUBLE, STRING, BYTES)
   or a nested ``Message``. REPEATED marks a repeated field, PACKED a
   packed repeated scalar, PRESENT a field written even at its zero
@@ -515,140 +516,14 @@ def encode_logs_proto(parsed: DataFrame, batch_size: int = 512) -> DataFrame:
     )
 
 
-def decode_logs_proto(
-    df: DataFrame, wire_col: str = "wire", carry: list[str] | None = None
-) -> DataFrame:
+def decode_logs_proto(df: DataFrame, carry: list[str] | None = None) -> DataFrame:
     """(…, wire: binary) → one row per LogRecord, the flat receiver
     shape shared with the JSON path, plus ``decode_error``: NULL on a
     decoded record; for a malformed payload, ONE row with the carry
     columns, NULL data fields and the MalformedProto reason — a bad
     payload never fails the task and never yields part of its
     records."""
-    return explode_decoded(df, wire_col, _DECODED_SCHEMA, _logs_or_error, carry or [])
-
-
-# ---------------------------------------------------------------------------
-# traces signal (trace/v1/trace.proto)
-# ---------------------------------------------------------------------------
-
-STATUS = Message({3: ("code", VARINT)})
-SPAN = Message({
-    1: ("trace_id", BYTES),
-    2: ("span_id", BYTES),
-    4: ("parent_span_id", BYTES),
-    5: ("name", STRING),
-    6: ("kind", VARINT),
-    7: ("start_time_unix_nano", FIXED64),
-    8: ("end_time_unix_nano", FIXED64),
-    15: ("status", STATUS),
-})
-SCOPE_SPANS = Message({1: ("scope", SCOPE), 2: ("spans", SPAN, REPEATED)})
-RESOURCE_SPANS = Message({1: ("resource", RESOURCE), 2: ("scope_spans", SCOPE_SPANS, REPEATED)})
-TRACES_DATA = Message({1: ("resource_spans", RESOURCE_SPANS, REPEATED)})
-
-
-def encode_span(
-    trace_id_hex: str,
-    span_id_hex: str,
-    parent_span_id_hex: str | None,
-    name: str,
-    kind: int,
-    start_unix_nano: int,
-    end_unix_nano: int,
-    status_code: int,
-) -> bytes:
-    """One Span. IDs come in as the hex the column derivation produces;
-    the wire carries raw bytes. The status message is omitted for an
-    UNSET code (proto3 omission: it would be empty)."""
-    return encode(SPAN, {
-        "trace_id": bytes.fromhex(trace_id_hex),
-        "span_id": bytes.fromhex(span_id_hex),
-        "parent_span_id": bytes.fromhex(parent_span_id_hex or ""),
-        "name": name,
-        "kind": kind,
-        "start_time_unix_nano": start_unix_nano,
-        "end_time_unix_nano": end_unix_nano,
-        "status": {"code": status_code},
-    })
-
-
-def encode_resource_spans(conv_id: str, spans: list[bytes]) -> bytes:
-    """TracesData{ResourceSpans} for one conversation: resource carries
-    conv.id like the logs envelope; one ScopeSpans holds the spans."""
-    return encode(TRACES_DATA, {"resource_spans": [{
-        "resource": {"attributes": string_attributes([("conv.id", conv_id)])},
-        "scope_spans": [{"scope": {"name": "transcripts"}, "spans": spans}],
-    }]})
-
-
-_SPAN_DECODED_SCHEMA = (
-    "res_conv string, trace_id string, span_id string, "
-    "parent_span_id string, name string, kind int, "
-    "start_unix_nano bigint, end_unix_nano bigint, status_code int"
-)
-
-
-@decoder(_SPAN_DECODED_SCHEMA)
-def decode_spans(buf: bytes) -> list[dict]:
-    """TracesData bytes → one dict per Span (hex ids; an absent parent
-    is None)."""
-    out: list[dict] = []
-    for rs in decode(TRACES_DATA, buf).get("resource_spans", ()):
-        conv_id = attributes(rs.get("resource")).get("conv.id", "")
-        for ss in rs.get("scope_spans", ()):
-            for s in ss.get("spans", ()):
-                out.append({
-                    "res_conv": conv_id,
-                    "trace_id": s.get("trace_id", b"").hex(),
-                    "span_id": s.get("span_id", b"").hex(),
-                    "parent_span_id": s.get("parent_span_id", b"").hex() or None,
-                    "name": s.get("name", ""),
-                    "kind": s.get("kind", 0),
-                    "start_unix_nano": s.get("start_time_unix_nano", 0),
-                    "end_unix_nano": s.get("end_time_unix_nano", 0),
-                    "status_code": s.get("status", {}).get("code", 0),
-                })
-    return out
-
-
-def encode_spans_proto(spans: DataFrame) -> DataFrame:
-    """Span rows (operators/traces.derive_spans shape) → one TracesData
-    proto per conversation; same declarative group/sort + Arrow
-    boundary as the logs encoder."""
-    rec = F.struct(
-        F.col("turn_idx").cast("bigint").alias("ti"),
-        "trace_id", "span_id", "parent_span_id", "name", "kind",
-        "start_unix_nano", "end_unix_nano", "status_code",
-    )
-    grouped = (
-        spans.select("conv_id", rec.alias("s"))
-        .groupBy("conv_id")
-        .agg(F.array_sort(F.collect_list("s")).alias("ss"))
-    )
-
-    @pandas_udf("binary")
-    def _enc(conv: pd.Series, ss: pd.Series) -> pd.Series:
-        out = []
-        for cid, arr in zip(conv, ss):
-            encoded = [
-                encode_span(
-                    s["trace_id"], s["span_id"], s["parent_span_id"],
-                    s["name"], int(s["kind"]),
-                    int(s["start_unix_nano"]), int(s["end_unix_nano"]),
-                    int(s["status_code"]),
-                )
-                for s in arr
-            ]
-            out.append(encode_resource_spans(cid, encoded))
-        return pd.Series(out)
-
-    return grouped.select("conv_id", _enc("conv_id", "ss").alias("wire"))
-
-
-def decode_spans_proto(
-    df: DataFrame, wire_col: str = "wire", carry: list[str] | None = None
-) -> DataFrame:
-    return explode_decoded(df, wire_col, _SPAN_DECODED_SCHEMA, decode_spans, carry or [])
+    return explode_decoded(df, "wire", _DECODED_SCHEMA, _logs_or_error, carry or [])
 
 
 def read_otlp_proto(spark, path: str) -> DataFrame:
@@ -665,7 +540,7 @@ def read_otlp_proto(spark, path: str) -> DataFrame:
     return decode_logs_proto(raw)
 
 
-def write_proto_files(df: DataFrame, path: str, wire_col: str = "wire") -> int:
+def write_proto_files(df: DataFrame, path: str) -> int:
     """Exporter-side file sink for encoded envelopes: one ``.pb`` file
     per envelope row (foreachPartition, executor-side writes — no
     driver collect). Returns the row count via the write's accumulator
@@ -674,13 +549,13 @@ def write_proto_files(df: DataFrame, path: str, wire_col: str = "wire") -> int:
 
     os.makedirs(path, exist_ok=True)
     enc = df.select(
-        F.md5(F.concat_ws("|", "conv_id", "_batch")).alias("name"), wire_col
+        F.md5(F.concat_ws("|", "conv_id", "_batch")).alias("name"), "wire"
     )
 
     def _write(rows):
         for r in rows:
             with open(os.path.join(path, f"{r['name']}.pb"), "wb") as f:
-                f.write(bytes(r[wire_col]))
+                f.write(bytes(r["wire"]))
 
     enc = enc.persist()
     try:
@@ -772,9 +647,8 @@ def encode_exp_histogram_metric(
     name: str,
     unit: str,
     points: list[dict],
-    temporality: int = AGG_TEMPORALITY_CUMULATIVE,
 ) -> bytes:
-    """One Metric{exponential_histogram} message. Each point dict:
+    """One cumulative Metric{exponential_histogram} message. Each point dict:
     attrs (list[(key, str value)]), start_time and time (unix nano),
     count, zero_count, scale, pos_offset, pos_counts, neg_offset,
     neg_counts; a missing key is unset."""
@@ -789,7 +663,7 @@ def encode_exp_histogram_metric(
             "positive": {"offset": pt.get("pos_offset"), "bucket_counts": pt.get("pos_counts")},
             "negative": {"offset": pt.get("neg_offset"), "bucket_counts": pt.get("neg_counts")},
         } for pt in points],
-        "aggregation_temporality": temporality,
+        "aggregation_temporality": AGG_TEMPORALITY_CUMULATIVE,
     }})
 
 
@@ -799,7 +673,7 @@ def encode_resource_metrics(
     metrics: list[bytes],
 ) -> bytes:
     """MetricsData{ResourceMetrics{resource, ScopeMetrics{scope,
-    metrics…}}} — the same 3-level envelope shape as logs/traces."""
+    metrics…}}} — the same 3-level envelope shape as logs."""
     return encode(METRICS_DATA, {"resource_metrics": [{
         "resource": {"attributes": string_attributes(resource_attrs)},
         "scope_metrics": [{"scope": {"name": scope_name}, "metrics": metrics}],
@@ -872,17 +746,16 @@ def encode_metrics_proto(
     metric_name: str = "latency_ms",
     unit: str = "ms",
     scale: int = 2,
-    group_col: str = "tool",
 ) -> DataFrame:
-    """Exponential-histogram rows (operators/exphist output: group,
-    sign, idx, n) → one MetricsData proto per group: the group value
+    """Exponential-histogram rows (operators/exphist output: tool,
+    sign, idx, n) → one MetricsData proto per tool: the tool value
     becomes the resource attribute, one ExponentialHistogramDataPoint
     carries dense positive/negative bucket arrays (offset = min index)
     plus the zero bucket count. Grouping is declarative (one
     collect_list per group — bounded: ~160 occupied buckets span the
     float range); only the struct→bytes step crosses into an
-    Arrow-batched UDF. Returns (group, wire: binary)."""
-    rows = hist.groupBy(group_col).agg(
+    Arrow-batched UDF. Returns (tool, wire: binary)."""
+    rows = hist.groupBy("tool").agg(
         F.collect_list(
             F.struct(
                 F.col("sign").cast("int").alias("sign"),
@@ -918,7 +791,7 @@ def encode_metrics_proto(
             no, nc = dense(neg)
             # OTLP attributes cannot carry null — a NULL group encodes
             # as an ABSENT attribute (unset), and decode restores None
-            attrs = [] if g is None else [(group_col, str(g))]
+            attrs = [] if g is None else [("tool", str(g))]
             metric = encode_exp_histogram_metric(
                 metric_name, unit,
                 [{
@@ -933,12 +806,10 @@ def encode_metrics_proto(
             )
         return pd.Series(out)
 
-    return rows.select(group_col, _enc(group_col, "buckets").alias("wire"))
+    return rows.select("tool", _enc("tool", "buckets").alias("wire"))
 
 
-def decode_metrics_proto(
-    df: DataFrame, wire_col: str = "wire", group_col: str = "tool"
-) -> DataFrame:
+def decode_metrics_proto(df: DataFrame, group_col: str = "tool") -> DataFrame:
     """(…, wire) → exponential-histogram rows (group, scale, sign, idx,
     n) — the exact inverse of encode_metrics_proto: dense bucket arrays
     re-sparsify (zero counts drop), the zero bucket returns as sign 0 /
@@ -965,4 +836,4 @@ def decode_metrics_proto(
                         rows.append((g, sc, sign, off + i, c))
         return rows
 
-    return explode_decoded(df, wire_col, schema, rows_of)
+    return explode_decoded(df, "wire", schema, rows_of)

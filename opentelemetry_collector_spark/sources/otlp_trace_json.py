@@ -187,17 +187,15 @@ def encode_trace_envelope(
     )
 
 
-def decode_trace_envelope(
-    df: DataFrame, wire_col: str = "wire", carry: list[str] | None = None
-) -> DataFrame:
-    """Envelope JSON documents → one row per span (the encoder's exact
+def decode_trace_envelope(df: DataFrame, carry: list[str] | None = None) -> DataFrame:
+    """``wire`` envelope JSON documents → one row per span (the encoder's exact
     inverse): conv.id resource attribute as res_conv, flat span columns
     named like derive_spans plus turn_idx from the span attribute.
     Omitted zero-valued fields decode back to their defaults
     (parent_span_id NULL, status_code 0)."""
     carry = carry or []
     dec = df.select(
-        *carry, F.from_json(F.col(wire_col), OTLP_TRACES_SCHEMA).alias("d")
+        *carry, F.from_json(F.col("wire"), OTLP_TRACES_SCHEMA).alias("d")
     )
     flat = (
         dec.select(*carry, F.explode("d.resourceSpans").alias("rs"))

@@ -211,66 +211,6 @@ def route_sink_writer(warehouse: str, run_id: str | None = None,
     return write_batch
 
 
-CONV_STATE_OUTPUT = (
-    "conv_id string, turns_so_far bigint, bytes_so_far bigint, "
-    "first_ts timestamp, last_ts timestamp"
-)
-CONV_STATE_SCHEMA = (
-    "turns bigint, nbytes bigint, first_ts timestamp, last_ts timestamp"
-)
-
-
-def conversation_state_tracker(stream_df: DataFrame) -> DataFrame:
-    """Custom stateful operator via ``applyInPandasWithState``: a running
-    per-conversation accumulator (turn count, byte count, first/last
-    event time) that survives across micro-batches — the arbitrary-state
-    analog of the batch processor's per-shard accumulation
-    (processor/batchprocessor/batch_processor.go:299-366), with state
-    keyed by conv_id exactly like the metadata partitioner
-    (exporter/exporterhelper/internal/queuebatch/metadata_partitioner.go:14-33).
-
-    Emits one updated snapshot row per conversation per micro-batch that
-    touched it. Arrow-batched: one Python call per (key-group, batch) —
-    no per-row Python.
-    """
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-
-    def track(key, pdfs, state: GroupState):
-        import pandas as pd
-
-        turns, nbytes, first_ts, last_ts = (
-            state.get if state.exists else (0, 0, None, None)
-        )
-        for pdf in pdfs:
-            turns += len(pdf)
-            nbytes += int(pdf["text"].str.len().sum())
-            batch_min = pdf["ts"].min()
-            batch_max = pdf["ts"].max()
-            first_ts = batch_min if first_ts is None else min(first_ts, batch_min)
-            last_ts = batch_max if last_ts is None else max(last_ts, batch_max)
-        state.update((turns, nbytes, first_ts, last_ts))
-        yield pd.DataFrame(
-            {
-                "conv_id": [key[0]],
-                "turns_so_far": [turns],
-                "bytes_so_far": [nbytes],
-                "first_ts": [first_ts],
-                "last_ts": [last_ts],
-            }
-        )
-
-    return (
-        stream_df.groupBy("conv_id")
-        .applyInPandasWithState(
-            track,
-            outputStructType=CONV_STATE_OUTPUT,
-            stateStructType=CONV_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
-
-
 def run_available_now(
     spark: SparkSession,
     src_path: str,

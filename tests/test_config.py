@@ -133,7 +133,7 @@ def test_flagship_yaml_router_fanout(spark, sf_dir, tmp_path):
     """The shipped configs/flagship.yaml: router connector fans out to
     five sink pipelines; per-sink counts equal the direct DataFrame plan
     (routed-row-set equality per exporter — the north-rule check)."""
-    cfg = ServiceConfig.from_file(os.path.join(REPO, "configs", "flagship.yaml"))
+    cfg = ServiceConfig.from_files([os.path.join(REPO, "configs", "flagship.yaml")])
     # retarget the receiver at the test's sf_dir
     cfg.receivers["transcripts"]["sf_dir"] = str(sf_dir)
     wh = str(tmp_path / "whf")
@@ -185,7 +185,7 @@ def test_attributes_processor_from_config(spark, sf_dir, tmp_path):
     assert "env" in row["ks"] and "msg" not in row["ks"]
 
 
-def test_env_expansion_basic_and_default(monkeypatch):
+def test_env_expansion_basic_and_default(monkeypatch, tmp_path):
     """${env:VAR} / ${env:VAR:-default} resolution with type-preserving
     whole-string refs (confmap/resolver.go:73-128, envprovider)."""
     raw = _base({"logs": {"receivers": ["transcripts"], "exporters": ["table/a"]}})
@@ -195,13 +195,14 @@ def test_env_expansion_basic_and_default(monkeypatch):
         "sf_dir: /root/testdata/sf0.001", "sf_dir: ${env:GRAFT_SF}"
     )
     monkeypatch.setenv("GRAFT_SF", "/tmp/somewhere")
-    cfg = ServiceConfig.from_yaml(text)
+    path = tmp_path / "c.yaml"
+    path.write_text(text)
+    cfg = ServiceConfig.from_files([str(path)])
     assert cfg.receivers["transcripts"]["sf_dir"] == "/tmp/somewhere"
     # default used when unset; env wins when set
     monkeypatch.delenv("GRAFT_SF")
-    cfg2 = ServiceConfig.from_yaml(
-        text.replace("${env:GRAFT_SF}", "${env:GRAFT_SF:-/d/efault}")
-    )
+    path.write_text(text.replace("${env:GRAFT_SF}", "${env:GRAFT_SF:-/d/efault}"))
+    cfg2 = ServiceConfig.from_files([str(path)])
     assert cfg2.receivers["transcripts"]["sf_dir"] == "/d/efault"
 
 
@@ -292,6 +293,43 @@ def test_file_provider_and_multi_file_merge(tmp_path):
     assert cfg.exporters["table/a"]["token"] == "s3cr3t"  # map-merged + file ref
 
 
+def test_main_config_repeats_and_merges(tmp_path, monkeypatch, capsys):
+    """``main.py --config base --config over`` runs the deep merge of
+    both files: the exporters of each reach config.run."""
+    import main as main_mod
+    from opentelemetry_collector_spark import session
+
+    base = tmp_path / "base.yaml"
+    base.write_text(
+        "receivers: {transcripts: {sf_dir: /data/sf0.001}}\n"
+        "exporters: {table/a: {table: out_a}}\n"
+        "service: {pipelines: {logs: {receivers: [transcripts], exporters: [table/a]}}}\n"
+    )
+    over = tmp_path / "over.yaml"
+    over.write_text(
+        "exporters: {table/b: {table: out_b}}\n"
+        "service: {pipelines: {logs: {exporters: [table/a, table/b]}}}\n"
+    )
+    seen = []
+
+    class _Spark:
+        def stop(self):
+            pass
+
+    def fake_run(cfg, spark, warehouse, run_id=None):
+        seen.append(cfg)
+        return {e: 0 for e in cfg.exporters}
+
+    monkeypatch.setattr(session, "get_spark", lambda **kw: _Spark())
+    monkeypatch.setattr(cfg_mod, "run", fake_run)
+    assert main_mod.main(["--config", str(base), "--config", str(over),
+                          "--warehouse", str(tmp_path / "wh")]) == 0
+    (cfg,) = seen
+    assert cfg.exporters == {"table/a": {"table": "out_a"}, "table/b": {"table": "out_b"}}
+    assert cfg.pipelines["logs"].receivers == ["transcripts"]
+    assert cfg.pipelines["logs"].exporters == ["table/a", "table/b"]
+
+
 def test_receiver_node_dedup_single_scan(spark, sf_dir, tmp_path, monkeypatch):
     """Two pipelines reading the same receiver id must share ONE
     DataFrame (graph.go:213-248 node dedup), persisted for the fan-out —
@@ -324,7 +362,7 @@ def test_config_run_with_checkpoint_resume(spark, sf_dir, tmp_path):
     skips every already-acked exporter (returning its acked counts)."""
     import time
 
-    cfg = ServiceConfig.from_file(os.path.join(REPO, "configs", "flagship.yaml"))
+    cfg = ServiceConfig.from_files([os.path.join(REPO, "configs", "flagship.yaml")])
     cfg.receivers["transcripts"]["sf_dir"] = str(sf_dir)
     wh = str(tmp_path / "whr")
     counts1 = run(cfg, spark, wh, run_id="cfgrun")

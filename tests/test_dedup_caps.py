@@ -5,7 +5,7 @@ one cell) makes the within-bucket self-join quadratic; the caps bound
 candidate counts and must (a) fire on degenerate input, (b) never fire
 at oracle scale (sf0.01 corpora — the oracle parity suite covers that
 side). Mirrors the posting-list cap the n-gram path always had
-(ngram_jaccard_pairs max_posting).
+(ngram_jaccard_pairs, dedup.NGRAM_MAX_POSTING).
 """
 
 from __future__ import annotations

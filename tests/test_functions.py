@@ -42,29 +42,17 @@ def test_map_ops(spark):
     row = spark.range(1).select(
         maps.map_get(m, "a").alias("get_a"),
         maps.map_get(m, "zz").alias("get_miss"),
-        maps.map_contains(m, "b").alias("has_b"),
         maps.map_len(maps.map_put(m, "c", F.lit("3"))).alias("len_after_put"),
         maps.map_len(maps.map_put(m, "a", F.lit("9"))).alias("len_after_upsert"),
         maps.map_get(maps.map_put(m, "a", F.lit("9")), "a").alias("upserted"),
         maps.map_len(maps.map_remove(m, "a")).alias("len_after_remove"),
-        maps.map_len(maps.map_remove_if(m, lambda k, v: v == F.lit("2"))).alias("len_after_removeif"),
         maps.map_as_raw_json(m).alias("js"),
     ).collect()[0]
     assert row["get_a"] == "1" and row["get_miss"] is None
-    assert row["has_b"] is True
     assert row["len_after_put"] == 3
     assert row["len_after_upsert"] == 2 and row["upserted"] == "9"
     assert row["len_after_remove"] == 1
-    assert row["len_after_removeif"] == 1
     assert row["js"] == '{"a":"1","b":"2"}'
-
-
-def test_map_merge_last_win(spark):
-    base = F.create_map(F.lit("k"), F.lit("old"), F.lit("x"), F.lit("1"))
-    over = F.create_map(F.lit("k"), F.lit("new"))
-    merged = maps.map_merge(base, over)
-    row = spark.range(1).select(maps.map_get(merged, "k").alias("v")).collect()[0]
-    assert row["v"] == "new"
 
 
 def test_variant_value_renderings(spark):
@@ -80,8 +68,8 @@ def test_variant_value_renderings(spark):
         V.value_as_string(V.vdouble(F.lit(3.0))).alias("d_int"),
         V.value_as_string(V.vdouble(F.lit(2.5))).alias("d_frac"),
         V.value_as_string(V.vbool(F.lit(True))).alias("b"),
-        V.value_as_string(V.vbytes(F.lit(b"hi"))).alias("byt"),
-        V.value_as_raw_json(V.vempty()).alias("e"),
+        V.value_as_string(V._variant("bytes", bin=F.lit(b"hi"))).alias("byt"),
+        V.value_as_raw_json(V._variant("empty")).alias("e"),
         V.value_as_raw_json(
             V.vslice([V.vint(F.lit(1)), V.vstr(F.lit("x"))])
         ).alias("sl"),
@@ -100,7 +88,7 @@ def test_variant_value_renderings(spark):
 
 def test_variant_map_verbs(spark):
     """P2 verbs generalized to variant-valued maps: put (last-write-
-    wins), remove, keep_keys, nested raw-JSON rendering."""
+    wins), remove, nested raw-JSON rendering."""
     from opentelemetry_collector_spark.functions import values as V
 
     df = spark.range(1)
@@ -111,25 +99,7 @@ def test_variant_map_verbs(spark):
     )
     bag = V.vmap_put(bag, "y", V.vstr(F.lit("new")))  # upsert wins
     bag = V.vmap_remove(bag, "z")
-    kept = V.vmap_keep_keys(bag, ["y"])
     row = df.select(
         V.vmap_as_raw_json(bag).alias("j"),
-        V.vmap_as_raw_json(kept).alias("k"),
     ).first()
     assert row["j"] == '{"x":1,"y":"new"}'
-    assert row["k"] == '{"y":"new"}'
-
-
-def test_lift_attrs_to_variants(spark):
-    """map<string,string> attrs lift to variant maps so nested verbs and
-    renderings apply to pipeline columns unchanged."""
-    from opentelemetry_collector_spark.functions import values as V
-
-    df = spark.createDataFrame([({"a": "1", "b": "x"},)], "m map<string,string>")
-    lifted = V.lift_attrs(F.col("m"))
-    out = df.select(
-        V.vmap_as_raw_json(
-            V.vmap_put(lifted, "nested", V.vmap([("k", V.vint(F.lit(9)))]))
-        ).alias("j")
-    ).first()
-    assert out["j"] == '{"a":"1","b":"x","nested":{"k":9}}'

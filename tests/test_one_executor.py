@@ -31,7 +31,7 @@ def test_main_and_config_write_the_same_warehouse(spark, sf_dir, tmp_path, recei
     with receiver_rows(spark.read.parquet(rows)):
         res = run_pipeline(spark, sf_dir, wh_main)
 
-    cfg = ServiceConfig.from_file(os.path.join(REPO, "configs", "flagship.yaml"))
+    cfg = ServiceConfig.from_files([os.path.join(REPO, "configs", "flagship.yaml")])
     cfg.receivers = {"parquet/in": {"path": rows}}
     cfg.pipelines["logs/in"].receivers = ["parquet/in"]
     wh_config = str(tmp_path / "config")

@@ -1,23 +1,20 @@
 """Operator semantics vs the reference contracts: attribute ops (OTTL
-RFC), filter config validation, retry backoff, cardinality guard,
-debug-exporter rendering, synth generator invariants."""
+RFC), filter config validation, debug-exporter rendering, synth
+generator invariants."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from opentelemetry_collector_spark.operators import aggregate as agg_ops
 from opentelemetry_collector_spark.operators import filters as filter_ops
 from opentelemetry_collector_spark.operators import parse as parse_ops
 from opentelemetry_collector_spark.operators.attributes import (
     delete_attr as attrs_delete,
     keep_keys as attrs_keep_keys,
-    replace_all_matches as attrs_replace_all_matches,
     replace_match as attrs_replace_match,
     set_attr as attrs_set,
 )
-from opentelemetry_collector_spark.plans import errors
 from opentelemetry_collector_spark.sinks.tables import debug_format
 from opentelemetry_collector_spark.sources import derive_transcripts, synth_transcripts
 
@@ -40,8 +37,6 @@ def test_attr_ops_rfc_semantics(spark, parsed):
     assert "msg" not in gone
     kept = attrs_keep_keys(df, ["seq", "status"]).select("attrs").first()["attrs"]
     assert set(kept) <= {"seq", "status"}
-    red = attrs_replace_all_matches(df, "[0-9]+", "#").select("attrs").first()["attrs"]
-    assert all(not any(ch.isdigit() for ch in v) for v in red.values())
 
 
 def test_attrs_replace_match_only_matching_key(spark, parsed):
@@ -69,54 +64,6 @@ def test_include_exclude_partition(spark, parsed):
     inc = filter_ops.filter_stage(parsed, specs, "include").count()
     exc = filter_ops.filter_stage(parsed, specs, "exclude").count()
     assert inc + exc == parsed.count() and inc > 0 and exc > 0
-
-
-def test_retry_backoff_schedule():
-    calls = {"n": 0}
-    sleeps: list[float] = []
-
-    def flaky():
-        calls["n"] += 1
-        if calls["n"] < 4:
-            raise errors.RetryableError("transient")
-        return "ok"
-
-    assert errors.with_retry(flaky, sleep=sleeps.append) == "ok"
-    # 5s → 7.5s → 11.25s (configretry/backoff.go defaults)
-    assert sleeps == [5.0, 7.5, 11.25]
-
-    def perm():
-        raise errors.PermanentError("bad data")
-
-    with pytest.raises(errors.PermanentError):
-        errors.with_retry(perm, sleep=sleeps.append)
-    assert len(sleeps) == 3  # no retry on permanent
-
-
-def test_retry_throttle_delay():
-    """A ThrottleError's server-mandated delay overrides a shorter
-    backoff interval (retry_sender.go:96-103)."""
-    calls = {"n": 0}
-    sleeps: list[float] = []
-
-    def throttled():
-        calls["n"] += 1
-        if calls["n"] == 1:
-            raise errors.ThrottleError("429", retry_after_s=42.0)
-        if calls["n"] == 2:
-            raise errors.RetryableError("transient")
-        return "ok"
-
-    assert errors.with_retry(throttled, sleep=sleeps.append) == "ok"
-    # 42s throttle (not the 5s backoff), then the schedule resumes at 7.5s
-    assert sleeps == [42.0, 7.5]
-
-
-def test_cardinality_guard(spark, parsed):
-    n = agg_ops.cardinality_guard(parsed, ["tool"], limit=100)
-    assert n == 5
-    with pytest.raises(ValueError, match="cardinality limit exceeded"):
-        agg_ops.cardinality_guard(parsed, ["conv_id"], limit=3)
 
 
 def test_debug_format_normal(spark, parsed):

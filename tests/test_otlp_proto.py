@@ -129,60 +129,6 @@ def test_read_otlp_proto_rejects_a_truncated_file_whole(spark, tmp_path):
     assert all(v is None for k, v in err.asDict().items() if k != "decode_error")
 
 
-def test_span_golden_bytes_and_decode():
-    """Span wire bytes hand-derived from trace/v1/trace.proto: ids as
-    raw bytes, name=5, kind=6 varint, start/end fixed64, status=15
-    {code=3}; parent and status omitted at their defaults."""
-    tid = "0f" * 16
-    sid = "ab" * 8
-    span = op.encode_span(tid, sid, None, "x", 2, 1, 3, 0)
-    expect = (
-        bytes.fromhex("0a10" + tid)       # 1: trace_id (16 bytes)
-        + bytes.fromhex("1208" + sid)     # 2: span_id (8 bytes)
-        + bytes.fromhex("2a01" + "78")    # 5: name "x"
-        + bytes.fromhex("3002")           # 6: kind SERVER
-        + bytes.fromhex("39" + "0100000000000000")  # 7: start
-        + bytes.fromhex("41" + "0300000000000000")  # 8: end
-    )
-    assert span == expect
-    # with parent + error status
-    span2 = op.encode_span(tid, sid, "cd" * 8, "y", 1, 5, 6, 2)
-    assert bytes.fromhex("2208" + "cd" * 8) in span2      # 4: parent
-    assert span2.endswith(bytes.fromhex("7a02" + "1802"))  # 15: {3: 2}
-
-    buf = op.encode_resource_spans("c", [span, span2])
-    rows = op.decode_spans(buf)
-    assert [r["span_id"] for r in rows] == [sid, sid]
-    assert rows[0]["parent_span_id"] is None
-    assert rows[1]["parent_span_id"] == "cd" * 8
-    assert rows[0]["status_code"] == 0 and rows[1]["status_code"] == 2
-    assert all(r["res_conv"] == "c" for r in rows)
-
-
-def test_spark_spans_roundtrip(spark, sf_dir):
-    """derive_spans → encode_spans_proto → decode_spans_proto
-    reproduces every span (the traces-signal wire story)."""
-    from opentelemetry_collector_spark.operators import parse as parse_ops
-    from opentelemetry_collector_spark.operators import traces
-    from opentelemetry_collector_spark.sources.transcripts import (
-        derive_transcripts,
-    )
-
-    parsed = parse_ops.parse_stage(
-        derive_transcripts(spark, sf_dir), with_attrs=False
-    ).limit(300)
-    spans = traces.derive_spans(parsed)
-    back = op.decode_spans_proto(op.encode_spans_proto(spans))
-    cols = ["trace_id", "span_id", "parent_span_id", "name", "kind",
-            "start_unix_nano", "end_unix_nano", "status_code"]
-    got = sorted(tuple(r[c] for c in cols) for r in back.collect())
-    want = sorted(tuple(r[c] for c in cols) for r in spans.collect())
-    assert got == want and got
-    # root spans have no parent; non-roots chain to the previous turn
-    roots = [r for r in back.collect() if r["parent_span_id"] is None]
-    assert roots and all(r["kind"] == 2 for r in roots)
-
-
 def test_proto_file_export_ingest(spark, sf_dir, tmp_path):
     """Exporter → .pb files → file receiver reproduces every record
     (the S1 ingest path for stored OTLP blobs)."""

@@ -1,5 +1,5 @@
-"""Plan hygiene + skew: broadcast enrich, no row-wise Python, filter
-pushdown, salted aggregation equivalence.
+"""Plan hygiene: broadcast enrich, no row-wise Python, filter
+pushdown.
 
 The plan checks are machine-checkable guards that the plan is the one
 we want, the .explain() analog of the reference's lint-by-test
@@ -12,11 +12,9 @@ from pyspark.sql import functions as F
 
 from opentelemetry_collector_spark.operators import enrich as enrich_ops
 from opentelemetry_collector_spark.operators import parse as parse_ops
-from opentelemetry_collector_spark.plans import partitioning as part
 from opentelemetry_collector_spark.sources import (
     derive_transcripts,
     role_lookup_df,
-    synth_transcripts,
     tool_lookup_df,
 )
 
@@ -75,13 +73,3 @@ def test_filter_pushdown_to_parquet(spark, sf_dir):
     plan = formatted_plan(df)
     assert "props" not in plan.split("ReadSchema")[1].splitlines()[0]
 
-
-def test_salted_count_equals_plain_count(spark):
-    df = synth_transcripts(
-        spark, n_conversations=50, mean_turns=6, hot_conversations=2, hot_turns=500
-    )
-    plain = {r["conv_id"]: r["c"] for r in df.groupBy("conv_id").agg(F.count(F.lit(1)).alias("c")).collect()}
-    salted = {r["conv_id"]: r["turn_count"] for r in part.salted_group_count(df).collect()}
-    assert plain == salted
-    # the hot conversations really are hot (skew fixture sanity)
-    assert max(plain.values()) >= 500

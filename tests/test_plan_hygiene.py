@@ -78,72 +78,6 @@ def test_ann_rank_is_two_level_bounded(spark, sf_dir):
         assert "_lr" in plan, "local k-filter missing"
 
 
-def test_bucketed_tables_join_without_exchange(spark, sf_dir, tmp_path):
-    """Two tables bucketed identically on the join key must sort-merge
-    join with NO shuffle exchange on either side — the co-located join
-    the bucketed sink write exists for."""
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_spark.operators import parse as parse_ops
-    from opentelemetry_collector_spark.sinks.tables import TableCatalog
-    from opentelemetry_collector_spark.sources import derive_transcripts
-
-    cat = TableCatalog(spark, str(tmp_path / "whb"))
-    parsed = parse_ops.parse_stage(derive_transcripts(spark, sf_dir))
-    cat.overwrite_bucketed(
-        "bturns", parsed.select("conv_id", "turn_idx", "text"),
-        8, ["conv_id"], sort_cols=["conv_id"],
-    )
-    cat.overwrite_bucketed(
-        "bstats",
-        parsed.groupBy("conv_id").agg(F.count(F.lit(1)).alias("n_turns")),
-        8, ["conv_id"], sort_cols=["conv_id"],
-    )
-    joined = (
-        spark.table("bturns")
-        .hint("merge")
-        .join(spark.table("bstats"), "conv_id")
-    )
-    plan = _plan(joined)
-    assert "SortMergeJoin" in plan
-    assert "Exchange" not in plan, plan[:2000]
-    # sanity: the join actually works
-    assert joined.count() == parsed.count()
-    spark.sql("DROP TABLE IF EXISTS bturns")
-    spark.sql("DROP TABLE IF EXISTS bstats")
-
-
-def test_ivf_index_save_load_prunes_partitions(spark, sf_dir, tmp_path):
-    """A saved IVF index is cell-partitioned on disk: probing a cell
-    must partition-prune to that cell's directory, and the loaded index
-    must answer probes identically to the in-memory one."""
-    from pyspark.sql import functions as F
-
-    from opentelemetry_collector_spark.operators import similarity
-    from opentelemetry_collector_spark.sinks.tables import TableCatalog
-
-    cat = TableCatalog(spark, str(tmp_path / "whiv"))
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out, cents = similarity.kmeans_cells(emb, k=4, iters=1)
-    similarity.save_ivf_index(cat, "ivf_idx", out, cents)
-    loaded, cents2 = similarity.load_ivf_index(cat, "ivf_idx")
-    assert [[round(x, 9) for x in c] for c in cents2] == [
-        [round(x, 9) for x in c] for c in cents
-    ]
-    probe_plan = _plan(loaded.filter(F.col("cell") == 1))
-    assert "PartitionFilters" in probe_plan and "cell" in probe_plan
-
-    q = out.filter(F.col("vec_id") < 5)
-    direct = similarity.ivf_topk(out, q, cell_col="cell")
-    via_idx = similarity.ivf_topk(
-        loaded, q.drop("cell").join(loaded.select("vec_id", "cell"), "vec_id"),
-        cell_col="cell",
-    )
-    assert sorted(map(tuple, direct.collect())) == sorted(
-        map(tuple, via_idx.collect())
-    )
-
-
 def test_kmeans_train_sample_plans_bounded_topk(spark, sf_dir):
     """The k-means training sample must plan TakeOrderedAndProject
     (bounded per-partition top-k merge) — not a global sort — so the

@@ -1,4 +1,4 @@
-"""Malformed wire bytes against the four OTLP protobuf decoders.
+"""Malformed wire bytes against the three OTLP protobuf decoders.
 
 The reference receiver rejects a malformed request as a permanent error
 and never accepts part of it (receiver/otlpreceiver/internal/logs/
@@ -27,13 +27,6 @@ def _logs() -> bytes:
     return op.encode_resource_logs("conv-1", [("bash", recs[:2]), ("search", recs[2:])])
 
 
-def _spans() -> bytes:
-    return op.encode_resource_spans("c", [
-        op.encode_span("0f" * 16, "ab" * 8, None, "root", 2, 1, 3, 0),
-        op.encode_span("0f" * 16, "cd" * 8, "ab" * 8, "child", 1, 5, 6, 2),
-    ])
-
-
 def _metrics() -> bytes:
     exp = op.encode_exp_histogram_metric("lat", "ms", [{
         "attrs": [("tool", "s")], "count": 4, "zero_count": 1, "scale": 2,
@@ -57,7 +50,6 @@ def _profiles() -> bytes:
 
 CASES = [
     pytest.param(op.decode_logs, _logs(), id="logs"),
-    pytest.param(op.decode_spans, _spans(), id="spans"),
     pytest.param(op.decode_metrics, _metrics(), id="metrics"),
     pytest.param(opp.decode_profiles_request, _profiles(), id="profiles"),
 ]
@@ -149,11 +141,6 @@ def test_logs_value_wider_than_its_column_is_out_of_range():
 
 
 WIDE = [
-    pytest.param(
-        lambda df: op.decode_spans_proto(df),
-        op.encode_resource_spans("c", [op.encode_span("0f" * 16, "ab" * 8, None, "s", 1 << 40, 1, 2, 0)]),
-        id="spans_int",
-    ),
     pytest.param(
         lambda df: op.decode_metrics_proto(df),
         op.encode_resource_metrics([], "scope", [op.encode_exp_histogram_metric("lat", "ms", [{

@@ -67,43 +67,6 @@ def test_streaming_is_incremental(spark, sf_dir, tmp_path):
     assert total == 200  # not 400 — nothing was re-read
 
 
-def test_stateful_conversation_tracker(spark, sf_dir, tmp_path):
-    """applyInPandasWithState: state accumulates ACROSS micro-batches —
-    the final snapshot per conversation equals the batch ground truth."""
-    src = str(tmp_path / "src")
-    ckpt = str(tmp_path / "ckpt")
-    batch = derive_transcripts(spark, sf_dir)
-    # several files + maxFilesPerTrigger=1 → guaranteed multiple
-    # micro-batches touching the same conversations
-    batch.repartition(4).write.parquet(src)
-
-    stream = ss.stream_transcripts(spark, src, max_files=1)
-    tracked = ss.conversation_state_tracker(stream)
-    q = (
-        tracked.writeStream.format("memory")
-        .queryName("conv_state")
-        .outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    snap = spark.sql(
-        "SELECT conv_id, max(turns_so_far) AS turns, max(bytes_so_far) AS nbytes "
-        "FROM conv_state GROUP BY conv_id"
-    )
-    truth = batch.groupBy("conv_id").agg(
-        F.count(F.lit(1)).alias("turns"),
-        F.sum(F.length("text")).alias("nbytes"),
-    )
-    diff = snap.exceptAll(truth).count() + truth.exceptAll(snap).count()
-    assert diff == 0
-    # multiple micro-batches really happened (state crossed batches)
-    n_updates = spark.sql("SELECT count(*) FROM conv_state").collect()[0][0]
-    assert n_updates > truth.count()
-
-
 def test_streaming_edge_metrics_in_lineage_table(spark, sf_dir, tmp_path):
     """Per-(epoch, sink) item/byte counters ride the appends via
     Observation and land in the SAME queryable ``lineage`` warehouse

@@ -1,44 +1,53 @@
-"""Every top-level function, class and method of the package is used
-somewhere.
+"""Every top-level function, class and method of the package is reached
+by code a shipped job runs, and every defaulted parameter is set by it.
 
 A function nothing calls is dead code that still has to be read and kept
 working. Stdlib only: each module under ``opentelemetry_collector_spark/``
-is parsed with ``ast``, and a top-level ``def`` or ``class``, or a
-method of a top-level class, that nothing in the package,
-``__spark_entry__.py``, ``main.py``, ``perfbench/`` or ``tests/``
-references fails. A reference is a name, an attribute access, a name
-imported from the package, or a word in a string (perfbench patches
-functions by name). An attribute of a module or object imported from
-outside the package is not one: ``pq.read_table`` does not keep a
-``read_table`` def alive. A definition whose line carries ``# noqa`` is
-exempt.
+is parsed with ``ast``. A reference is a name, an attribute access, a
+name imported from the package, or a word in a string (perfbench patches
+functions by name). A docstring is not a reference: the first string
+statement of a module, class or function body names things for the
+reader, not for Python. An attribute of a module or object imported from
+outside the package is not one either: ``pq.read_table`` does not keep a
+``read_table`` def alive.
 
-A second check counts only production callers (the package,
-``__spark_entry__.py``, ``main.py``, ``perfbench/``): a def that only
-``tests/`` use fails unless ``TEST_ONLY`` lists it.
+Liveness is transitive. The roots are the files outside the package
+(``__spark_entry__.py``, ``main.py``, ``perfbench/``, and for the first
+check ``tests/``), the package's module-level code and any def whose
+line carries ``# noqa``. A top-level def or class, or a method of a
+top-level class, is live when a live body references its name; only
+live bodies count. The first check fails on a def nothing reaches; the
+second leaves ``tests/`` out of the roots, so it fails on a def that
+only tests reach, or that only such defs reach.
 
-A third check covers the run path's parameters (``RUN_PATH``): each
-defaulted parameter of a function or method there must be set by some
+A third check covers the parameters of every package module: each
+defaulted parameter of a function or method must be set by some
 production call of that name, by keyword, by position or through
 ``*args``/``**kwargs``; an ``__init__`` counts calls of its class. A
 parameter that production never sets has one value in use, so it is a
-constant; a test that needs another value patches it in."""
+constant; ``UNSET_ALLOWED`` lists the ones only tests set."""
 
 from __future__ import annotations
 
 import ast
 import re
-from collections import Counter
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
 PACKAGE = ROOT / "opentelemetry_collector_spark"
+TESTS = ROOT / "tests"
+_FUNCS = (ast.FunctionDef, ast.AsyncFunctionDef)
+_KINDS = (*_FUNCS, ast.ClassDef)
 
 
 def _sources() -> dict[Path, str]:
     paths = [*PACKAGE.rglob("*.py"), ROOT / "__spark_entry__.py", ROOT / "main.py",
-             *(ROOT / "perfbench").rglob("*.py"), *(ROOT / "tests").rglob("*.py")]
+             *(ROOT / "perfbench").rglob("*.py"), *TESTS.rglob("*.py")]
     return {p: p.read_text() for p in paths}
+
+
+def _production(sources: dict[Path, str]) -> dict[Path, str]:
+    return {p: t for p, t in sources.items() if not p.is_relative_to(TESTS)}
 
 
 def _foreign(tree: ast.Module) -> set[str]:
@@ -51,52 +60,83 @@ def _foreign(tree: ast.Module) -> set[str]:
     }
 
 
-def _references(tree: ast.Module) -> Counter:
-    """Names, attribute accesses, names imported from the package and
-    string words in ``tree``; attribute accesses on a name bound to an
-    import from outside the package are left out."""
-    foreign = _foreign(tree)
-    refs: Counter = Counter()
+def _docstrings(tree: ast.Module) -> set[int]:
+    """ids of the docstring constants in ``tree``."""
+    docs = set()
     for node in ast.walk(tree):
-        if isinstance(node, ast.Name):
-            refs[node.id] += 1
-        elif isinstance(node, ast.Attribute):
-            if not (isinstance(node.value, ast.Name) and node.value.id in foreign):
-                refs[node.attr] += 1
-        elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE.name):
-            refs.update(a.name for a in node.names)
-        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
-            refs.update(re.findall(r"\w+", node.value))
+        if isinstance(node, (ast.Module, *_KINDS)) and node.body:
+            first = node.body[0]
+            if (isinstance(first, ast.Expr) and isinstance(first.value, ast.Constant)
+                    and isinstance(first.value.value, str)):
+                docs.add(id(first.value))
+    return docs
+
+
+def _references(nodes, foreign: set[str], docs: set[int]) -> set[str]:
+    """Names, attribute accesses, names imported from the package and
+    string words under ``nodes``; attribute accesses on a name bound to
+    an import from outside the package and docstrings are left out."""
+    refs = set()
+    for root in nodes:
+        for node in ast.walk(root):
+            if isinstance(node, ast.Name):
+                refs.add(node.id)
+            elif isinstance(node, ast.Attribute):
+                if not (isinstance(node.value, ast.Name) and node.value.id in foreign):
+                    refs.add(node.attr)
+            elif isinstance(node, ast.ImportFrom) and (node.module or "").startswith(PACKAGE.name):
+                refs.update(a.name for a in node.names)
+            elif (isinstance(node, ast.Constant) and isinstance(node.value, str)
+                  and id(node) not in docs):
+                refs.update(re.findall(r"\w+", node.value))
     return refs
 
 
-def unreferenced_defs(sources: dict[Path, str]) -> list[str]:
-    trees = {path: ast.parse(text) for path, text in sources.items()}
-    refs: Counter = sum(map(_references, trees.values()), Counter())
-    hits = []
-    for path, tree in sorted(trees.items()):
-        if not path.is_relative_to(PACKAGE):
-            continue
-        lines = sources[path].splitlines()
-        for node, qualname in _defs(tree):
-            if "# noqa" in lines[node.lineno - 1] or refs[node.name]:
-                continue
-            hits.append(f"{path.relative_to(ROOT)}:{node.lineno}: {qualname}")
-    return hits
-
-
 def _defs(tree: ast.Module):
-    """Top-level defs and classes, and the methods of each class (as
-    ``Class.method``; dunder methods are called by Python itself)."""
-    kinds = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    """(def, qualname, the nodes of its body) for each top-level def and
+    class and each method of a class (as ``Class.method``). Dunder
+    methods are called by Python itself, so they belong to their class's
+    body, as do its decorators, bases and class-level statements."""
     for node in tree.body:
-        if not isinstance(node, kinds):
+        if isinstance(node, _FUNCS):
+            yield node, node.name, [node]
+        elif isinstance(node, ast.ClassDef):
+            methods = [m for m in node.body
+                       if isinstance(m, _FUNCS) and not m.name.startswith("__")]
+            body = [n for n in node.body if n not in methods]
+            yield node, node.name, [*node.decorator_list, *node.bases, *node.keywords, *body]
+            for m in methods:
+                yield m, f"{node.name}.{m.name}", [m]
+
+
+def unreferenced_defs(sources: dict[Path, str]) -> list[str]:
+    """``<path>:<line>: <qualname>`` for each package def that no root
+    reaches (see the module docstring)."""
+    live: set[str] = set()
+    pending = []
+    for path, text in sorted(sources.items()):
+        tree = ast.parse(text)
+        foreign, docs = _foreign(tree), _docstrings(tree)
+        if not path.is_relative_to(PACKAGE):
+            live |= _references([tree], foreign, docs)
             continue
-        yield node, node.name
-        if isinstance(node, ast.ClassDef):
-            for m in node.body:
-                if isinstance(m, kinds[:2]) and not m.name.startswith("__"):
-                    yield m, f"{node.name}.{m.name}"
+        live |= _references([n for n in tree.body if not isinstance(n, _KINDS)], foreign, docs)
+        lines = text.splitlines()
+        for node, qualname, body in _defs(tree):
+            refs = _references(body, foreign, docs)
+            if "# noqa" in lines[node.lineno - 1]:
+                live |= refs
+            else:
+                pending.append((f"{path.relative_to(ROOT)}:{node.lineno}: {qualname}",
+                                node.name, refs))
+    reached = True
+    while reached:
+        reached = False
+        for entry in [e for e in pending if e[1] in live]:
+            pending.remove(entry)
+            live |= entry[2]
+            reached = True
+    return [hit for hit, _, _ in pending]
 
 
 def test_library_attribute_is_no_reference():
@@ -111,70 +151,79 @@ def test_library_attribute_is_no_reference():
     assert unreferenced_defs(sources) == []
 
 
+def test_docstring_is_no_reference():
+    """A def named only in docstrings is unreferenced; a plain string
+    naming it (as perfbench's patch tables do) is a reference."""
+    sources = {
+        PACKAGE / "m.py": '"""See helper."""\n\n\ndef helper():\n    pass\n',
+        ROOT / "main.py": '"""Runs helper."""\n\n\ndef run():\n    """Calls helper."""\n',
+    }
+    assert unreferenced_defs(sources) == ["opentelemetry_collector_spark/m.py:4: helper"]
+    sources[ROOT / "main.py"] += 'PATCHED = [("opentelemetry_collector_spark.m", "helper")]\n'
+    assert unreferenced_defs(sources) == []
+
+
+def test_reference_from_test_only_def_does_not_count():
+    """A def that only a test-only def calls is itself test-only."""
+    sources = {
+        PACKAGE / "m.py": "def helper():\n    pass\n\n\ndef tested():\n    return helper()\n",
+        TESTS / "test_m.py": "from opentelemetry_collector_spark.m import tested\n\ntested()\n",
+    }
+    assert unreferenced_defs(sources) == []
+    assert unreferenced_defs(_production(sources)) == [
+        "opentelemetry_collector_spark/m.py:1: helper",
+        "opentelemetry_collector_spark/m.py:5: tested",
+    ]
+
+
 def test_package_defs_are_referenced():
     hits = unreferenced_defs(_sources())
     assert not hits, "defined but never referenced:\n" + "\n".join(hits)
 
 
-# Package defs that only tests use: production code a test keeps alive.
-# The list may shrink (delete the def, or use it) but never grow.
-TEST_ONLY = {
-    "functions/maps.py: map_contains",
-    "functions/maps.py: map_merge",
-    "functions/maps.py: map_remove_if",
-    "functions/values.py: lift_attrs",
-    "functions/values.py: vbytes",
-    "functions/values.py: vempty",
-    "functions/values.py: vmap_keep_keys",
-    "operators/aggregate.py: cardinality_guard",
-    "operators/attributes.py: drop_where",
-    "operators/similarity.py: load_ivf_index",
-    "operators/similarity.py: save_ivf_index",
-    "plans/config.py: ServiceConfig.from_files",
-    "plans/errors.py: with_retry",
-    "plans/featuregate.py: Registry.flag_string",
-    "plans/partitioning.py: salted_group_count",
-    "sources/otlp_proto.py: decode_spans_proto",
-    "sinks/tables.py: TableCatalog.overwrite_bucketed",
-    "sources/otlp_proto.py: encode_spans_proto",
-    "streaming/stream.py: conversation_state_tracker",
-}
-
-
 def test_no_new_test_only_defs():
-    tests = ROOT / "tests"
-    hits = {
-        re.sub(r"^opentelemetry_collector_spark/(.*):\d+:", r"\1:", h)
-        for h in unreferenced_defs({p: t for p, t in _sources().items()
-                                    if not p.is_relative_to(tests)})
-    }
-    assert not hits - TEST_ONLY, "used only by tests:\n" + "\n".join(sorted(hits - TEST_ONLY))
-    assert not TEST_ONLY - hits, "no longer test-only, drop from TEST_ONLY:\n" + "\n".join(
-        sorted(TEST_ONLY - hits))
+    hits = unreferenced_defs(_production(_sources()))
+    assert not hits, "reached only from tests:\n" + "\n".join(hits)
 
 
-# The flagship's batch, config and streaming run path.
-RUN_PATH = [
-    "plans/config.py", "plans/pipeline.py", "plans/checkpoint.py", "plans/lineage.py",
-    "plans/errors.py", "sinks/tables.py", "streaming/stream.py",
-]
-# Defaulted run-path parameters that no production call sets. The list
-# may shrink but never grow: ``data_dir`` is a deployment path.
+# Defaulted parameters that only tests set. The list may shrink but
+# never grow: ``data_dir`` is a deployment path, and the dedup and ANN
+# caps, sizes and fan-outs are the knobs their tests turn.
 UNSET_ALLOWED = {
+    "operators/dedup.py: connected_components.id_a",
+    "operators/dedup.py: connected_components.id_b",
+    "operators/dedup.py: connected_components.max_iters",
+    "operators/dedup.py: connected_components.strict",
+    "operators/dedup.py: embedding_neardup_pairs.max_cell",
+    "operators/dedup.py: embedding_neardup_pairs.threshold",
+    "operators/dedup.py: minhash_lsh_pairs.max_bucket",
+    "operators/dedup.py: simhash_pairs.max_bucket",
+    "operators/similarity.py: brute_force_topk.fanout",
+    "operators/similarity.py: brute_force_topk.k",
+    "operators/similarity.py: ivf_topk.fanout",
+    "operators/similarity.py: ivf_topk.max_cell",
+    "operators/similarity.py: lsh_topk.k",
+    "plans/featuregate.py: Registry.register.to_version",
+    "session.py: get_spark.shuffle_partitions",
+    "sources/transcripts.py: synth_transcripts.hot_conversations",
+    "sources/transcripts.py: synth_transcripts.hot_turns",
+    "sources/transcripts.py: synth_transcripts.mean_turns",
+    "sources/transcripts.py: synth_transcripts.n_conversations",
+    "sqltext.py: kmeans_cells_cte.dim",
+    "sqltext.py: kmeans_cells_cte.k",
     "streaming/stream.py: route_sink_writer.data_dir",
 }
 
 
-def _run_path_defs(tree: ast.Module):
+def _param_defs(tree: ast.Module):
     """(qualname, the name its callers call, def, leading parameters a
     call does not pass) for each top-level function and each method."""
-    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
     for node in tree.body:
-        if isinstance(node, funcs):
+        if isinstance(node, _FUNCS):
             yield node.name, node.name, node, 0
         elif isinstance(node, ast.ClassDef):
             for m in node.body:
-                if isinstance(m, funcs) and (m.name == "__init__" or not m.name.startswith("__")):
+                if isinstance(m, _FUNCS) and (m.name == "__init__" or not m.name.startswith("__")):
                     static = any(isinstance(d, ast.Name) and d.id == "staticmethod"
                                  for d in m.decorator_list)
                     callee = node.name if m.name == "__init__" else m.name
@@ -192,12 +241,10 @@ def _sets(call: ast.Call, name: str, index: int) -> bool:
 
 
 def unset_parameters(sources: dict[Path, str]) -> set[str]:
-    """``<module>: <qualname>.<param>`` for each defaulted run-path
-    parameter that no production call sets."""
+    """``<module>: <qualname>.<param>`` for each defaulted parameter of
+    a package module that no production call sets."""
     calls: dict[str, list[ast.Call]] = {}
-    for path, text in sources.items():
-        if path.is_relative_to(ROOT / "tests"):
-            continue
+    for text in _production(sources).values():
         tree = ast.parse(text)
         foreign = _foreign(tree)
         for node in ast.walk(tree):
@@ -210,10 +257,11 @@ def unset_parameters(sources: dict[Path, str]) -> set[str]:
                     isinstance(f.value, ast.Name) and f.value.id in foreign):
                 calls.setdefault(f.attr, []).append(node)
     hits = set()
-    for rel in RUN_PATH:
-        for qualname, callee, node, skip in _run_path_defs(ast.parse(sources[PACKAGE / rel])):
-            if f"{rel}: {qualname}" in TEST_ONLY:
-                continue
+    for path, text in sources.items():
+        if not path.is_relative_to(PACKAGE):
+            continue
+        rel = path.relative_to(PACKAGE).as_posix()
+        for qualname, callee, node, skip in _param_defs(ast.parse(text)):
             a = node.args
             positional = [*a.posonlyargs, *a.args]
             defaulted = [(p.arg, i - skip) for i, p in enumerate(positional)
@@ -229,20 +277,32 @@ def test_parameter_ratchet_counts_every_way_to_set():
     """A parameter set by keyword, by position or through ``**kwargs``
     is set; a caller outside production does not count, and a method's
     positions start after ``self``."""
-    mod = PACKAGE / RUN_PATH[0]
-    sources = {p: "" for p in (PACKAGE / r for r in RUN_PATH)}
-    sources[mod] = ("def f(a, b=1, *, c=2):\n    pass\n"
-                    "class K:\n    def __init__(self, x=0):\n        pass\n"
-                    "    def m(self, y=0):\n        pass\n")
-    sources[ROOT / "main.py"] = "f(0)\nK()\nK().m()\n"
-    sources[ROOT / "tests" / "t.py"] = "f(0, 1, c=3)\nK(1)\nK().m(1)\n"
+    sources = {
+        PACKAGE / "plans" / "config.py": (
+            "def f(a, b=1, *, c=2):\n    pass\n"
+            "class K:\n    def __init__(self, x=0):\n        pass\n"
+            "    def m(self, y=0):\n        pass\n"),
+        ROOT / "main.py": "f(0)\nK()\nK().m()\n",
+        TESTS / "t.py": "f(0, 1, c=3)\nK(1)\nK().m(1)\n",
+    }
     assert unset_parameters(sources) == {
-        f"{RUN_PATH[0]}: {q}" for q in ("f.b", "f.c", "K.__init__.x", "K.m.y")}
+        f"plans/config.py: {q}" for q in ("f.b", "f.c", "K.__init__.x", "K.m.y")}
     sources[ROOT / "main.py"] = "f(0, 1, **kw)\nK(1)\nK().m(y=1)\n"
     assert unset_parameters(sources) == set()
 
 
-def test_run_path_parameters_are_set_by_production():
+def test_parameter_ratchet_covers_every_module():
+    """Operators, sources and the package root are checked, not only
+    the flagship's run path."""
+    sources = {
+        PACKAGE / "operators" / "m.py": "def f(a, b=1):\n    pass\n",
+        PACKAGE / "m.py": "def g(c=2):\n    pass\n",
+        ROOT / "main.py": "f(0)\ng()\n",
+    }
+    assert unset_parameters(sources) == {"operators/m.py: f.b", "m.py: g.c"}
+
+
+def test_package_parameters_are_set_by_production():
     hits = unset_parameters(_sources())
     assert not hits - UNSET_ALLOWED, "no production call sets:\n" + "\n".join(
         sorted(hits - UNSET_ALLOWED))
