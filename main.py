@@ -13,7 +13,8 @@ otelcol config surface, plans/config.py) through the same executor, so
 --config configs/flagship.yaml writes the same warehouse as the default
 run. --config may repeat: later files deep-merge over earlier ones, as
 the collector's confmap resolver merges its --config sources. Prints one
-JSON line with per-sink counts (the obsreport summary).
+JSON line with per-sink counts (the obsreport summary); with --config,
+its "config" field lists the files in the order given.
 """
 
 from __future__ import annotations

@@ -161,14 +161,13 @@ def exponential_histogram_sql(
     rounding, same output columns (shared so the query and oracle can
     never drift). Pass ``lead=','`` to splice into an existing WITH chain
     (``table_expr`` may then reference that chain's CTEs)."""
-    g = "tool"
     mul = float(2 ** scale)
     blog2 = float(2 ** -scale)
     idx_pos = f"CAST(ceil(round(log2({value_col}) * {mul!r}, 9)) AS BIGINT) - 1"
     idx_neg = f"CAST(ceil(round(log2(-({value_col})) * {mul!r}, 9)) AS BIGINT) - 1"
     return f"""
         {lead} ehist_pts AS (
-          SELECT {g},
+          SELECT tool,
                  CASE WHEN {value_col} > 0 THEN 1
                       WHEN {value_col} < 0 THEN -1 ELSE 0 END AS sign,
                  CASE WHEN {value_col} > 0 THEN {idx_pos}
@@ -177,13 +176,13 @@ def exponential_histogram_sql(
           FROM {table_expr}
           WHERE {value_col} IS NOT NULL
         )
-        SELECT {g}, sign, idx, count(*) AS n,
+        SELECT tool, sign, idx, count(*) AS n,
                CASE WHEN idx IS NOT NULL
                     THEN round(pow(2.0, idx * {blog2!r}), 6) END AS lo,
                CASE WHEN idx IS NOT NULL
                     THEN round(pow(2.0, (idx + 1) * {blog2!r}), 6) END AS hi
         FROM ehist_pts
-        GROUP BY {g}, sign, idx
+        GROUP BY tool, sign, idx
     """
 
 

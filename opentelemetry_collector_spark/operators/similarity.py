@@ -29,6 +29,9 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+# Neighbours kept per query by ivf_topk_probed.
+PROBED_TOP_K = 5
+
 
 def dot_expr(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -365,8 +368,9 @@ def ivf_topk_probed(
     the standard recall/cost knob one level up from single-probe
     :func:`ivf_topk`. Cells are disjoint, so the probed candidate sets
     union without duplicates; the rank is the same bounded two-level
-    form, keeping the top 5. ``corpus`` must carry ``cell`` (the argmin
-    assignment); measured recall vs exact is the ``ann_recall`` pattern."""
+    form, keeping the top ``PROBED_TOP_K``. ``corpus`` must carry
+    ``cell`` (the argmin assignment); measured recall vs exact is the
+    ``ann_recall`` pattern."""
     c = corpus.select(
         F.col("vec_id").alias("nbr_id"),
         F.col("cell"),
@@ -387,7 +391,7 @@ def ivf_topk_probed(
         "nbr_id",
         cosine_rounded_arrow(4)(F.col("qv"), F.col("cv")).alias("cos"),
     )
-    return _topk_per_query(scored, 5)
+    return _topk_per_query(scored, PROBED_TOP_K)
 
 
 def lsh_planes(dim: int, n_planes: int = 8) -> list[list[float]]:

@@ -50,6 +50,7 @@ def synth_transcripts(
     mean_turns: int = 16,
     hot_conversations: int = 3,
     hot_turns: int = 50_000,
+    partitions: int | None = None,
 ) -> DataFrame:
     """Seeded, fully deterministic transcripts at arbitrary scale.
 
@@ -59,7 +60,7 @@ def synth_transcripts(
     (partial aggregation, AQE), mirroring FIXTURES.md §1's Zipf requirement.
     """
     n_base = n_conversations * mean_turns
-    base = spark.range(0, n_base, 1, spark.sparkContext.defaultParallelism)
+    base = spark.range(0, n_base, 1, partitions or spark.sparkContext.defaultParallelism)
     base = base.select(
         (F.col("id") % n_conversations).alias("conv"),
         (F.col("id") / n_conversations).cast("int").alias("turn_idx"),
@@ -67,7 +68,7 @@ def synth_transcripts(
     )
     if hot_conversations > 0 and hot_turns > 0:
         hot = spark.range(0, hot_conversations * hot_turns, 1,
-                          spark.sparkContext.defaultParallelism)
+                          partitions or spark.sparkContext.defaultParallelism)
         # hot conversations EXTEND base conversations 0..hot-1: turn_idx
         # continues densely after the base turns (keeps (conv_id, turn_idx)
         # unique — the UniqueIDAttrName invariant).

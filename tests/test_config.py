@@ -4,6 +4,7 @@ rule sources cited in plans/config.py)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -328,6 +329,8 @@ def test_main_config_repeats_and_merges(tmp_path, monkeypatch, capsys):
     assert cfg.exporters == {"table/a": {"table": "out_a"}, "table/b": {"table": "out_b"}}
     assert cfg.pipelines["logs"].receivers == ["transcripts"]
     assert cfg.pipelines["logs"].exporters == ["table/a", "table/b"]
+    summary = json.loads(capsys.readouterr().out)
+    assert summary["config"] == [str(base), str(over)]
 
 
 def test_receiver_node_dedup_single_scan(spark, sf_dir, tmp_path, monkeypatch):
